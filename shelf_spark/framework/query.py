@@ -76,20 +76,19 @@ def register_shelf_views(
     """Create a temp view per built table (+ alias views per policy).
     Returns {view_name: table_path}."""
     tables = built_tables(shelf)
-    views: dict[str, str] = {}
-    full_names = {t: path_to_snake(t) for t in tables}
-    for t, full in full_names.items():
-        # resolve(): the Spark JVM's cwd does not follow Python os.chdir
-        df = spark.read.parquet(str(paths.table_data_path(t).resolve()))
-        if names in ("full", "both"):
-            df.createOrReplaceTempView(full)
-            views[full] = t
+    # one read per table; alias views share the full-name view's DataFrame
+    # (resolve(): the Spark JVM's cwd does not follow Python os.chdir)
+    reads = {
+        path_to_snake(t): (t, spark.read.parquet(str(paths.table_data_path(t).resolve())))
+        for t in tables
+    }
+    named = dict(reads) if names in ("full", "both") else {}
     if names in ("short", "both"):
-        for alias, full in table_aliases(tables).items():
-            t = next(p for p, f in full_names.items() if f == full)
-            df = spark.read.parquet(str(paths.table_data_path(t).resolve()))
-            df.createOrReplaceTempView(alias)
-            views[alias] = t
+        named.update({alias: reads[full] for alias, full in table_aliases(tables).items()})
+    views: dict[str, str] = {}
+    for view, (t, df) in named.items():
+        df.createOrReplaceTempView(view)
+        views[view] = t
     return views
 
 

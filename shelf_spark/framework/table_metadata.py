@@ -110,15 +110,22 @@ class TableMetadata:
     def _resolve_inheritance(self, uri: StepURI, deps: list[StepURI]) -> dict[str, Any]:
         """Single-dep tables inherit provenance by default; multi-dep
         requires an explicit ``inherit:`` naming one of the deps
-        (reference table_metadata.py:56-94)."""
+        (reference table_metadata.py:56-94). ``deps`` are resolved, so an
+        ``inherit:`` naming a ``latest`` version matches the dep with the
+        same scheme and dataset path."""
         source: StepURI | None = None
         if "inherit" in self.config:
             declared = StepURI.parse(self.config["inherit"])
-            if declared not in deps:
+            if declared.version == "latest":
+                same = (declared.scheme, declared.dataset_path)
+                matches = [d for d in deps if (d.scheme, d.dataset_path) == same]
+            else:
+                matches = [d for d in deps if d == declared]
+            if not matches:
                 raise StepDefinitionError(
                     f"{uri} declares inherit from non-dependency {declared}"
                 )
-            source = declared
+            source = max(matches)
         elif len(deps) == 1:
             source = deps[0]
         if source is None:

@@ -32,7 +32,7 @@ import sys
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import paths
@@ -121,6 +121,16 @@ def simplify_dependency_names(deps: list[StepURI]) -> dict[str, StepURI]:
 # ---------------------------------------------------------------------------
 
 
+def _row_hash(cols: list[str]) -> Column:
+    """First 15 hex chars of sha2(to_json(struct(*cols)), 256) as an exact
+    decimal(38): the per-row term both content hashes below sum."""
+    return F.conv(
+        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256), 1, 15),
+        16,
+        10,
+    ).cast("decimal(38,0)")
+
+
 def logical_checksum(df: DataFrame) -> str:
     """Order-insensitive content hash of a DataFrame + its schema.
 
@@ -133,14 +143,9 @@ def logical_checksum(df: DataFrame) -> str:
     """
     import hashlib
 
-    cols = df.columns
-    row_hash = F.conv(
-        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256), 1, 15),
-        16,
-        10,
-    ).cast("decimal(38,0)")
     agg = df.agg(
-        F.coalesce(F.sum(row_hash), F.lit(0)).alias("s"), F.count("*").alias("n")
+        F.coalesce(F.sum(_row_hash(df.columns)), F.lit(0)).alias("s"),
+        F.count("*").alias("n"),
     ).collect()[0]
     basis = f"{df.schema.simpleString()}|{agg['n']}|{agg['s']}"
     return hashlib.sha256(basis.encode()).hexdigest()
@@ -233,15 +238,9 @@ def _partition_fingerprints(df: DataFrame, part_col: str) -> dict[str, str]:
     row-hash-sum construction as :func:`logical_checksum`, grouped by the
     partition column — one distributed aggregate over the dep, no driver
     materialization beyond |partitions| rows."""
-    cols = df.columns
-    row_hash = F.conv(
-        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256), 1, 15),
-        16,
-        10,
-    ).cast("decimal(38,0)")
     rows = (
         df.groupBy(F.col(part_col).cast("string").alias("_p"))
-        .agg(F.sum(row_hash).alias("s"), F.count("*").alias("n"))
+        .agg(F.sum(_row_hash(df.columns)).alias("s"), F.count("*").alias("n"))
         .collect()
     )
     return {r["_p"]: f"{r['s']}|{r['n']}" for r in rows}

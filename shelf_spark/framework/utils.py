@@ -46,10 +46,6 @@ def checksum_manifest(manifest: Manifest) -> str:
     return h.hexdigest()
 
 
-def checksum_str(s: str) -> str:
-    return hashlib.sha256(s.encode()).hexdigest()
-
-
 # -- YAML sidecar IO ---------------------------------------------------------
 
 

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window as W
 
 from .num import (_round_ieee, _sql_round_ieee, epoch_seconds_floor,
                   sane_ts, sql_sane_ts)
+from .pin import pin
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -888,10 +889,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = pairs.withColumn(
         "nf", F.sum("n").over(W.partitionBy("from_type"))
-    # K²-sized; reused every iteration. EAGER (r15 lazy-pin audit): the
-    # states distinct + the driver count + iteration reads raced the
-    # lazy materialization (probe: wall 2.2-4.8 s lazy vs 1.3-1.5 s)
-    ).localCheckpoint(eager=True)
+    # K²-sized; the states distinct + driver count + iterations all read it
+    # (r15: wall 2.2-4.8 s lazy vs 1.3-1.5 s)
+    ).transform(pin, "fanout")
     states = m.select(F.col("from_type").alias("state")).distinct()
     k = states.count()  # bounded type catalog (driver-side by design)
     if k == 0:
@@ -1005,7 +1005,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         ).alias("m"),
-    ).localCheckpoint(eager=False)  # feeds three domain aggs + the score pass
+    ).transform(pin, "reuse")  # feeds three domain aggs + the score pass
     n = u.agg(F.count("*").alias("n"))
 
     def bounds(metric: str):
@@ -1319,25 +1319,15 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     join instead)."""
     li = spark.table("lineitem").select("l_orderkey", "l_partkey", "l_quantity")
     pt = spark.table("part").select("p_partkey", "p_brand")
-    # Pinned: both duel sides read this aggregate (without it the
-    # lineitem⋈part agg runs twice — the jaccard_pairs_exact rationale).
+    # The one FACT-sized pin here; both duel sides read it (r14: ~11-14 s
+    # executor CPU lazy vs ~5.6-6 s).
     per_order = (
         li.join(pt, li.l_partkey == pt.p_partkey)
         .groupBy("l_orderkey", "p_brand")
         .agg(
             F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("q")
         )
-        # EAGER (r14, measured twice): per_order is the one FACT-sized
-        # pin here and it feeds BOTH sides of the duel self-join. With
-        # eager=False the first materializing job schedules the two join
-        # branches concurrently, each computes this aggregate from
-        # scratch and they race on the block store ("Block rdd_N already
-        # exists" warnings) — event-log task metrics showed the lazy
-        # variant at ~11-14 s total executor CPU vs ~5.6-6 s eager, i.e.
-        # the duplicated fact aggregate costs far more than the one
-        # extra job submission. The K-/K²-row pins below stay lazy (their
-        # recompute is trivia; the barrier is the expensive part).
-        .localCheckpoint(eager=True)
+        .transform(pin, "fanout")
     )
     a, b = per_order.alias("a"), per_order.alias("b")
     duel = a.join(
@@ -1346,11 +1336,8 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("a.p_brand") != F.col("b.p_brand"))
         & (F.col("a.q") > F.col("b.q")),
     ).select(F.col("a.p_brand").alias("wb"), F.col("b.p_brand").alias("lb"))
-    # EAGER pin (r14): wmat is consumed THREE times downstream (both
-    # branches of m's union + wtot's join); unpinned, every consumption
-    # re-ran the duel self-join — the O(B²·orders) step. K²-bounded rows,
-    # so the pin itself is tiny; with per_order and wmat both eager the
-    # duel join runs exactly once per query.
+    # wmat is read THREE times (both branches of m's union + wtot's join);
+    # unpinned, each re-ran the O(B²·orders) duel self-join (r14).
     wmat = (
         duel.groupBy("wb", "lb")
         .agg(F.count("*").alias("w"))
@@ -1358,7 +1345,7 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty partitions otherwise — every MM-round stage then
         # schedules 32 near-empty tasks.
         .coalesce(1)
-        .localCheckpoint(eager=True)
+        .transform(pin, "fanout")
     )
     m = (
         wmat.select(F.col("wb").alias("i"), F.col("lb").alias("j"), F.col("w").alias("n"))
@@ -1370,7 +1357,7 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i", "j")
         .agg(F.sum("n").cast("double").alias("n"))
         .coalesce(1)
-        .localCheckpoint(eager=False)  # K²-bounded state, materialized once per run
+        .transform(pin, "reuse")
     )
     wtot = (
         m.join(
@@ -1381,7 +1368,7 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("i").alias("brand"))
         .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("double").alias("wins"))
         .coalesce(1)
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     # wins is K-bounded (≤25 brands) — collect once into a literal map so
     # each MM round is ONE K-keyed aggregate (the Markov `states.count()`
@@ -1654,7 +1641,7 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # relation is K²-bounded by the state domain, so one partition
         # is the scale-correct layout at any corpus size.
         .coalesce(1)
-        .localCheckpoint(eager=False)  # K²-bounded; every variant/hop reads this
+        .transform(pin, "reuse")  # K²-bounded; every variant/hop reads this
     )
     channels = probs.filter(F.col("src") != _MRA_START).select(
         F.col("src").alias("ch")
@@ -1664,7 +1651,7 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("__FULL__").alias("variant"))
         .unionAll(channels.select(F.col("ch").alias("variant")))
         .coalesce(1)
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     edges_all = (
         probs.crossJoin(F.broadcast(variants))
@@ -1673,12 +1660,9 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("src") != F.col("variant")) & (F.col("dst") != F.col("variant")))
         )
         .select("variant", "src", "dst", "p")
-        # lazy (r10): the hop loop references this K-times inside ONE
-        # final job — first touch materializes, later hops read cache;
-        # the eager pin was a whole extra job of pure submission cost.
         # coalesce(1) (r14): K²·K-bounded rows; see probs above.
         .coalesce(1)
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     conv_rows = variants.select(
         "variant", F.lit(_MRA_CONV).alias("state"), F.lit(1.0).alias("v")
@@ -1698,15 +1682,9 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .unionAll(conv_rows)
         )
-    # Pin the end of the 8-hop chain (r14): `starts` is consumed twice
-    # (pf + the channels join) and `res` twice more (tot + the final
-    # select), so unpinned the whole value-iteration lineage appeared
-    # up to 4x in the plan — 417 nodes / 38 Exchange / 32 broadcast
-    # joins (= 8 hops x 4). Both pins are K-row relations; lazy, so
-    # they materialize inside the one final job.
-    starts = v.filter(F.col("state") == _MRA_START).localCheckpoint(
-        eager=False
-    )
+    # Pin the end of the 8-hop chain (r14): `starts` and `res` are each
+    # read twice; unpinned, the plan held the hop lineage 4x (38 Exchange).
+    starts = v.filter(F.col("state") == _MRA_START).transform(pin, "reuse")
     pf = starts.filter(F.col("variant") == "__FULL__").select(
         F.col("v").alias("pfull")
     )
@@ -1725,7 +1703,7 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1.0 - F.try_divide(F.col("conv_without"), F.col("pfull")), 9
             ),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     tot = res.agg(
         F.sum(F.round("removal_effect", 9).cast("decimal(28,9)"))
@@ -2017,10 +1995,9 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(base, "cents")
         .withColumn("rk", F.col("base") + F.row_number().over(wtie))
         .select("c_custkey", "c_nationkey", "cents", "rk")
-        # EAGER (r15 lazy-pin audit): the window-pair probe consumes
-        # this on multiple branches; the lazy pin raced (probe: wall
-        # 1.9-2.5 s lazy vs 1.6-1.8 s eager)
-        .localCheckpoint(eager=True)
+        # the window-pair probe reads this on several branches
+        # (r15: wall 1.9-2.5 s lazy vs 1.6-1.8 s)
+        .transform(pin, "fanout")
     )
     probe = r.select(
         F.col("c_custkey").alias("key_a"),

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .pin import pin
 from .registry import query
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -103,22 +104,13 @@ def jaccard_pairs_exact(d: DataFrame, threshold: float) -> DataFrame:
     bit-identical to the naive join (the DuckDB oracles are unchanged).
     """
     # The shingle arrays feed FOUR branches (explode→df, the ranked
-    # prefix, and both sides of the verify join); without pinning, each
-    # branch re-runs the O(words·k) shingle construction — the single
-    # hottest expression in the query. localCheckpoint materializes it
-    # once and truncates lineage (at cluster scale this is the standard
-    # "materialize the tokenization once" step; executor-local storage,
-    # cleaned by the ContextCleaner when unreferenced).
-    # spread first: the shingle build is the hottest map in the query.
-    # (r14: an eager flip of this pin was tried and REJECTED by
-    # event-log metrics — tasks 144 → 208, executor CPU no better, and
-    # the documents scan ran twice; unlike star_components' edges pin,
-    # the downstream stages here consume sets serially enough that the
-    # lazy pin materializes once.)
+    # prefix, and both sides of the verify join), read serially; spread
+    # first, the shingle build is the hottest map in the query. (r14: an
+    # eager pin measured tasks 144 → 208, executor CPU no better.)
     sets = (
         _spread(d)
         .select("doc_id", _shingles(_words()).alias("sh_set"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     # n_sh rides along from size(sh_set) (arrays are already distinct) —
     # a count(*) window here would cost a second WindowExec pass with a
@@ -320,9 +312,7 @@ def _minhash_lsh_pairs(d: DataFrame, min_jaccard: float) -> DataFrame:
     # verify join — pin them once (same rationale as jaccard_pairs_exact).
     docs = _spread(d).select(
         "doc_id", _shingles(_words()).alias("shingles")
-    ).localCheckpoint(
-        eager=False
-    )
+    ).transform(pin, "reuse")
 
     def minhash(seed: int) -> Column:
         return F.array_min(
@@ -928,7 +918,7 @@ def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = (
         _spread(corpus)
         .select("doc_id", _shingles(_words()).alias("sh_set"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     sh = sets.select(
         "doc_id", F.size("sh_set").alias("n_sh"), F.explode("sh_set").alias("shingle")

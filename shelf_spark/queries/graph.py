@@ -20,7 +20,7 @@ Scale notes (100 TB):
   l_orderkey key.
 - The item graph is parts-sized (≪ facts); PageRank's per-iteration
   join+agg shuffles edges on src/dst only. 3 fixed iterations keep plan
-  depth bounded; an open-ended variant would localCheckpoint per round
+  depth bounded; an open-ended variant would pin per round
   like dedup_near_dup_clusters (sampling.py).
 """
 
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 #: PageRank constants.
@@ -44,6 +45,15 @@ def _baskets(spark: SparkSession) -> DataFrame:
     return spark.table("lineitem").select("l_orderkey", "l_partkey").distinct()
 
 
+def _part_sets(spark: SparkSession) -> DataFrame:
+    """(l_orderkey, parts): each order's sorted distinct part set."""
+    return (
+        spark.table("lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+    )
+
+
 def _basket_pairs(spark: SparkSession) -> DataFrame:
     """(l_orderkey, p1, p2) co-occurrence pairs with p1 < p2, generated
     map-side: ONE shuffle (groupBy order → sorted part set), then the
@@ -51,11 +61,11 @@ def _basket_pairs(spark: SparkSession) -> DataFrame:
     second shuffle — vs the naive self-join's extra join exchange.
     B (basket size) is bounded small, so the explosion is linear overall.
     """
-    baskets = (
-        spark.table("lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-    )
+    return _basket_pairs_from(_part_sets(spark))
+
+
+def _basket_pairs_from(baskets: DataFrame) -> DataFrame:
+    """The p1 < p2 combinations of each basket's sorted ``parts`` array."""
     combos = F.flatten(
         F.transform(
             "parts",
@@ -138,27 +148,14 @@ def mba_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # former `_basket_pairs + 2x _baskets` shape ran the lineitem
     # scan + distinct three times. item_cnt == per-part count of
     # distinct containing orders == explode of the per-order part sets;
-    # n_orders == count of basket rows. EAGER pin: three concurrent
-    # consumers would race a lazy materialization (r15 audit shape).
-    baskets = (
-        spark.table("lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .localCheckpoint(eager=True)
+    # n_orders == count of basket rows. The three consumers share the
+    # first job; the pin is fact-sized (see pin.py on availability).
+    baskets = pin(_part_sets(spark), "fanout")
+    pair_cnt = (
+        _basket_pairs_from(baskets)
+        .groupBy("p1", "p2")
+        .agg(F.count("*").alias("support"))
     )
-    combos = F.flatten(
-        F.transform(
-            "parts",
-            lambda x, i: F.transform(
-                F.slice("parts", i + 2, F.size("parts")),
-                lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-            ),
-        )
-    )
-    pairs = baskets.select("l_orderkey", F.explode(combos).alias("pr")).select(
-        "l_orderkey", "pr.p1", "pr.p2"
-    )
-    pair_cnt = pairs.groupBy("p1", "p2").agg(F.count("*").alias("support"))
     item_cnt = (
         baskets.select(F.explode("parts").alias("l_partkey"))
         .groupBy("l_partkey")
@@ -249,13 +246,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law hub at 100 TB. Rewrote the r6 wedge-join plan 17.2 → 6.2 s at sf0.1,
     bit-identical output (DuckDB oracle: 16.9 s on the same machine)."""
     und = _basket_pairs(spark).select("p1", "p2").distinct()
-    # One materialization feeds degrees AND the orientation join.
-    # Lazy (r14): the eager pin was a whole separate job before the
-    # real work; eager=False keeps the truncation + single
-    # materialization inside the one final job (3.69 -> 3.37 s median;
-    # pinning adj too measured neutral — ReusedExchange already dedups
-    # the two adjacency consumers here).
-    und = und.localCheckpoint(eager=False)
+    # Feeds degrees AND the orientation join (r14 lazy: 3.69 -> 3.37 s;
+    # pinning adj too measured neutral, ReusedExchange dedups it here).
+    und = pin(und, "reuse")
     deg = (
         # Both endpoints from one scan of the pinned pairs (r14): the
         # union-of-two-selects read the und checkpoint blocks twice.
@@ -386,15 +379,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement. The undirected graph guarantees every node receives mass,
     so the inner join loses no nodes."""
     pairs = _basket_pairs(spark).select("p1", "p2")
-    # localCheckpoint the CANONICAL (p1<p2) pairs — half the rows of the
-    # full edge list; the reversed copy is disjoint by construction, so
-    # the union needs no second dedup and both directions read the same
-    # materialized scan. Without the pin every consumer re-derives the
-    # whole basket pipeline and the per-iteration plan grows into a tower.
-    und = pairs.distinct().localCheckpoint(eager=False)
+    # Pin the CANONICAL (p1<p2) half; both directions read its blocks.
+    und = pairs.distinct().transform(pin, "reuse")
     edges = _directed_edges(und)
-    # The degree table is NODE-sized (parts ≪ edges) — pin it eagerly
-    # (one groupBy over the pinned pairs) and from here on nothing
+    # The degree table is NODE-sized (parts ≪ edges) — pinned once
+    # (one groupBy over the pinned pairs), and from here on nothing
     # node-sized is ever shuffled: each iteration probes a broadcast of
     # (node, r, outdeg), so the only per-iteration shuffle is the
     # map-side-combined groupBy(dst), whose post-combine volume is
@@ -403,7 +392,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # millions of rows, tens of MB); past that, fall back to shuffle
     # joins with edges pre-partitioned by src so all iterations reuse
     # one exchange.
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint(eager=False)
+    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).transform(pin, "reuse")
     nn = deg.agg(F.count("*").alias("n"))
     ranks = deg.crossJoin(F.broadcast(nn)).select(
         F.col("src").alias("node"),
@@ -507,7 +496,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation fits, hash at scale), then ONE map-side-combined moment
     aggregate produces six numbers. No windows, no sorts; the same
     single-pass shape at any edge count."""
-    und = _basket_pairs(spark).select("p1", "p2").distinct().localCheckpoint(eager=False)
+    und = _basket_pairs(spark).select("p1", "p2").distinct().transform(pin, "reuse")
     # Single-scan endpoint/direction expansion (r14, the _directed_edges
     # rationale): each former unionAll-of-selects read the pinned und
     # blocks twice.
@@ -755,9 +744,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.src", "e.dst")
         .distinct()
-        # peeling rounds re-read this, never the basket join; lazy —
-        # the bounded round count keeps the single final job flat (r10)
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")  # peeling rounds never re-read the basket join
     )
     for _ in range(_KCORE_ROUNDS):
         keep = (
@@ -770,7 +757,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .transform(pin, "reuse")
         )
     return (
         e.groupBy(F.col("src").alias("item"))
@@ -973,7 +960,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DECIMAL (order-free), and re-rounds the normalized result — the
     same iteration-stable bitwise contract as graph_pagerank.
 
-    Scale shape: the edge list is pinned once (localCheckpoint); each
+    Scale shape: the edge list is pinned once; each
     half-step is one broadcast of the NODE-sized value table against
     the edges plus a map-side-combined groupBy — no node-sized shuffle,
     no edge re-derivation per iteration. Past broadcastable catalogs,
@@ -983,19 +970,13 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         pairs.distinct()
         .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        # lazy: the first push materializes it; later pushes read cache
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
 
     def _norm(raw: DataFrame) -> DataFrame:
-        # Pin the NODE-sized raw table before referencing it twice (the
-        # L1 total and the scale-back both consume it). Without the pin
-        # each half-step's plan contained its input's plan TWICE (sum +
-        # crossJoin), so the 3-deep push nesting re-evaluated the first
-        # authority pass up to 2^3 times — 66 Exchange / 22 BNLJ in the
-        # r14 before-plan, collapsed to a linear chain by pinning
-        # (lazy: all pins materialize inside the one final job).
-        raw = raw.localCheckpoint(eager=False)
+        # Sum + scale-back both read raw; unpinned, the 3-deep push nesting
+        # re-ran the first pass up to 2^3 times (r14: 66 Exchange, 22 BNLJ).
+        raw = pin(raw, "reuse")
         tot = raw.agg(F.sum("raw").alias("s"))
         return raw.crossJoin(F.broadcast(tot)).select(
             "node",
@@ -1095,22 +1076,16 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash join (edges ⋈ frontier on src; the frontier is node-sized
     and AQE broadcasts it while small, exactly BFS's natural skew) plus
     one DISTINCT and one LEFT ANTI join against the visited set. Every
-    frontier is pinned (localCheckpoint) so the plan stays FLAT — depth
+    frontier is pinned so the plan stays FLAT — depth
     iterations, not a 2^depth lineage tower — and the visited set is
     re-pinned per level for the same reason. Bounded depth = bounded
     rounds; nothing is ever node²."""
-    # Lazy checkpoints (r10): every pin below used to be an EAGER
-    # localCheckpoint — one separate job submission per level, and the
-    # per-job overhead dominated this query's wall at sf0.1 (the data
-    # work is tiny). eager=False keeps the identical lineage truncation
-    # and single materialization (the level DAG references each pin
-    # once; the final action computes and caches them in dependency
-    # order) but collapses the whole traversal into ONE job.
+    # r10: per-level eager pins were one job each and dominated the wall.
     pairs = _basket_pairs(spark).select("p1", "p2")
-    und = pairs.distinct().localCheckpoint(eager=False)
+    und = pairs.distinct().transform(pin, "reuse")
     edges = _directed_edges(und)
     root = edges.agg(F.min("src").alias("node"))
-    frontier = root.localCheckpoint(eager=False)
+    frontier = pin(root, "reuse")
     # visited = union of the ALREADY-PINNED frontiers: each is a
     # checkpoint scan, so the anti-join input stays flat without
     # re-materializing the growing set every level.
@@ -1136,7 +1111,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("node"))
             .join(F.broadcast(visited), "node", "left_anti")
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(pin, "reuse")
         )
         levels.append(nxt.select(F.lit(d).alias("distance"), "node"))
         pinned.append(nxt)
@@ -1207,17 +1182,13 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge denominator is a closed-form sum over the NODE-sized degree
     table — no wedge enumeration ever happens. Exact integer carriers,
     one IEEE division."""
-    # Lazy pins (r14): the two eager localCheckpoints were one job
-    # submission EACH before the real work started; eager=False keeps
-    # the identical lineage truncation and single materialization but
-    # runs everything inside the one final job. Measured with the adj
-    # pin below: 3.99 -> 3.44 s median at sf0.1.
+    # r14 lazy pins, with the adj pin below: 3.99 -> 3.44 s median at sf0.1.
     pairs = _basket_pairs(spark).select("p1", "p2")
-    und = pairs.distinct().localCheckpoint(eager=False)
+    und = pairs.distinct().transform(pin, "reuse")
     edges = _directed_edges(und)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("d")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     d1 = deg.select(F.col("node").alias("p1"), F.col("d").alias("d1"))
     d2 = deg.select(F.col("node").alias("p2"), F.col("d").alias("d2"))
     lower1 = (F.struct("d1", "p1") < F.struct("d2", "p2"))
@@ -1228,13 +1199,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lower1, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
         )
     )
-    # Pin the adjacency (r14): it feeds both the exploded fat side and
-    # the probe side of the wedge join; the pin guarantees one
-    # materialization instead of leaning on ReusedExchange through the
-    # two d1/d2 joins above.
+    # adj feeds both the exploded fat side and the probe side (r14).
     adj = oriented.groupBy("src").agg(
         F.collect_list("dst").alias("nbrs")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     fat = adj.select(
         F.col("src").alias("u"),
         F.col("nbrs").alias("nbrs_u"),
@@ -1331,7 +1299,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("node")
         .join(comm.withColumnRenamed("c", "cb"), und.p2 == F.col("node"))
         .select("ca", "cb")
-        .localCheckpoint(eager=False)  # consumed by m, a_in, and the degree union
+        .transform(pin, "reuse")  # consumed by m, a_in, and the degree union
     )
     m = edges.agg(F.count("*").cast("long").alias("m"))
     a_in = edges.where(F.col("ca") == F.col("cb")).agg(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 _DECODE_SCHEMA = (
@@ -392,12 +393,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id bigint, frame_idx bigint, n_frames bigint, "
             "width bigint, height bigint, mean_pixel_ppm bigint"
         ),
-    # Pin before the presentation sort (r15): the range exchange's
-    # sampling pass recomputes its child, so the Python decode chain ran
-    # TWICE per query (two identical mapInPandas stages in the event
-    # log). The sampling job materializes the pin once; the real pass
-    # reads the cached doc-level (tiny) output.
-    ).localCheckpoint(eager=False).orderBy("doc_id", "frame_idx")
+    # pin-before-sort (r15): two identical decode stages ran without it
+    ).transform(pin, "reuse").orderBy("doc_id", "frame_idx")
 
 
 # ---------------------------------------------------------------------------
@@ -509,8 +506,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_energy bigint, n_zero_crossings bigint, "
             "peak_frame_idx bigint, peak_frame_energy bigint"
         ),
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ).transform(pin, "reuse").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -650,7 +646,7 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles only the 8-byte signatures, never pixels."""
     return (
         _ahash_signatures(spark)
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
         .orderBy("doc_id")
     )
 
@@ -804,8 +800,7 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id bigint, n_frames bigint, n_cuts bigint, "
             "total_abs_diff bigint"
         ),
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ).transform(pin, "reuse").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -940,8 +935,7 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
             "doc_id bigint, n_frames bigint, n_voiced bigint, "
             "n_segments bigint, longest_segment bigint"
         ),
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ).transform(pin, "reuse").orderBy("doc_id")
 
 
 @query(
@@ -1052,8 +1046,7 @@ def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(
         dhash_batches,
         schema="doc_id bigint, width bigint, height bigint, dhash string",
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    ).transform(pin, "reuse").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

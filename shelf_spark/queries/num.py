@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .pin import pin
+
 #: Decimal carrier type: 8-decimal scale covers products of 2dp money
 #: columns (2dp × 2dp × 2dp = 6dp exact), 22 integer digits of headroom.
 DEC = "decimal(30,8)"
@@ -99,11 +101,6 @@ def dsum(col: Column, nd: int = 2) -> Column:
     return F.round(F.sum(col.cast(DEC)), nd).cast("double")
 
 
-def dsum_win(col: Column, window, nd: int = 2) -> Column:
-    """Windowed exact sum (DuckDB's segment-tree window aggs reorder too)."""
-    return F.round(F.sum(col.cast(DEC)).over(window), nd).cast("double")
-
-
 def dsum_win_i(col: Column, window, din: int = 2) -> Column:
     """Windowed integer-grid exact sum (see :func:`dsum_i`)."""
     scale = float(10**din)
@@ -156,23 +153,9 @@ def davg(col: Column, nd: int = 6) -> Column:
     return _round_ieee(F.sum(col.cast(DEC)).cast("double") / F.count(col), nd)
 
 
-def davg_win(col: Column, window, nd: int = 6) -> Column:
-    return _round_ieee(
-        F.sum(col.cast(DEC)).over(window).cast("double")
-        / F.count(col).over(window),
-        nd,
-    )
-
-
 def sql_dsum(expr: str, nd: int = 2) -> str:
     """DuckDB twin of :func:`dsum` (decimal-domain round, then cast)."""
     return f"CAST(round(sum(CAST({expr} AS DECIMAL(30,8))), {nd}) AS DOUBLE)"
-
-
-def sql_dsum_over(expr: str, over: str, nd: int = 2) -> str:
-    return (
-        f"CAST(round(sum(CAST({expr} AS DECIMAL(30,8))) OVER {over}, {nd}) AS DOUBLE)"
-    )
 
 
 def _sql_round_ieee(x: str, nd: int) -> str:
@@ -183,14 +166,6 @@ def _sql_round_ieee(x: str, nd: int) -> str:
 def sql_davg(expr: str, nd: int = 6) -> str:
     return _sql_round_ieee(
         f"CAST(sum(CAST({expr} AS DECIMAL(30,8))) AS DOUBLE) / count({expr})", nd
-    )
-
-
-def sql_davg_over(expr: str, over: str, nd: int = 6) -> str:
-    return _sql_round_ieee(
-        f"CAST(sum(CAST({expr} AS DECIMAL(30,8))) OVER {over} AS DOUBLE)"
-        f" / count({expr}) OVER {over}",
-        nd,
     )
 
 
@@ -366,7 +341,7 @@ def grid_quantiles(stacked, probs: dict[str, float]):
         F.max(F.col("h") - F.floor("h")).alias("frac"),
     # meta feeds two consumers (refine targets + the group spine); a
     # handful of rows, pinned so the histogram job runs once
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     tgt = (
         meta.selectExpr(
             "grp AS t_grp",

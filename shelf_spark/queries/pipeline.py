@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import DEC, _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1450,7 +1451,7 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("bg.w1", "bg.w2")
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("c12"))
-        .localCheckpoint(eager=False)  # feeds margins AND the scored join
+        .transform(pin, "reuse")  # feeds margins AND the scored join
     )
     rowm = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     colm = big.groupBy("w2").agg(F.sum("c12").alias("c2"))
@@ -2430,7 +2431,7 @@ def text_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     big = pairs.groupBy("w1", "w2").agg(
         F.count("*").cast("long").alias("c12")
-    ).localCheckpoint(eager=False)  # LM base relation: consumed by 4 rollups + join
+    ).transform(pin, "reuse")  # LM base relation: consumed by 4 rollups + join
     firsts = big.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count("*").cast("long").alias("nf"),

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .pin import pin
+
 
 def attach_prefix_sums(
     df: DataFrame,
@@ -67,14 +69,12 @@ def attach_prefix_sums(
     # below (subtotals + final join) — without the checkpoint the whole
     # upstream domain build executes three times (measured: the r7
     # interval-overlap/quantile-bins replans cost ~2× their r6 walls
-    # until this landed). The checkpoint is distributed (per-partition
-    # executor blocks, never a driver collect), so it scales with the
-    # domain like every other exchange.
+    # until this landed).
     base = df.repartitionByRange(
         n_parts, *[F.col(c) for c in order_cols]
     ).withColumn("__pid", F.spark_partition_id())
     if checkpoint:
-        base = base.localCheckpoint(eager=False)
+        base = pin(base, "reuse")
     subtotals = base.groupBy("__pid").agg(
         *[F.sum(c).alias(c) for c in value_cols]
     )

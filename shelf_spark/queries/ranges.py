@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 #: Bucket width for the interval join: one week of seconds.
@@ -283,15 +284,9 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = (
         numbered.groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
-        # EAGER (r15, VERDICT r14 ask #1): the pin feeds the domain agg
-        # and both rank lookups — with eager=False those consumers raced
-        # to materialize it inside one job and each recomputed the whole
-        # sessionization window (the pref_bradley_terry/star_components
-        # failure shape; "Block rdd already exists" races in the log).
-        # Event-log A/B at sf0.1: lazy 142 tasks / 6.2-6.9 s executor
-        # CPU vs this shape (eager + explode domain + pinned ranks)
-        # 76 tasks / 3.3-4.2 s CPU, identical 95,465-row output.
-        .localCheckpoint(eager=True)
+        # feeds the domain agg and both rank lookups (r15, sf0.1: lazy 142
+        # tasks / 6.2-6.9 s CPU vs 76 tasks / 3.3-4.2 s, same 95,465 rows)
+        .transform(pin, "fanout")
     )
     # Distinct-time domain with per-time boundary multiplicities, from
     # ONE scan of the pinned sessions (the _directed_edges idiom): the
@@ -324,21 +319,16 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts per boundary; the exclusive "ends strictly before" rank is
     # the inclusive rank minus the row's own multiplicity (one row per
     # distinct t, so no intra-tie ambiguity).
-    # Pinned (r15): the r14 "recompute measures cheaper" wall A/B was
-    # taken while the unpinned ranks raced the lazy sessions pin; with
-    # the race fixed, the event-log probe shows the pin removes a second
-    # offsets-window + join pass per lookup side (142 → 76 tasks for the
-    # whole query). Lazy beat eager here (probe: 76 tasks / ~3.7 s CPU
-    # vs 77 / ~5.1 s): the worst a lookup-side race can recompute is the
-    # domain-sized prefix chain over the ALREADY-CACHED sessions, which
-    # costs less than eager's extra materialization job.
+    # Both lookup joins read ranked in one job; the accepted race is
+    # bounded: it recomputes only the domain-sized prefix chain over the
+    # cached sessions (r15: 76 tasks / ~3.7 s CPU lazy vs 77 / ~5.1 s).
     ranked = attach_prefix_sums(
         domain, ["t"], ["starts_at", "ends_at"]
     ).select(
         "t",
         (F.col("ends_at_upto") - F.col("ends_at")).alias("ends_before"),
         F.col("starts_at_upto").alias("starts_upto"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     return (
         sessions.join(
             ranked.select(F.col("t").alias("s_start"), "ends_before"), "s_start"

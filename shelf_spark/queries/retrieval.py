@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 #: Fixed-point carrier for summing per-term scores exactly.
@@ -313,15 +314,10 @@ def text_chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays value-exact; mean chunk length is {CDC_MOD} tokens with the
     min/max-length clamps a production pipeline would add left out to
     keep both engines' expressions trivially identical."""
-    # Pin before the presentation sort (r15): the range exchange's
-    # sampling pass recomputes its child, so the whole per-token
-    # SHA-256 boundary map ran TWICE (per-stage event metrics: two
-    # identical chunk-compute stages). The lazy pin's first and only
-    # materializer is the sampling job; the real pass then reads the
-    # cached chunks — digest work once.
+    # pin-before-sort (r15): the SHA-256 boundary map ran twice without it
     return (
         cdc_chunks(spark.table("documents"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
         .orderBy("doc_id", "chunk_idx")
     )
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import DEC, _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 _DEC2 = "decimal(18,2)"
@@ -309,14 +310,12 @@ def rollup_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE pass over the facts (r15, VERDICT ask #3): the mq-union-aq
     # epilogue consumes `month` on two concurrent branches, so the
     # unpinned relation evaluated the whole fact reduction once per
-    # branch (before-plan: 2 lineitem scans). EAGER pin: a lazy pin
-    # would be materialized by that same two-branch union and race
-    # (the pref_bradley_terry failure shape). The pinned relation is
+    # branch (before-plan: 2 lineitem scans). The pinned relation is
     # domain-bounded — months x ~210 price bins, regardless of corpus
     # size — so one coalesced partition is the right width at any scale
     # (the dbb2c4d markov-matrix precedent); everything after this line
     # touches only bounded partials.
-    month = month.coalesce(1).localCheckpoint(eager=True)
+    month = month.coalesce(1).transform(pin, "fanout")
     allg = month.groupBy("bin").agg(F.sum("c").alias("c"))
 
     def readout(hist: DataFrame, key, grain: str) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window as W
 
 from .dedup import JACCARD_THRESHOLD, jaccard_pairs_exact
 from .num import _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 #: 4-hex-digit prefix of sha256 compared against these bounds.
@@ -69,15 +70,9 @@ def star_components(pairs: DataFrame, a: str, b: str, max_rounds: int = 12) -> D
             F.greatest(F.col(a), F.col(b)).alias("u"),
             F.least(F.col(a), F.col(b)).alias("v"),
         )
-        # EAGER (r14): the first round's materializing job consumes this
-        # on TWO branches at once (edges ∪ edges.swap inside bidir), so a
-        # lazy pin let both branches recompute the whole upstream pairs
-        # pipeline concurrently and race on the block store — for the
-        # dedup callers that upstream is the full Jaccard verify join
-        # (event-log metrics: dedup_keep_best_per_cluster ~25 s executor
-        # CPU lazy vs ~17 s eager). One extra job submission is far
-        # cheaper than a second run of the pairs pipeline.
-        .localCheckpoint(eager=True)
+        # the first round reads this on TWO branches (edges ∪ swap in
+        # bidir); upstream is the dedup callers' whole Jaccard verify join
+        .transform(pin, "fanout")
     )
     prev_sig = None
     for _ in range(max_rounds):
@@ -116,12 +111,9 @@ def star_components(pairs: DataFrame, a: str, b: str, max_rounds: int = 12) -> D
             .union(mins2.select("u", F.col("m").alias("v")))
             .distinct()
         )
-        # Lazy localCheckpoint + the signature action right below: the
-        # convergence check is the job that materializes the round, so
-        # each round costs ONE job, not two (eager pin + sig). Lineage
-        # is still truncated — the plan stays one-round deep instead of
-        # doubling every iteration.
-        edges = small.localCheckpoint(eager=False)
+        # the convergence check below is the job that materializes the
+        # round, so each round costs ONE job
+        edges = pin(small, "reuse")
         sig = tuple(edges.agg(F.count("*"), F.bit_xor(F.xxhash64("u", "v"))).first())
         if sig == prev_sig:
             break
@@ -849,7 +841,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("md"), sqdist(F.col("vec"), F.col("cvec"))
                     ).alias("md"),
                 )
-                .localCheckpoint(eager=False)
+                .transform(pin, "reuse")
             )
     out = picks[0]
     for pk in picks[1:]:

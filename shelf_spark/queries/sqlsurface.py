@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import _round_ieee, _sql_round_ieee, sql_dsum_i
+from .pin import pin
 from .registry import query
 
 
@@ -204,7 +205,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned _support_edges subtree once per branch — the same shape
     # 56fe310 removed at ten graph.py sites; the explode derives the
     # identical directed multiset map-side from a single pass.
-    edges = _directed_edges(pairs).localCheckpoint(eager=False)
+    edges = _directed_edges(pairs).transform(pin, "reuse")
     edges.createOrReplaceTempView("rcte_edges")
     return spark.sql(_RCTE_WALK_SQL)
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import _round_ieee, _sql_round_ieee, sane_ts, sql_sane_ts
+from .pin import pin
 from .registry import query
 
 #: Exact decimal carriers for the moment sums: quantities are integral,
@@ -487,13 +488,11 @@ def ml_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     division, which is exact only while i·n+9 < 2⁵³ — the oracle's ``//``
     is exact at any row count, so the Spark side must be too)."""
     li = spark.table("lineitem")
-    # Pin the compressed domain: repartitionByRange's sampling pass would
-    # otherwise re-run the full fact aggregation a second time just to
-    # pick range bounds (measured 2.3 → 2.0 s at sf0.1; the win grows
-    # with fact volume since the checkpoint is domain-sized).
+    # repartitionByRange's sampling pass re-ran the fact aggregation
+    # (2.3 → 2.0 s at sf0.1)
     pc = li.groupBy(F.col("l_extendedprice").alias("price")).agg(
         F.count("*").alias("cnt")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     from .prefix import attach_prefix_sums
 
     cum = attach_prefix_sums(pc, ["price"], ["cnt"]).select(
@@ -971,11 +970,8 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0),
             ).alias("yi"),
         )
-        # EAGER (r15 lazy-pin audit, VERDICT r14 ask #1): both lag-join
-        # sides raced the lazy materialization inside one job and each
-        # recomputed the fact reduction (probe: wall 3.3-3.6 s lazy vs
-        # 1.1-1.8 s eager, Σ task run 8.8-9.8 → ~7.2 s)
-        .localCheckpoint(eager=True)
+        # both lag-join sides (r15: wall 3.3-3.6 s lazy vs 1.1-1.8 s)
+        .transform(pin, "fanout")
     )
     # Build the lag grid from the tuple VALUES (not its length) so a
     # non-contiguous / non-zero-based _XCORR_LAGS stays in sync with the
@@ -1337,10 +1333,9 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
             ).alias("yi")
         )
-        # EAGER (r15 lazy-pin audit): both pair-join sides + the n_days
-        # count raced the lazy materialization (probe: wall never worse,
-        # 1.19-1.21 s lazy vs 0.87-1.16 s eager)
-        .localCheckpoint(eager=True)
+        # both pair-join sides + the n_days count (r15: 1.19-1.21 s lazy
+        # vs 0.87-1.16 s)
+        .transform(pin, "fanout")
     )
     a = daily.select(F.col("d").alias("di"), F.col("yi").alias("yi"))
     b = daily.select(F.col("d").alias("dj"), F.col("yi").alias("yj"))
@@ -2788,11 +2783,9 @@ def ml_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_quantity") * 100).cast("long").alias("x1"),
         F.round(F.col("l_discount") * 100).cast("long").alias("x2"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
-    # EAGER (r15 lazy-pin audit): the moments pass and the deviations
-    # pass raced the lazy materialization — the probe showed ~20
-    # lineitem-scans' worth of duplicate input and wall 2.2-4.4 s lazy
-    # vs 1.3-1.6 s eager
-    ).localCheckpoint(eager=True)
+    # the moments and deviations passes (r15: ~20 duplicate lineitem
+    # scans lazy; wall 2.2-4.4 s vs 1.3-1.6 s)
+    ).transform(pin, "fanout")
     d38 = _ATTR_D38
     m = g.agg(
         F.count("*").alias("n"),
@@ -4760,9 +4753,8 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        # EAGER (r15 lazy-pin audit): the value-domain build, the n_days
-        # count and the signs pass raced the lazy materialization
-        .localCheckpoint(eager=True)
+        # the value-domain build, the n_days count and the signs pass (r15)
+        .transform(pin, "fanout")
     )
     vdom = daily.groupBy("cents").agg(F.count("*").cast("long").alias("t"))
     vcum = attach_prefix_sums(vdom, ["cents"], ["t"])
@@ -4784,9 +4776,8 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = attach_prefix_sums(ddom, ["day"], ["t"]).select(
         "s", F.col("t_upto").alias("rk")
-    # EAGER (r15): ranked and its shifted twin race the lazy pin inside
-    # the flips join (same audit as daily above)
-    ).localCheckpoint(eager=True)
+    # ranked and its shifted twin meet in the flips join (r15)
+    ).transform(pin, "fanout")
     nxt = ranked.select((F.col("rk") - 1).alias("rk"), F.col("s").alias("s2"))
     trans = (
         ranked.join(nxt, "rk")
@@ -5011,19 +5002,17 @@ def ts_control_chart_xmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        # EAGER (r15 lazy-pin audit): the moving-range chain, the moments
-        # agg and the violations pass raced the lazy materialization
-        # (probe: Σ task run 2.0-2.2 s lazy vs 1.0-1.6 s eager)
-        .localCheckpoint(eager=True)
+        # the moving-range chain, the moments agg and the violations pass
+        # (r15: Σ task run 2.0-2.2 s lazy vs 1.0-1.6 s)
+        .transform(pin, "fanout")
     )
     ddom = daily.groupBy("day").agg(
         F.count("*").cast("long").alias("t"), F.max("cents").alias("cents")
     )
     ranked = attach_prefix_sums(ddom, ["day"], ["t"]).select(
         F.col("t_upto").alias("rk"), "cents"
-    # EAGER (r15): ranked and its shifted twin race the lazy pin inside
-    # the moving-range join (same audit as daily above)
-    ).localCheckpoint(eager=True)
+    # ranked and its shifted twin meet in the moving-range join (r15)
+    ).transform(pin, "fanout")
     nxt = ranked.select((F.col("rk") - 1).alias("rk"), F.col("cents").alias("c2"))
     mrs = ranked.join(nxt, "rk").agg(
         F.count("*").cast("long").alias("nmr"),
@@ -5098,7 +5087,7 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = attach_prefix_sums(ddom, ["day"], ["t"]).select(
         "day", "cents", F.col("t_upto").alias("rk")
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     prev = ranked.select((F.col("rk") + 1).alias("rk"), F.col("cents").alias("pc"))
     nxt = ranked.select((F.col("rk") - 1).alias("rk"), F.col("cents").alias("nc"))
     return (
@@ -5161,7 +5150,7 @@ def ts_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     fc = daily.select(F.date_add("day", 7).alias("day"), F.col("cents").alias("f"))
     joined = daily.join(fc, "day").select(
@@ -5533,7 +5522,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         f.groupBy("x", "y")
         .agg(F.count("*").cast("decimal(19,0)").alias("cn"))
-        .localCheckpoint(eager=False)  # grid relation, consumed by 4 passes below
+        .transform(pin, "reuse")  # grid relation, consumed by 4 passes below
     )
     # The pair pass is a broadcast NESTED-LOOP join: its cost is
     # |probe partition| × |grid| predicate evaluations per task, and the
@@ -5646,10 +5635,9 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(18,0)")
             .alias("rev")
         )
-        # EAGER (r15 lazy-pin audit): the S-statistic pair join (both
-        # sides), the tie groups and the count raced the lazy
-        # materialization (probe: wall 0.68-0.83 s lazy vs 0.57-0.62 s)
-        .localCheckpoint(eager=True)
+        # both S-statistic pair-join sides, the tie groups and the count
+        # (r15: wall 0.68-0.83 s lazy vs 0.57-0.62 s)
+        .transform(pin, "fanout")
     )
     a = daily.select(F.col("day").alias("day_a"), F.col("rev").alias("rev_a"))
     b = daily.select(F.col("day").alias("day_b"), F.col("rev").alias("rev_b"))
@@ -5756,7 +5744,7 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(19,0)")
             .alias("rev")
         )
-        .localCheckpoint(eager=False)  # day domain, consumed by glob + both join sides
+        .transform(pin, "reuse")  # day domain, consumed by glob + both join sides
     )
     glob = daily.agg(
         F.count("*").cast("decimal(19,0)").alias("n"),
@@ -6214,7 +6202,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(19,0)")
             .alias("rev")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     gmom = daily.agg(
         F.count("*").cast("decimal(19,0)").alias("n"),
@@ -6314,17 +6302,12 @@ def stats_median_ci_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = spark.table("lineitem").select(
         F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias("v")
     )
-    # Pinned (r14): dom feeds the prefix-sum ranking AND the n/rank
-    # aggregate — unpinned, the fact scan + price-grid groupBy ran
-    # twice (the ml_quantile_bins pc-pin rationale).
-    # r15 lazy-pin audit: examined, left lazy — per-stage event metrics
-    # show the consumers read the materialized blocks (cached-block
-    # reads count as task input bytes), not duplicate fact scans;
-    # eager measured CPU/wall-neutral and costs one extra job.
+    # dom feeds the prefix-sum ranking AND the n/rank aggregate (r14);
+    # the r15 audit measured eager CPU/wall-neutral here.
     dom = (
         f.groupBy("v")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     cum = attach_prefix_sums(dom, ["v"], ["c"]).select(
         "v", F.col("c_upto").alias("cc")
@@ -6431,7 +6414,7 @@ def stats_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_g"),
         F.sum(c38).alias("s_g"),
         F.sum(c38 * F.col("c")).alias("q_g"),
-    ).localCheckpoint(eager=False)  # 5-row domain, consumed by pairs + carriers
+    ).transform(pin, "reuse")  # 5-row domain, consumed by pairs + carriers
     one = bygrp.agg(
         F.sum("n_g").cast("long").alias("n"),
         F.sum("s_g").alias("s"),
@@ -6895,7 +6878,7 @@ def ts_anomaly_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         win.join(F.broadcast(dow_avg), "dow")
         .crossJoin(F.broadcast(tot))
         .select("day", "rev_c", F.expr(_SRA_RESID).alias("r"))
-        .localCheckpoint(eager=False)  # day-domain residuals, consumed by 3 passes
+        .transform(pin, "reuse")  # day-domain residuals, consumed by 3 passes
     )
     n1 = resid.agg(
         F.expr("CAST((count(*) + 1) div 2 AS BIGINT)").alias("med_rank")

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import davg_i, sql_davg_i
+from .pin import pin
 from .registry import query
 
 #: Stopword set for the ratio features (vocabulary-appropriate: the
@@ -402,10 +403,8 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "array_min(transform(sel, p -> element_at(hs, p)))"
             ).alias("min_fp"),
         )
-        # pin-before-sort (r15): the range exchange's sampling pass
-        # recomputes its child, running the winnow selection twice;
-        # the pin makes the sampling job materialize it once
-        .localCheckpoint(eager=False)
+        # pin-before-sort (r15): the winnow selection ran twice without it
+        .transform(pin, "reuse")
         .orderBy("doc_id")
     )
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import davg, sql_davg, _round_ieee, _sql_round_ieee
+from .pin import pin
 from .registry import query
 
 TOP_K = 10
@@ -406,7 +407,7 @@ def _semantic_clusters(spark: SparkSession, threshold: float) -> DataFrame:
         spark.table("embeddings")
         .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
         .withColumn("nrm", _norm(F.col("vec")))
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
     lab = star_components(semantic_pairs(v, threshold), "va", "vb").select(
         F.col("node").alias("vec_id"), F.col("component").alias("cluster_id")
     )
@@ -835,9 +836,8 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec"),
         )
-        # lazy (r14): reused every iteration; vectors never shuffle —
-        # eager=False folds the pin's job into the final action.
-        .localCheckpoint(eager=False)
+        # reused every iteration; vectors never shuffle
+        .transform(pin, "reuse")
     )
     v = spark.range(1).select(
         F.transform(F.sequence(F.lit(0), F.lit(63)), lambda _: F.lit(0.125)).alias(
@@ -865,12 +865,9 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("wd")
             )
-            # Pin per iteration (r14): w is consumed twice (the n2
-            # norm and the v update), and each w holds a full pass
-            # over the VECTOR-sized centered table — unpinned, that
-            # pass doubled per iteration. d-row state; lazy, so it
-            # materializes inside the one final job.
-            .localCheckpoint(eager=False)
+            # w is read twice (n2 norm + v update); unpinned, its pass over
+            # the VECTOR-sized centered table doubled per iteration (r14).
+            .transform(pin, "reuse")
         )
         n2 = w.agg(
             F.sum(
@@ -1001,9 +998,7 @@ def vectors_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec"),
         )
-        # lazy (r14): the eager pin was one extra job submission; the
-        # final action materializes it at first touch instead.
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     v = spark.range(1).select(
         F.transform(
@@ -1029,12 +1024,9 @@ def vectors_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("wd")
             )
-            # Pin per iteration (r14): w is consumed twice (the n2
-            # norm and the v update), and each w holds a full pass
-            # over the VECTOR-sized centered table — unpinned, that
-            # pass doubled per iteration. d-row state; lazy, so it
-            # materializes inside the one final job.
-            .localCheckpoint(eager=False)
+            # w is read twice (n2 norm + v update); unpinned, its pass over
+            # the VECTOR-sized centered table doubled per iteration (r14).
+            .transform(pin, "reuse")
         )
         n2 = w.agg(
             F.sum(
@@ -1165,12 +1157,9 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
         .filter(F.col("embedding").isNotNull())
         .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
         .withColumn("nrm", _norm(F.col("vec")))
-        # Pin the parsed corpus (r14): v feeds the subvector slicing,
-        # the query set AND the rerank join — unpinned, the parquet
-        # scan + array-double parse + norm ran three times (3 scans in
-        # the before-plan). Same corpus-sized pin class as `sub` just
-        # below, which this pipeline already holds.
-        .localCheckpoint(eager=False)
+        # v feeds the subvector slicing, the query set AND the rerank
+        # join; unpinned, the scan + parse + norm ran three times (r14).
+        .transform(pin, "reuse")
     )
     # (vec_id, m, subvec): the m-th contiguous 8-dim slice of each vector.
     sub = v.select(
@@ -1181,7 +1170,7 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
                 lambda m: F.slice(F.col("vec"), m * PQ_SUBDIM + 1, PQ_SUBDIM),
             )
         ).alias("m", "subvec"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin, "reuse")
 
     # Deterministic seeded init: per subspace, the K lowest-hash vectors
     # donate their subvectors as starting centroids.
@@ -1192,7 +1181,7 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
         sub.withColumn("rn", rn)
         .filter(F.col("rn") <= k)
         .select("m", (F.col("rn") - 1).alias("cid"), F.col("subvec").alias("cvec"))
-        .localCheckpoint(eager=False)
+        .transform(pin, "reuse")
     )
     for _ in range(PQ_LLOYD_ITERS):
         assign = (
@@ -1221,7 +1210,7 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
                     "cvec"
                 ),
             )
-            .localCheckpoint(eager=False)
+            .transform(pin, "reuse")
         )
     # Final encoding: nearest centroid per (vector, subspace).
     codes = (

@@ -459,6 +459,49 @@ def test_bucketed_table_steps_join_without_exchange(workspace, spark):
     spark.sql(f"DROP TABLE IF EXISTS {dim_name}")
 
 
+def test_inherit_names_latest_dependency(workspace, spark):
+    """A two-dep step whose ``inherit:`` names a ``latest`` dep builds and
+    inherits provenance from the newest version of that dataset — before
+    and after a newer snapshot is added."""
+    from shelf_spark.framework.snapshots import Snapshot
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.utils import load_yaml
+    from shelf_spark.framework import paths
+
+    Shelf.init()
+    shelf = Shelf()
+    for ds, version, x in (("a", "2024-01-01", 1), ("b", "2024-01-01", 10)):
+        raw = workspace / f"{ds}.csv"
+        raw.write_text(f"x\n{x}\n")
+        Snapshot.create(raw, f"ns/{ds}/{version}", {"source_name": f"{ds} {version}"})
+        shelf.add_step(StepURI.parse(f"snapshot://ns/{ds}/{version}"))
+    shelf.new_table(
+        "ns/both/2024-02-01", ["snapshot://ns/a/latest", "snapshot://ns/b/2024-01-01"]
+    )
+    shelf.save()
+    scripts = paths.TABLE_SCRIPTS_DIR / "ns"
+    scripts.mkdir(parents=True, exist_ok=True)
+    (scripts / "both.sql").write_text("SELECT x FROM {a} UNION ALL SELECT x FROM {b}")
+    (scripts / "both.meta.yaml").write_text("version: 1\ninherit: snapshot://ns/a/latest\n")
+    sidecar = paths.table_metadata_path("ns/both/2024-02-01")
+
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert load_yaml(sidecar)["source_name"] == "a 2024-01-01"
+
+    raw = workspace / "a2.csv"
+    raw.write_text("x\n2\n")
+    Snapshot.create(raw, "ns/a/2024-03-01", {"source_name": "a 2024-03-01"})
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse("snapshot://ns/a/2024-03-01"))
+    shelf.save()
+    dag = prune_completed(Shelf().resolve_latest())
+    assert StepURI.parse("table://ns/both/2024-02-01") in dag
+    execute_dag(spark, dag)
+    assert load_yaml(sidecar)["source_name"] == "a 2024-03-01"
+    out = spark.read.parquet(str(paths.table_data_path("ns/both/2024-02-01").resolve()))
+    assert sorted(r.x for r in out.collect()) == [2, 10]
+
+
 def test_db_query_and_export(workspace, spark, capsys):
     """End-to-end export parity with the reference's test_export_duckdb
     (reference tests/test_shelf.py:361-400): build two tables, export to a

@@ -32,7 +32,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from shelf_spark.queries import QUERIES  # noqa: E402
 from shelf_spark.session import RUNTIME_CONFS, tune  # noqa: E402
@@ -72,87 +73,18 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def parse_event_log(event_dir: str) -> dict[str, dict]:
-    """Aggregate task metrics per job-description label.
+def _load_eventlog():
+    """The benchmark's event-log parser (perfbench/eventlog.py), loaded by
+    path: it credits each task through its stage submission, so a stage
+    shared by the warm job and a probe job is charged to the job that
+    ran it."""
+    import importlib.util
 
-    Jobs carry the label in SparkListenerJobStart properties; tasks are
-    attributed to jobs via the job's stage-id set. A stage can be
-    shared/reused across jobs (AQE stage reuse) — attribute each task to
-    the job that registered its stage id first, which matches how the
-    work was actually scheduled.
-    """
-    per_label: dict[str, dict] = {}
-    stage_to_label: dict[int, str] = {}
-    paths = []
-    for root, _dirs, files in os.walk(event_dir):
-        paths.extend(os.path.join(root, f) for f in files)
-    for path in sorted(paths):
-        with open(path, encoding="utf-8", errors="replace") as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    label = (ev.get("Properties") or {}).get(
-                        "spark.job.description", ""
-                    )
-                    if not label:
-                        continue
-                    for si in ev.get("Stage Infos", []):
-                        stage_to_label.setdefault(si["Stage ID"], label)
-                    agg = per_label.setdefault(label, _zero())
-                    agg["jobs"] += 1
-                elif kind == "SparkListenerTaskEnd":
-                    label = stage_to_label.get(ev.get("Stage ID"))
-                    if label is None:
-                        continue
-                    agg = per_label.setdefault(label, _zero())
-                    tm = ev.get("Task Metrics") or {}
-                    agg["tasks"] += 1
-                    agg["cpu_sec"] += tm.get("Executor CPU Time", 0) / 1e9
-                    agg["run_sec"] += tm.get("Executor Run Time", 0) / 1e3
-                    agg["input_mb"] += (tm.get("Input Metrics") or {}).get(
-                        "Bytes Read", 0
-                    ) / 1e6
-                    srm = tm.get("Shuffle Read Metrics") or {}
-                    agg["shuffle_read_mb"] += (
-                        srm.get("Remote Bytes Read", 0)
-                        + srm.get("Local Bytes Read", 0)
-                    ) / 1e6
-                    agg["shuffle_write_mb"] += (
-                        tm.get("Shuffle Write Metrics") or {}
-                    ).get("Shuffle Bytes Written", 0) / 1e6
-                    agg["spill_mb"] += (
-                        tm.get("Memory Bytes Spilled", 0)
-                        + tm.get("Disk Bytes Spilled", 0)
-                    ) / 1e6
-    return per_label
-
-
-def _zero() -> dict:
-    return {
-        "jobs": 0,
-        "tasks": 0,
-        "cpu_sec": 0.0,
-        "run_sec": 0.0,
-        "input_mb": 0.0,
-        "shuffle_read_mb": 0.0,
-        "shuffle_write_mb": 0.0,
-        "spill_mb": 0.0,
-    }
-
-
-_COLS = (
-    "tasks",
-    "cpu_sec",
-    "run_sec",
-    "input_mb",
-    "shuffle_read_mb",
-    "shuffle_write_mb",
-    "spill_mb",
-)
+    path = os.path.join(_REPO, "perfbench", "eventlog.py")
+    spec = importlib.util.spec_from_file_location("perfbench_eventlog", path)
+    mod = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def main() -> None:
@@ -183,26 +115,26 @@ def main() -> None:
         sc.setJobDescription(None)
     spark.stop()
 
-    per_label = parse_event_log(event_dir)
+    eventlog = _load_eventlog()
+    cols = eventlog.WORK_FIELDS
+    per_label = eventlog.parse_dir(event_dir, "spark.job.description").by_label()
     payload: dict[str, dict] = {}
     for name in args.queries:
         runs = [
-            per_label.get(f"probe:{name}:{r}", _zero()) for r in range(args.runs)
+            per_label.get(f"probe:{name}:{r}", dict.fromkeys(cols, 0.0))
+            for r in range(args.runs)
         ]
         print(f"\n== {name} (sf={args.sf}, {args.runs} measured runs) ==")
-        hdr = ("run", "jobs") + _COLS + ("wall_sec",)
-        print(" ".join(f"{h:>16s}" for h in hdr))
+        hdr = ("run",) + cols + ("wall_sec",)
+        print(" ".join(f"{h:>12s}" for h in hdr))
         for r, m in enumerate(runs):
-            row = [str(r), str(m["jobs"])] + [
-                f"{m[c]:.2f}" if isinstance(m[c], float) else str(m[c])
-                for c in _COLS
-            ] + [f"{walls[name][r]:.3f}"]
-            print(" ".join(f"{v:>16s}" for v in row))
+            row = [str(r)] + [f"{m[c]:.2f}" for c in cols] + [f"{walls[name][r]:.3f}"]
+            print(" ".join(f"{v:>12s}" for v in row))
         payload[name] = {
             "runs": runs,
             "wall_sec": walls[name],
-            "min": {c: round(min(m[c] for m in runs), 3) for c in _COLS},
-            "max": {c: round(max(m[c] for m in runs), 3) for c in _COLS},
+            "min": {c: round(min(m[c] for m in runs), 3) for c in cols},
+            "max": {c: round(max(m[c] for m in runs), 3) for c in cols},
         }
 
     line = json.dumps({"sf": args.sf, "metrics": payload})
