@@ -21,23 +21,6 @@ from .exceptions import ValidationError
 _URI = r"^(snapshot|table)://[A-Za-z0-9_./-]+$"
 _SHA = r"^[0-9a-f]{64}$"
 
-#: canonical dtype vocabulary = Spark DDL simpleString (open set for
-#: nested types — array<...>, struct<...>, map<...> validate by prefix)
-SCALAR_TYPES = (
-    "string",
-    "bigint",
-    "int",
-    "smallint",
-    "tinyint",
-    "double",
-    "float",
-    "boolean",
-    "date",
-    "timestamp",
-    "timestamp_ntz",
-    "binary",
-    "decimal",
-)
 
 _PROVENANCE_FIELDS: dict[str, Any] = {
     "name": {"type": "string"},

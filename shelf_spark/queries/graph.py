@@ -36,8 +36,6 @@ from .registry import query
 #: PageRank constants.
 _DAMP = 0.85
 _ITERS = 3
-#: Exact carrier for per-edge contributions (8-decimal grid).
-_DEC8 = "decimal(20,8)"
 
 
 def _baskets(spark: SparkSession) -> DataFrame:

@@ -1,14 +1,10 @@
-"""Statistical & SQL-surface aggregates the round-1 inventory didn't cover.
-
-Correlation / regression components, deterministic mode, bitwise
-aggregates, ordered string_agg, lateral top-n join, one-pass column
-profiling, and two time-series passes (z-score anomaly flags, windowed
-EWMA) — all oracle-checked vs DuckDB.
+"""Statistical tests, time-series operators and SQL-surface aggregates,
+each held to a DuckDB oracle.
 
 Reference parity: shelf delegates this whole surface to DuckDB SQL steps
 (reference src/shelf/tables.py:155-181 runs arbitrary SQL); these are the
-aggregate families a shelf user would reach for that round 1's fn_*/agg_*
-tiers didn't yet pin down.
+aggregate families a shelf user would reach for beyond the fn_*/agg_*
+tiers.
 
 Cross-engine determinism strategy (see num.py): every moment (Σx, Σy,
 Σxy, Σx², Σy²) is accumulated in DECIMAL — exact, order-independent —
@@ -16,7 +12,36 @@ and only the final closed-form expression runs in IEEE doubles, with the
 identical op shape on both engines. corr/covar/slope then agree bitwise
 before the defensive rounding.
 
-Scale notes (100 TB):
+Day-domain base relations. The daily series of the ts_* operators and
+stats_runs_test come from five relations defined once, each as a Spark
+builder ``_x(spark)`` next to its DuckDB twin ``_sql_x()`` (num.py's
+paired style; tests/test_day_relations.py holds them equal row for row):
+
+- A ``_daily_purchase_cents``: purchase events per calendar day, ``cents``
+  = Σ floor(value·100 + 0.5). Its one parameter is an extra predicate
+  (a Column / its SQL text).
+- B ``_purchase_series``: A inside the sane-ts window, ``y`` = cents / 100.0,
+  as the one day-sorted series the Holt forecasters fold over.
+- C ``_daily_order_cents``: orders per ``o_orderdate``, ``cents`` = Σ
+  floor(o_totalprice·100 + 0.5); callers cast to their own DECIMAL
+  carrier. ``_order_lag_moments`` is the global and per-lag moments stage
+  of ts_acf and ts_ljung_box.
+- D ``_seasonal_components``: orders per calendar day, ``rev_c`` = Σ
+  round(o_totalprice·100), with its centered 7-row window, weekday and
+  total sums.
+- E ``_daily_views_purchases``: every event day, view count ``x`` and
+  purchase cents ``yi`` (0 when the day has none).
+
+Rules. Every cents carrier is BIGINT on both engines. C and D stay apart:
+round(x·100) and floor(x·100 + 0.5) disagree on negative half cents
+(−12.5 → −13 vs −12). The complete-case filter ``value IS NOT NULL`` is a
+caller's extra predicate, never a default: the other callers report a
+purchase day whose values are all NULL as a NULL-cents day. Builders
+return unpinned relations; each caller pins at its call site. Facts are
+read once, by the base relation's aggregate; everything after it runs on
+the calendar-bounded day domain (thousands of rows at any corpus size).
+
+Scale notes for the fact-level operators (100 TB):
 - corr/regr/profile are single partial+final hash aggregations — map-side
   combine, one shuffle of O(groups) rows.
 - mode is groupBy-count + per-group argmax (window over the *aggregated*
@@ -30,7 +55,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -42,6 +67,7 @@ from .registry import query
 #: prices are 2-decimal, so products are ≤4-decimal — DECIMAL(38,4) holds
 #: q*p and p*p exactly with room for the SF-scaled magnitudes.
 _DEC2 = "decimal(18,2)"
+_D38 = "decimal(38,0)"
 
 
 def _moments(df: DataFrame, x, y) -> DataFrame:
@@ -66,6 +92,204 @@ def _moments(df: DataFrame, x, y) -> DataFrame:
         (F.sum((xi * xi).cast(d0)).cast("double") / 1.0e4).alias("sxx"),
         (F.sum((yi * yi).cast(d0)).cast("double") / 1.0e4).alias("syy"),
     )
+
+
+# ---------------------------------------------------------------------------
+# day-domain base relations A-E (rules in the module docstring)
+# ---------------------------------------------------------------------------
+
+
+def _day(ts: str) -> Column:
+    return F.to_date(F.date_trunc("day", ts)).alias("day")
+
+
+def _cents(x: str) -> Column:
+    return F.floor(F.col(x) * 100 + F.lit(0.5)).cast("long")
+
+
+def _daily_purchase_cents(
+    spark: SparkSession, where: Column | None = None
+) -> DataFrame:
+    """A: ``day, cents`` over purchase events that also pass ``where``."""
+    keep = F.col("event_type") == "purchase"
+    if where is not None:
+        keep = keep & where
+    return (
+        spark.table("events")
+        .filter(keep)
+        .groupBy(_day("ts"))
+        .agg(F.sum(_cents("value")).alias("cents"))
+    )
+
+
+def _sql_daily_purchase_cents(where: str | None = None) -> str:
+    keep = "event_type = 'purchase'" + (f" AND {where}" if where else "")
+    return f"""
+      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events WHERE {keep} GROUP BY 1"""
+
+
+def _purchase_series(spark: SparkSession) -> DataFrame:
+    """B: one row, ``s`` = the (day, y) structs of A in the sane-ts
+    window, sorted by day."""
+    daily = _daily_purchase_cents(spark, sane_ts(F.col("ts")))
+    y = (F.col("cents").cast("double") / 100.0).alias("y")
+    return daily.agg(
+        F.sort_array(F.collect_list(F.struct("day", y))).alias("s")
+    )
+
+
+def _sql_purchase_series() -> str:
+    """B's twin as rows ``day, y, i`` (i = 1-based position by day)."""
+    return f"""
+      SELECT day, CAST(cents AS DOUBLE) / 100.0 AS y,
+             row_number() OVER (ORDER BY day) AS i
+      FROM ({_sql_daily_purchase_cents(sql_sane_ts('ts'))})"""
+
+
+def _daily_order_cents(spark: SparkSession) -> DataFrame:
+    """C: ``day, cents`` per ``o_orderdate``."""
+    return (
+        spark.table("orders")
+        .groupBy(F.col("o_orderdate").alias("day"))
+        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+    )
+
+
+def _sql_daily_order_cents() -> str:
+    return """
+      SELECT o_orderdate AS day,
+             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM orders GROUP BY 1"""
+
+
+def _order_lag_moments(
+    daily: DataFrame, lags: tuple[int, ...]
+) -> tuple[DataFrame, DataFrame]:
+    """C's moments on ``rev`` = DECIMAL(19,0) cents: one global row
+    ``n, s, q`` and, per lag k, ``pk, hk, tk, n_terms`` over the day
+    pairs (a, a + k)."""
+    rev = daily.select("day", F.col("cents").cast("decimal(19,0)").alias("rev"))
+    glob = rev.agg(
+        F.count("*").cast("decimal(19,0)").alias("n"),
+        F.sum("rev").cast(_D38).alias("s"),
+        F.sum(F.col("rev") * F.col("rev")).cast(_D38).alias("q"),
+    )
+    lag = daily.sparkSession.createDataFrame([(k,) for k in lags], "lag int")
+    a = rev.select(F.col("day").alias("day_a"), F.col("rev").alias("rev_a"))
+    b = rev.select(F.col("day").alias("day_b"), F.col("rev").alias("rev_b"))
+    lagged = (
+        a.crossJoin(F.broadcast(lag))
+        .join(b, F.col("day_b") == F.expr("date_add(day_a, lag)"))
+        .groupBy("lag")
+        .agg(
+            F.sum(F.col("rev_a") * F.col("rev_b")).cast(_D38).alias("pk"),
+            F.sum("rev_a").cast(_D38).alias("hk"),
+            F.sum("rev_b").cast(_D38).alias("tk"),
+            F.count("*").cast("long").alias("n_terms"),
+        )
+    )
+    return glob, lagged
+
+
+def _sql_order_lag_moments(lags: tuple[int, ...]) -> str:
+    """The twin as CTEs ``daily``, ``gmom`` and ``lagged``, for a caller's
+    WITH list."""
+    return f"""daily AS (
+      SELECT day, CAST(cents AS DECIMAL(19,0)) AS rev
+      FROM ({_sql_daily_order_cents()})
+    ), gmom AS (
+      SELECT CAST(count(*) AS DECIMAL(19,0)) AS n,
+             CAST(sum(rev) AS DECIMAL(38,0)) AS s,
+             CAST(sum(rev * rev) AS DECIMAL(38,0)) AS q
+      FROM daily
+    ), lagged AS (
+      SELECT l.lag,
+             CAST(sum(a.rev * b.rev) AS DECIMAL(38,0)) AS pk,
+             CAST(sum(a.rev) AS DECIMAL(38,0)) AS hk,
+             CAST(sum(b.rev) AS DECIMAL(38,0)) AS tk,
+             CAST(count(*) AS BIGINT) AS n_terms
+      FROM (SELECT unnest(ARRAY{list(lags)}) AS lag) l
+        JOIN daily a ON true
+        JOIN daily b ON b.day = a.day + l.lag * INTERVAL 1 DAY
+      GROUP BY l.lag
+    )"""
+
+
+def _seasonal_components(spark: SparkSession) -> DataFrame:
+    """D: per order day ``dow`` (0 = Sunday), ``rev_c``, the centered
+    7-row window ``s7, c7``, the weekday's ``sd, nd`` and the totals
+    ``st, nt``."""
+    daily = (
+        spark.table("orders")
+        .groupBy(_day("o_orderdate"))
+        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+    )
+    # Spark dayofweek is 1(Sun)–7(Sat); DuckDB's is 0(Sun)–6(Sat).
+    dow = (F.dayofweek("day") - F.lit(1)).cast("int")
+    const = F.pmod(F.unix_date(F.col("day")), F.lit(1))  # bounded day domain
+    w7 = W.partitionBy(const).orderBy("day").rowsBetween(-3, 3)
+    win = daily.select(
+        "day",
+        "rev_c",
+        dow.alias("dow"),
+        F.sum("rev_c").over(w7).alias("s7"),
+        F.count("*").over(w7).alias("c7"),
+    )
+    dow_avg = daily.groupBy(dow.alias("dow")).agg(
+        F.sum("rev_c").alias("sd"), F.count("*").alias("nd")
+    )
+    tot = daily.agg(F.sum("rev_c").alias("st"), F.count("*").alias("nt"))
+    return win.join(F.broadcast(dow_avg), "dow").crossJoin(F.broadcast(tot))
+
+
+def _sql_seasonal_components() -> str:
+    return """
+      WITH daily AS (
+        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS day,
+               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                 AS rev_c
+        FROM orders GROUP BY 1
+      ), win AS (
+        SELECT day, rev_c, CAST(dayofweek(day) AS INT) AS dow,
+               sum(rev_c) OVER w AS s7, count(*) OVER w AS c7
+        FROM daily
+        WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+      ), dow_avg AS (
+        SELECT CAST(dayofweek(day) AS INT) AS dow,
+               sum(rev_c) AS sd, count(*) AS nd
+        FROM daily GROUP BY 1
+      ), tot AS (SELECT sum(rev_c) AS st, count(*) AS nt FROM daily)
+      SELECT w.dow, w.day, w.rev_c, w.s7, w.c7, d.sd, d.nd, t.st, t.nt
+      FROM win w JOIN dow_avg d ON d.dow = w.dow CROSS JOIN tot t"""
+
+
+def _daily_views_purchases(spark: SparkSession) -> DataFrame:
+    """E: ``day, x, yi`` over every event day."""
+    return (
+        spark.table("events")
+        .groupBy(_day("ts"))
+        .agg(
+            F.count(F.when(F.col("event_type") == "view", 1)).alias("x"),
+            F.coalesce(
+                F.sum(F.when(F.col("event_type") == "purchase", _cents("value"))),
+                F.lit(0),
+            ).alias("yi"),
+        )
+    )
+
+
+def _sql_daily_views_purchases() -> str:
+    return """
+      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+             count(*) FILTER (WHERE event_type = 'view') AS x,
+             CAST(coalesce(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+                             FILTER (WHERE event_type = 'purchase'), 0)
+                  AS BIGINT) AS yi
+      FROM events GROUP BY 1"""
 
 
 @query(
@@ -913,12 +1137,7 @@ _SQL_XCORR = (
 @query(
     "ts_cross_correlation",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             count(*) FILTER (WHERE event_type = 'view') AS x,
-             coalesce(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        FILTER (WHERE event_type = 'purchase'), 0) AS yi
-      FROM events GROUP BY 1
+    WITH daily AS ({_sql_daily_views_purchases()}
     ), lagged AS (
       SELECT l.lag, a.x, b.yi
       FROM (SELECT unnest(ARRAY{list(_XCORR_LAGS)}) AS lag) l
@@ -949,30 +1168,10 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-shape IEEE expression (agg_corr_regr's discipline) →
     bit-identical across engines.
 
-    Scale shape: ONE fact-table aggregate compresses events onto the
-    bounded calendar-day domain; the lag self-join and moment sums run
-    entirely on that (days × lags)-sized relation — adding lags or
-    years grows the domain, never re-scans facts."""
-    daily = (
-        spark.table("events")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("x"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("event_type") == "purchase",
-                        F.floor(F.col("value") * 100 + F.lit(0.5)).cast(
-                            "long"
-                        ),
-                    )
-                ),
-                F.lit(0),
-            ).alias("yi"),
-        )
-        # both lag-join sides (r15: wall 3.3-3.6 s lazy vs 1.1-1.8 s)
-        .transform(pin, "fanout")
-    )
+    Scale shape: base relation E; the lag self-join and moment sums run
+    on the (days × lags)-sized relation."""
+    # both lag-join sides (r15: wall 3.3-3.6 s lazy vs 1.1-1.8 s)
+    daily = _daily_views_purchases(spark).transform(pin, "fanout")
     # Build the lag grid from the tuple VALUES (not its length) so a
     # non-contiguous / non-zero-based _XCORR_LAGS stays in sync with the
     # oracle, which unnests the same values.
@@ -1280,10 +1479,8 @@ _SQL_TS_SLOPE = (
     "ts_theil_sen_trend",
     oracle=f"""
     WITH daily AS (
-      SELECT date_diff('day', DATE '2024-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
-             sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS yi
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
+      SELECT date_diff('day', DATE '2024-01-01', day) AS d, cents AS yi
+      FROM ({_sql_daily_purchase_cents()})
     ), pairs AS (
       SELECT a.d AS di, a.yi AS yi, b.d AS dj, b.yi AS yj
       FROM daily a JOIN daily b ON a.d < b.d
@@ -1313,25 +1510,16 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded value is the DOMAIN key, so the discrete median is
     engine-exact (no interpolation).
 
-    Scale shape: facts compress onto the calendar-day domain first (one
-    map-side-combined agg); the pair join and the median pass run
-    entirely on that domain — O(days²) pairs, bounded by the calendar
-    horizon (a decade ≈ 6.7M pairs — a flyweight relation), never by
-    event volume. The slope-domain cumulative count is a
-    constant-partition window over the compressed slope grid."""
+    Scale shape: base relation A; the pair join and the median pass run
+    on the day domain — O(days²) pairs, bounded by the calendar horizon
+    (a decade ≈ 6.7M pairs — a flyweight relation), never by event
+    volume. The slope-domain cumulative count is a constant-partition
+    window over the compressed slope grid."""
     daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.datediff(
-                F.date_trunc("day", "ts").cast("date"),
-                F.lit("2024-01-01").cast("date"),
-            ).alias("d")
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).alias("yi")
+        _daily_purchase_cents(spark)
+        .select(
+            F.datediff("day", F.lit("2024-01-01").cast("date")).alias("d"),
+            F.col("cents").alias("yi"),
         )
         # both pair-join sides + the n_days count (r15: 1.19-1.21 s lazy
         # vs 0.87-1.16 s)
@@ -1476,8 +1664,6 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Shared scored relation (same convention as ml_eval_binary_metrics):
 #: the doc-length score judged against the lang=='en' truth.
 _SQL_SCORED = "SELECT doc_id, n_chars AS score, (lang = 'en') AS y FROM documents"
-
-_D38 = "decimal(38,0)"
 
 
 def _scored(spark: SparkSession) -> DataFrame:
@@ -2003,10 +2189,7 @@ def clean_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_changepoint_cusum",
     oracle=f"""
     WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             coalesce(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                      FILTER (WHERE event_type = 'purchase'), 0) AS v
-      FROM events GROUP BY 1
+      SELECT day, yi AS v FROM ({_sql_daily_views_purchases()})
     ),
     cum AS (
       SELECT day, v,
@@ -2040,24 +2223,14 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     n·S_k ≈ 10^22 at a decade × 10^18-cents scale), so both engines
     pick the same day; only the reported statistic divides down.
 
-    Scale shape: facts compress onto the calendar-day domain in one
-    agg; running sum and day index are ONE distributed prefix pass
-    (two value columns, same exchange); the max is TakeOrdered(1)."""
+    Scale shape: base relation E; running sum and day index are ONE
+    distributed prefix pass (two value columns, same exchange); the max
+    is TakeOrdered(1)."""
     from .prefix import attach_prefix_sums
 
-    daily = spark.table("events").groupBy(
-        F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"),
-                )
-            ),
-            F.lit(0),
-        ).alias("v"),
-    ).withColumn("one", F.lit(1))
+    daily = _daily_views_purchases(spark).select(
+        "day", F.col("yi").alias("v"), F.lit(1).alias("one")
+    )
     cum = attach_prefix_sums(daily, ["day"], ["v", "one"])
     # totals from CUM (attach_prefix_sums' checkpointed domain), not from
     # `daily` — aggregating the raw relation would re-run the full events
@@ -2304,38 +2477,18 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonal_decompose",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS day,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
-    win AS (
-      SELECT day, rev_c,
-             CAST(dayofweek(day) AS INT) AS dow,
-             sum(rev_c)  OVER w AS s7,
-             count(*)    OVER w AS c7
-      FROM daily
-      WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-    ),
-    dow_avg AS (
-      SELECT CAST(dayofweek(day) AS INT) AS dow,
-             sum(rev_c) AS sd, count(*) AS nd
-      FROM daily GROUP BY 1
-    ),
-    tot AS (SELECT sum(rev_c) AS st, count(*) AS nt FROM daily)
-    SELECT w.day, w.dow,
-           round(w.rev_c / 100.0, 6)                             AS revenue,
-           round(w.s7 / (100.0 * w.c7), 6)                       AS trend_7d,
-           round(d.sd / (100.0 * d.nd)
-                 - t.st / (100.0 * t.nt), 6)                     AS seasonal_dow,
-           round(w.rev_c / 100.0
-                 - w.s7 / (100.0 * w.c7)
-                 - (d.sd / (100.0 * d.nd)
-                    - t.st / (100.0 * t.nt)), 6)                 AS residual
-    FROM win w JOIN dow_avg d ON d.dow = w.dow CROSS JOIN tot t
-    ORDER BY w.day
+    oracle=f"""
+    WITH seas AS ({_sql_seasonal_components()}
+    )
+    SELECT day, dow,
+           round(rev_c / 100.0, 6)                             AS revenue,
+           round(s7 / (100.0 * c7), 6)                         AS trend_7d,
+           round(sd / (100.0 * nd) - st / (100.0 * nt), 6)     AS seasonal_dow,
+           round(rev_c / 100.0
+                 - s7 / (100.0 * c7)
+                 - (sd / (100.0 * nd) - st / (100.0 * nt)), 6) AS residual
+    FROM seas
+    ORDER BY day
     """,
 )
 def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2351,43 +2504,15 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers by the same expression tree, making trend/seasonal/
     residual bit-reproducible (rounded 6dp for belt and braces).
 
-    Scale shape: one map-side-combined aggregate compresses facts onto
-    the calendar-day domain (~2.4k rows here; thousands at any
-    horizon); the 7-row frame runs as a constant-key window over that
-    compressed domain (the prefix.py idiom — bounded by calendar, not
-    data), and the day-of-week/global means join back as 7-row/1-row
-    broadcasts. Fact rows are touched exactly once."""
-    daily = (
-        spark.table("orders")
-        .groupBy(F.to_date(F.date_trunc("day", "o_orderdate")).alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("rev_c")
-        )
-    )
-    # Spark dayofweek is 1(Sun)–7(Sat); DuckDB's is 0(Sun)–6(Sat).
-    dow = (F.dayofweek("day") - F.lit(1)).cast("int")
-    const = F.pmod(F.unix_date(F.col("day")), F.lit(1))
-    w7 = W.partitionBy(const).orderBy("day").rowsBetween(-3, 3)
-    win = daily.select(
-        "day",
-        "rev_c",
-        dow.alias("dow"),
-        F.sum("rev_c").over(w7).alias("s7"),
-        F.count("*").over(w7).alias("c7"),
-    )
-    dow_avg = daily.groupBy(dow.alias("dow")).agg(
-        F.sum("rev_c").alias("sd"), F.count("*").alias("nd")
-    )
-    tot = daily.agg(F.sum("rev_c").alias("st"), F.count("*").alias("nt"))
+    Scale shape: base relation D, whose 7-row frame is a constant-key
+    window over the day domain and whose weekday/global sums join back
+    as 7-row/1-row broadcasts."""
     trend = F.col("s7") / (F.lit(100.0) * F.col("c7"))
     seasonal = F.col("sd") / (F.lit(100.0) * F.col("nd")) - F.col("st") / (
         F.lit(100.0) * F.col("nt")
     )
     return (
-        win.join(F.broadcast(dow_avg), "dow")
-        .crossJoin(F.broadcast(tot))
+        _seasonal_components(spark)
         .select(
             "day",
             "dow",
@@ -3050,18 +3175,7 @@ _HOLT_H = 7  #: forecast horizon (days)
 @query(
     "ts_holt_linear_forecast",
     oracle=f"""
-    WITH RECURSIVE daily AS (
-      -- date sanity window (r10 time corpus): a 9999 sentinel day
-      -- would both corrupt the trend and push forecast days past the
-      -- Python-datetime ceiling; excluded deterministically both sides
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100.0 + 0.5) AS DECIMAL(18,0)))
-                  AS DOUBLE) / 100.0 AS y
-      FROM events
-      WHERE event_type = 'purchase' AND {sql_sane_ts('ts')}
-      GROUP BY 1
-    ), idx AS (
-      SELECT day, y, row_number() OVER (ORDER BY day) AS i FROM daily
+    WITH RECURSIVE idx AS ({_sql_purchase_series()}
     ), hw AS (
       SELECT 1 AS i,
              (SELECT y FROM idx WHERE i = 1) AS l,
@@ -3075,7 +3189,7 @@ _HOLT_H = 7  #: forecast horizon (days)
     ), fin AS (
       SELECT l, t FROM hw ORDER BY i DESC LIMIT 1
     ), lastd AS (
-      SELECT max(day) AS last_day, count(*) AS nn FROM daily
+      SELECT max(day) AS last_day, count(*) AS nn FROM idx
     )
     SELECT CAST(h AS BIGINT) AS h,
            last_day + CAST(h AS INTEGER) AS day,
@@ -3094,27 +3208,18 @@ def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     baselines).
 
     An inherently SEQUENTIAL recurrence, handled by the repo's bounded-
-    domain rule: the heavy part (daily revenue on the exact cent grid)
-    is a distributed partial+final agg over the facts; the recurrence
-    then folds over the DAY DOMAIN (calendar-bounded — ~150 elements
-    here, ≤ a few thousand at ANY corpus size), as one `aggregate`
-    lambda over the collected series — per the dedup_simhash_sha
-    lesson, lambdas are exactly right at this size and the fold never
-    touches fact-sized data. The DuckDB oracle runs the SAME recurrence
-    as a recursive CTE, so every float op is order-pinned on both
-    engines: the forecasts compare bitwise. l_i is inlined twice in the
-    t-update on BOTH sides (identical op sequence)."""
-    # sanity window: see oracle note (r10 time corpus)
-    e = spark.table("events").filter(
-        (F.col("event_type") == "purchase") & sane_ts(F.col("ts"))
-    )
-    cents = F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("decimal(18,0)")
-    daily = e.groupBy(
-        F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg((F.sum(cents).cast("double") / 100.0).alias("y"))
-    series = daily.agg(
-        F.sort_array(F.collect_list(F.struct("day", "y"))).alias("s")
-    )
+    domain rule: the recurrence folds over base relation B's day-sorted
+    series (calendar-bounded — ~150 elements here, ≤ a few thousand at
+    ANY corpus size) as one `aggregate` lambda — per the
+    dedup_simhash_sha lesson, lambdas are exactly right at this size and
+    the fold never touches fact-sized data. B's sane-ts window keeps a
+    9999 sentinel day from corrupting the trend and from pushing forecast
+    days past the Python-datetime ceiling (r10 time corpus). The DuckDB
+    oracle runs the SAME recurrence as a recursive CTE, so every float
+    op is order-pinned on both engines: the forecasts compare bitwise.
+    l_i is inlined twice in the t-update on BOTH sides (identical op
+    sequence)."""
+    series = _purchase_series(spark)
     # Holt's trend init needs two observations; on a shorter series the
     # model is undefined — zero forecast rows on both engines instead
     # of an out-of-bounds element_at (r9 sparse-fixture find).
@@ -3850,11 +3955,7 @@ _SAX_SYM = (
 @query(
     "ts_sax_symbols",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
+    WITH daily AS ({_sql_daily_purchase_cents()}
     ), d0 AS (SELECT min(day) AS day0 FROM daily),
     mom AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
@@ -3884,23 +3985,13 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     the discretization that turns time series into strings so motif /
     anomaly mining can reuse text machinery (winnowing, n-gram dedup).
 
-    Scale shape: facts collapse to the DAY domain in one
-    map-side-combined rollup; normalization moments and the PAA frames
-    are day-domain aggregates (bounded by calendar span, not data).
-    Every carrier (frame cents sums, series power sums) is an exact
-    integer; each frame's z and its breakpoint comparisons are one
-    fixed-shape IEEE expression — the symbol can only flip if the
-    EXACT z crosses a breakpoint, identically on both engines."""
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).cast("long").alias("cents")
-        )
-    )
+    Scale shape: base relation A; normalization moments and the PAA
+    frames are day-domain aggregates. Every carrier (frame cents sums,
+    series power sums) is an exact integer; each frame's z and its
+    breakpoint comparisons are one fixed-shape IEEE expression — the
+    symbol can only flip if the EXACT z crosses a breakpoint, identically
+    on both engines."""
+    daily = _daily_purchase_cents(spark)
     d0 = daily.agg(F.min("day").alias("day0"))
     c38 = F.col("cents").cast("decimal(38,0)")
     mom = daily.agg(
@@ -4466,11 +4557,7 @@ _TWO_PI = 6.283185307179586
 @query(
     "ts_fourier_periodogram",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
+    WITH daily AS ({_sql_daily_purchase_cents()}
     ), d0 AS (SELECT min(day) AS day0 FROM daily),
     mom AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
@@ -4509,23 +4596,14 @@ def ts_fourier_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadrature) / n — the spectral seasonality detector that says WHICH
     cycle a series carries before ts_seasonal_decompose assumes one.
 
-    Scale shape: facts collapse to the day domain once; the period grid
-    is a 4-literal broadcast, so the trig stage touches days×4 rows.
+    Scale shape: base relation A; the period grid is a 4-literal
+    broadcast, so the trig stage touches days×4 rows.
     Mean removal uses exact integer moments; each projection term lands
     on the 1e-6 grid and sums in DECIMAL (float-order-free — same
     contract as the MI/AP term sums; cos/sin last-ulp divergence
     between engines is absorbed by the grid exactly like ln/exp
     elsewhere)."""
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_purchase_cents(spark)
     d0 = daily.agg(F.min("day").alias("day0"))
     mom = daily.agg(
         F.count("*").cast("long").alias("n"),
@@ -4695,12 +4773,7 @@ _RUNS_Z = (
       -- value IS NOT NULL (r10 nulls corpus): an all-null day would
       -- carry a NULL revenue into the median/sign windows, where the
       -- engines' null sort orders differ.
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events
-      WHERE event_type = 'purchase' AND value IS NOT NULL
-      GROUP BY 1
+      {_sql_daily_purchase_cents("value IS NOT NULL")}
     ), med AS (
       SELECT min(cents) AS m FROM (
         SELECT cents,
@@ -4735,24 +4808,17 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     trending; too many → oscillating.) Median-days drop per the
     standard procedure; z from the exact run count.
 
-    Scale shape: facts collapse to the day domain once; the median, the
-    sign sequence, and the run count all live on that calendar-bounded
-    relation. Sequence order comes from a PREFIX-derived rank and the
-    adjacent-transition count is a rank+1 EQUI-join (the
-    sorted-neighborhood trick) — no unpartitioned lag window even on
-    the small domain, keeping the plan-audit invariant registry-wide."""
+    Scale shape: base relation A, complete-case; the median, the sign
+    sequence, and the run count all live on the day domain. Sequence
+    order comes from a PREFIX-derived rank and the adjacent-transition
+    count is a rank+1 EQUI-join (the sorted-neighborhood trick) — no
+    unpartitioned lag window even on the small domain, keeping the
+    plan-audit invariant registry-wide."""
     from .prefix import attach_prefix_sums
 
     daily = (
-        spark.table("events")
         # value IS NOT NULL: see oracle note
-        .filter((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+        _daily_purchase_cents(spark, F.col("value").isNotNull())
         # the value-domain build, the n_days count and the signs pass (r15)
         .transform(pin, "fanout")
     )
@@ -4948,11 +5014,7 @@ _XMR_LCL = f"({_XMR_CENTER} - {_XMR_K!r} * {_XMR_MRBAR})"
 @query(
     "ts_control_chart_xmr",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
+    WITH daily AS ({_sql_daily_purchase_cents()}
     ), ranked AS (
       SELECT cents, row_number() OVER (ORDER BY day) AS rk FROM daily
     ), mrs AS (
@@ -4986,26 +5048,16 @@ def ts_control_chart_xmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     "did the pipeline's daily volume go out of control" monitor (the
     sequential cousin of ts_changepoint_cusum).
 
-    Scale shape: day-domain everything; consecutive-day moving ranges
+    Scale shape: base relation A; consecutive-day moving ranges
     via prefix-rank + rank+1 EQUI-join (no unpartitioned lag window —
     the runs-test discipline); exact integer carriers, fixed IEEE
     limit expressions shared verbatim between the limit columns and
     the violation predicate."""
     from .prefix import attach_prefix_sums
 
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-        # the moving-range chain, the moments agg and the violations pass
-        # (r15: Σ task run 2.0-2.2 s lazy vs 1.0-1.6 s)
-        .transform(pin, "fanout")
-    )
+    # the moving-range chain, the moments agg and the violations pass
+    # (r15: Σ task run 2.0-2.2 s lazy vs 1.0-1.6 s)
+    daily = _daily_purchase_cents(spark).transform(pin, "fanout")
     ddom = daily.groupBy("day").agg(
         F.count("*").cast("long").alias("t"), F.max("cents").alias("cents")
     )
@@ -5043,12 +5095,8 @@ def ts_control_chart_xmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_peak_detection",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
+    oracle=f"""
+    WITH daily AS ({_sql_daily_purchase_cents()}
     ), ranked AS (
       SELECT day, cents, row_number() OVER (ORDER BY day) AS rk FROM daily
     )
@@ -5067,21 +5115,12 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors), with the rise/fall magnitudes — the peak-finding
     primitive under promotion-impact and burst analyses.
 
-    Scale shape: day-domain only; the ±1-neighbor comparisons are
+    Scale shape: base relation A; the ±1-neighbor comparisons are
     prefix-rank EQUI-joins (the runs-test/XmR discipline — no
     unpartitioned lag window), exact integer comparisons."""
     from .prefix import attach_prefix_sums
 
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_purchase_cents(spark)
     ddom = daily.groupBy("day").agg(
         F.count("*").cast("long").alias("t"), F.max("cents").alias("cents")
     )
@@ -5106,12 +5145,8 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_snaive_backtest",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
+    oracle=f"""
+    WITH daily AS ({_sql_daily_purchase_cents()}
     ), joined AS (
       SELECT a.day, a.cents AS actual,
              f.cents AS forecast, abs(a.cents - f.cents) AS err
@@ -5139,19 +5174,9 @@ def ts_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     which the sf0.001 cross-scale gate caught in r9. err·10⁶ tops out
     around 1e17 even at 1000× the bench scale — far inside int64), so
     both aggregates are order-free exact sums with one final IEEE
-    division each. Day-domain self-join on day−7 — calendar-
-    bounded equi-join, facts touched once."""
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-        .transform(pin, "reuse")
-    )
+    division each. Scale shape: base relation A, self-joined on
+    day−7."""
+    daily = _daily_purchase_cents(spark).transform(pin, "reuse")
     fc = daily.select(F.date_add("day", 7).alias("day"), F.col("cents").alias("f"))
     joined = daily.join(fc, "day").select(
         F.col("cents").alias("actual"),
@@ -5594,10 +5619,8 @@ _MK_Z = (
     "ts_mann_kendall",
     oracle=f"""
     WITH daily AS (
-      SELECT o_orderdate AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS DECIMAL(18,0)) AS rev
-      FROM orders GROUP BY 1
+      SELECT day, CAST(cents AS DECIMAL(18,0)) AS rev
+      FROM ({_sql_daily_order_cents()})
     ), s AS (
       SELECT CAST(sum(CASE WHEN b.rev > a.rev THEN 1
                            WHEN b.rev < a.rev THEN -1 ELSE 0 END)
@@ -5620,21 +5643,15 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_theil_sen_trend's slope: Theil-Sen says HOW steep, Mann-Kendall
     says whether the trend is distinguishable from noise at all.
 
-    Scale shape: facts compress onto the TIME-BOUNDED day domain in one
-    aggregate (revenue as exact integer cents — sign comparisons are
+    Scale shape: base relation C (integer cents — sign comparisons are
     integer-exact, no float ties); the O(days²) sign-pair pass is a
-    broadcast non-equi self-join of that ~2.4k-row domain (a 10-year
+    broadcast non-equi self-join of the ~2.4k-row day domain (a 10-year
     corpus is ~6.6M pairs — constant in corpus size, linear in years).
     Tie groups come from one more domain-sized aggregate; Z is ONE
     shared IEEE expression over (n, S, u)."""
     daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-            .cast("decimal(18,0)")
-            .alias("rev")
-        )
+        _daily_order_cents(spark)
+        .select("day", F.col("cents").cast("decimal(18,0)").alias("rev"))
         # both S-statistic pair-join sides, the tie groups and the count
         # (r15: wall 0.68-0.83 s lazy vs 0.57-0.62 s)
         .transform(pin, "fanout")
@@ -5696,27 +5713,7 @@ _ACF_R = (
 @query(
     "ts_acf",
     oracle=f"""
-    WITH daily AS (
-      SELECT o_orderdate AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS DECIMAL(19,0)) AS rev
-      FROM orders GROUP BY 1
-    ), gmom AS (
-      SELECT CAST(count(*) AS DECIMAL(19,0)) AS n,
-             CAST(sum(rev) AS DECIMAL(38,0)) AS s,
-             CAST(sum(rev * rev) AS DECIMAL(38,0)) AS q
-      FROM daily
-    ), lagged AS (
-      SELECT l.lag,
-             CAST(sum(a.rev * b.rev) AS DECIMAL(38,0)) AS pk,
-             CAST(sum(a.rev) AS DECIMAL(38,0)) AS hk,
-             CAST(sum(b.rev) AS DECIMAL(38,0)) AS tk,
-             CAST(count(*) AS BIGINT) AS n_terms
-      FROM (SELECT unnest(ARRAY{list(_ACF_LAGS)}) AS lag) l
-        JOIN daily a ON true
-        JOIN daily b ON b.day = a.day + l.lag * INTERVAL 1 DAY
-      GROUP BY l.lag
-    )
+    WITH {_sql_order_lag_moments(_ACF_LAGS)}
     SELECT CAST(lag AS BIGINT) AS lag, n_terms,
            {_sql_round_ieee(_ACF_R, 6)} AS acf
     FROM lagged, gmom ORDER BY lag
@@ -5729,44 +5726,16 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistical ACF normalization — FIXED full-series mean and variance —
     which ts_cross_correlation's per-lag Pearson deliberately does not.
 
-    Scale shape: one fact aggregate onto the time-bounded day domain
-    (revenue as exact integer cents); the lag self-join runs on that
-    (days × lags)-sized relation. The mean-centered form is expanded so
-    P_k, H_k, T_k, S, Q are exact DECIMAL(38,0) moments (headroom: n·X²
-    at 100 TB daily cents ~2.5e15 → n²·P ~1e41 would overflow, so the
-    n² scaling happens in the final shared IEEE expression, never in
-    decimal); r_k is that ONE expression on both engines."""
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-            .cast("decimal(19,0)")
-            .alias("rev")
-        )
-        .transform(pin, "reuse")  # day domain, consumed by glob + both join sides
-    )
-    glob = daily.agg(
-        F.count("*").cast("decimal(19,0)").alias("n"),
-        F.sum("rev").cast("decimal(38,0)").alias("s"),
-        F.sum(F.col("rev") * F.col("rev")).cast("decimal(38,0)").alias("q"),
-    )
-    lags = spark.createDataFrame([(int(l),) for l in _ACF_LAGS], "lag int")
-    a = daily.select(F.col("day").alias("day_a"), F.col("rev").alias("rev_a"))
-    b = daily.select(F.col("day").alias("day_b"), F.col("rev").alias("rev_b"))
-    lagged = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("day_b") == F.expr("date_add(day_a, lag)"))
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("rev_a") * F.col("rev_b"))
-            .cast("decimal(38,0)")
-            .alias("pk"),
-            F.sum("rev_a").cast("decimal(38,0)").alias("hk"),
-            F.sum("rev_b").cast("decimal(38,0)").alias("tk"),
-            F.count("*").cast("long").alias("n_terms"),
-        )
-    )
+    Scale shape: base relation C and its lag-moments stage; the lag
+    self-join runs on the (days × lags)-sized relation. The
+    mean-centered form is expanded so P_k, H_k, T_k, S, Q are exact
+    DECIMAL(38,0) moments (headroom: n·X² at 100 TB daily cents ~2.5e15
+    → n²·P ~1e41 would overflow, so the n² scaling happens in the final
+    shared IEEE expression, never in decimal); r_k is that ONE
+    expression on both engines."""
+    # day domain, consumed by glob + both join sides
+    daily = _daily_order_cents(spark).transform(pin, "reuse")
+    glob, lagged = _order_lag_moments(daily, _ACF_LAGS)
     return (
         lagged.crossJoin(F.broadcast(glob))
         .select(
@@ -6133,6 +6102,7 @@ def ml_fairness_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _LB_K = 7
+_LB_LAGS = tuple(range(1, _LB_K + 1))
 
 #: Per-lag Ljung-Box term: the exact-moment ACF (ts_acf's expanded form),
 #: squared and weighted by 1/(n−k) — one shared IEEE expression, rounded
@@ -6146,26 +6116,7 @@ _LB_TERM = (
 @query(
     "ts_ljung_box",
     oracle=f"""
-    WITH daily AS (
-      SELECT o_orderdate AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS DECIMAL(19,0)) AS rev
-      FROM orders GROUP BY 1
-    ), gmom AS (
-      SELECT CAST(count(*) AS DECIMAL(19,0)) AS n,
-             CAST(sum(rev) AS DECIMAL(38,0)) AS s,
-             CAST(sum(rev * rev) AS DECIMAL(38,0)) AS q
-      FROM daily
-    ), lagged AS (
-      SELECT l.lag,
-             CAST(sum(a.rev * b.rev) AS DECIMAL(38,0)) AS pk,
-             CAST(sum(a.rev) AS DECIMAL(38,0)) AS hk,
-             CAST(sum(b.rev) AS DECIMAL(38,0)) AS tk
-      FROM (SELECT unnest(generate_series(1, {_LB_K})) AS lag) l
-        JOIN daily a ON true
-        JOIN daily b ON b.day = a.day + l.lag * INTERVAL 1 DAY
-      GROUP BY l.lag
-    ), terms AS (
+    WITH {_sql_order_lag_moments(_LB_LAGS)}, terms AS (
       SELECT CAST({_sql_round_ieee(_LB_TERM, 9)} * 1000000000.0
                   AS DECIMAL(18,0)) AS nano
       FROM lagged, gmom
@@ -6192,36 +6143,9 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag's term is ONE shared IEEE expression rounded onto the 1e-9
     grid, the cross-lag sum is decimal (order-free), and the final
     n(n+2) scaling is one more shared expression. Scale shape:
-    identical to ts_acf — one fact aggregate onto the time-bounded day
-    domain, then (days × K) work."""
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-            .cast("decimal(19,0)")
-            .alias("rev")
-        )
-        .transform(pin, "reuse")
-    )
-    gmom = daily.agg(
-        F.count("*").cast("decimal(19,0)").alias("n"),
-        F.sum("rev").cast("decimal(38,0)").alias("s"),
-        F.sum(F.col("rev") * F.col("rev")).cast("decimal(38,0)").alias("q"),
-    )
-    lags = spark.createDataFrame([(k,) for k in range(1, _LB_K + 1)], "lag int")
-    a = daily.select(F.col("day").alias("day_a"), F.col("rev").alias("rev_a"))
-    b = daily.select(F.col("day").alias("day_b"), F.col("rev").alias("rev_b"))
-    lagged = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("day_b") == F.expr("date_add(day_a, lag)"))
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("rev_a") * F.col("rev_b")).cast("decimal(38,0)").alias("pk"),
-            F.sum("rev_a").cast("decimal(38,0)").alias("hk"),
-            F.sum("rev_b").cast("decimal(38,0)").alias("tk"),
-        )
-    )
+    identical to ts_acf."""
+    daily = _daily_order_cents(spark).transform(pin, "reuse")
+    gmom, lagged = _order_lag_moments(daily, _LB_LAGS)
     terms = lagged.crossJoin(F.broadcast(gmom)).select(
         (_round_ieee(F.expr(_LB_TERM), 9) * 1.0e9).cast("decimal(18,0)").alias("nano")
     )
@@ -6567,16 +6491,7 @@ def _hw_sql() -> str:
         + " END"
     )
     return f"""
-    WITH RECURSIVE daily AS (
-      -- date sanity window (r10 time corpus): see ts_holt_linear_forecast
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(sum(CAST(floor(value * 100.0 + 0.5) AS DECIMAL(18,0)))
-                  AS DOUBLE) / 100.0 AS y
-      FROM events
-      WHERE event_type = 'purchase' AND {sql_sane_ts('ts')}
-      GROUP BY 1
-    ), idx AS (
-      SELECT day, y, row_number() OVER (ORDER BY day) AS i FROM daily
+    WITH RECURSIVE idx AS ({_sql_purchase_series()}
     ), hw AS (
       SELECT 7 AS i, {l0} AS l, {t0} AS t, {seas_init}
       UNION ALL
@@ -6588,7 +6503,7 @@ def _hw_sql() -> str:
     ), fin AS (
       SELECT * FROM hw ORDER BY i DESC LIMIT 1
     ), meta AS (
-      SELECT max(day) AS last_day, CAST(count(*) AS BIGINT) AS nn FROM daily
+      SELECT max(day) AS last_day, CAST(count(*) AS BIGINT) AS nn FROM idx
     )
     SELECT CAST(h AS BIGINT) AS h,
            last_day + CAST(h AS INTEGER) AS day,
@@ -6642,24 +6557,13 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard formulation for a gapless daily rollup.
 
     An inherently sequential 9-state recurrence, handled by the
-    bounded-domain rule: the heavy part (daily revenue on the exact
-    cent grid) is a distributed aggregate; the fold then runs over the
-    calendar-bounded DAY DOMAIN as one `aggregate` lambda whose l_new
+    bounded-domain rule: the fold runs over base relation B's
+    day-sorted series as one `aggregate` lambda whose l_new
     is textually INLINED in the trend and seasonal updates — the
     DuckDB oracle runs the IDENTICAL op sequence as a recursive CTE
     with the seasonal array unrolled into 7 columns, so all {_HW_H}
     forecasts compare bitwise."""
-    # sanity window: see the _hw_sql daily CTE note (r10 time corpus)
-    e = spark.table("events").filter(
-        (F.col("event_type") == "purchase") & sane_ts(F.col("ts"))
-    )
-    cents = F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("decimal(18,0)")
-    daily = e.groupBy(
-        F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg((F.sum(cents).cast("double") / 100.0).alias("y"))
-    series = daily.agg(
-        F.sort_array(F.collect_list(F.struct("day", "y"))).alias("s")
-    )
+    series = _purchase_series(spark)
     # HW needs two full seasons (14 days) to initialize level/trend/
     # seasonals; on a shorter series the model is undefined, so BOTH
     # engines emit zero forecast rows instead of erroring (the Spark
@@ -6696,12 +6600,10 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_max_drawdown",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-      SELECT o_orderdate AS day,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS DECIMAL(18,0)) AS rev
-      FROM orders GROUP BY 1
+      SELECT day, CAST(cents AS DECIMAL(18,0)) AS rev
+      FROM ({_sql_daily_order_cents()})
     ), cum AS (
       SELECT day, CAST(sum(rev) OVER (ORDER BY day
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -6728,22 +6630,15 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     level shifted; drawdown sizes the worst cumulative damage). Exact
     integer cents end to end; ties broken to the earliest trough.
 
-    Scale shape: facts compress onto the TIME-BOUNDED day domain; the
-    cumulative curve comes from the DISTRIBUTED prefix-sum helper; the
-    running peak is a broadcast non-equi self-join of the ~2.4k-row
-    domain (the Mann-Kendall pair shape — constant in corpus size,
-    quadratic only in YEARS) aggregated per trough day; the final
-    argmax is a domain-sized top-1."""
+    Scale shape: base relation C; the cumulative curve comes from the
+    DISTRIBUTED prefix-sum helper; the running peak is a broadcast
+    non-equi self-join of the ~2.4k-row domain (the Mann-Kendall pair
+    shape — constant in corpus size, quadratic only in YEARS) aggregated
+    per trough day; the final argmax is a domain-sized top-1."""
     from .prefix import attach_prefix_sums
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
-            .cast("decimal(18,0)")
-            .alias("rev")
-        )
+    daily = _daily_order_cents(spark).select(
+        "day", F.col("cents").cast("decimal(18,0)").alias("rev")
     )
     cum = attach_prefix_sums(daily, ["day"], ["rev"]).select(
         "day", F.col("rev_upto").cast("decimal(18,0)").alias("c")
@@ -6793,24 +6688,9 @@ _SRA_RESID = (
 @query(
     "ts_anomaly_seasonal_mad",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS day,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ), win AS (
-      SELECT day, rev_c, CAST(dayofweek(day) AS INT) AS dow,
-             sum(rev_c) OVER w AS s7, count(*) OVER w AS c7
-      FROM daily
-      WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-    ), dow_avg AS (
-      SELECT CAST(dayofweek(day) AS INT) AS dow,
-             sum(rev_c) AS sd, count(*) AS nd
-      FROM daily GROUP BY 1
-    ), tot AS (SELECT sum(rev_c) AS st, count(*) AS nt FROM daily),
-    resid AS (
-      SELECT w.day, w.rev_c, {_SRA_RESID} AS r
-      FROM win w JOIN dow_avg d ON d.dow = w.dow CROSS JOIN tot
+    WITH resid AS (
+      SELECT day, rev_c, {_SRA_RESID} AS r
+      FROM ({_sql_seasonal_components()})
     ), med AS (
       SELECT r AS med_r FROM (
         SELECT r, row_number() OVER (ORDER BY r) AS rk FROM resid
@@ -6845,38 +6725,13 @@ def ts_anomaly_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     decompose tree is already bit-reproducible), and the median and
     MAD are ORDER-STATISTIC selections on those exact integers — the
     3-MAD flag is an integer comparison that cannot flip on a float
-    ulp. Scale shape: one fact aggregate onto the calendar-day domain;
-    everything after (constant-key 7-row frame, two rank selections,
-    the flag) runs on the ~2.4k-row domain; the rank windows are
-    PARTITION-safe under the audit via the bounded-domain rule
-    (row_number over the compressed domain inside the oracle; Spark
-    side uses the same constant-key idiom as the decompose trend)."""
-    daily = (
-        spark.table("orders")
-        .groupBy(F.to_date(F.date_trunc("day", "o_orderdate")).alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("rev_c")
-        )
-    )
-    dow = (F.dayofweek("day") - F.lit(1)).cast("int")
-    const = F.pmod(F.unix_date(F.col("day")), F.lit(1))
-    w7 = W.partitionBy(const).orderBy("day").rowsBetween(-3, 3)
-    win = daily.select(
-        "day",
-        "rev_c",
-        dow.alias("dow"),
-        F.sum("rev_c").over(w7).alias("s7"),
-        F.count("*").over(w7).alias("c7"),
-    )
-    dow_avg = daily.groupBy(dow.alias("dow")).agg(
-        F.sum("rev_c").alias("sd"), F.count("*").alias("nd")
-    )
-    tot = daily.agg(F.sum("rev_c").alias("st"), F.count("*").alias("nt"))
+    ulp. Scale shape: base relation D; the two rank selections and the
+    flag run on the day domain, the rank windows PARTITION-safe under
+    the audit via the bounded-domain rule (row_number over the
+    compressed domain inside the oracle; Spark side uses D's
+    constant-key idiom)."""
     resid = (
-        win.join(F.broadcast(dow_avg), "dow")
-        .crossJoin(F.broadcast(tot))
+        _seasonal_components(spark)
         .select("day", "rev_c", F.expr(_SRA_RESID).alias("r"))
         .transform(pin, "reuse")  # day-domain residuals, consumed by 3 passes
     )

@@ -623,9 +623,10 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SCMS_D = 4
-_SCMS_W = 256
 _SCMS_TOP = 10
 
+#: Row j's bucket is hex characters 2j, 2j+1 of the key's SHA-256, which
+#: fixes the sketch width at 256.
 _SCMS_DUCK_BUCKET = (
     "((strpos('0123456789abcdef', substr(h, 2 * j + 1, 1)) - 1) * 16"
     " + strpos('0123456789abcdef', substr(h, 2 * j + 2, 1)) - 1)"

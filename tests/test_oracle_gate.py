@@ -143,3 +143,36 @@ def test_worker_summary_parser_tolerates_vacuous_suffix():
     )
     assert suffixed and int(suffixed.group(5)) == 9
     assert [int(suffixed.group(i)) for i in range(1, 5)] == [84, 1, 2, 85]
+
+
+def test_worker_merge_names_dead_shard(monkeypatch, capsys):
+    """A shard that dies before printing its summary is named with its
+    return code and stderr tail, and the merged total is checked against
+    the selected query count instead of coming up short silently."""
+    import argparse
+    import subprocess
+
+    from tools import check_correctness as gate
+
+    class FakeWorker:
+        def __init__(self, cmd, stdout, stderr, **kw):
+            self.dead = cmd[cmd.index("--shard") + 1] == "1/2"
+            if self.dead:
+                stderr.write(b"Traceback (most recent call last):\nMemoryError\n")
+            self.returncode = 137 if self.dead else 0
+
+        def communicate(self):
+            if self.dead:
+                return "", None
+            return "ok    ts_acf: 5 rows\n\n1 ok, 0 rows-only, 0 FAIL of 1\n", None
+
+    monkeypatch.setattr(subprocess, "Popen", FakeWorker)
+    args = argparse.Namespace(
+        workers=2, pattern="^ts_(acf|ljung_box)$", sf="-", changed_since=None
+    )
+    assert gate._run_workers(args) == 1
+    out = capsys.readouterr().out
+    assert "[w1] DEAD: exited 137 without a summary" in out
+    assert "[w1]   MemoryError" in out
+    assert "selected 2 queries (2 with co-sharded twins), merged 1, SHORT by 1" in out
+    assert "1 ok, 0 rows-only, 0 FAIL of 1 (2 workers)" in out

@@ -85,50 +85,114 @@ _SUMMARY_RE = re.compile(
 )
 
 
+def _selected(pattern: str, changed_since: str | None) -> list[str]:
+    """Registered names matching ``pattern``; with ``changed_since``, only
+    those whose defining module changed since that git ref."""
+    pat = re.compile(pattern)
+    names = [n for n in QUERIES if pat.search(n)]
+    if changed_since:
+        import subprocess
+
+        out = subprocess.run(
+            ["git", "diff", "--name-only", changed_since, "--", "shelf_spark"],
+            capture_output=True, text=True, check=True,
+        ).stdout
+        changed_mods = {
+            p.removesuffix(".py").replace("/", ".")
+            for p in out.split()
+            if p.endswith(".py")
+        }
+        print(f"# modules changed since {changed_since}: "
+              f"{sorted(m.rsplit('.', 1)[-1] for m in changed_mods)}")
+        names = [n for n in names if QUERIES[n].__module__ in changed_mods]
+    return names
+
+
+def _shard(names: list[str], i: int, n: int) -> list[str]:
+    """Round-robin shard ``i`` of ``n``. Each VACUOUS-prone query is
+    co-sharded with its declared twin so the twin check never degrades to
+    "not in this run" under --workers; the twin may also run in its own
+    shard (cheap, harmless)."""
+    part = names[i::n]
+    return part + [VACUOUS_TWINS[q] for q in part
+                   if q in VACUOUS_TWINS and VACUOUS_TWINS[q] not in part
+                   and VACUOUS_TWINS[q] in QUERIES]
+
+
+#: Lines of a dead worker's stderr echoed into the merged report.
+_STDERR_TAIL = 15
+
+
 def _run_workers(args) -> int:
     """Fan the gate out over N subprocesses and merge their summaries.
 
     Round-robin sharding spreads the expensive queries (which cluster by
     module, hence by registry position) across workers; each worker gets
-    32/N Spark threads so the host is never oversubscribed.
+    32/N Spark threads so the host is never oversubscribed. A worker that
+    exits without its summary line (a crash, an OOM kill) is named with
+    its return code and stderr tail, and the merged total is checked
+    against the selected query count, so a dead shard can never shrink
+    the denominator unnoticed.
     """
+    import contextlib
     import os
     import subprocess
+    import tempfile
 
     n = args.workers
+    names = _selected(args.pattern, args.changed_since)
+    expected = sum(len(_shard(names, i, n)) for i in range(n))
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(max(4, 32 // n))
-    procs = []
-    for i in range(n):
-        cmd = [sys.executable, __file__, args.pattern, "--sf", args.sf,
-               "--shard", f"{i}/{n}"]
-        if args.changed_since:
-            cmd += ["--changed-since", args.changed_since]
-        procs.append(subprocess.Popen(
-            cmd, env=env, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-            text=True,
-        ))
     tot = [0, 0, 0, 0, 0]
     failures: list[str] = []
+    dead: list[str] = []
     rc = 0
-    for i, p in enumerate(procs):
-        out, _ = p.communicate()
-        rc |= p.returncode
-        for line in out.splitlines():
-            m = _SUMMARY_RE.match(line)
-            if m:
-                for j in range(5):
-                    tot[j] += int(m.group(j + 1) or 0)
-            elif line.startswith("failures:"):
-                failures += line.split()[1:]
-            elif line and not line.startswith("#"):
-                print(f"[w{i}] {line}")
+    with contextlib.ExitStack() as files:
+        procs = []
+        for i in range(n):
+            cmd = [sys.executable, __file__, args.pattern, "--sf", args.sf,
+                   "--shard", f"{i}/{n}"]
+            if args.changed_since:
+                cmd += ["--changed-since", args.changed_since]
+            # a file, not a pipe: Spark's stderr is chatty, and an unread
+            # full pipe would stall a worker until its turn in the merge
+            err = files.enter_context(tempfile.TemporaryFile())
+            procs.append((err, subprocess.Popen(
+                cmd, env=env, stdout=subprocess.PIPE, stderr=err, text=True,
+            )))
+        for i, (err, p) in enumerate(procs):
+            out, _ = p.communicate()
+            rc |= p.returncode
+            summarized = False
+            for line in out.splitlines():
+                m = _SUMMARY_RE.match(line)
+                if m:
+                    summarized = True
+                    for j in range(5):
+                        tot[j] += int(m.group(j + 1) or 0)
+                elif line.startswith("failures:"):
+                    failures += line.split()[1:]
+                elif line and not line.startswith("#"):
+                    print(f"[w{i}] {line}")
+            if not summarized:
+                dead.append(f"w{i}")
+                err.seek(0)
+                tail = err.read().decode(errors="replace").splitlines()
+                print(f"[w{i}] DEAD: exited {p.returncode} without a summary; "
+                      "stderr tail:")
+                for line in tail[-_STDERR_TAIL:]:
+                    print(f"[w{i}]   {line}")
     vac = f" ({tot[4]} unexplained-vacuous)" if tot[4] else ""
-    print(f"\n{tot[0]} ok, {tot[1]} rows-only, {tot[2]} FAIL of {tot[3]} "
+    short = f", SHORT by {expected - tot[3]}" if tot[3] != expected else ""
+    print(f"\nselected {len(names)} queries ({expected} with co-sharded "
+          f"twins), merged {tot[3]}{short}"
+          + (f"; dead shards: {' '.join(dead)}" if dead else ""))
+    print(f"{tot[0]} ok, {tot[1]} rows-only, {tot[2]} FAIL of {tot[3]} "
           f"({n} workers){vac}")
     if failures:
         print("failures:", " ".join(failures))
-    return 1 if (rc or tot[2]) else 0
+    return 1 if (rc or tot[2] or short) else 0
 
 
 def main() -> int:
@@ -172,21 +236,9 @@ def main() -> int:
     if args.workers > 1 and args.shard is None:
         return _run_workers(args)
 
-    changed_mods: set[str] | None = None
-    if args.changed_since:
-        import subprocess
-
-        out = subprocess.run(
-            ["git", "diff", "--name-only", args.changed_since, "--", "shelf_spark"],
-            capture_output=True, text=True, check=True,
-        ).stdout
-        changed_mods = {
-            p.removesuffix(".py").replace("/", ".")
-            for p in out.split()
-            if p.endswith(".py")
-        }
-        print(f"# modules changed since {args.changed_since}: "
-              f"{sorted(m.rsplit('.', 1)[-1] for m in changed_mods)}")
+    names = _selected(args.pattern, args.changed_since)
+    if args.shard:
+        names = _shard(names, *(int(x) for x in args.shard.split("/")))
 
     spark = get_spark("check-correctness")
     con = duckdb.connect()
@@ -195,19 +247,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(args.sf, t)}')"
         )
 
-    pat = re.compile(args.pattern)
-    names = [n for n in QUERIES if pat.search(n)]
-    if changed_mods is not None:
-        names = [n for n in names if QUERIES[n].__module__ in changed_mods]
-    if args.shard:
-        i, n = (int(x) for x in args.shard.split("/"))
-        names = names[i::n]
-        # Co-shard each VACUOUS-prone query with its declared twin so the
-        # twin check never degrades to "not in this run" under --workers;
-        # the twin may also run in its own shard (cheap, harmless).
-        names += [VACUOUS_TWINS[q] for q in names
-                  if q in VACUOUS_TWINS and VACUOUS_TWINS[q] not in names
-                  and VACUOUS_TWINS[q] in QUERIES]
     n_pass = n_fail = n_rows_only = 0
     failures: list[str] = []
     vacuous: list[str] = []
