@@ -1091,7 +1091,7 @@ _ABC_CUTS = (80, 95)
 )
 def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto inventory classification: parts ranked by discounted
-    revenue, classed A/B/C at the {_ABC_CUTS[0]}%/{_ABC_CUTS[1]}%
+    revenue, classed A/B/C at the {_ABC_CUTS} percent
     cumulative-share cuts — the working-capital prioritization every
     supply-chain review starts from. Revenue rides the 4dp integer grid
     (product of two scaled ints, exact), the class cut is a decimal(38,0)
@@ -1569,7 +1569,7 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     heuristics, and the model marketing-mix stacks actually run.
 
     Conversion probabilities are {_MRA_HOPS}-hop value iterations
-    v_h(s) = Σ p(s,t)·v_{{h-1}}(t) from START with CONV absorbing at 1
+    v_h(s) = Σ p(s,t)·v_{h-1}(t) from START with CONV absorbing at 1
     — i.e. P(convert within {_MRA_HOPS} transitions), a fixed horizon
     both engines execute identically (12dp-grid terms, DECIMAL sums;
     transition probs are exact integer ratios on the 12dp grid).
@@ -2399,8 +2399,8 @@ def pipeline_entity_resolution_e2e(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: blocking is a PARTITIONED window (one nation-keyed
     exchange, neighbors compared without any n² within-block join);
-    contraction is O(log² n) rounds over pair-sized relations; the
-    ledger is one bounded rollup. Chains are guaranteed non-vacuous:
+    components come from sampling.star_components; the ledger is one
+    bounded rollup. Chains are guaranteed non-vacuous:
     consecutive balances within 5.00 occur in every nation at sf0.01."""
     from .sampling import star_components
 

@@ -773,7 +773,7 @@ _WF_HOURS = 24
 def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bounded funnel depth per user (ClickHouse `windowFunnel`
     semantics, {_WF_HOURS}h window): the deepest
-    {" → ".join(_WF_STEPS)} chain that starts at some view and
+    {_WF_STEPS} chain that starts at some view and
     completes within the window — unlike `events_funnel`, which chains
     each user's GLOBAL first events with no time bound, this scores
     every candidate chain start and takes the best, the form

@@ -596,10 +596,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pairs generate map-side from sorted basket arrays (no
     self-join); the support filter is one map-side-combined agg that
-    prunes the edge set BEFORE any iteration touches it; components run
-    the alternating large-star/small-star contraction
-    (sampling.star_components — Kiveris SoCC'14, O(log² n) rounds, each
-    one groupBy + one co-partitioned integer join). The oracle's
+    prunes the edge set BEFORE any iteration touches it; components come
+    from sampling.star_components. The oracle's
     recursive CTE is O(component²) and exists only for the fixture; the
     Spark side never materializes reachability."""
     support = _support_edges(spark)

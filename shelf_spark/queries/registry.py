@@ -19,6 +19,7 @@ Contract notes (driver: /root/repo/__spark_entry__.py):
 from __future__ import annotations
 
 import functools
+import re
 import textwrap
 from collections.abc import Callable
 
@@ -32,10 +33,31 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
+#: A module-constant placeholder in an operator docstring: ``{_NAME}``
+#: or ``{NAME}``, written as if the docstring were an f-string.
+_PLACEHOLDER = re.compile(r"\{(_?[A-Z][A-Z0-9_]*)\}")
+
+
+def _fill_placeholders(fn: QueryFn) -> None:
+    """Substitute each placeholder in ``fn``'s docstring with the value
+    of that name in the defining module; an unknown name raises."""
+    if not fn.__doc__:
+        return
+
+    def value(m: re.Match) -> str:
+        if m[1] not in fn.__globals__:
+            raise NameError(f"{fn.__qualname__} docstring names undefined {m[1]}")
+        return str(fn.__globals__[m[1]])
+
+    fn.__doc__ = _PLACEHOLDER.sub(value, fn.__doc__)
+
+
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register an operator implementation and (optionally) its SQL oracle."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        _fill_placeholders(fn)
+
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             register_views(spark, sf_dir)

@@ -718,7 +718,7 @@ _PHRASE = ("order", "fast")
 )
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional-index phrase search: find every document containing the
-    exact phrase "{' '.join(_PHRASE)}" with its occurrence count and
+    exact phrase {_PHRASE} (as consecutive tokens) with its occurrence count and
     first position — the adjacency-join primitive under every
     phrase/proximity query (text_inverted_index stores postings; this is
     the query side that needs POSITIONS, not just doc lists).

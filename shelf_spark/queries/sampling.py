@@ -19,21 +19,30 @@ and consistent train/validation splits (disjoint hash ranges).
 Near-dup *clustering* turns pairwise similarity (see
 :mod:`shelf_spark.queries.dedup`) into connected components — the step a
 dedup pipeline actually acts on (keep one doc per component). Spark side
-is :func:`star_components`, the alternating large-star/small-star
+is :func:`star_components`: the alternating large-star/small-star
 contraction [Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14]: O(log² n) rounds regardless of component shape, each
-half-round one map-side-combined groupBy + co-partitioned join on ids
-only. The DuckDB oracle is a recursive CTE computing the same transitive
-closure, so this genuinely iterative operator still gets a full
-value-check; a property test (tests/test_star_components.py) checks the
-contraction against a union-find reference on random and adversarial
-(chain) graphs.
+Beyond", SoCC'14], one job per round, only while the residual edge set
+is above an absolute bound of 2^20 edges; at or under it one task
+labels the residual in numpy, at about 140 bytes per edge. The bound is
+absolute so that a cluster-scale input stays distributed until its
+residual is small, and the count check, not an assumption, keeps the one
+task within memory. Both star steps keep every node of the edge set and
+its component, so the labels need no join back to the input. The DuckDB
+oracle is a recursive CTE computing the same transitive closure, so
+this iterative operator still gets a full value-check; a property test
+(tests/test_star_components.py) checks both sides of the bound against
+a union-find reference on random and adversarial (chain) graphs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window as W
 
 from .dedup import JACCARD_THRESHOLD, jaccard_pairs_exact
@@ -47,77 +56,154 @@ SAMPLE_20PCT = "3333"  # 0x3333/0xffff ≈ 0.20
 SAMPLE_50PCT = "7fff"
 
 
-def star_components(pairs: DataFrame, a: str, b: str, max_rounds: int = 12) -> DataFrame:
+#: Largest residual edge set that :func:`star_components` labels in one
+#: task. With int64 ids the task's Python heap peaks at about 140 bytes
+#: per edge, input frames included (measured on a random and a shuffled
+#: chain graph of 2^20 edges): ~140 MB at the bound.
+_ONE_TASK_EDGES = 1 << 20
+#: Contraction rounds after which :func:`star_components` raises rather
+#: than return labels of an unconverged edge set. Kiveris et al. bound
+#: the rounds by O(log² n); in practice they track log n.
+_MAX_ROUNDS = 32
+
+
+def _signature(edges: DataFrame) -> tuple:
+    """Order-free (count, bit_xor of xxhash64) fingerprint of an edge
+    set, in one job: observed metrics over a ``noop`` write need no
+    exchange, where a global ``agg`` costs an extra AQE stage job."""
+    obs = Observation()
+    edges.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("x")
+    ).write.format("noop").mode("overwrite").save()
+    return obs.get["n"], obs.get["x"]
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star then one small-star step over ``u > v`` edges."""
+    # Large-star: over both directions, hook every neighbor larger
+    # than u to m = min(N(u) ∪ {u}).  m ≤ u < v keeps (bigger, smaller).
+    # Both directions come from ONE scan of the pinned edges: bidir has
+    # two consumers (mins + large), so a union of two selects would read
+    # the blocks four times per round instead of two.
+    bidir = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("u"), F.col("v").alias("v")),
+                F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+    mins = (
+        bidir.groupBy("u")
+        .agg(F.min("v").alias("mn"))
+        .select("u", F.least("mn", F.col("u")).alias("m"))
+    )
+    large = (
+        bidir.join(mins, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .distinct()
+    )
+    # Small-star: hook u and all its (smaller) neighbors to the
+    # minimum neighbor m.
+    mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
+    return (
+        large.join(mins2, "u")
+        .where(F.col("v") != F.col("m"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .union(mins2.select("u", F.col("m").alias("v")))
+        .distinct()
+    )
+
+
+def _min_labels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``(node, component)`` for every node of the ``(u, v)`` edges in
+    ``batches``: hook each root to its smallest neighboring root, then
+    shortcut every node to its root, until no edge spans two roots.
+    Roots only ever hook to smaller ids, so each root is its
+    component's minimum."""
+    frames = list(batches)
+    if not frames:
+        return
+    e = pd.concat(frames, ignore_index=True)
+    ends = np.concatenate([e["u"].to_numpy(), e["v"].to_numpy()])
+    ids, idx = np.unique(ends, return_inverse=True)
+    iu, iv = idx[: len(e)], idx[len(e) :]
+    del e, frames, ends, idx
+    parent = np.arange(len(ids))  # np.unique sorts: index order is id order
+    while True:
+        pu, pv = parent[iu], parent[iv]
+        span = pu != pv
+        if not span.any():
+            break
+        pu, pv = pu[span], pv[span]
+        np.minimum.at(parent, np.concatenate([pu, pv]), np.concatenate([pv, pu]))
+        while not np.array_equal(grand := parent[parent], parent):
+            parent = grand
+    yield pd.DataFrame({"node": ids, "component": ids[parent]})
+
+
+def star_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Connected components of an undirected graph given as id pairs.
 
-    Alternating large-star/small-star contraction (Kiveris et al.,
-    SoCC'14). Returns ``(node, component)`` for every node appearing in
-    ``pairs``, where ``component`` is the minimum id of the node's
-    component — the same labeling a transitive-closure oracle's
-    ``min(reach)`` produces. Rounds are O(log² n) regardless of
-    component shape; each half-round is one map-side-combined groupBy +
-    one co-partitioned join on integer ids. Fixpoint is detected by an
-    order-free (count, bit_xor of xxhash64) signature over the pinned
-    round output — star graphs are fixpoints of both steps, so an
-    unchanged edge set means converged.
+    Returns ``(node, component)`` for every node of a pair with
+    ``a != b``, typed like the pair columns, where ``component`` is the
+    minimum id of the node's component: the labelling a
+    transitive-closure oracle's ``min(reach)`` produces. Self-pairs
+    carry no connectivity, so a node seen only in self-pairs is absent.
+
+    The edges, oriented larger→smaller, are pinned and fingerprinted in
+    one job; the fingerprint's count is the residual edge set's size.
+    While that count is above ``_ONE_TASK_EDGES`` (2^20), the
+    alternating large-star/small-star contraction (Kiveris et al.,
+    SoCC'14) runs distributed, one job per round: each half-round is one
+    map-side-combined groupBy and one co-partitioned join on ids. Once
+    the count is at or below the bound, one task labels the residual
+    edges (``coalesce(1).mapInPandas``, :func:`_min_labels`). The bound
+    is an absolute edge count, not a share of the input: a cluster-scale
+    input stays distributed until its residual is small, and the one
+    task's memory, about 140 bytes per edge, is bounded by the count
+    check rather than assumed.
+
+    No join back to the input is needed. Both star steps keep every
+    node of the edge set on at least one edge, and only link nodes of
+    one component, so the residual has the input's nodes and
+    components.
+
+    Both steps keep the orientation, and a star forest centred on the
+    component minima is a fixpoint of both, so an unchanged fingerprint
+    means converged. A converged forest still above the bound is
+    labelled distributed by projecting each edge ``(u, v)`` to
+    ``(u, v)`` and ``(v, v)``. After ``_MAX_ROUNDS`` rounds with the
+    residual above the bound and the fingerprint still changing, this
+    raises instead of returning unconverged labels.
     """
-    # Edges oriented larger→smaller; both star steps preserve that
-    # orientation, so the fixpoint is a star per component whose center
-    # is the component minimum.
-    edges = (
-        pairs.where(F.col(a) != F.col(b))  # self-pairs carry no connectivity
-        .select(
+    # "reuse": the first fingerprint is the one job, on one branch, that
+    # materialises the pin; the rounds and the finish read its blocks
+    edges = pin(
+        pairs.where(F.col(a) != F.col(b)).select(
             F.greatest(F.col(a), F.col(b)).alias("u"),
             F.least(F.col(a), F.col(b)).alias("v"),
-        )
-        # the first round reads this on TWO branches (edges ∪ swap in
-        # bidir); upstream is the dedup callers' whole Jaccard verify join
-        .transform(pin, "fanout")
+        ),
+        "reuse",
     )
-    prev_sig = None
-    for _ in range(max_rounds):
-        # Large-star: over both directions, hook every neighbor larger
-        # than u to m = min(N(u) ∪ {u}).  m ≤ u < v keeps (bigger, smaller).
-        # Both directions from ONE scan of the pinned edges (r15, the
-        # _directed_edges idiom): the union-of-two-selects read the
-        # checkpoint blocks twice per consumer, and bidir has two
-        # consumers below (mins + large) — 4 block reads per round -> 2.
-        bidir = edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("u"), F.col("v").alias("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-        mins = (
-            bidir.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
+    prev, sig = None, _signature(edges)
+    rounds = 0
+    while sig[0] > _ONE_TASK_EDGES and sig != prev:
+        if rounds == _MAX_ROUNDS:
+            raise RuntimeError(
+                f"star_components: {sig[0]} edges still changing after "
+                f"{_MAX_ROUNDS} rounds"
+            )
+        # the next fingerprint is the job that materialises the round
+        edges = pin(_star_round(edges), "reuse")
+        rounds += 1
+        prev, sig = sig, _signature(edges)
+    if sig[0] <= _ONE_TASK_EDGES:
+        t = edges.schema["u"].dataType
+        return edges.coalesce(1).mapInPandas(
+            _min_labels, StructType([StructField("node", t), StructField("component", t)])
         )
-        large = (
-            bidir.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        # Small-star: hook u and all its (smaller) neighbors to the
-        # minimum neighbor m.
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(mins2, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-            .distinct()
-        )
-        # the convergence check below is the job that materializes the
-        # round, so each round costs ONE job
-        edges = pin(small, "reuse")
-        sig = tuple(edges.agg(F.count("*"), F.bit_xor(F.xxhash64("u", "v"))).first())
-        if sig == prev_sig:
-            break
-        prev_sig = sig
     return (
         edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .union(edges.select(F.col("v").alias("node"), F.col("v").alias("component")))
@@ -291,14 +377,8 @@ def interleave_weighted_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Connected components over the exact-Jaccard near-dup graph (only
-    # docs that have at least one near-dup appear), via the alternating
-    # large-star/small-star contraction (Kiveris et al., "Connected
-    # Components in MapReduce and Beyond", SoCC'14): each round hooks
-    # every node to the minimum of a neighborhood, so chains collapse in
-    # O(log² n) rounds instead of the O(diameter) a min-label propagation
-    # needs — the bound that made this the 10×-smoke tail. Each half-round
-    # is one map-side-combined groupBy + co-partitioned join on integer
-    # ids; the text never moves after the pairs are built.
+    # docs that have at least one near-dup appear); see star_components.
+    # The text never moves after the pairs are built.
     d = spark.table("documents")
     # Prefix-filtered exact Jaccard pair generation (see
     # dedup.jaccard_pairs_exact) — same pairs as the naive inverted-index
@@ -1278,8 +1358,9 @@ def dedup_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     per cluster, the longest (n_chars DESC, doc_id tiebreak), drop the
     rest — reported as the per-source kept/dropped ledger a corpus
     release ships with. Composes dedup_ngram_jaccard's prefix-filtered
-    pair generation and dedup_near_dup_clusters' O(log² n) contraction
-    into the operation a training pipeline actually executes.
+    pair generation and dedup_near_dup_clusters' components
+    (star_components) into the operation a training pipeline actually
+    executes.
 
     Scale shape: pair generation and contraction as in the parent ops
     (text never moves after pairs are built); the keep-best choice is a
@@ -1418,7 +1499,7 @@ _RO_FOLDS = 5
 )
 def sample_rolling_origin_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-origin (expanding-window) cross-validation folds over the
-    event stream: the time axis is cut into {_RO_FOLDS + 1} equal
+    event stream: the time axis is cut into {_RO_FOLDS} + 1 equal
     segments; fold f trains on everything BEFORE segment f+1 and tests
     on segment f+1 — the only CV scheme that never leaks the future
     into training (sample_temporal_split_embargo is one such split;

@@ -86,7 +86,7 @@ def _mg_candidates(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """,
 )
 def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact tokens with frequency > N/{K}: Misra–Gries per-partition
+    """Exact tokens with frequency > N/{_HH_K}: Misra–Gries per-partition
     candidates (map-only, bounded state), broadcast-semi-join filter,
     then an exact recount of candidates only. See module docstring for
     the completeness proof."""

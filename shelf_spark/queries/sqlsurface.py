@@ -189,9 +189,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone; the residual is the one-time pair derivation). Each step is then one co-partitioned join of the frontier
     against the pinned edges; the {_RCTE_MAX_HOPS}-hop bound caps plan
     depth. For UNBOUNDED reachability at 100 TB the star-contraction
-    operator (graph_connected_components) remains the right tool —
-    O(log² n) rounds vs O(diameter); this entry pins the SQL surface
-    itself."""
+    operator (graph_connected_components, see sampling.star_components)
+    remains the right tool; this entry pins the SQL surface itself."""
     from .graph import _directed_edges, _support_edges
 
     # The walk relation is hop-bounded but grows with data (paths ×

@@ -1075,15 +1075,15 @@ def _sql_prf(num: str, den: str) -> str:
 )
 def ml_eval_binary_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-classifier evaluation sweep: confusion counts and
-    precision/recall/F1 at {len(_EVAL_THRESHOLDS)} fixed decision
-    thresholds — the eval harness every model-quality gate runs on a
+    precision/recall/F1 at the fixed decision thresholds
+    {_EVAL_THRESHOLDS} — the eval harness every model-quality gate runs on a
     held-out table (here: doc length scored against the lang=='en'
     truth; in production the score column is a model output). Metrics
     are one guarded division over exact int64 counts → bit-identical
     across engines; empty denominators yield NULL, not 0/0.
 
     Scale shape: ONE pass over the scan — the threshold grid is a
-    {len(_EVAL_THRESHOLDS)}-row explode (map-side, constant fan-out)
+    one-row-per-threshold explode (map-side, constant fan-out)
     into a single map-side-combined aggregate of conditional counts;
     output is thresholds-sized. No shuffle of the fact table, no
     per-threshold rescan — adding thresholds widens the explode
@@ -1161,7 +1161,7 @@ _SQL_XCORR = (
 )
 def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lagged cross-correlation between daily view counts and daily
-    purchase revenue ({len(_XCORR_LAGS)} lags) — the lead-indicator
+    purchase revenue (lags {_XCORR_LAGS}) — the lead-indicator
     screen (does today's traffic predict revenue k days out?) a metrics
     team runs before building a forecast. Moments accumulate as exact
     scaled ints per lag; the Pearson closed form is the shared
@@ -5638,7 +5638,7 @@ _MK_Z = (
 )
 def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test on the daily revenue series —
-    S = Σ_{{i<j}} sign(x_j − x_i) with the tie-corrected variance and
+    S = Σ_{i<j} sign(x_j − x_i) with the tie-corrected variance and
     continuity-corrected Z. The significance companion to
     ts_theil_sen_trend's slope: Theil-Sen says HOW steep, Mann-Kendall
     says whether the trend is distinguishable from noise at all.
@@ -5720,7 +5720,7 @@ _ACF_R = (
     """,
 )
 def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelogram of daily revenue at lags {{1,2,3,7,14}} — the
+    """Autocorrelogram of daily revenue at lags {1,2,3,7,14} — the
     canonical seasonality/persistence diagnostic (the weekly lag-7 spike
     is what ts_seasonal_decompose assumes; this measures it). Uses the
     statistical ACF normalization — FIXED full-series mean and variance —
@@ -6131,7 +6131,7 @@ _LB_TERM = (
     """,
 )
 def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ljung-Box portmanteau test on daily revenue: Q = n(n+2)·Σ_{{k≤K}}
+    """Ljung-Box portmanteau test on daily revenue: Q = n(n+2)·Σ_{k≤K}
     r_k²/(n−k) over the first {_LB_K} autocorrelations — the "is there
     ANY serial structure left?" gate (ts_acf shows the correlogram;
     this collapses it into the one statistic a forecasting pipeline
@@ -6427,7 +6427,7 @@ def stats_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     at α=.05 (two-sided) with 80% power — the question every
     experimentation review asks BEFORE launch (ab_test_proportions
     judges the experiment after; this says how long it must run).
-    n = (z_{{α/2}}+z_β)²·(p₁(1−p₁)+p₂(1−p₂))/(p₂−p₁)², z's as shared
+    n = (z_{α/2}+z_β)²·(p₁(1−p₁)+p₂(1−p₂))/(p₂−p₁)², z's as shared
     literals.
 
     Scale shape: one conditional-count aggregate; base rate from exact

@@ -538,7 +538,7 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING data-quality gate: every micro-batch of the event
     stream is scored against the expectation catalog via
     ``foreachBatch``, committing an idempotent per-batch ledger
-    (rule, checked, violations) to its own ``b{{batch_id}}`` directory
+    (rule, checked, violations) to its own ``b{batch_id}`` directory
     — the continuous-ingest twin of `dq_expectation_suite`, i.e. the
     circuit-breaker a streaming pipeline consults before publishing a
     batch downstream. Violation counts are ADDITIVE, so the summed

@@ -440,9 +440,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     included) makes; the sub-cell assignment is the engine-independent
     content hash (sha256 prefix, like the Bernoulli sampler), so both
     engines block identically and the check stays value-exact.
-    Components come from the large-star/small-star contraction
-    (sampling.star_components, O(log² n) rounds, property-tested);
-    cluster_size is a count window inside the component-partitioned
+    Components come from sampling.star_components; cluster_size is a count window inside the component-partitioned
     exchange. Only ids shuffle after pair mining — embeddings never
     move again. At the test scales every label holds ≤ CELL_OCCUPANCY
     vectors, so the sub-cell key is constant-0 and results equal the
@@ -1418,7 +1416,7 @@ MRL_DIMS = 16
 def vectors_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka truncation evaluation (Kusupati et al., "Matryoshka
     Representation Learning", NeurIPS 2022): per query, how much of
-    the full-{64}-dim exact top-{TOP_K} neighborhood survives when
+    the full-64-dim exact top-{TOP_K} neighborhood survives when
     vectors are truncated to their first {MRL_DIMS} dims — the
     decision metric for shipping shortened embeddings (4× less
     memory/bandwidth) in a tiered retrieval stack, and the

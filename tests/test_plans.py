@@ -121,8 +121,9 @@ def test_ntile_no_global_window_over_base_table(spark):
 
 
 def test_cluster_loop_lineage_truncated(spark):
-    """dedup_near_dup_clusters localCheckpoints each round: the returned
-    plan must be a handful of nodes over the checkpointed labels, not a
+    """dedup_near_dup_clusters labels its pinned edge set (in one task,
+    or after contraction rounds that are each pinned): the returned plan
+    must be a handful of nodes over the checkpointed edges, not a
     15-round join tower (which would be hundreds of plan lines)."""
     df = QUERIES["dedup_near_dup_clusters"](spark, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()

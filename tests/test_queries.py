@@ -22,6 +22,15 @@ def test_registry_integrity():
         assert callable(fn)
 
 
+def test_docstrings_have_no_placeholders():
+    """``{_NAME}`` in an operator docstring is filled from its module at
+    registration, so none may survive in the registered functions."""
+    from shelf_spark.queries.registry import _PLACEHOLDER
+
+    left = {n: _PLACEHOLDER.findall(fn.__doc__) for n, fn in QUERIES.items() if fn.__doc__}
+    assert not {n: names for n, names in left.items() if names}
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as entry_mod
 
