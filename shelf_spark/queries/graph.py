@@ -22,16 +22,31 @@ Scale notes (100 TB):
   join+agg shuffles edges on src/dst only. 3 fixed iterations keep plan
   depth bounded; an open-ended variant would pin per round
   like dedup_near_dup_clusters (sampling.py).
+- BFS, HITS and k-core run a fixed number of rounds and check no
+  convergence. Each pins its edge relation and counts it in one job
+  (``sampling.fits_one_task``, which also materialises the pin). At or
+  under ``sampling._ONE_TASK_EDGES`` (2^20) edges, one
+  ``coalesce(1).mapInPandas`` task runs every round in numpy and
+  returns the operator's final rows, with no join back; its Python heap
+  peaks at about 117 bytes per edge. Above the bound the distributed
+  rounds run, one or more jobs each. The bound is absolute, as for
+  ``sampling.star_components``: a cluster-scale edge set stays
+  distributed, and the count, not an assumption, bounds the one task.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
+from .sampling import dense_ends, fits_one_task, star_components
 
 #: PageRank constants.
 _DAMP = 0.85
@@ -600,11 +615,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sampling.star_components. The oracle's
     recursive CTE is O(component²) and exists only for the fixture; the
     Spark side never materializes reachability."""
-    support = _support_edges(spark)
-    from .sampling import star_components
-
     return (
-        star_components(support, "p1", "p2")
+        star_components(_support_edges(spark), "p1", "p2")
         .select(F.col("node").alias("item"), "component")
         .orderBy("item")
     )
@@ -683,6 +695,23 @@ def _sql_kcore_round(r: int) -> str:
     )"""
 
 
+def _kcore_degrees(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``(item, core_degree)`` after ``_KCORE_ROUNDS`` synchronous peeling
+    rounds over the directed ``(src, dst)`` edges in ``batches``: each
+    round keeps the edges whose two ends both have degree ≥ ``_KCORE_K``
+    at the round's start. The Python heap peaks in :func:`dense_ends`,
+    at about 117 bytes per edge (2^20 edges of a random graph, input
+    frames included)."""
+    ids, src, dst = dense_ends(batches, "src", "dst")
+    for _ in range(_KCORE_ROUNDS):
+        keep = np.bincount(src, minlength=len(ids)) >= _KCORE_K
+        live = keep[src] & keep[dst]
+        src, dst = src[live], dst[live]
+    deg = np.bincount(src, minlength=len(ids))
+    hit = np.flatnonzero(deg)
+    yield pd.DataFrame({"item": ids[hit], "core_degree": deg[hit]})
+
+
 @query(
     "graph_kcore",
     oracle=f"""
@@ -712,13 +741,14 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round count is fixed and identical in both engines either way.
 
     Exactness is trivial (integer degrees, no FP anywhere). Scale
-    shape: each round is one degree aggregate over the current edge
-    set plus two semi-join-shaped filters against the parts-sized keep
+    shape: the directed edge set is pinned and counted in one job. At
+    or under the one-task bound (2^20 directed edges) one task peels
+    all {_KCORE_ROUNDS} rounds in numpy and returns the degrees. Above
+    it, each round is one degree aggregate over the current edge set
+    plus two semi-join-shaped filters against the parts-sized keep
     list (AQE broadcasts it when it fits) — edges only ever shrink,
-    and each round's edge set is checkpoint-pinned so the fixed-depth
-    lineage never re-derives the basket join. An open-ended variant
-    loops until a round removes nothing (the dedup_near_dup_clusters
-    loop idiom); O(max-core) rounds bound it."""
+    and each round's edge set is pinned so the fixed-depth lineage
+    never re-derives the basket join. Neither path checks convergence."""
     supp = (
         _basket_pairs(spark)
         .groupBy("p1", "p2")
@@ -742,6 +772,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .transform(pin, "reuse")  # peeling rounds never re-read the basket join
     )
+    if fits_one_task(e):
+        t = e.schema["src"].dataType.simpleString()
+        return (
+            e.coalesce(1)
+            .mapInPandas(_kcore_degrees, f"item {t}, core_degree long")
+            .orderBy("item")
+        )
     for _ in range(_KCORE_ROUNDS):
         keep = (
             e.groupBy("src")
@@ -915,6 +952,38 @@ def _sql_hits_step(edges_join: str, prev: str, raw: str, out: str) -> str:
     )"""
 
 
+_HITS_TOP = 20
+
+
+def _hits_top(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The top ``_HITS_TOP`` ``(node, authority, hub)`` rows of two HITS
+    rounds over the directed ``(src, dst)`` edges in ``batches``, on the
+    distributed rounds' 8dp grid: each half-step sums the pushed values'
+    ``floor(v·1e8+0.5)`` as int64, then rounds ``raw / sum`` onto the
+    grid. A node that is never a ``dst`` (``src``) has no authority
+    (hub) row there and 0.0 here, as after the full outer join. The
+    Python heap peaks in :func:`dense_ends`, at about 117 bytes per
+    edge (2^20 edges of a random graph, input frames included)."""
+    ids, src, dst = dense_ends(batches, "src", "dst")
+    if not len(ids):
+        return
+
+    def norm(raw: np.ndarray) -> np.ndarray:
+        return np.floor(raw / raw.sum() * 100000000.0 + 0.5) / 100000000.0
+
+    def push(vals: np.ndarray, key: np.ndarray, out: np.ndarray) -> np.ndarray:
+        raw = np.zeros(len(ids), np.int64)
+        np.add.at(raw, out, np.floor(vals[key] * 100000000.0 + 0.5).astype(np.int64))
+        return norm(raw)
+
+    a = norm(np.bincount(dst, minlength=len(ids)))
+    h = push(a, dst, src)
+    a = push(h, src, dst)
+    h = push(a, dst, src)
+    top = np.lexsort((-h, -a))[:_HITS_TOP]  # stable: ties keep id order
+    yield pd.DataFrame({"node": ids[top], "authority": a[top], "hub": h[top]})
+
+
 @query(
     "graph_hits",
     oracle=f"""
@@ -940,7 +1009,7 @@ def _sql_hits_step(edges_join: str, prev: str, raw: str, out: str) -> str:
            coalesce(h2.v, 0.0) AS hub
     FROM a2 FULL OUTER JOIN h2 ON a2.node = h2.node
     ORDER BY authority DESC, hub DESC, node
-    LIMIT 20
+    LIMIT {_HITS_TOP}
     """,
 )
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,10 +1025,16 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DECIMAL (order-free), and re-rounds the normalized result — the
     same iteration-stable bitwise contract as graph_pagerank.
 
-    Scale shape: the edge list is pinned once; each
-    half-step is one broadcast of the NODE-sized value table against
-    the edges plus a map-side-combined groupBy — no node-sized shuffle,
-    no edge re-derivation per iteration. Past broadcastable catalogs,
+    Scale shape: the edge list is pinned once and counted in one job.
+    At or under the one-task bound (2^20 edges) one task runs both
+    rounds in numpy and returns the top {_HITS_TOP} rows. It stays on the
+    grid exactly: each pushed q is at most 1e8 < 2^27, so with at
+    most 2^20 edges every int64 sum is below 2^47; its cast to double
+    is exact, as is the distributed DECIMAL→DOUBLE cast of the same
+    sum, and the division and re-rounding are the same IEEE operations.
+    Above the bound each half-step is one broadcast of the NODE-sized
+    value table against the edges plus a map-side-combined groupBy — no
+    node-sized shuffle, no edge re-derivation per iteration. Past broadcastable catalogs,
     pre-partition edges by the probe key and every iteration reuses
     that single exchange (the PageRank fallback note applies verbatim)."""
     pairs = _basket_pairs(spark).select("p1", "p2")
@@ -968,6 +1043,13 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
         .transform(pin, "reuse")
     )
+    if fits_one_task(edges):
+        t = edges.schema["src"].dataType.simpleString()
+        return (
+            edges.coalesce(1)
+            .mapInPandas(_hits_top, f"node {t}, authority double, hub double")
+            .orderBy(F.desc("authority"), F.desc("hub"), "node")
+        )
 
     def _norm(raw: DataFrame) -> DataFrame:
         # Sum + scale-back both read raw; unpinned, the 3-deep push nesting
@@ -1008,11 +1090,43 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("hub", F.lit(0.0)).alias("hub"),
         )
         .orderBy(F.desc("authority"), F.desc("hub"), "node")
-        .limit(20)
+        .limit(_HITS_TOP)
     )
 
 
 _BFS_DEPTH = 4
+
+
+def _bfs_levels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``(distance, n_nodes, min_node, max_node)`` of every non-empty BFS
+    level up to ``_BFS_DEPTH`` from the minimum id, over the undirected
+    ``(p1, p2)`` edges in ``batches``. No edges give ``(0, 1, NULL,
+    NULL)``: the distributed root is ``min`` over no rows, and
+    ``coalesce(1)`` runs its one task even over no partitions. The
+    Python heap peaks in :func:`dense_ends`, at about 117 bytes per
+    edge (2^20 edges of a random graph, input frames included)."""
+    ids, iu, iv = dense_ends(batches, "p1", "p2")
+    if not len(ids):
+        yield pd.DataFrame(
+            {"distance": [0], "n_nodes": [1], "min_node": [None], "max_node": [None]}
+        )
+        return
+    rows = [(0, 1, ids[0], ids[0])]
+    seen = np.zeros(len(ids), bool)
+    front = seen.copy()
+    seen[0] = front[0] = True
+    for d in range(1, _BFS_DEPTH + 1):
+        nxt = np.zeros(len(ids), bool)
+        nxt[iv[front[iu]]] = True
+        nxt[iu[front[iv]]] = True
+        hit = np.flatnonzero(nxt & ~seen)
+        if not len(hit):
+            break
+        rows.append((d, len(hit), ids[hit[0]], ids[hit[-1]]))
+        seen[hit] = True
+        front = np.zeros(len(ids), bool)
+        front[hit] = True
+    yield pd.DataFrame(rows, columns=["distance", "n_nodes", "min_node", "max_node"])
 
 
 @query(
@@ -1068,17 +1182,28 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive behind reachability, ego-network, and contamination-
     radius queries, summarized per level.
 
-    Scale shape: level-synchronous frontier expansion — each step is
-    one hash join (edges ⋈ frontier on src; the frontier is node-sized
-    and AQE broadcasts it while small, exactly BFS's natural skew) plus
-    one DISTINCT and one LEFT ANTI join against the visited set. Every
-    frontier is pinned so the plan stays FLAT — depth
-    iterations, not a 2^depth lineage tower — and the visited set is
-    re-pinned per level for the same reason. Bounded depth = bounded
-    rounds; nothing is ever node²."""
+    Scale shape: the undirected edge set is pinned and counted in one
+    job. At or under the one-task bound (2^20 edges) one task expands
+    all {_BFS_DEPTH} levels in numpy and returns the level summaries.
+    Above it, expansion is level-synchronous: each level is one hash
+    join (edges ⋈ frontier on src; the frontier is node-sized and AQE
+    broadcasts it while small, exactly BFS's natural skew) plus one
+    LEFT ANTI join against the visited set and one DISTINCT. Each
+    frontier is pinned lazily and the visited set is the union of the
+    pinned frontiers, so the plan stays FLAT — depth iterations, not a
+    2^depth lineage tower. Bounded depth = bounded rounds; nothing is
+    ever node²."""
     # r10: per-level eager pins were one job each and dominated the wall.
     pairs = _basket_pairs(spark).select("p1", "p2")
     und = pairs.distinct().transform(pin, "reuse")
+    if fits_one_task(und):
+        return (
+            und.coalesce(1)
+            .mapInPandas(
+                _bfs_levels, "distance int, n_nodes long, min_node long, max_node long"
+            )
+            .orderBy("distance")
+        )
     edges = _directed_edges(und)
     root = edges.agg(F.min("src").alias("node"))
     frontier = pin(root, "reuse")

@@ -23,7 +23,7 @@ is :func:`star_components`: the alternating large-star/small-star
 contraction [Kiveris et al., "Connected Components in MapReduce and
 Beyond", SoCC'14], one job per round, only while the residual edge set
 is above an absolute bound of 2^20 edges; at or under it one task
-labels the residual in numpy, at about 140 bytes per edge. The bound is
+labels the residual in numpy, at about 125 bytes per edge. The bound is
 absolute so that a cluster-scale input stays distributed until its
 residual is small, and the count check, not an assumption, keeps the one
 task within memory. Both star steps keep every node of the edge set and
@@ -40,7 +40,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window as W
@@ -57,9 +57,10 @@ SAMPLE_50PCT = "7fff"
 
 
 #: Largest residual edge set that :func:`star_components` labels in one
-#: task. With int64 ids the task's Python heap peaks at about 140 bytes
-#: per edge, input frames included (measured on a random and a shuffled
-#: chain graph of 2^20 edges): ~140 MB at the bound.
+#: task, and that graph.py's BFS, HITS and k-core kernels run in one.
+#: With int64 ids a task's Python heap peaks at about 125 bytes per
+#: edge, input frames included, in :func:`dense_ends` (measured on a
+#: random and a shuffled chain graph of 2^20 edges): ~125 MB at the bound.
 _ONE_TASK_EDGES = 1 << 20
 #: Contraction rounds after which :func:`star_components` raises rather
 #: than return labels of an unconverged edge set. Kiveris et al. bound
@@ -67,15 +68,44 @@ _ONE_TASK_EDGES = 1 << 20
 _MAX_ROUNDS = 32
 
 
+def _observed(df: DataFrame, *aggs: Column) -> dict:
+    """``aggs`` over ``df`` in one job: observed metrics over a ``noop``
+    write need no exchange, where a global ``agg`` costs an extra AQE
+    stage job. The same job materialises a lazy pin of ``df``."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 def _signature(edges: DataFrame) -> tuple:
     """Order-free (count, bit_xor of xxhash64) fingerprint of an edge
-    set, in one job: observed metrics over a ``noop`` write need no
-    exchange, where a global ``agg`` costs an extra AQE stage job."""
-    obs = Observation()
-    edges.observe(
-        obs, F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("x")
-    ).write.format("noop").mode("overwrite").save()
-    return obs.get["n"], obs.get["x"]
+    set, in one job (:func:`_observed`)."""
+    got = _observed(
+        edges, F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("x")
+    )
+    return got["n"], got["x"]
+
+
+def fits_one_task(edges: DataFrame) -> bool:
+    """Whether ``edges`` has at most ``_ONE_TASK_EDGES`` rows, counted in
+    one job (:func:`_observed`)."""
+    return _observed(edges, F.count(F.lit(1)).alias("n"))["n"] <= _ONE_TASK_EDGES
+
+
+def dense_ends(
+    batches: Iterator[pd.DataFrame], a: str, b: str
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(ids, ia, ib)`` for the rows of ``batches``: the sorted distinct
+    ids of columns ``a`` and ``b``, and each row's two ends as indices
+    into ``ids``. ``np.unique`` sorts, so index order is id order."""
+    frames = list(batches)
+    n = sum(len(f) for f in frames)
+    if not n:
+        return np.empty(0, np.int64), np.empty(0, np.intp), np.empty(0, np.intp)
+    ends = np.concatenate([f[c].to_numpy() for c in (a, b) for f in frames])
+    del frames
+    ids, idx = np.unique(ends, return_inverse=True)
+    return ids, idx[:n], idx[n:]
 
 
 def _star_round(edges: DataFrame) -> DataFrame:
@@ -122,14 +152,9 @@ def _min_labels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     shortcut every node to its root, until no edge spans two roots.
     Roots only ever hook to smaller ids, so each root is its
     component's minimum."""
-    frames = list(batches)
-    if not frames:
+    ids, iu, iv = dense_ends(batches, "u", "v")
+    if not len(ids):
         return
-    e = pd.concat(frames, ignore_index=True)
-    ends = np.concatenate([e["u"].to_numpy(), e["v"].to_numpy()])
-    ids, idx = np.unique(ends, return_inverse=True)
-    iu, iv = idx[: len(e)], idx[len(e) :]
-    del e, frames, ends, idx
     parent = np.arange(len(ids))  # np.unique sorts: index order is id order
     while True:
         pu, pv = parent[iu], parent[iv]
@@ -162,7 +187,7 @@ def star_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     edges (``coalesce(1).mapInPandas``, :func:`_min_labels`). The bound
     is an absolute edge count, not a share of the input: a cluster-scale
     input stays distributed until its residual is small, and the one
-    task's memory, about 140 bytes per edge, is bounded by the count
+    task's memory, about 125 bytes per edge, is bounded by the count
     check rather than assumed.
 
     No join back to the input is needed. Both star steps keep every

@@ -7,10 +7,10 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from conftest import SF_SMALL
+from conftest import BOUNDS, SF_SMALL, runs_in_one_task
 
 from shelf_spark.data import TABLES, table_path
-from shelf_spark.queries import ORACLES, QUERIES
+from shelf_spark.queries import ORACLES, QUERIES, sampling
 
 
 def test_registry_integrity():
@@ -909,11 +909,12 @@ def test_benjamini_hochberg_matches_python_stepup(spark):
         assert r.bh_critical == round(_BH_ALPHA * r.rnk / m, 6)
 
 
-def test_kcore_matches_python_peeling(spark):
+def test_kcore_matches_python_peeling(spark, monkeypatch):
     """graph_kcore must equal a plain-Python peeling reference built
     from the same support-2 edge set (via DuckDB on the raw parquet),
     run to CONVERGENCE — proving the fixed 4 rounds reach the true
-    2-core on the fixture, not just a prefix of the peeling."""
+    2-core on the fixture, not just a prefix of the peeling. Runs on
+    both sides of the one-task bound."""
     import duckdb
 
     from shelf_spark.queries.graph import _KCORE_K, _KCORE_MIN_SUPPORT
@@ -949,11 +950,11 @@ def test_kcore_matches_python_peeling(spark):
                 if nb in adj:
                     adj[nb].discard(n)
     expected = {n: len(ns) for n, ns in adj.items() if ns}
-    got = {
-        r.item: r.core_degree
-        for r in QUERIES["graph_kcore"](spark, SF_SMALL).collect()
-    }
-    assert got == expected
+    for bound, one_task in BOUNDS:
+        monkeypatch.setattr(sampling, "_ONE_TASK_EDGES", bound)
+        df = QUERIES["graph_kcore"](spark, SF_SMALL)
+        assert runs_in_one_task(df) == one_task, bound
+        assert {r.item: r.core_degree for r in df.collect()} == expected, bound
 
 
 def test_naive_bayes_matches_python_reference(spark):

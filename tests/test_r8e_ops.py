@@ -17,9 +17,9 @@ from collections import Counter
 import duckdb
 import pytest
 
-from conftest import SF_SMALL
+from conftest import BOUNDS, SF_SMALL, runs_in_one_task
 
-from shelf_spark.queries import QUERIES
+from shelf_spark.queries import QUERIES, sampling
 
 _HEX = "0123456789abcdef"
 
@@ -505,7 +505,7 @@ def test_t_closeness_matches_python_reference(spark):
     assert len(cls) > 100
 
 
-def test_hits_matches_python_reference(spark):
+def test_hits_matches_python_reference(spark, monkeypatch):
     rows = _duck(SF_SMALL, "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem")
     baskets: dict[int, list[int]] = {}
     for o, p in rows:
@@ -539,16 +539,16 @@ def test_hits_matches_python_reference(spark):
         ((n, a.get(n, 0.0), h.get(n, 0.0)) for n in nodes),
         key=lambda r: (-r[1], -r[2], r[0]),
     )[:20]
-    got = [
-        (r.node, r.authority, r.hub)
-        for r in QUERIES["graph_hits"](spark, SF_SMALL).collect()
-    ]
-    assert got == want
+    for bound, one_task in BOUNDS:
+        monkeypatch.setattr(sampling, "_ONE_TASK_EDGES", bound)
+        df = QUERIES["graph_hits"](spark, SF_SMALL)
+        assert runs_in_one_task(df) == one_task, bound
+        assert [(r.node, r.authority, r.hub) for r in df.collect()] == want, bound
     # hubs and authorities are both normalized distributions over the grid
     assert all(0.0 <= v <= 1.0 for _, v, w in want for v in (v, w))
 
 
-def test_bfs_distances_matches_python_reference(spark):
+def test_bfs_distances_matches_python_reference(spark, monkeypatch):
     rows = _duck(SF_SMALL, "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem")
     baskets: dict[int, list[int]] = {}
     for o, p in rows:
@@ -572,11 +572,12 @@ def test_bfs_distances_matches_python_reference(spark):
             want.append((d, len(nxt), min(nxt), max(nxt)))
         visited |= nxt
         frontier = nxt
-    got = [
-        (r.distance, r.n_nodes, r.min_node, r.max_node)
-        for r in QUERIES["graph_bfs_distances"](spark, SF_SMALL).collect()
-    ]
-    assert got == want
+    for bound, one_task in BOUNDS:
+        monkeypatch.setattr(sampling, "_ONE_TASK_EDGES", bound)
+        df = QUERIES["graph_bfs_distances"](spark, SF_SMALL)
+        assert runs_in_one_task(df) == one_task, bound
+        got = [(r.distance, r.n_nodes, r.min_node, r.max_node) for r in df.collect()]
+        assert got == want, bound
     # the basket graph is connected enough that BFS leaves level 0
     assert len(want) >= 2
 

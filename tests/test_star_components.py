@@ -17,6 +17,8 @@ import random
 
 import pytest
 
+from conftest import runs_in_one_task
+
 from shelf_spark.queries import sampling
 from shelf_spark.queries.sampling import star_components
 
@@ -70,8 +72,7 @@ def _check(spark, monkeypatch, rounds, pairs, expected=None):
         out = star_components(df, "a", "b")
         got = {r["node"]: r["component"] for r in out.collect()}
         assert got == (ref if expected is None else expected), mode
-        finished = "MapInPandas" in out._jdf.queryExecution().optimizedPlan().toString()
-        assert finished == (mode != "contract"), mode
+        assert runs_in_one_task(out) == (mode != "contract"), mode
         contracted = mode == "contract" or (mode != "finish" and len(edges) > forest)
         assert bool(rounds) == contracted, mode
 
