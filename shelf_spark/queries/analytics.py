@@ -102,21 +102,45 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _retention(spark: SparkSession) -> DataFrame:
+    """(user_id, cohort_week, weeks_later): each user's cohort week (the
+    week of their first event) against every week they were active,
+    ``weeks_later`` whole weeks after it."""
+    e = spark.table("events")
+    firsts = e.groupBy("user_id").agg(
+        F.to_date(F.date_trunc("week", F.min("ts"))).alias("cohort_week")
+    )
+    activity = e.select(
+        "user_id", F.to_date(F.date_trunc("week", "ts")).alias("active_week")
+    ).distinct()
+    weeks_later = F.datediff(F.col("active_week"), F.col("cohort_week")) / 7
+    return activity.join(firsts, "user_id").select(
+        "user_id", "cohort_week", weeks_later.cast("long").alias("weeks_later")
+    )
+
+
+#: Twin of :func:`_retention`.
+_SQL_RETENTION = """
+      WITH firsts AS (
+        SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
+        FROM events GROUP BY user_id
+      ),
+      activity AS (
+        SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS active_week
+        FROM events
+      )
+      SELECT user_id, cohort_week,
+             CAST(date_diff('day', cohort_week, active_week) / 7 AS BIGINT)
+               AS weeks_later
+      FROM activity JOIN firsts USING (user_id)"""
+
+
 @query(
     "events_retention_cohorts",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
-      FROM events GROUP BY user_id
-    ),
-    activity AS (
-      SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS active_week
-      FROM events
-    )
-    SELECT cohort_week,
-           CAST(date_diff('day', cohort_week, active_week) / 7 AS BIGINT) AS weeks_later,
+    oracle=f"""
+    SELECT cohort_week, weeks_later,
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
-    FROM activity JOIN firsts USING (user_id)
+    FROM ({_SQL_RETENTION})
     GROUP BY cohort_week, weeks_later
     ORDER BY cohort_week, weeks_later
     """,
@@ -130,19 +154,9 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-difference of two Monday-truncated weeks is an exact multiple of
     7, so the integer division is lossless.)
     """
-    e = spark.table("events")
-    firsts = e.groupBy("user_id").agg(
-        F.to_date(F.date_trunc("week", F.min("ts"))).alias("cohort_week")
-    )
-    activity = e.select(
-        "user_id", F.to_date(F.date_trunc("week", F.col("ts"))).alias("active_week")
-    ).distinct()
-    weeks_later = (
-        F.datediff(F.col("active_week"), F.col("cohort_week")) / 7
-    ).cast("long")
     return (
-        activity.join(firsts, "user_id")
-        .groupBy("cohort_week", weeks_later.alias("weeks_later"))
+        _retention(spark)
+        .groupBy("cohort_week", "weeks_later")
         .agg(F.countDistinct("user_id").cast("long").alias("n_active"))
         .orderBy("cohort_week", "weeks_later")
     )
@@ -1735,19 +1749,10 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_retention_halflife",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
-      FROM events GROUP BY user_id
-    ),
-    activity AS (
-      SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS active_week
-      FROM events
-    ),
-    offs AS (
-      SELECT CAST(date_diff('day', cohort_week, active_week) / 7 AS BIGINT) AS w,
-             count(DISTINCT a.user_id) AS n_w
-      FROM activity a JOIN firsts USING (user_id)
+    oracle=f"""
+    WITH offs AS (
+      SELECT weeks_later AS w, count(DISTINCT user_id) AS n_w
+      FROM ({_SQL_RETENTION})
       GROUP BY 1
     ),
     base AS (SELECT n_w AS n0 FROM offs WHERE w = 0),
@@ -1797,25 +1802,13 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression trees on those exact-derived doubles — identical IEEE
     results on both engines.
 
-    Scale shape: the cohort/activity join is `events_retention_cohorts`'
-    user-keyed envelope; everything after runs on the week-offset
+    Scale shape: the cohort/activity join is `_retention`, the
+    user-keyed relation `events_retention_cohorts` reads; everything
+    after runs on the week-offset
     domain (a handful of rows at any horizon — calendar-bounded)."""
-    e = spark.table("events")
-    firsts = e.groupBy("user_id").agg(
-        F.to_date(F.date_trunc("week", F.min("ts"))).alias("cohort_week")
-    )
-    activity = e.select(
-        "user_id", F.to_date(F.date_trunc("week", "ts")).alias("active_week")
-    ).distinct()
     offs = (
-        activity.join(firsts, "user_id")
-        .groupBy(
-            (
-                F.datediff(F.col("active_week"), F.col("cohort_week")) / 7
-            )
-            .cast("long")
-            .alias("w")
-        )
+        _retention(spark)
+        .groupBy(F.col("weeks_later").alias("w"))
         .agg(F.countDistinct("user_id").alias("n_w"))
     )
     base = offs.filter(F.col("w") == 0).select(F.col("n_w").alias("n0"))

@@ -14,6 +14,27 @@ contribution onto an 8-decimal grid (pure-IEEE round), sums those
 exactly in DECIMAL, and re-quantizes each iteration's rank — so ranks
 agree bitwise across engines at every iteration.
 
+Base relations: every operator reads the graph through a few builders,
+each a Spark function returning an unpinned DataFrame next to its
+DuckDB twin (a CTE body), in the paired ``x``/``sql_x`` style of num.py
+and stats.py:
+
+- ``_basket_pairs`` (twin: the ``pairs`` CTE of ``_SQL_GRAPH``):
+  (l_orderkey, p1, p2) co-occurrences, p1 < p2;
+- ``_und_edges`` (``und``): the distinct undirected edges (p1, p2);
+- ``_support_edges`` / ``_sql_support_edges``: the edges co-occurring in
+  at least ``min_support`` orders (3 for the strong graph, 2 for k-core);
+- ``_directed_edges`` / ``_sql_directed``: both directions (src, dst);
+- ``_degrees`` / ``_sql_degrees``: (node, d) endpoint degrees;
+- ``_out_adjacency`` / ``_SQL_ORIENTED``: the (degree, id) orientation;
+- ``_closing_sets`` / ``_SQL_TRI``: the triangles closing each
+  oriented edge.
+
+Pins, ``coalesce(1)`` and broadcast hints stay at the call sites: a
+builder says what a relation is, its caller how it is materialised. The
+one hint inside a builder is the SHUFFLE_HASH of ``_closing_sets``'
+join, the choice of both its callers.
+
 Scale notes (100 TB):
 - The basket self-join explodes ≤B² rows per order (B = basket size,
   bounded small) — linear in orders overall, shuffled on the natural
@@ -53,11 +74,6 @@ _DAMP = 0.85
 _ITERS = 3
 
 
-def _baskets(spark: SparkSession) -> DataFrame:
-    """Distinct (order, part) pairs — a part can recur across linenumbers."""
-    return spark.table("lineitem").select("l_orderkey", "l_partkey").distinct()
-
-
 def _part_sets(spark: SparkSession) -> DataFrame:
     """(l_orderkey, parts): each order's sorted distinct part set."""
     return (
@@ -93,14 +109,53 @@ def _basket_pairs_from(baskets: DataFrame) -> DataFrame:
     )
 
 
-def _directed_edges(und: DataFrame) -> DataFrame:
-    """Both edge directions in ONE scan of the canonical (p1<p2) pairs.
+def _und_edges(spark: SparkSession) -> DataFrame:
+    """The undirected co-purchase edges: distinct (p1, p2), p1 < p2."""
+    return _basket_pairs(spark).select("p1", "p2").distinct()
 
-    r14: the former ``und.select(p1,p2).union(und.select(p2,p1))`` read
-    the und checkpoint blocks TWICE per consumer — per-job event metrics
-    showed every PageRank iteration reading 4x the und block bytes and
-    every BFS level paying the same double scan. The explode emits the
-    identical directed multiset from a single pass over the blocks.
+
+#: Every oracle's leading CTEs: ``baskets`` (distinct order, part),
+#: ``pairs`` (twin of :func:`_basket_pairs`) and ``und`` (twin of
+#: :func:`_und_edges`).
+_SQL_GRAPH = """baskets AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    pairs AS (
+      SELECT a.l_orderkey, a.l_partkey AS p1, b.l_partkey AS p2
+      FROM baskets a JOIN baskets b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    ),
+    und AS (SELECT DISTINCT p1, p2 FROM pairs)"""
+
+
+def _support_edges(spark: SparkSession, min_support: int) -> DataFrame:
+    """The (p1, p2) edges whose parts co-occur in at least
+    ``min_support`` orders. Its rows are unique with p1 < p2 strictly
+    (sorted ``collect_set`` → ``slice(i + 2)``), so
+    :func:`_directed_edges` of them has no duplicate rows either."""
+    return (
+        _basket_pairs(spark)
+        .groupBy("p1", "p2")
+        .agg(F.count("*").alias("c"))
+        .filter(F.col("c") >= min_support)
+        .select("p1", "p2")
+    )
+
+
+def _sql_support_edges(min_support: int) -> str:
+    return f"""
+      SELECT p1, p2 FROM pairs GROUP BY p1, p2
+      HAVING count(*) >= {min_support}
+"""
+
+
+def _directed_edges(und: DataFrame) -> DataFrame:
+    """Both directions ``(src, dst)`` of the unique p1 < p2 edges in
+    ``und``, so no row repeats.
+
+    One explode of two structs reads ``und`` once. A union of two
+    selects would read a pinned ``und``'s blocks twice per consumer
+    (r14 measured every PageRank iteration reading 4x the und block
+    bytes, every BFS level the same double scan) and evaluate an
+    unpinned ``und`` (distinct pairs, a support aggregate) twice.
     """
     return und.select(
         F.explode(
@@ -112,19 +167,92 @@ def _directed_edges(und: DataFrame) -> DataFrame:
     ).select("e.src", "e.dst")
 
 
-_SQL_BASKETS = "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem"
-_SQL_PAIRS = """
-      SELECT a.l_orderkey, a.l_partkey AS p1, b.l_partkey AS p2
-      FROM baskets a JOIN baskets b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-"""
+def _sql_directed(und: str) -> str:
+    return f"SELECT p1 AS src, p2 AS dst FROM {und} UNION ALL SELECT p2, p1 FROM {und}"
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, d): each endpoint's degree over the edges ``und``, counted
+    from one scan of both endpoints."""
+    return (
+        und.select(F.explode(F.array("p1", "p2")).alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+
+
+def _sql_degrees(und: str) -> str:
+    return f"""
+      SELECT node, count(*) AS d FROM (
+        SELECT p1 AS node FROM {und} UNION ALL SELECT p2 AS node FROM {und}
+      ) GROUP BY node"""
+
+
+def _out_adjacency(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """(src, nbrs): the degree orientation's out-neighbour lists. Each
+    edge of ``und`` points from its (degree, id)-smaller endpoint to the
+    larger, by the (node, d) degrees ``deg``, so every triangle has one
+    source and a node's out-degree is O(√m)."""
+    d1 = deg.select(F.col("node").alias("p1"), F.col("d").alias("d1"))
+    d2 = deg.select(F.col("node").alias("p2"), F.col("d").alias("d2"))
+    lower1 = (F.col("d1") < F.col("d2")) | (
+        (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2"))
+    )
+    oriented = (
+        und.join(d1, "p1")
+        .join(d2, "p2")
+        .select(
+            F.when(lower1, F.col("p1")).otherwise(F.col("p2")).alias("src"),
+            F.when(lower1, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
+        )
+    )
+    return oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
+
+
+#: Twin of :func:`_out_adjacency` as one row per edge, reading CTEs
+#: ``und`` and ``deg``; ``dst_d`` is the destination's degree.
+_SQL_ORIENTED = """
+      SELECT CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN u.p1 ELSE u.p2 END AS src,
+             CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN u.p2 ELSE u.p1 END AS dst,
+             CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN d2.d ELSE d1.d END AS dst_d
+      FROM und u
+      JOIN deg d1 ON u.p1 = d1.node
+      JOIN deg d2 ON u.p2 = d2.node"""
+
+
+def _closing_sets(adj: DataFrame) -> DataFrame:
+    """(u, v, ws): for each oriented edge u → v of the out-adjacency
+    ``adj``, the nodes w with u → w and v → w, i.e. ``N+(u) ∩ N+(v)``.
+    Each triangle appears once, at its (degree, id)-smallest u and
+    middle v. The source's list rides its edge rows from the explode of
+    the grouped adjacency, and one SHUFFLE_HASH join attaches the
+    destination's; both callers choose that hint because sort-merge
+    would sort the array-carrying rows by v for no benefit."""
+    fat = adj.select(
+        F.col("src").alias("u"),
+        F.col("nbrs").alias("nbrs_u"),
+        F.explode("nbrs").alias("v"),
+    )
+    adj_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nbrs_v"))
+    return fat.join(adj_v.hint("SHUFFLE_HASH"), "v").select(
+        "u", "v", F.array_intersect("nbrs_u", "nbrs_v").alias("ws")
+    )
+
+
+#: Twin of :func:`_closing_sets` as one ``(a, b, c)`` row per triangle
+#: (a = u, b = v, c = w), reading CTE ``oriented``.
+_SQL_TRI = """
+      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+      FROM oriented e1
+      JOIN oriented e2 ON e1.src = e2.src
+                      AND (e1.dst_d, e1.dst) < (e2.dst_d, e2.dst)
+      JOIN oriented e3 ON e3.src = e1.dst AND e3.dst = e2.dst"""
 
 
 @query(
     "mba_item_pairs",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
+    WITH {_SQL_GRAPH},
     pair_cnt AS (
       SELECT p1, p2, count(*) AS support FROM pairs GROUP BY p1, p2
     ),
@@ -157,9 +285,9 @@ def mba_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are parts-sized (AQE broadcasts them while small); the
     total-orders scalar crossJoins."""
     # ONE fact reduction (r15): pairs, per-item counts and the order
-    # count all derive from the same basket part-set relation — the
-    # former `_basket_pairs + 2x _baskets` shape ran the lineitem
-    # scan + distinct three times. item_cnt == per-part count of
+    # count all derive from the same basket part-set relation — deriving
+    # them from the pairs and two distinct (order, part) relations ran
+    # the lineitem scan + distinct three times. item_cnt == per-part count of
     # distinct containing orders == explode of the per-order part sets;
     # n_orders == count of basket rows. The three consumers share the
     # first job; the pin is fact-sized (see pin.py on availability).
@@ -195,29 +323,10 @@ def mba_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_triangle_count",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    und AS (SELECT DISTINCT p1, p2 FROM pairs),
-    deg AS (
-      SELECT node, count(*) AS d FROM (
-        SELECT p1 AS node FROM und UNION ALL SELECT p2 AS node FROM und
-      ) GROUP BY node
-    ),
-    oriented AS (
-      SELECT CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN u.p1 ELSE u.p2 END AS src,
-             CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN u.p2 ELSE u.p1 END AS dst,
-             CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN d2.d ELSE d1.d END AS dst_d
-      FROM und u
-      JOIN deg d1 ON u.p1 = d1.node
-      JOIN deg d2 ON u.p2 = d2.node
-    ),
-    tri AS (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM oriented e1
-      JOIN oriented e2 ON e1.src = e2.src
-                      AND (e1.dst_d, e1.dst) < (e2.dst_d, e2.dst)
-      JOIN oriented e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    )
+    WITH {_SQL_GRAPH},
+    deg AS ({_sql_degrees("und")}),
+    oriented AS ({_SQL_ORIENTED}),
+    tri AS ({_SQL_TRI})
     SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
     FROM (
       SELECT a AS node FROM tri
@@ -258,49 +367,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree cap, so no single row or hash bucket can blow up on a
     power-law hub at 100 TB. Rewrote the r6 wedge-join plan 17.2 → 6.2 s at sf0.1,
     bit-identical output (DuckDB oracle: 16.9 s on the same machine)."""
-    und = _basket_pairs(spark).select("p1", "p2").distinct()
     # Feeds degrees AND the orientation join (r14 lazy: 3.69 -> 3.37 s;
     # pinning adj too measured neutral, ReusedExchange dedups it here).
-    und = pin(und, "reuse")
-    deg = (
-        # Both endpoints from one scan of the pinned pairs (r14): the
-        # union-of-two-selects read the und checkpoint blocks twice.
-        und.select(F.explode(F.array("p1", "p2")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    d1 = deg.select(F.col("node").alias("p1"), F.col("d").alias("d1"))
-    d2 = deg.select(F.col("node").alias("p2"), F.col("d").alias("d2"))
-    smaller_first = (F.col("d1") < F.col("d2")) | (
-        (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2"))
-    )
+    und = pin(_und_edges(spark), "reuse")
     # Degree lookups broadcast (node-sized, same policy as PageRank's
-    # ranks).
-    oriented = (
-        und.join(F.broadcast(d1), "p1")
-        .join(F.broadcast(d2), "p2")
-        .select(
-            F.when(smaller_first, F.col("p1")).otherwise(F.col("p2")).alias("src"),
-            F.when(smaller_first, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
-        )
-    )
-    # Out-adjacency once; both uses below share the single groupBy
-    # exchange (oriented derives from the pinned und, so the two adj
-    # subplans are identical -> ReusedExchange).
-    adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    # (u, v, N+(u)) generated map-side from the grouped adjacency — the
-    # source side's array needs no join at all.
-    fat = adj.select(
-        F.col("src").alias("u"),
-        F.col("nbrs").alias("nbrs_u"),
-        F.explode("nbrs").alias("v"),
-    )
-    adj_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nbrs_v"))
-    # SHUFFLE_HASH: both sides are edges/nodes-sized; sort-merge would
-    # sort the array-carrying fat rows by v for no benefit.
-    per_edge = fat.join(adj_v.hint("SHUFFLE_HASH"), "v").select(
-        "u", "v", F.array_intersect("nbrs_u", "nbrs_v").alias("ws")
-    )
+    # ranks). Both uses of the adjacency share its single groupBy
+    # exchange (it derives from the pinned und -> ReusedExchange).
+    adj = _out_adjacency(und, F.broadcast(_degrees(und)))
+    per_edge = _closing_sets(adj)
     # Per-node counts in ONE pass over per_edge (r14): each closing node
     # w yields the contribution trio (u,1), (v,1), (w,1), flattened
     # map-side — u and v end up counted once per triangle on this edge
@@ -362,13 +436,8 @@ def _sql_pr_iter(prev: str, out: str) -> str:
 @query(
     "graph_pagerank",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    edges AS (
-      SELECT DISTINCT p1 AS src, p2 AS dst FROM pairs
-      UNION
-      SELECT DISTINCT p2 AS src, p1 AS dst FROM pairs
-    ),
+    WITH {_SQL_GRAPH},
+    edges AS ({_sql_directed("und")}),
     deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
     nn AS (SELECT count(*) AS n FROM deg),
     r0 AS (
@@ -391,10 +460,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DECIMAL, and the new rank re-quantized — iteration-stable bitwise
     agreement. The undirected graph guarantees every node receives mass,
     so the inner join loses no nodes."""
-    pairs = _basket_pairs(spark).select("p1", "p2")
     # Pin the CANONICAL (p1<p2) half; both directions read its blocks.
-    und = pairs.distinct().transform(pin, "reuse")
-    edges = _directed_edges(und)
+    edges = _directed_edges(pin(_und_edges(spark), "reuse"))
     # The degree table is NODE-sized (parts ≪ edges) — pinned once
     # (one groupBy over the pinned pairs), and from here on nothing
     # node-sized is ever shuffled: each iteration probes a broadcast of
@@ -468,17 +535,10 @@ _SQL_ASSORT = (
 @query(
     "graph_assortativity",
     oracle=f"""
-    WITH baskets AS ({{baskets}}),
-    pairs AS ({{pairs}}),
-    und AS (SELECT DISTINCT p1, p2 FROM pairs),
-    deg AS (
-      SELECT node, count(*) AS d FROM (
-        SELECT p1 AS node FROM und UNION ALL SELECT p2 AS node FROM und
-      ) GROUP BY node
-    ), edges AS (
-      SELECT p1 AS u, p2 AS v FROM und
-      UNION ALL SELECT p2, p1 FROM und
-    ), m AS (
+    WITH {_SQL_GRAPH},
+    deg AS ({_sql_degrees("und")}),
+    edges AS ({_sql_directed("und")}),
+    m AS (
       SELECT CAST(count(*) AS DOUBLE) AS n,
              CAST(sum(CAST(du.d AS DECIMAL(18,0))) AS DOUBLE) AS sx,
              CAST(sum(CAST(dv.d AS DECIMAL(18,0))) AS DOUBLE) AS sy,
@@ -486,13 +546,13 @@ _SQL_ASSORT = (
              CAST(sum(CAST(du.d * du.d AS DECIMAL(18,0))) AS DOUBLE) AS sxx,
              CAST(sum(CAST(dv.d * dv.d AS DECIMAL(18,0))) AS DOUBLE) AS syy
       FROM edges
-        JOIN deg du ON edges.u = du.node
-        JOIN deg dv ON edges.v = dv.node
+        JOIN deg du ON edges.src = du.node
+        JOIN deg dv ON edges.dst = dv.node
     )
     SELECT CAST(n AS BIGINT) AS n_directed_edges,
            {_SQL_ASSORT} AS assortativity
     FROM m
-    """.format(baskets=_SQL_BASKETS, pairs=_SQL_PAIRS),
+    """,
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the co-purchase graph (Newman 2002):
@@ -509,29 +569,15 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation fits, hash at scale), then ONE map-side-combined moment
     aggregate produces six numbers. No windows, no sorts; the same
     single-pass shape at any edge count."""
-    und = _basket_pairs(spark).select("p1", "p2").distinct().transform(pin, "reuse")
-    # Single-scan endpoint/direction expansion (r14, the _directed_edges
-    # rationale): each former unionAll-of-selects read the pinned und
-    # blocks twice.
-    deg = (
-        und.select(F.explode(F.array("p1", "p2")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    edges = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("p1").alias("u"), F.col("p2").alias("v")),
-                F.struct(F.col("p2").alias("u"), F.col("p1").alias("v")),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    und = _und_edges(spark).transform(pin, "reuse")
+    deg = _degrees(und)
+    du = deg.select(F.col("node").alias("src"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("dst"), F.col("d").alias("dv"))
     d0 = "decimal(18,0)"
     m = (
-        edges.join(du, "u")
-        .join(dv, "v")
+        _directed_edges(und)
+        .join(du, "src")
+        .join(dv, "dst")
         .agg(
             F.count("*").cast("double").alias("n"),
             F.sum(F.col("du").cast(d0)).cast("double").alias("sx"),
@@ -562,36 +608,14 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: would otherwise fuse everything into one giant component).
 _MIN_COSUPPORT = 3
 
-_SQL_SUPPORT_EDGES = f"""
-      SELECT p1, p2 FROM pairs GROUP BY p1, p2
-      HAVING count(*) >= {_MIN_COSUPPORT}
-"""
-
-
-def _support_edges(spark: SparkSession) -> DataFrame:
-    """The strong co-purchase edge set (support ≥ _MIN_COSUPPORT) —
-    shared by components, degree distribution, and the recursive-CTE
-    SQL twin so all three always describe the SAME graph."""
-    return (
-        _basket_pairs(spark)
-        .groupBy("p1", "p2")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= _MIN_COSUPPORT)
-        .select("p1", "p2")
-    )
-
 
 @query(
     "graph_connected_components",
     oracle=f"""
     WITH RECURSIVE
-    baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    supp AS ({_SQL_SUPPORT_EDGES}),
-    edges AS (
-      SELECT p1 AS src, p2 AS dst FROM supp
-      UNION SELECT p2, p1 FROM supp
-    ),
+    {_SQL_GRAPH},
+    supp AS ({_sql_support_edges(_MIN_COSUPPORT)}),
+    edges AS ({_sql_directed("supp")}),
     walk(node, reach) AS (
       SELECT src, src FROM edges
       UNION
@@ -616,7 +640,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE is O(component²) and exists only for the fixture; the
     Spark side never materializes reachability."""
     return (
-        star_components(_support_edges(spark), "p1", "p2")
+        star_components(_support_edges(spark, _MIN_COSUPPORT), "p1", "p2")
         .select(F.col("node").alias("item"), "component")
         .orderBy("item")
     )
@@ -625,18 +649,12 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_degree_distribution",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    supp AS ({_SQL_SUPPORT_EDGES}),
-    deg AS (
-      SELECT node, count(*) AS degree FROM (
-        SELECT p1 AS node, p2 AS nb FROM supp
-        UNION ALL SELECT p2, p1 FROM supp
-      ) GROUP BY node
-    )
-    SELECT CAST(degree AS BIGINT) AS degree,
+    WITH {_SQL_GRAPH},
+    supp AS ({_sql_support_edges(_MIN_COSUPPORT)}),
+    deg AS ({_sql_degrees("supp")})
+    SELECT CAST(d AS BIGINT) AS degree,
            CAST(count(*) AS BIGINT) AS n_nodes
-    FROM deg GROUP BY degree ORDER BY degree
+    FROM deg GROUP BY d ORDER BY degree
     """,
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -648,16 +666,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     list → node key), one for the bounded-domain histogram — all
     map-side-combined; nothing is quadratic, the histogram domain is
     max-degree-bounded."""
-    support = _support_edges(spark)
-    # Single scan (r14): the unionAll-of-selects evaluated the unpinned
-    # support aggregate twice.
-    deg = (
-        support.select(F.explode(F.array("p1", "p2")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
     return (
-        deg.groupBy("degree")
+        _degrees(_support_edges(spark, _MIN_COSUPPORT))
+        .groupBy(F.col("d").alias("degree"))
         .agg(F.count("*").cast("long").alias("n_nodes"))
         .select(F.col("degree").cast("long").alias("degree"), "n_nodes")
         .orderBy("degree")
@@ -675,11 +686,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KCORE_K = 2
 _KCORE_ROUNDS = 4
 _KCORE_MIN_SUPPORT = 2
-
-_SQL_KCORE_EDGES = f"""
-      SELECT p1, p2 FROM pairs GROUP BY p1, p2
-      HAVING count(*) >= {_KCORE_MIN_SUPPORT}
-"""
 
 
 def _sql_kcore_round(r: int) -> str:
@@ -715,13 +721,9 @@ def _kcore_degrees(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 @query(
     "graph_kcore",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    supp AS ({_SQL_KCORE_EDGES}),
-    e0 AS (
-      SELECT p1 AS src, p2 AS dst FROM supp
-      UNION SELECT p2, p1 FROM supp
-    ),
+    WITH {_SQL_GRAPH},
+    supp AS ({_sql_support_edges(_KCORE_MIN_SUPPORT)}),
+    e0 AS ({_sql_directed("supp")}),
     {",".join(_sql_kcore_round(r) for r in range(1, _KCORE_ROUNDS + 1))}
     SELECT src AS item, CAST(count(*) AS BIGINT) AS core_degree
     FROM e{_KCORE_ROUNDS}
@@ -749,29 +751,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     list (AQE broadcasts it when it fits) — edges only ever shrink,
     and each round's edge set is pinned so the fixed-depth lineage
     never re-derives the basket join. Neither path checks convergence."""
-    supp = (
-        _basket_pairs(spark)
-        .groupBy("p1", "p2")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= _KCORE_MIN_SUPPORT)
-        .select("p1", "p2")
-    )
-    e = (
-        # Single scan for both directions (r14, the _directed_edges
-        # rationale): the union-of-two-selects evaluated the unpinned
-        # supp aggregate twice before the pin.
-        supp.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("p1").alias("src"), F.col("p2").alias("dst")),
-                    F.struct(F.col("p2").alias("src"), F.col("p1").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .transform(pin, "reuse")  # peeling rounds never re-read the basket join
-    )
+    # Peeling rounds never re-read the basket join. The directed
+    # support edges are unique rows, so no distinct precedes the pin.
+    e = pin(_directed_edges(_support_edges(spark, _KCORE_MIN_SUPPORT)), "reuse")
     if fits_one_task(e):
         t = e.schema["src"].dataType.simpleString()
         return (
@@ -818,20 +800,13 @@ _LINK_HUB_MAX = 64
 @query(
     "graph_link_prediction",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    supp AS ({_SQL_SUPPORT_EDGES}),
-    und AS (
-      SELECT p1 AS src, p2 AS dst FROM supp
-      UNION ALL SELECT p2, p1 FROM supp
-    ),
-    deg AS (
-      SELECT src AS node, CAST(count(*) AS BIGINT) AS degree
-      FROM und GROUP BY src
-    ),
+    WITH {_SQL_GRAPH},
+    supp AS ({_sql_support_edges(_MIN_COSUPPORT)}),
+    dir AS ({_sql_directed("supp")}),
+    deg AS ({_sql_degrees("supp")}),
     hubs AS (
-      SELECT u.src, u.dst FROM und u
-      JOIN deg ON deg.node = u.src AND deg.degree <= {_LINK_HUB_MAX}
+      SELECT u.src, u.dst FROM dir u
+      JOIN deg ON deg.node = u.src AND deg.d <= {_LINK_HUB_MAX}
     ),
     cand AS (
       SELECT a.dst AS u, b.dst AS v, CAST(count(*) AS BIGINT) AS cn
@@ -844,7 +819,7 @@ _LINK_HUB_MAX = 64
     )
     SELECT u AS p1, v AS p2, cn AS common_neighbors,
            (floor(CAST(cn AS DOUBLE)
-                  / (du.degree + dv.degree - cn) * 1000000.0 + 0.5)
+                  / (du.d + dv.d - cn) * 1000000.0 + 0.5)
             / 1000000.0) AS jaccard
     FROM nonedge
     JOIN deg du ON du.node = u
@@ -868,21 +843,12 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two integer degrees (parts-sized relation, AQE-broadcastable)
     and the integer common-neighbor count, so the score is one IEEE
     division of exact ints. Top-k is TakeOrderedAndProject."""
-    supp = _support_edges(spark)
-    # Single scan (r14): the unionAll evaluated the unpinned supp
-    # aggregate twice.
-    und = supp.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("p1").alias("src"), F.col("p2").alias("dst")),
-                F.struct(F.col("p2").alias("src"), F.col("p1").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    supp = _support_edges(spark, _MIN_COSUPPORT)
     # Hub cap rides the SAME groupBy that builds the adjacency arrays —
     # no extra exchange: collect, then drop arrays over the cap.
     adj = (
-        und.groupBy("src")
+        _directed_edges(supp)
+        .groupBy("src")
         .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
         .filter(F.size("nbrs") <= _LINK_HUB_MAX)
     )
@@ -906,11 +872,9 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         (cand.u == supp.p1) & (cand.v == supp.p2),
         "left_anti",
     )
-    deg = und.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("long").alias("degree")
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("degree").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("degree").alias("dv"))
+    deg = _degrees(supp)
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     return (
         nonedge.join(du, "u")
         .join(dv, "v")
@@ -987,9 +951,8 @@ def _hits_top(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 @query(
     "graph_hits",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    edges AS (SELECT DISTINCT p1 AS src, p2 AS dst FROM pairs),
+    WITH {_SQL_GRAPH},
+    edges AS (SELECT p1 AS src, p2 AS dst FROM und),
     a1r AS (
       SELECT dst AS node, CAST(count(*) AS DECIMAL(18,0)) AS raw
       FROM edges GROUP BY dst
@@ -1037,9 +1000,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-sized shuffle, no edge re-derivation per iteration. Past broadcastable catalogs,
     pre-partition edges by the probe key and every iteration reuses
     that single exchange (the PageRank fallback note applies verbatim)."""
-    pairs = _basket_pairs(spark).select("p1", "p2")
     edges = (
-        pairs.distinct()
+        _und_edges(spark)
         .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
         .transform(pin, "reuse")
     )
@@ -1132,13 +1094,8 @@ def _bfs_levels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 @query(
     "graph_bfs_distances",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    edges AS (
-      SELECT DISTINCT p1 AS src, p2 AS dst FROM pairs
-      UNION
-      SELECT DISTINCT p2 AS src, p1 AS dst FROM pairs
-    ),
+    WITH {_SQL_GRAPH},
+    edges AS ({_sql_directed("und")}),
     root AS (SELECT min(src) AS node FROM edges),
     l0 AS (SELECT node FROM root),
     l1 AS (
@@ -1194,8 +1151,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^depth lineage tower. Bounded depth = bounded rounds; nothing is
     ever node²."""
     # r10: per-level eager pins were one job each and dominated the wall.
-    pairs = _basket_pairs(spark).select("p1", "p2")
-    und = pairs.distinct().transform(pin, "reuse")
+    und = pin(_und_edges(spark), "reuse")
     if fits_one_task(und):
         return (
             und.coalesce(1)
@@ -1257,29 +1213,11 @@ _GCC = (
 @query(
     "graph_clustering_coefficient",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    und AS (SELECT DISTINCT p1, p2 FROM pairs),
-    deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT p1 AS node FROM und UNION ALL SELECT p2 AS node FROM und
-      ) GROUP BY node
-    ),
-    oriented AS (
-      SELECT CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN u.p1 ELSE u.p2 END AS src,
-             CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN u.p2 ELSE u.p1 END AS dst,
-             CASE WHEN (d1.d, u.p1) < (d2.d, u.p2) THEN d2.d ELSE d1.d END AS dst_d
-      FROM und u
-      JOIN deg d1 ON u.p1 = d1.node
-      JOIN deg d2 ON u.p2 = d2.node
-    ),
-    tri AS (
-      SELECT count(*) AS n_tri
-      FROM oriented e1
-      JOIN oriented e2 ON e1.src = e2.src
-                      AND (e1.dst_d, e1.dst) < (e2.dst_d, e2.dst)
-      JOIN oriented e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-    ),
+    WITH {_SQL_GRAPH},
+    deg AS ({_sql_degrees("und")}),
+    oriented AS ({_SQL_ORIENTED}),
+    tri AS ({_SQL_TRI}),
+    n_tri AS (SELECT count(*) AS n_tri FROM tri),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n_nodes,
              CAST(sum(d) AS BIGINT) // 2 AS n_edges,
@@ -1288,7 +1226,7 @@ _GCC = (
     )
     SELECT n_nodes, n_edges, CAST(n_tri AS BIGINT) AS n_triangles, n_wedges,
            {_sql_round_ieee(_GCC, 6)} AS global_clustering
-    FROM agg CROSS JOIN tri
+    FROM agg CROSS JOIN n_tri
     """,
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1303,36 +1241,14 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge denominator is a closed-form sum over the NODE-sized degree
     table — no wedge enumeration ever happens. Exact integer carriers,
     one IEEE division."""
-    # r14 lazy pins, with the adj pin below: 3.99 -> 3.44 s median at sf0.1.
-    pairs = _basket_pairs(spark).select("p1", "p2")
-    und = pairs.distinct().transform(pin, "reuse")
-    edges = _directed_edges(und)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("long").alias("d")
-    ).transform(pin, "reuse")
-    d1 = deg.select(F.col("node").alias("p1"), F.col("d").alias("d1"))
-    d2 = deg.select(F.col("node").alias("p2"), F.col("d").alias("d2"))
-    lower1 = (F.struct("d1", "p1") < F.struct("d2", "p2"))
-    oriented = (
-        und.join(d1, "p1").join(d2, "p2")
-        .select(
-            F.when(lower1, F.col("p1")).otherwise(F.col("p2")).alias("src"),
-            F.when(lower1, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
-        )
-    )
-    # adj feeds both the exploded fat side and the probe side (r14).
-    adj = oriented.groupBy("src").agg(
-        F.collect_list("dst").alias("nbrs")
-    ).transform(pin, "reuse")
-    fat = adj.select(
-        F.col("src").alias("u"),
-        F.col("nbrs").alias("nbrs_u"),
-        F.explode("nbrs").alias("v"),
-    )
-    adj_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nbrs_v"))
+    # r14 lazy pins, with the adj pin: 3.99 -> 3.44 s median at sf0.1;
+    # adj feeds both sides of the closing-set join.
+    und = _und_edges(spark).transform(pin, "reuse")
+    deg = _degrees(und).transform(pin, "reuse")
+    adj = _out_adjacency(und, deg).transform(pin, "reuse")
     tri = (
-        fat.join(adj_v.hint("SHUFFLE_HASH"), "v")
-        .select(F.size(F.array_intersect("nbrs_u", "nbrs_v")).alias("k"))
+        _closing_sets(adj)
+        .select(F.size("ws").alias("k"))
         # coalesce: the oracle counts triangles with count(*) (0 on an
         # empty graph) while sum() over empty is NULL — align (r9)
         .agg(F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_tri"))
@@ -1366,9 +1282,7 @@ _MODULARITY = (
 @query(
     "graph_modularity",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    und AS (SELECT DISTINCT p1, p2 FROM pairs),
+    WITH {_SQL_GRAPH},
     comm AS (SELECT p_partkey AS node, p_brand AS c FROM part),
     edges AS (
       SELECT c1.c AS ca, c2.c AS cb
@@ -1411,7 +1325,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     part dimension (AQE broadcasts); degrees collapse onto the
     25-brand domain before squaring. B ≤ 4m² needs m < 10¹⁸ — decimal
     carriers hold it at any real scale."""
-    und = _basket_pairs(spark).select("p1", "p2").distinct()
+    und = _und_edges(spark)
     comm = spark.table("part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("c")
     )
@@ -1452,16 +1366,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_knn_degree_curve",
     oracle=f"""
-    WITH baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    und AS (SELECT DISTINCT p1, p2 FROM pairs),
-    dir AS (
-      SELECT p1 AS src, p2 AS dst FROM und
-      UNION ALL SELECT p2, p1 FROM und
-    ),
-    deg AS (
-      SELECT src AS node, CAST(count(*) AS BIGINT) AS d FROM dir GROUP BY src
-    ),
+    WITH {_SQL_GRAPH},
+    dir AS ({_sql_directed("und")}),
+    deg AS ({_sql_degrees("und")}),
     nbrsum AS (
       SELECT dir.src AS node,
              CAST(sum(dd.d) AS DECIMAL(38,0)) AS nbr_deg_sum
@@ -1500,23 +1407,11 @@ def graph_knn_degree_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup at runtime via ReusedExchange; both eager and lazy
     # localCheckpoint were measured SLOWER (2.2 → 3.4 s) because the
     # cache materialization costs more than the reuse saves.
-    und = _basket_pairs(spark).select("p1", "p2").distinct()
-    # Single scan per consumer (r14): the unionAll evaluated the
-    # unpinned und subtree twice per consumer (deg + nbrsum = 4 basket
-    # pipelines); the explode halves that to one per consumer.
-    direct = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("p1").alias("src"), F.col("p2").alias("dst")),
-                F.struct(F.col("p2").alias("src"), F.col("p1").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    deg = direct.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("long").alias("d")
-    )
+    und = _und_edges(spark)
+    deg = _degrees(und)
     nbrsum = (
-        direct.join(
+        _directed_edges(und)
+        .join(
             deg.select(F.col("node").alias("dst_n"), F.col("d").alias("dd")),
             F.col("dst") == F.col("dst_n"),
         )

@@ -115,17 +115,14 @@ _RCTE_MAX_HOPS = 4
 #: (baskets → pairs → support filter) is imported from graph.py so this
 #: twin can never drift from the graph the components/degree operators
 #: describe.
-from .graph import _SQL_BASKETS, _SQL_PAIRS, _SQL_SUPPORT_EDGES  # noqa: E402
+from .graph import (_MIN_COSUPPORT, _SQL_GRAPH, _directed_edges,  # noqa: E402
+                    _sql_directed, _sql_support_edges, _support_edges)
 
 _RCTE_SQL = f"""
     WITH RECURSIVE
-    baskets AS ({_SQL_BASKETS}),
-    pairs AS ({_SQL_PAIRS}),
-    supp AS ({_SQL_SUPPORT_EDGES}),
-    edges AS (
-      SELECT p1 AS src, p2 AS dst FROM supp
-      UNION ALL SELECT p2, p1 FROM supp
-    ),
+    {_SQL_GRAPH},
+    supp AS ({_sql_support_edges(_MIN_COSUPPORT)}),
+    edges AS ({_sql_directed("supp")}),
     seed AS (
       SELECT src AS s FROM edges
       GROUP BY src ORDER BY count(*) DESC, src LIMIT 1
@@ -191,20 +188,12 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth. For UNBOUNDED reachability at 100 TB the star-contraction
     operator (graph_connected_components, see sampling.star_components)
     remains the right tool; this entry pins the SQL surface itself."""
-    from .graph import _directed_edges, _support_edges
-
     # The walk relation is hop-bounded but grows with data (paths ×
     # frontier); the default 1e6-row recursion safety valve trips at the
     # 10× replica (measured). Size it to the data like any shuffle
     # bound — the hop guard, not this valve, is the semantic limit.
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(100_000_000))
-    pairs = _support_edges(spark)
-    # Both directions in ONE evaluation of the support aggregate (r15,
-    # VERDICT r14 ask #2): the union-of-two-selects evaluated the
-    # unpinned _support_edges subtree once per branch — the same shape
-    # 56fe310 removed at ten graph.py sites; the explode derives the
-    # identical directed multiset map-side from a single pass.
-    edges = _directed_edges(pairs).transform(pin, "reuse")
+    edges = _directed_edges(_support_edges(spark, _MIN_COSUPPORT)).transform(pin, "reuse")
     edges.createOrReplaceTempView("rcte_edges")
     return spark.sql(_RCTE_WALK_SQL)
 

@@ -1,5 +1,6 @@
-"""The day-domain base relations of shelf_spark/queries/stats.py: each Spark
-builder equals its DuckDB twin row for row on a small hostile corpus."""
+"""The day-domain base relations of shelf_spark/queries/stats.py and the
+week-domain retention relation of analytics.py: each Spark builder equals
+its DuckDB twin row for row on a small hostile corpus."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from shelf_spark.queries import stats
+from shelf_spark.queries import analytics, stats
 from shelf_spark.queries.num import sane_ts, sql_sane_ts
 from shelf_spark.session import tune
 
@@ -184,3 +185,14 @@ def test_daily_views_purchases_twins(engines):
     assert (x[date(2024, 1, 3)], yi[date(2024, 1, 3)]) == (1, 0)
     assert yi[date(2024, 1, 6)] == 150
     assert (x[date(9999, 12, 31)], yi[date(9999, 12, 31)]) == (1, 300)
+
+
+def test_retention_twins(engines):
+    session, con = engines
+    got = _spark_rows(analytics._retention(session))
+    assert got == _duck_rows(con, analytics._SQL_RETENTION)
+    rows = [dict(r) for r in got]
+    # every user is active in their cohort week; the 9999 sentinel is
+    # hundreds of thousands of weeks later
+    assert {r["user_id"] for r in rows if r["weeks_later"] == 0} == {0, 1, 2}
+    assert max(r["weeks_later"] for r in rows) > 400_000

@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
 import tempfile
 import time
@@ -36,37 +37,24 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 from shelf_spark.queries import QUERIES  # noqa: E402
-from shelf_spark.session import RUNTIME_CONFS, tune  # noqa: E402
+from shelf_spark.session import get_spark  # noqa: E402
 
 
 def _spark_with_eventlog(event_dir: str):
-    """get_spark()'s builder plus event logging (a static conf, so it
-    cannot be applied by tune() to an existing session)."""
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("shelf-spark-metrics-probe")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{event_dir}")
-        # Spark 4 defaults to rolling zstd event logs; a single plain
-        # JSON-lines file keeps the parser dependency-free.
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.eventLog.compress", "false")
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/shelf-spark-warehouse"),
-        )
+    """get_spark() with event logging. The event-log confs are static, so
+    they go to the JVM through PYSPARK_SUBMIT_ARGS before it starts.
+    Spark 4 defaults to rolling zstd event logs; a single plain
+    JSON-lines file keeps the parser dependency-free."""
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{event_dir}",
+        "spark.eventLog.rolling.enabled": "false",
+        "spark.eventLog.compress": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [*(f"--conf {shlex.quote(f'{k}={v}')}" for k, v in confs.items()), "pyspark-shell"]
     )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return tune(spark)
+    return get_spark("shelf-spark-metrics-probe")
 
 
 def _noop(df) -> None:
