@@ -83,6 +83,10 @@ TABLE_SCHEMA: dict[str, Any] = {
             "properties": {
                 "started_at": {"type": "string"},
                 "duration_seconds": {"type": "number"},
+                "write_seconds": {"type": "number"},
+                "validate_seconds": {"type": "number"},
+                "checksum_seconds": {"type": "number"},
+                "fingerprint_seconds": {"type": "number"},
                 "spark_version": {"type": "string"},
             },
         },

@@ -21,7 +21,9 @@ script can serve every version of a dataset.
 Output layout note (SURVEY §7.3): Spark writes a *directory* of part
 files. The output checksum is therefore a **canonical logical checksum**
 — order-insensitive over rows + schema — not a byte hash; see
-:func:`logical_checksum`.
+:func:`logical_checksum`. Its per-row term (:func:`_row_hash`) is two
+native ``xxhash64`` values over the columns and their null flags, summed
+exactly; incremental steps fingerprint dep partitions with the same term.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from . import paths
 from .exceptions import StepDefinitionError
@@ -121,33 +124,55 @@ def simplify_dependency_names(deps: list[StepURI]) -> dict[str, StepURI]:
 # ---------------------------------------------------------------------------
 
 
-def _row_hash(cols: list[str]) -> Column:
-    """First 15 hex chars of sha2(to_json(struct(*cols)), 256) as an exact
-    decimal(38): the per-row term both content hashes below sum."""
-    return F.conv(
-        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256), 1, 15),
-        16,
-        10,
-    ).cast("decimal(38,0)")
+#: Leading argument of the second row-hash value, so that it hashes
+#: from a different seed than the first.
+_SALT = 0x5EED
+
+
+def _row_hash(schema: StructType) -> tuple[Column, Column]:
+    """The per-row term both content hashes below sum: two ``xxhash64``
+    values (128 bits) of the row's columns and their null flags.
+
+    ``xxhash64`` skips NULLs, so ``(NULL, 1.0)`` and ``(1.0, NULL)`` would
+    hash equal without the flags. Inside arrays, structs and maps it also
+    skips NULLs and hashes elements without their boundaries (and rejects
+    maps outright), so nested columns are hashed as their ``to_json`` text;
+    flat columns hash natively.
+
+    A Spark upgrade that changes ``xxhash64`` changes every fingerprint:
+    that costs one full rebuild, never a wrong skip."""
+    cols = [
+        F.to_json(F.col(f.name))
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        else F.col(f.name)
+        for f in schema.fields
+    ]
+    nulls = F.array(*[F.col(f.name).isNull() for f in schema.fields])
+    return F.xxhash64(nulls, *cols), F.xxhash64(F.lit(_SALT), nulls, *cols)
+
+
+def _hash_sums(schema: StructType) -> list[Column]:
+    """``s0``, ``s1``: each row-hash value summed in an exact decimal(38)
+    (|term| < 2^63, so 10^19 rows fit); ``n``: the row count."""
+    return [
+        F.coalesce(F.sum(h.cast("decimal(38,0)")), F.lit(0)).alias(f"s{i}")
+        for i, h in enumerate(_row_hash(schema))
+    ] + [F.count("*").alias("n")]
 
 
 def logical_checksum(df: DataFrame) -> str:
     """Order-insensitive content hash of a DataFrame + its schema.
 
-    sum over rows of the first 15 hex chars of
-    sha2(to_json(struct(*cols)), 256) (as a 60-bit int, exact in
-    decimal(38)), combined with the schema DDL and row count. Partition
-    order and row order cannot affect it, so Spark's nondeterministic
-    part-file layout doesn't break the Merkle dirty-check. One extra
-    aggregate job per build — distributed, no driver materialization.
+    The schema DDL, the row count and the two exact sums of
+    :func:`_row_hash` over all rows. Partition order and row order cannot
+    affect it, so Spark's nondeterministic part-file layout doesn't break
+    the Merkle dirty-check. One extra aggregate job per build —
+    distributed, no driver materialization.
     """
     import hashlib
 
-    agg = df.agg(
-        F.coalesce(F.sum(_row_hash(df.columns)), F.lit(0)).alias("s"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    basis = f"{df.schema.simpleString()}|{agg['n']}|{agg['s']}"
+    agg = df.agg(*_hash_sums(df.schema)).collect()[0]
+    basis = f"{df.schema.simpleString()}|{agg['n']}|{agg['s0']}|{agg['s1']}"
     return hashlib.sha256(basis.encode()).hexdigest()
 
 
@@ -185,8 +210,9 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
 
     started = dt.datetime.now(dt.timezone.utc)
     t0 = time.monotonic()
+    fingerprint_s = None
     if script.suffix == ".sql":
-        partition_state = _exec_sql_step(spark, uri, script, deps, out)
+        partition_state, fingerprint_s = _exec_sql_step(spark, uri, script, deps, out)
     else:
         _exec_python_step(script, deps, out)
         partition_state = None
@@ -194,11 +220,7 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
         raise StepDefinitionError(f"step produced no output at {out}")
 
     df = spark.read.parquet(str(out))
-    runtime = {
-        "started_at": started.isoformat(),
-        "duration_seconds": round(time.monotonic() - t0, 2),
-        "spark_version": spark.version,
-    }
+    t1 = time.monotonic()
     meta = TableMetadata.for_step(uri, deps)
     result = meta.validate_df(df)
     if not result.ok:
@@ -211,9 +233,22 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
         raise StepDefinitionError(
             f"validation failed for {uri}:\n" + "\n".join(result.errors)
         )
-    meta.write_sidecar(
-        uri, deps, df, logical_checksum(df), runtime, partition_state=partition_state
-    )
+    t2 = time.monotonic()
+    checksum = logical_checksum(df)
+    t3 = time.monotonic()
+    # duration = write + fingerprint: the step itself and the re-read of
+    # its output; validation and the checksum follow it
+    runtime = {
+        "started_at": started.isoformat(),
+        "duration_seconds": round(t1 - t0, 3),
+        "write_seconds": round(t1 - t0 - (fingerprint_s or 0.0), 3),
+        "validate_seconds": round(t2 - t1, 3),
+        "checksum_seconds": round(t3 - t2, 3),
+        "spark_version": spark.version,
+    }
+    if fingerprint_s is not None:
+        runtime["fingerprint_seconds"] = round(fingerprint_s, 3)
+    meta.write_sidecar(uri, deps, df, checksum, runtime, partition_state=partition_state)
 
 
 def catalog_table_name(uri: StepURI) -> str:
@@ -234,21 +269,26 @@ def _dep_view_df(spark: SparkSession, dep: StepURI) -> DataFrame:
 
 
 def _partition_fingerprints(df: DataFrame, part_col: str) -> dict[str, str]:
-    """Order-insensitive content fingerprint per partition value: the same
-    row-hash-sum construction as :func:`logical_checksum`, grouped by the
-    partition column — one distributed aggregate over the dep, no driver
-    materialization beyond |partitions| rows."""
+    """Order-insensitive content fingerprint per partition value,
+    ``"s0|s1|n"``: the same exact row-hash sums as
+    :func:`logical_checksum`, grouped by the partition column — one
+    distributed aggregate over the dep, no driver materialization beyond
+    |partitions| rows. A sidecar recorded by the earlier SHA-256 hash holds
+    ``"sum|n"`` entries, which never equal these: its first run rebuilds
+    every partition once."""
     rows = (
         df.groupBy(F.col(part_col).cast("string").alias("_p"))
-        .agg(F.sum(_row_hash(df.columns)).alias("s"), F.count("*").alias("n"))
+        .agg(*_hash_sums(df.schema))
         .collect()
     )
-    return {r["_p"]: f"{r['s']}|{r['n']}" for r in rows}
+    return {r["_p"]: f"{r['s0']}|{r['s1']}|{r['n']}" for r in rows}
 
 
 def _exec_sql_step(
     spark: SparkSession, uri: StepURI, script: Path, deps: list[StepURI], out: Path
-) -> dict[str, str] | None:
+) -> tuple[dict[str, str] | None, float | None]:
+    """Run a SQL step; returns its partition state and the seconds spent
+    fingerprinting deps (both None unless the step is incremental)."""
     # Temp views are session-global, and the DAG executor builds steps
     # concurrently on one session: a view named only after the dep's
     # simplified name (dep_data) would be overwritten by a concurrent build
@@ -272,6 +312,7 @@ def _exec_sql_step(
     template_vars: dict[str, str] = {}
     views: list[str] = []
     partition_state: dict[str, str] | None = None
+    fingerprint_s: float | None = None
     try:
         dep_dfs = {name: _dep_view_df(spark, dep) for name, dep in names.items()}
 
@@ -286,6 +327,7 @@ def _exec_sql_step(
             # 100 TB table with one new day rebuilds one day.
             part_col = incremental["partition_by"]
             partition_state = {}
+            t0 = time.monotonic()
             for ddf in dep_dfs.values():
                 if part_col in ddf.columns:
                     for k, v in _partition_fingerprints(ddf, part_col).items():
@@ -294,6 +336,7 @@ def _exec_sql_step(
                             if k in partition_state
                             else v
                         )
+            fingerprint_s = time.monotonic() - t0
             prior: dict[str, str] = {}
             meta_path = paths.table_metadata_path(uri.path)
             if out.exists() and meta_path.exists():
@@ -308,7 +351,7 @@ def _exec_sql_step(
                 for k in removed:  # partitions gone from every dep
                     shutil.rmtree(out / f"{part_col}={k}", ignore_errors=True)
                 if not changed:
-                    return partition_state  # nothing to rebuild
+                    return partition_state, fingerprint_s  # nothing to rebuild
                 for name, ddf in dep_dfs.items():
                     if part_col in ddf.columns:
                         dep_dfs[name] = ddf.filter(
@@ -352,7 +395,7 @@ def _exec_sql_step(
             )
         else:
             df.write.mode("overwrite").parquet(str(out))
-        return partition_state
+        return partition_state, fingerprint_s
     finally:
         for view in views:
             spark.catalog.dropTempView(view)

@@ -5,6 +5,7 @@ a real — here local-FS — object store)."""
 from __future__ import annotations
 
 import hashlib
+import io
 import os
 from pathlib import Path
 
@@ -637,6 +638,11 @@ def test_incremental_partition_rebuild(workspace, spark):
     assert rows == {(1, 30), (2, 5)}
     sidecar = load_yaml(paths.table_metadata_path("ns/daily/2024-01-02"))
     assert set(sidecar["partition_state"]) == {"1", "2"}
+    # the sidecar splits the build's time into its parts
+    execution = sidecar["execution"]
+    for key in ("duration_seconds", "write_seconds", "validate_seconds",
+                "checksum_seconds", "fingerprint_seconds"):
+        assert execution[key] >= 0, key
 
     def part_files(day):
         d = out / f"day={day}"
@@ -709,3 +715,162 @@ def test_sql_step_consumes_round2_dialect(workspace, spark):
     rows = {(r.grp, r.name) for r in df.collect()}
     assert rows == {(0, "n8"), (0, "n6"), (1, "n9"), (1, "n7")}
     assert {r.all_names for r in df.collect()} == {"n6,n8", "n7,n9"}
+
+
+# -- content hashes and listing ----------------------------------------------
+
+
+def _jobs_submitted(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` submits, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"framework-jobs-{uuid.uuid4().hex}"  # the tracker keeps old groups
+    sc.setJobGroup(group, "jobs submitted by one call")
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _daily_totals_step(workspace, days: int) -> str:
+    """A snapshot ``ns/src`` of ``days`` days (two rows each) and an
+    incremental SQL step ``ns/daily`` of per-day totals, partitioned by
+    ``day``; returns the step's path."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.snapshots import Snapshot
+
+    Shelf.init()
+    raw = workspace / "src.csv"
+    raw.write_text("day,v\n" + "".join(f"{d},{d}\n{d},{10 * d}\n" for d in range(days)))
+    Snapshot.create(raw, "ns/src/2024-01-01")
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse("snapshot://ns/src/2024-01-01"))
+    shelf.new_table("ns/daily/2024-01-02", ["snapshot://ns/src/latest"])
+    shelf.save()
+    script = paths.TABLE_SCRIPTS_DIR / "ns" / "daily.sql"
+    script.parent.mkdir(parents=True, exist_ok=True)
+    script.write_text("SELECT day, CAST(sum(v) AS BIGINT) AS total FROM {src} GROUP BY day")
+    script.with_suffix(".meta.yaml").write_text(
+        "version: 1\nincremental:\n  partition_by: day\n"
+    )
+    return "ns/daily/2024-01-02"
+
+
+def test_many_partition_table_reads_without_listing_job(workspace, spark):
+    """A table with more partitions than Spark's parallel-discovery
+    threshold (32) is listed on the driver: reading it submits only the
+    schema job, and a ``db`` query over it no listing job either."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.query import execute_query
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+
+    step = _daily_totals_step(workspace, 40)
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    out = str(paths.table_data_path(step).resolve())
+    assert len(list(Path(out).glob("day=*"))) == 40
+
+    assert len(_jobs_submitted(spark, lambda: spark.read.parquet(out))) <= 1
+    # the same query over an already-read view, then through `db`, which
+    # reads the table again: the difference is that read's jobs
+    spark.read.parquet(out).createOrReplaceTempView("daily_direct")
+    sql = "SELECT count(*) AS n, sum(total) AS t FROM {}"
+    direct = _jobs_submitted(spark, lambda: spark.sql(sql.format("daily_direct")).toPandas())
+    via_db = _jobs_submitted(
+        spark, lambda: execute_query(spark, Shelf(), sql.format("daily"), out=io.StringIO())
+    )
+    assert len(via_db) - len(direct) <= 1
+
+
+def test_logical_checksum_sees_a_value_move_between_null_columns(spark):
+    """``(NULL, 1.0)`` and ``(1.0, NULL)`` differ: the row hash covers the
+    null flags, which ``xxhash64`` alone skips, and hashes nested columns
+    as JSON. Row order does not count."""
+    from shelf_spark.framework.tables import logical_checksum
+
+    ddl = "a double, b double, k int"
+    left = spark.createDataFrame([(None, 1.0, 1), (2.0, 3.0, 2)], ddl)
+    right = spark.createDataFrame([(1.0, None, 1), (2.0, 3.0, 2)], ddl)
+    shuffled = spark.createDataFrame([(2.0, 3.0, 2), (None, 1.0, 1)], ddl)
+    assert logical_checksum(left) != logical_checksum(right)
+    assert logical_checksum(left) == logical_checksum(shuffled)
+    # inside arrays xxhash64 skips NULLs as well
+    nested = [spark.sql(f"SELECT array({a}) AS xs") for a in ("NULL, 1", "1, NULL")]
+    assert logical_checksum(nested[0]) != logical_checksum(nested[1])
+
+
+def test_map_column_step_builds_and_checksums(workspace, spark):
+    """A SQL step with a ``map<string,int>`` output column builds (the
+    native hash rejects maps, so they hash as JSON), and changing one map
+    value changes the table checksum."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.utils import load_yaml
+
+    Shelf.init()
+    shelf = Shelf()
+    shelf.new_table("ns/maps/2024-01-01", [])
+    shelf.save()
+    script = paths.TABLE_SCRIPTS_DIR / "ns" / "maps.sql"
+    script.parent.mkdir(parents=True, exist_ok=True)
+    sidecar = paths.table_metadata_path("ns/maps/2024-01-01")
+    checksums = []
+    for b in (2, 3):
+        script.write_text(f"SELECT 1 AS k, map('a', 1, 'b', {b}) AS m")
+        execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+        assert load_yaml(sidecar)["schema"]["m"] == "map<string,int>"
+        checksums.append(load_yaml(sidecar)["checksum"])
+    assert checksums[0] != checksums[1]
+
+
+def test_partition_fingerprints_follow_one_row_change(spark):
+    """Changing one row of one partition changes that partition's
+    fingerprint and no other."""
+    from shelf_spark.framework.tables import _partition_fingerprints
+
+    rows = [(d, i, float(d * i)) for d in range(4) for i in range(5)]
+    ddl = "day int, i int, x double"
+    before = _partition_fingerprints(spark.createDataFrame(rows, ddl), "day")
+    rows[7] = (1, 2, -1.0)  # day 1
+    after = _partition_fingerprints(spark.createDataFrame(rows, ddl), "day")
+    assert set(before) == set(after) == {"0", "1", "2", "3"}
+    assert {k for k in before if before[k] != after[k]} == {"1"}
+
+
+def test_old_format_partition_state_rebuilds_every_partition(workspace, spark):
+    """A sidecar recorded by the earlier SHA-256 hash (``"<sum>|<n>"``
+    entries) never matches the current fingerprints: the next run rewrites
+    every partition instead of skipping any, and records the new shape."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.snapshots import Snapshot
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.utils import load_yaml, save_yaml
+
+    step = _daily_totals_step(workspace, 3)
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    meta = paths.table_metadata_path(step)
+    doc = load_yaml(meta)
+    doc["partition_state"] = {k: f"{12345 + int(k)}|2" for k in doc["partition_state"]}
+    save_yaml(doc, meta)
+    out = paths.table_data_path(step)
+
+    def files():
+        return {f.relative_to(out): f.stat().st_mtime_ns for f in out.glob("day=*/*.parquet")}
+
+    before = files()
+    # a new snapshot version with the same rows dirties the step
+    import time as _t
+    _t.sleep(0.05)
+    Snapshot.create(workspace / "src.csv", "ns/src/2024-02-01")
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse("snapshot://ns/src/2024-02-01"))
+    shelf.save()
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    after = files()
+    assert len({p.parent for p in after}) == 3
+    assert not set(before.items()) & set(after.items())
+    state = load_yaml(meta)["partition_state"]
+    assert set(state) == {"0", "1", "2"}
+    assert all(v.count("|") == 2 for v in state.values())

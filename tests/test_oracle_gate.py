@@ -176,3 +176,32 @@ def test_worker_merge_names_dead_shard(monkeypatch, capsys):
     assert "[w1]   MemoryError" in out
     assert "selected 2 queries (2 with co-sharded twins), merged 1, SHORT by 1" in out
     assert "1 ok, 0 rows-only, 0 FAIL of 1 (2 workers)" in out
+
+
+def test_gate_processes_spill_to_own_duckdb_dirs():
+    """Two gate processes running at once get DuckDB connections with
+    different ``temp_directory`` values, each removed when its process
+    exits (a shared ``.tmp/`` let one ``--workers`` shard delete another's
+    spill file mid-query)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from tools.check_correctness import duckdb_connect\n"
+        "con = duckdb_connect()\n"
+        "print(con.execute(\"SELECT current_setting('temp_directory')\").fetchone()[0])\n"
+    )
+    procs = [
+        subprocess.Popen([sys.executable, "-c", code], cwd=root,
+                         stdout=subprocess.PIPE, text=True)
+        for _ in range(2)
+    ]
+    dirs = []
+    for p in procs:
+        out, _ = p.communicate(timeout=120)
+        assert p.returncode == 0
+        dirs.append(out.strip())
+    assert all(dirs) and dirs[0] != dirs[1]
+    assert not any(os.path.exists(d) for d in dirs)

@@ -123,6 +123,22 @@ def _shard(names: list[str], i: int, n: int) -> list[str]:
 _STDERR_TAIL = 15
 
 
+def duckdb_connect() -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB connection that spills to a temp directory of
+    its own, removed at exit. DuckDB's default is ``.tmp/`` under the
+    working directory, which ``--workers`` processes share, so one worker
+    could delete another's spill file mid-query."""
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="check-correctness-duckdb-")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    con = duckdb.connect(config={"temp_directory": tmp})
+    atexit.register(con.close)  # runs first: atexit is last-in, first-out
+    return con
+
+
 def _run_workers(args) -> int:
     """Fan the gate out over N subprocesses and merge their summaries.
 
@@ -241,7 +257,7 @@ def main() -> int:
         names = _shard(names, *(int(x) for x in args.shard.split("/")))
 
     spark = get_spark("check-correctness")
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(args.sf, t)}')"
