@@ -136,12 +136,7 @@ def cmd_list(args) -> int:
         steps = [s for s in steps if rx.search(str(s))]
     for s in steps:
         if args.paths:
-            p = (
-                paths.snapshot_metadata_path(s.path)
-                if s.scheme == "snapshot"
-                else paths.table_metadata_path(s.path)
-            )
-            print(p)
+            print(paths.metadata_path(s))
         else:
             print(s)
     return 0

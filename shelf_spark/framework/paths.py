@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+from .types import StepURI
+
 CONFIG_FILE = Path("shelf.yaml")
 DATA_DIR = Path("data")
 SNAPSHOTS_DIR = DATA_DIR / "snapshots"
@@ -33,3 +35,10 @@ def table_data_path(path: str) -> Path:
 
 def table_metadata_path(path: str) -> Path:
     return TABLES_DIR / (path + ".meta.yaml")
+
+
+def metadata_path(uri: StepURI) -> Path:
+    """The sidecar of a snapshot or table step."""
+    if uri.scheme == "snapshot":
+        return snapshot_metadata_path(uri.path)
+    return table_metadata_path(uri.path)

@@ -10,6 +10,9 @@ Every built table is exposed as a Spark temp view:
 
 Single-token query sugar: a query with no whitespace is shorthand for
 ``SELECT * FROM <token>`` (reference __init__.py:389-391).
+
+Views and export read each table through :func:`tables.read_table`, the
+one reader, with the schema recorded at build.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import paths
 from .core import Shelf
+from .tables import read_table
 from .types import StepURI
 
 
@@ -77,9 +81,8 @@ def register_shelf_views(
     Returns {view_name: table_path}."""
     tables = built_tables(shelf)
     # one read per table; alias views share the full-name view's DataFrame
-    # (resolve(): the Spark JVM's cwd does not follow Python os.chdir)
     reads = {
-        path_to_snake(t): (t, spark.read.parquet(str(paths.table_data_path(t).resolve())))
+        path_to_snake(t): (t, read_table(spark, StepURI.parse(f"table://{t}")))
         for t in tables
     }
     named = dict(reads) if names in ("full", "both") else {}
@@ -120,25 +123,22 @@ def execute_query(
 def export_tables(
     spark: SparkSession, shelf: Shelf, dest: Path, short_names: bool = False
 ) -> list[str]:
-    """Export every built table into a DuckDB database file — byte-level
-    parity with the reference's `export-duckdb` (reference
-    __init__.py:285-312); Spark-native deployments would `saveAsTable`
-    into a warehouse instead."""
+    """Export every built table into a DuckDB database file (reference
+    `export-duckdb`, __init__.py:285-312). Each table reaches DuckDB as
+    ``read_table(...).toArrow()``, with its recorded types: the driver
+    holds one whole table at a time, where reading the files would stream."""
     import duckdb
 
-    con = duckdb.connect(str(dest))
     exported = []
     tables = built_tables(shelf)
     aliases = {full: alias for alias, full in table_aliases(tables).items()}
-    for t in tables:
-        name = path_to_snake(t)
-        if short_names and name in aliases:
-            name = aliases[name]
-        data = paths.table_data_path(t)
-        src = str(data / "*.parquet") if data.is_dir() else str(data)
-        con.execute(
-            f'CREATE OR REPLACE TABLE "{name}" AS SELECT * FROM read_parquet(?)', [src]
-        )
-        exported.append(name)
-    con.close()
+    with duckdb.connect(str(dest)) as con:
+        for t in tables:
+            name = path_to_snake(t)
+            if short_names and name in aliases:
+                name = aliases[name]
+            con.register("_shelf_export", read_table(spark, StepURI.parse(f"table://{t}")).toArrow())
+            con.execute(f'CREATE OR REPLACE TABLE "{name}" AS SELECT * FROM _shelf_export')
+            con.unregister("_shelf_export")
+            exported.append(name)
     return exported

@@ -68,7 +68,7 @@ SNAPSHOT_SCHEMA: dict[str, Any] = {
 
 TABLE_SCHEMA: dict[str, Any] = {
     "type": "object",
-    "required": ["uri", "version", "checksum", "input_manifest"],
+    "required": ["uri", "version", "checksum", "input_manifest", "schema_json"],
     "properties": {
         "uri": {"type": "string", "pattern": "^table://"},
         "version": {"const": 1},
@@ -78,6 +78,7 @@ TABLE_SCHEMA: dict[str, Any] = {
             "additionalProperties": {"type": "string", "pattern": _SHA},
         },
         "schema": {"type": "object", "additionalProperties": {"type": "string"}},
+        "schema_json": {"type": "string"},
         "execution": {
             "type": "object",
             "properties": {

@@ -83,11 +83,7 @@ def generate_input_manifest(uri: StepURI, deps: list[StepURI]) -> Manifest:
         if cfg.exists():
             manifest[str(cfg)] = checksum_file(cfg)
     for dep in deps:
-        sidecar = (
-            paths.snapshot_metadata_path(dep.path)
-            if dep.scheme == "snapshot"
-            else paths.table_metadata_path(dep.path)
-        )
+        sidecar = paths.metadata_path(dep)
         manifest[str(sidecar)] = checksum_file(sidecar)
     return manifest
 
@@ -130,11 +126,7 @@ class TableMetadata:
             source = deps[0]
         if source is None:
             return {}
-        sidecar = (
-            paths.snapshot_metadata_path(source.path)
-            if source.scheme == "snapshot"
-            else paths.table_metadata_path(source.path)
-        )
+        sidecar = paths.metadata_path(source)
         if not sidecar.exists():
             return {}
         doc = load_yaml(sidecar) or {}
@@ -208,6 +200,9 @@ class TableMetadata:
             "checksum": checksum,
             "input_manifest": dict(sorted(generate_input_manifest(uri, deps).items())),
             "schema": {f.name: f.dataType.simpleString() for f in df.schema.fields},
+            # exact, for read_table: simpleString does not parse back (a
+            # nested field named ``a b`` or ``c:d``)
+            "schema_json": df.schema.json(),
             "execution": runtime,
         }
         if partition_state is not None:

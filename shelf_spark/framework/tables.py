@@ -24,11 +24,16 @@ files. The output checksum is therefore a **canonical logical checksum**
 :func:`logical_checksum`. Its per-row term (:func:`_row_hash`) is two
 native ``xxhash64`` values over the columns and their null flags, summed
 exactly; incremental steps fingerprint dep partitions with the same term.
+
+Every later read of a built table goes through :func:`read_table`, with
+the schema decided once at build and recorded exactly in the sidecar
+(``schema_json``): no read re-infers partition types or reads a footer.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import subprocess
 import sys
 import time
@@ -42,7 +47,7 @@ from . import paths
 from .exceptions import StepDefinitionError
 from .snapshots import Snapshot
 from .types import StepURI
-from .utils import checksum_file, load_yaml
+from .utils import load_yaml
 from .table_metadata import TableMetadata, generate_input_manifest, load_config
 
 # ---------------------------------------------------------------------------
@@ -67,11 +72,6 @@ def find_script(uri: StepURI) -> Path:
             if cand.exists():
                 return cand
     raise StepDefinitionError(f"no build script found for {uri}")
-
-
-def config_path(uri: StepURI) -> Path:
-    """Optional per-dataset config sidecar next to the script."""
-    return find_script(uri).with_suffix(".meta.yaml")
 
 
 # ---------------------------------------------------------------------------
@@ -189,11 +189,12 @@ def is_completed(uri: StepURI, deps: list[StepURI]) -> bool:
     if not out.exists() or not meta.exists():
         return False
     try:
-        recorded = load_yaml(meta).get("input_manifest", {})
+        doc = load_yaml(meta) or {}
         current = generate_input_manifest(uri, deps)
     except Exception:
         return False
-    return recorded == current
+    # a sidecar without the exact schema cannot serve reads: rebuild once
+    return "schema_json" in doc and doc.get("input_manifest", {}) == current
 
 
 # ---------------------------------------------------------------------------
@@ -210,16 +211,17 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
 
     started = dt.datetime.now(dt.timezone.utc)
     t0 = time.monotonic()
-    fingerprint_s = None
     if script.suffix == ".sql":
-        partition_state, fingerprint_s = _exec_sql_step(spark, uri, script, deps, out)
+        schema, partition_state, fingerprint_s = _exec_sql_step(spark, uri, script, deps, out)
     else:
         _exec_python_step(script, deps, out)
-        partition_state = None
+        schema, partition_state, fingerprint_s = None, None, None
     if not out.exists():
         raise StepDefinitionError(f"step produced no output at {out}")
+    if schema is None:  # a script's output has no plan: its one inference
+        schema = _read_any(spark, out).schema
 
-    df = spark.read.parquet(str(out))
+    df = read_table(spark, uri, schema)
     t1 = time.monotonic()
     meta = TableMetadata.for_step(uri, deps)
     result = meta.validate_df(df)
@@ -257,15 +259,22 @@ def catalog_table_name(uri: StepURI) -> str:
     return "shelf_" + uri.path.replace("/", "_").replace("-", "_").replace(".", "_")
 
 
-def _dep_view_df(spark: SparkSession, dep: StepURI) -> DataFrame:
-    """Prefer the catalog entry for table deps: when the dep opted into
-    bucketing, reading it by name keeps the bucket layout visible to the
-    planner (a path read would silently discard it and re-shuffle)."""
-    if dep.scheme == "table":
-        cname = catalog_table_name(dep)
-        if spark.catalog.tableExists(cname):
-            return spark.table(cname)
-    return _read_any(spark, dependency_data_path(dep))
+def read_table(spark: SparkSession, uri: StepURI, schema: StructType | None = None) -> DataFrame:
+    """The one reader of a built table: its catalog entry when this session
+    holds one (a bucketed step; a path read would drop the bucket layout),
+    else its files read with ``schema`` or the schema its sidecar records.
+    A given schema keeps partition types (``"007"`` stays a string) and
+    submits no footer job; there is no inference fallback."""
+    cname = catalog_table_name(uri)
+    if spark.catalog.tableExists(cname):
+        return spark.table(cname)
+    if schema is None:
+        doc = load_yaml(paths.table_metadata_path(uri.path)) or {}
+        if "schema_json" not in doc:
+            raise StepDefinitionError(f"{uri} has no recorded schema; run it again")
+        schema = StructType.fromJson(json.loads(doc["schema_json"]))
+    # resolve(): the Spark JVM's cwd does not follow Python's os.chdir
+    return spark.read.schema(schema).parquet(str(paths.table_data_path(uri.path).resolve()))
 
 
 def _partition_fingerprints(df: DataFrame, part_col: str) -> dict[str, str]:
@@ -286,9 +295,10 @@ def _partition_fingerprints(df: DataFrame, part_col: str) -> dict[str, str]:
 
 def _exec_sql_step(
     spark: SparkSession, uri: StepURI, script: Path, deps: list[StepURI], out: Path
-) -> tuple[dict[str, str] | None, float | None]:
-    """Run a SQL step; returns its partition state and the seconds spent
-    fingerprinting deps (both None unless the step is incremental)."""
+) -> tuple[StructType, dict[str, str] | None, float | None]:
+    """Run a SQL step; returns the schema a read of its output has (the
+    analysed SELECT's, partition column last), its partition state and the
+    seconds spent fingerprinting deps (both None unless incremental)."""
     # Temp views are session-global, and the DAG executor builds steps
     # concurrently on one session: a view named only after the dep's
     # simplified name (dep_data) would be overwritten by a concurrent build
@@ -314,9 +324,12 @@ def _exec_sql_step(
     partition_state: dict[str, str] | None = None
     fingerprint_s: float | None = None
     try:
-        dep_dfs = {name: _dep_view_df(spark, dep) for name, dep in names.items()}
+        dep_dfs = {
+            n: read_table(spark, d) if d.scheme == "table" else _read_any(spark, dependency_data_path(d))
+            for n, d in names.items()
+        }
 
-        changed: list[str] | None = None  # None → full build
+        changed: list[str] | None = None  # None → full build, [] → none
         if incremental:
             # Partition-wise incremental rebuild (the dbt-style contract:
             # when deps are filtered to a set of partitions, the SELECT must
@@ -350,10 +363,8 @@ def _exec_sql_step(
 
                 for k in removed:  # partitions gone from every dep
                     shutil.rmtree(out / f"{part_col}={k}", ignore_errors=True)
-                if not changed:
-                    return partition_state, fingerprint_s  # nothing to rebuild
                 for name, ddf in dep_dfs.items():
-                    if part_col in ddf.columns:
+                    if changed and part_col in ddf.columns:
                         dep_dfs[name] = ddf.filter(
                             F.col(part_col).cast("string").isin(changed)
                         )
@@ -365,6 +376,21 @@ def _exec_sql_step(
             template_vars[name] = view
         sql = script.read_text().format(**template_vars)
         df = spark.sql(sql)
+        schema = df.schema
+        if incremental:
+            if part_col not in df.columns:
+                raise StepDefinitionError(
+                    f"{uri}: incremental step output lacks partition column {part_col}"
+                )
+            # a partitioned read puts the partition column last
+            schema = StructType([f for f in schema.fields if f.name != part_col] + [schema[part_col]])
+            if changed == []:
+                # nothing to rebuild; the SELECT was only analysed, no job
+                return schema, partition_state, fingerprint_s
+        # a catalog entry left by an earlier bucketed build would shadow
+        # this output in read_table
+        cname = catalog_table_name(uri)
+        spark.sql(f"DROP TABLE IF EXISTS {cname}")
         if bucketing:
             # Bucketed output: hash-partitioned files + catalog metadata, so
             # downstream joins/aggs on the bucket keys plan with zero
@@ -376,15 +402,8 @@ def _exec_sql_step(
             )
             if bucketing.get("sort"):
                 writer = writer.sortBy(*bucketing["sort"])
-            cname = catalog_table_name(uri)
-            spark.sql(f"DROP TABLE IF EXISTS {cname}")
             writer.format("parquet").option("path", str(out)).saveAsTable(cname)
         elif incremental:
-            part_col = incremental["partition_by"]
-            if part_col not in df.columns:
-                raise StepDefinitionError(
-                    f"{uri}: incremental step output lacks partition column {part_col}"
-                )
             # per-write option — no session-wide conf mutation, so concurrent
             # non-incremental builds are unaffected
             (
@@ -395,7 +414,7 @@ def _exec_sql_step(
             )
         else:
             df.write.mode("overwrite").parquet(str(out))
-        return partition_state, fingerprint_s
+        return schema, partition_state, fingerprint_s
     finally:
         for view in views:
             spark.catalog.dropTempView(view)
@@ -409,9 +428,10 @@ def _exec_python_step(script: Path, deps: list[StepURI], out: Path) -> None:
     subprocess.run(argv, check=True)
 
 
-def _read_any(spark: SparkSession, path: Path) -> DataFrame:
-    """Read a dependency: parquet tables, or csv/json/text snapshots."""
-    path = path.resolve()  # Spark JVM cwd does not follow Python os.chdir
+def _read_any(spark: SparkSession, path: str | Path) -> DataFrame:
+    """Snapshot deps and a Python step's output: parquet, orc, csv, json,
+    else text, with schema inference (also ``sources.read_any``)."""
+    path = Path(path).resolve()  # Spark JVM cwd does not follow Python os.chdir
     suffix = path.suffix.lower()
     if suffix == ".orc":
         return spark.read.orc(str(path))

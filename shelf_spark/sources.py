@@ -20,15 +20,15 @@ This module provides the Spark-native lake layout:
   directory layout; cap ``maxPartitionBytes`` so one task holds a
   bounded number of blobs.
 - **Format readers** (`read_any`): csv/json/text/parquet with schema
-  inference for snapshot-style inputs (same dispatch as
-  ``framework/tables.py:_read_any``, exposed for query-layer use).
+  inference for snapshot-style inputs — the framework's snapshot reader,
+  ``framework/tables.py:_read_any``, exposed for query-layer use.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
+
+from .framework.tables import _read_any as read_any  # noqa: F401  (re-export)
 
 
 def write_partitioned(
@@ -65,21 +65,6 @@ def read_binary_dir(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def read_any(spark: SparkSession, path: str | Path) -> DataFrame:
-    """Format-dispatched read for snapshot-style inputs."""
-    p = Path(path).resolve()
-    suffix = p.suffix.lower()
-    if suffix == ".orc":
-        return spark.read.orc(str(p))
-    if suffix in {".parquet", ""} or p.is_dir():
-        return spark.read.parquet(str(p))
-    if suffix == ".csv":
-        return spark.read.csv(str(p), header=True, inferSchema=True)
-    if suffix in {".json", ".jsonl", ".ndjson"}:
-        return spark.read.json(str(p))
-    return spark.read.text(str(p))
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import io
+import json
 import os
 from pathlib import Path
 
@@ -79,6 +80,38 @@ def test_path_to_snake_and_aliases():
     aliases = table_aliases(["a/prices/2024-07-26", "b/prices/2024-07-26"])
     assert aliases["a_prices"] == "a_prices_20240726"
     assert aliases["b_prices"] == "b_prices_20240726"
+
+
+def test_built_tables_have_one_reader():
+    """In the framework, Spark and DuckDB reads of table files happen only
+    in ``tables.read_table`` and ``tables._read_any``; ``sources.read_any``
+    is that same body, not a copy of its format dispatch."""
+    import ast
+
+    from shelf_spark import sources
+    from shelf_spark.framework import tables
+
+    patterns = (".read.parquet(", ".read.schema(", "read_parquet(")
+    offenders = []
+    for f in sorted(Path(tables.__file__).parent.glob("*.py")):
+        text = f.read_text()
+        allowed = {
+            i
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, ast.FunctionDef)
+            and f.name == "tables.py"
+            and node.name in ("read_table", "_read_any")
+            for i in range(node.lineno, node.end_lineno + 1)
+        }
+        offenders += [
+            f"{f.name}:{i}"
+            for i, line in enumerate(text.splitlines(), 1)
+            if i not in allowed and any(p in line for p in patterns)
+        ]
+    assert offenders == []
+    assert sources.read_any is tables._read_any
+    dispatch = (".read.csv(", ".read.json(", ".read.orc(", ".read.text(")
+    assert not any(p in Path(sources.__file__).read_text() for p in dispatch)
 
 
 def test_simplify_dependency_names():
@@ -402,6 +435,7 @@ def test_bucketed_table_steps_join_without_exchange(workspace, spark):
     bucketed identically then join downstream with ZERO exchanges (the
     co-located-join contract from shelf_spark/optimize.py, exercised
     through the framework build path end-to-end)."""
+    from shelf_spark.framework.query import execute_query
     from shelf_spark.framework.snapshots import Snapshot
     from shelf_spark.framework.steps import execute_dag, prune_completed
     from shelf_spark.framework.tables import catalog_table_name
@@ -454,6 +488,16 @@ def test_bucketed_table_steps_join_without_exchange(workspace, spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         assert is_shuffle_free_join(spark, fact_name, dim_name, ["k"])
+        # a `db` query reads both through their catalog entries, so its
+        # join on the bucket key keeps the layout as well
+        db_join = execute_query(
+            spark,
+            Shelf(),
+            "SELECT f.k, f.v, d.name FROM fact_b f JOIN dim_b d ON f.k = d.k",
+            out=io.StringIO(),
+        )
+        assert db_join.count() == 100
+        assert "Exchange" not in db_join._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     spark.sql(f"DROP TABLE IF EXISTS {fact_name}")
@@ -759,29 +803,42 @@ def _daily_totals_step(workspace, days: int) -> str:
     return "ns/daily/2024-01-02"
 
 
-def test_many_partition_table_reads_without_listing_job(workspace, spark):
+def test_many_partition_table_reads_without_listing_job(workspace, spark, monkeypatch):
     """A table with more partitions than Spark's parallel-discovery
-    threshold (32) is listed on the driver: reading it submits only the
-    schema job, and a ``db`` query over it no listing job either."""
-    from shelf_spark.framework import paths
+    threshold (32) is listed on the driver, and reads of it carry the
+    schema recorded at build: the build's own re-read submits no job, and
+    a ``db`` query submits exactly the jobs of the same SQL over a view
+    read before."""
+    from shelf_spark.framework import paths, tables
     from shelf_spark.framework.query import execute_query
     from shelf_spark.framework.steps import execute_dag, prune_completed
 
     step = _daily_totals_step(workspace, 40)
+    read_table, reread_jobs = tables.read_table, []
+
+    def counted(spark_, uri, schema=None):
+        if uri.path != step:  # the step's deps
+            return read_table(spark_, uri, schema)
+        got = []
+        reread_jobs.append(_jobs_submitted(spark, lambda: got.append(read_table(spark_, uri, schema))))
+        return got[0]
+
+    monkeypatch.setattr(tables, "read_table", counted)
     execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert reread_jobs == [[]]
     out = str(paths.table_data_path(step).resolve())
     assert len(list(Path(out).glob("day=*"))) == 40
 
     assert len(_jobs_submitted(spark, lambda: spark.read.parquet(out))) <= 1
     # the same query over an already-read view, then through `db`, which
-    # reads the table again: the difference is that read's jobs
+    # reads the table again with its recorded schema
     spark.read.parquet(out).createOrReplaceTempView("daily_direct")
     sql = "SELECT count(*) AS n, sum(total) AS t FROM {}"
     direct = _jobs_submitted(spark, lambda: spark.sql(sql.format("daily_direct")).toPandas())
     via_db = _jobs_submitted(
         spark, lambda: execute_query(spark, Shelf(), sql.format("daily"), out=io.StringIO())
     )
-    assert len(via_db) - len(direct) <= 1
+    assert len(via_db) == len(direct)
 
 
 def test_logical_checksum_sees_a_value_move_between_null_columns(spark):
@@ -874,3 +931,134 @@ def test_old_format_partition_state_rebuilds_every_partition(workspace, spark):
     state = load_yaml(meta)["partition_state"]
     assert set(state) == {"0", "1", "2"}
     assert all(v.count("|") == 2 for v in state.values())
+
+
+# -- the schema recorded at build ----------------------------------------------
+
+
+def test_string_partition_column_keeps_its_type(workspace, spark):
+    """A string ``partition_by`` column whose values look like numbers
+    (``"007"``) stays a string in every read: the build's re-read, a
+    downstream step, ``db`` and ``export``. Spark's partition inference
+    alone would read it back as the int 7."""
+    import duckdb
+
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.query import execute_query, export_tables
+    from shelf_spark.framework.snapshots import Snapshot
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.utils import load_yaml
+
+    Shelf.init()
+    raw = workspace / "src.json"
+    raw.write_text(
+        "".join(json.dumps({"code": c, "v": v}) + "\n" for c, v in (("007", 1), ("007", 2), ("010", 5)))
+    )
+    Snapshot.create(raw, "ns/src/2024-01-01")
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse("snapshot://ns/src/2024-01-01"))
+    shelf.new_table("ns/coded/2024-01-02", ["snapshot://ns/src/latest"])
+    shelf.new_table("ns/typed/2024-01-03", ["table://ns/coded/2024-01-02"])
+    shelf.save()
+    scripts = paths.TABLE_SCRIPTS_DIR / "ns"
+    scripts.mkdir(parents=True, exist_ok=True)
+    (scripts / "coded.sql").write_text(
+        "SELECT code, CAST(sum(v) AS BIGINT) AS total FROM {src} GROUP BY code"
+    )
+    (scripts / "coded.meta.yaml").write_text("version: 1\nincremental:\n  partition_by: code\n")
+    (scripts / "typed.sql").write_text("SELECT code, typeof(code) AS t FROM {coded}")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+
+    # the build's re-read: the sidecar records its schema, partition last
+    sidecar = load_yaml(paths.table_metadata_path("ns/coded/2024-01-02"))
+    assert list(sidecar["schema"].items()) == [("total", "bigint"), ("code", "string")]
+    assert set(sidecar["partition_state"]) == {"007", "010"}
+    # a downstream step
+    typed = spark.read.parquet(str(paths.table_data_path("ns/typed/2024-01-03").resolve()))
+    assert sorted(tuple(r) for r in typed.collect()) == [("007", "string"), ("010", "string")]
+    # db
+    buf = io.StringIO()
+    df = execute_query(spark, Shelf(), "SELECT code, total FROM coded ORDER BY code", out=buf)
+    assert df.schema["code"].dataType.simpleString() == "string"
+    assert json.loads(buf.getvalue()) == [{"code": "007", "total": 3}, {"code": "010", "total": 5}]
+    # export
+    db = workspace / "out.duckdb"
+    assert sorted(export_tables(spark, Shelf(), db, short_names=True)) == ["coded", "typed"]
+    con = duckdb.connect(str(db))
+    try:
+        assert con.execute("SELECT code, total FROM coded ORDER BY code").fetchall() == [
+            ("007", 3),
+            ("010", 5),
+        ]
+        assert con.execute(
+            "SELECT data_type FROM information_schema.columns "
+            "WHERE table_name = 'coded' AND column_name = 'code'"
+        ).fetchall() == [("VARCHAR",)]
+    finally:
+        con.close()
+
+
+def test_nested_field_names_round_trip(workspace, spark):
+    """Struct fields named ``a b`` and ``c:d`` have no ``simpleString``
+    that parses back; the sidecar's exact record does, so the table reads
+    back with the schema of its SELECT, also as a downstream dep."""
+    from pyspark.sql.types import StructType
+
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.tables import read_table
+    from shelf_spark.framework.utils import load_yaml
+
+    select = "SELECT 1 AS k, named_struct('a b', 2, 'c:d', 'x') AS s"
+    Shelf.init()
+    shelf = Shelf()
+    shelf.new_table("ns/nested/2024-01-01", [])
+    shelf.new_table("ns/flat/2024-01-02", ["table://ns/nested/2024-01-01"])
+    shelf.save()
+    scripts = paths.TABLE_SCRIPTS_DIR / "ns"
+    scripts.mkdir(parents=True, exist_ok=True)
+    (scripts / "nested.sql").write_text(select)
+    (scripts / "flat.sql").write_text("SELECT s.`a b` AS ab, s.`c:d` AS cd FROM {nested}")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+
+    got = read_table(spark, StepURI.parse("table://ns/nested/2024-01-01"))
+    assert got.schema.simpleString() == spark.sql(select).schema.simpleString()
+    assert got.schema["s"].dataType.fieldNames() == ["a b", "c:d"]
+    recorded = load_yaml(paths.table_metadata_path("ns/nested/2024-01-01"))["schema_json"]
+    assert StructType.fromJson(json.loads(recorded)) == got.schema
+    assert [tuple(r) for r in got.collect()] == [(1, (2, "x"))]
+    flat = read_table(spark, StepURI.parse("table://ns/flat/2024-01-02"))
+    assert [tuple(r) for r in flat.collect()] == [(2, "x")]
+
+
+def test_sidecar_without_schema_record_rebuilds_once(workspace, spark):
+    """A sidecar without the exact schema record (written before reads
+    used it) makes its step dirty, and a read of the table refuses it
+    rather than inferring; one run records it again."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.tables import read_table
+    from shelf_spark.framework.utils import load_yaml, save_yaml
+
+    Shelf.init()
+    shelf = Shelf()
+    shelf.new_table("ns/lit/2024-01-01", [])
+    shelf.save()
+    script = paths.TABLE_SCRIPTS_DIR / "ns" / "lit.sql"
+    script.parent.mkdir(parents=True, exist_ok=True)
+    script.write_text("SELECT 1 AS a")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    uri = StepURI.parse("table://ns/lit/2024-01-01")
+    assert prune_completed(Shelf().resolve_latest()) == {}
+
+    meta = paths.table_metadata_path(uri.path)
+    doc = load_yaml(meta)
+    del doc["schema_json"]
+    save_yaml(doc, meta)
+    assert uri in prune_completed(Shelf().resolve_latest())
+    with pytest.raises(StepDefinitionError, match="no recorded schema"):
+        read_table(spark, uri)
+
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert prune_completed(Shelf().resolve_latest()) == {}
+    assert [tuple(r) for r in read_table(spark, uri).collect()] == [(1,)]
