@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import paths
 from .core import Shelf
+from .exceptions import StepDefinitionError
 from .tables import read_table
-from .types import StepURI
 
 
 def path_to_snake(path: str) -> str:
@@ -67,11 +67,19 @@ def table_aliases(tables: list[str]) -> dict[str, str]:
     return aliases
 
 
-def built_tables(shelf: Shelf) -> list[str]:
-    """Paths of table steps whose parquet output exists."""
-    return sorted(
-        s.path for s in shelf.steps if s.scheme == "table" and paths.table_data_path(s.path).exists()
-    )
+def read_built_tables(spark: SparkSession, shelf: Shelf) -> dict[str, DataFrame]:
+    """:func:`read_table` of every table step whose output exists, by path.
+    One whose sidecar is missing or records no schema (its build stopped
+    between writing the output and the sidecar) is left out with a note on
+    stderr, so it fails no query of the others."""
+    reads = {}
+    for uri in sorted(u for u in shelf.steps if u.scheme == "table"):
+        if paths.table_data_path(uri.path).exists():
+            try:
+                reads[uri.path] = read_table(spark, uri)
+            except StepDefinitionError as e:
+                print(f"skipping {uri.path}: {e}", file=sys.stderr)
+    return reads
 
 
 def register_shelf_views(
@@ -79,15 +87,12 @@ def register_shelf_views(
 ) -> dict[str, str]:
     """Create a temp view per built table (+ alias views per policy).
     Returns {view_name: table_path}."""
-    tables = built_tables(shelf)
     # one read per table; alias views share the full-name view's DataFrame
-    reads = {
-        path_to_snake(t): (t, read_table(spark, StepURI.parse(f"table://{t}")))
-        for t in tables
-    }
+    reads = {path_to_snake(t): (t, df) for t, df in read_built_tables(spark, shelf).items()}
     named = dict(reads) if names in ("full", "both") else {}
     if names in ("short", "both"):
-        named.update({alias: reads[full] for alias, full in table_aliases(tables).items()})
+        aliases = table_aliases([t for t, _ in reads.values()])
+        named.update({alias: reads[full] for alias, full in aliases.items()})
     views: dict[str, str] = {}
     for view, (t, df) in named.items():
         df.createOrReplaceTempView(view)
@@ -126,18 +131,21 @@ def export_tables(
     """Export every built table into a DuckDB database file (reference
     `export-duckdb`, __init__.py:285-312). Each table reaches DuckDB as
     ``read_table(...).toArrow()``, with its recorded types: the driver
-    holds one whole table at a time, where reading the files would stream."""
+    holds one whole table at a time, where reading the files would stream.
+    Timestamps go naive (UTC values), so DuckDB makes them ``TIMESTAMP``
+    as a read of Spark's files would, not ``TIMESTAMP WITH TIME ZONE``."""
     import duckdb
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     exported = []
-    tables = built_tables(shelf)
-    aliases = {full: alias for alias, full in table_aliases(tables).items()}
+    reads = read_built_tables(spark, shelf)
+    aliases = {full: alias for alias, full in table_aliases(list(reads)).items()}
     with duckdb.connect(str(dest)) as con:
-        for t in tables:
+        for t, df in reads.items():
             name = path_to_snake(t)
             if short_names and name in aliases:
                 name = aliases[name]
-            con.register("_shelf_export", read_table(spark, StepURI.parse(f"table://{t}")).toArrow())
+            con.register("_shelf_export", df.toArrow().cast(to_arrow_schema(df.schema, timestamp_utc=False)))
             con.execute(f'CREATE OR REPLACE TABLE "{name}" AS SELECT * FROM _shelf_export')
             con.unregister("_shelf_export")
             exported.append(name)

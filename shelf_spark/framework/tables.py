@@ -269,7 +269,8 @@ def read_table(spark: SparkSession, uri: StepURI, schema: StructType | None = No
     if spark.catalog.tableExists(cname):
         return spark.table(cname)
     if schema is None:
-        doc = load_yaml(paths.table_metadata_path(uri.path)) or {}
+        meta = paths.table_metadata_path(uri.path)
+        doc = (load_yaml(meta) or {}) if meta.exists() else {}
         if "schema_json" not in doc:
             raise StepDefinitionError(f"{uri} has no recorded schema; run it again")
         schema = StructType.fromJson(json.loads(doc["schema_json"]))
@@ -313,14 +314,11 @@ def _exec_sql_step(
     bucketing = cfg.get("bucketing")
     incremental = cfg.get("incremental")
     if bucketing and incremental:
-        raise StepDefinitionError(
-            f"{uri}: bucketing and incremental are mutually exclusive"
-        )
+        raise StepDefinitionError(f"{uri}: bucketing and incremental are mutually exclusive")
 
     names = simplify_dependency_names(deps)
     build_id = uuid.uuid4().hex[:12]
     template_vars: dict[str, str] = {}
-    views: list[str] = []
     partition_state: dict[str, str] | None = None
     fingerprint_s: float | None = None
     try:
@@ -328,6 +326,13 @@ def _exec_sql_step(
             n: read_table(spark, d) if d.scheme == "table" else _read_any(spark, dependency_data_path(d))
             for n, d in names.items()
         }
+        for name in names:
+            view = f"dep_{name}_{build_id}"
+            dep_dfs[name].createOrReplaceTempView(view)
+            template_vars[name] = view
+        sql = script.read_text().format(**template_vars)
+        df = spark.sql(sql)
+        schema = df.schema
 
         changed: list[str] | None = None  # None → full build, [] → none
         if incremental:
@@ -337,56 +342,37 @@ def _exec_sql_step(
             # fingerprints every dep partition, diffs against the sidecar's
             # recorded state, narrows the dep views to changed partitions,
             # and dynamic-partition-overwrites only those directories. A
-            # 100 TB table with one new day rebuilds one day.
+            # 100 TB table with one new day rebuilds one day. An edited
+            # script or config, or a new output schema, builds in full.
             part_col = incremental["partition_by"]
+            if part_col not in df.columns:
+                raise StepDefinitionError(f"{uri}: incremental step output lacks partition column {part_col}")
+            # a partitioned read puts the partition column last
+            schema = StructType([f for f in schema.fields if f.name != part_col] + [schema[part_col]])
             partition_state = {}
             t0 = time.monotonic()
             for ddf in dep_dfs.values():
                 if part_col in ddf.columns:
                     for k, v in _partition_fingerprints(ddf, part_col).items():
-                        partition_state[k] = (
-                            partition_state[k] + "+" + v
-                            if k in partition_state
-                            else v
-                        )
+                        partition_state[k] = partition_state[k] + "+" + v if k in partition_state else v
             fingerprint_s = time.monotonic() - t0
-            prior: dict[str, str] = {}
-            meta_path = paths.table_metadata_path(uri.path)
-            if out.exists() and meta_path.exists():
-                prior = (load_yaml(meta_path) or {}).get("partition_state", {})
+            prior = _prior_partition_state(uri, out, schema)
             if prior:
-                changed = sorted(
-                    k for k, v in partition_state.items() if prior.get(k) != v
-                )
+                changed = sorted(k for k, v in partition_state.items() if prior.get(k) != v)
                 removed = sorted(k for k in prior if k not in partition_state)
                 import shutil
 
                 for k in removed:  # partitions gone from every dep
                     shutil.rmtree(out / f"{part_col}={k}", ignore_errors=True)
+                if not changed:
+                    # nothing to rebuild; the SELECT was only analysed, no job
+                    return schema, partition_state, fingerprint_s
                 for name, ddf in dep_dfs.items():
-                    if changed and part_col in ddf.columns:
-                        dep_dfs[name] = ddf.filter(
+                    if part_col in ddf.columns:
+                        ddf.filter(
                             F.col(part_col).cast("string").isin(changed)
-                        )
-
-        for name in names:
-            view = f"dep_{name}_{build_id}"
-            dep_dfs[name].createOrReplaceTempView(view)
-            views.append(view)
-            template_vars[name] = view
-        sql = script.read_text().format(**template_vars)
-        df = spark.sql(sql)
-        schema = df.schema
-        if incremental:
-            if part_col not in df.columns:
-                raise StepDefinitionError(
-                    f"{uri}: incremental step output lacks partition column {part_col}"
-                )
-            # a partitioned read puts the partition column last
-            schema = StructType([f for f in schema.fields if f.name != part_col] + [schema[part_col]])
-            if changed == []:
-                # nothing to rebuild; the SELECT was only analysed, no job
-                return schema, partition_state, fingerprint_s
+                        ).createOrReplaceTempView(template_vars[name])
+                df = spark.sql(sql)
         # a catalog entry left by an earlier bucketed build would shadow
         # this output in read_table
         cname = catalog_table_name(uri)
@@ -405,19 +391,31 @@ def _exec_sql_step(
             writer.format("parquet").option("path", str(out)).saveAsTable(cname)
         elif incremental:
             # per-write option — no session-wide conf mutation, so concurrent
-            # non-incremental builds are unaffected
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(part_col)
-                .parquet(str(out))
-            )
+            # non-incremental builds are unaffected; a full build replaces
+            # every partition, also those its output no longer has
+            writer = df.write.mode("overwrite").partitionBy(part_col)
+            writer.option("partitionOverwriteMode", "dynamic" if changed else "static").parquet(str(out))
         else:
             df.write.mode("overwrite").parquet(str(out))
         return schema, partition_state, fingerprint_s
     finally:
-        for view in views:
+        for view in template_vars.values():
             spark.catalog.dropTempView(view)
+
+
+def _prior_partition_state(uri: StepURI, out: Path, schema: StructType) -> dict[str, str]:
+    """The partition state the sidecar records, if it still describes the
+    output: built by this script and config, with these column names and
+    types (Parquet reads by name, and a read makes every field nullable, so
+    order and nullability do not count). Else ``{}``, a full build: an
+    edited SELECT over unchanged deps would keep its old rows, and an added
+    or renamed column would read as NULL."""
+    meta = paths.table_metadata_path(uri.path)
+    doc = (load_yaml(meta) or {}) if out.exists() and meta.exists() else {}
+    built = doc.get("input_manifest", {})
+    same = all(built.get(k) == v for k, v in generate_input_manifest(uri, []).items())
+    same = same and doc.get("schema") == {f.name: f.dataType.simpleString() for f in schema.fields}
+    return doc.get("partition_state", {}) if same else {}
 
 
 def _exec_python_step(script: Path, deps: list[StepURI], out: Path) -> None:
@@ -430,7 +428,7 @@ def _exec_python_step(script: Path, deps: list[StepURI], out: Path) -> None:
 
 def _read_any(spark: SparkSession, path: str | Path) -> DataFrame:
     """Snapshot deps and a Python step's output: parquet, orc, csv, json,
-    else text, with schema inference (also ``sources.read_any``)."""
+    else text, with schema inference."""
     path = Path(path).resolve()  # Spark JVM cwd does not follow Python os.chdir
     suffix = path.suffix.lower()
     if suffix == ".orc":

@@ -19,16 +19,11 @@ This module provides the Spark-native lake layout:
   columns; pair with `queries/multimodal.py` decode stages. Partition by
   directory layout; cap ``maxPartitionBytes`` so one task holds a
   bounded number of blobs.
-- **Format readers** (`read_any`): csv/json/text/parquet with schema
-  inference for snapshot-style inputs — the framework's snapshot reader,
-  ``framework/tables.py:_read_any``, exposed for query-layer use.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from .framework.tables import _read_any as read_any  # noqa: F401  (re-export)
 
 
 def write_partitioned(

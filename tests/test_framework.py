@@ -84,8 +84,8 @@ def test_path_to_snake_and_aliases():
 
 def test_built_tables_have_one_reader():
     """In the framework, Spark and DuckDB reads of table files happen only
-    in ``tables.read_table`` and ``tables._read_any``; ``sources.read_any``
-    is that same body, not a copy of its format dispatch."""
+    in ``tables.read_table`` and ``tables._read_any``; ``sources.py`` holds
+    no copy of the format dispatch."""
     import ast
 
     from shelf_spark import sources
@@ -109,7 +109,6 @@ def test_built_tables_have_one_reader():
             if i not in allowed and any(p in line for p in patterns)
         ]
     assert offenders == []
-    assert sources.read_any is tables._read_any
     dispatch = (".read.csv(", ".read.json(", ".read.orc(", ".read.text(")
     assert not any(p in Path(sources.__file__).read_text() for p in dispatch)
 
@@ -565,7 +564,7 @@ def test_db_query_and_export(workspace, spark, capsys):
     script.parent.mkdir(parents=True, exist_ok=True)
     script.write_text("SELECT 1 AS a, 'x' AS b UNION ALL SELECT 2, 'y'")
     script2 = paths.TABLE_SCRIPTS_DIR / "ns" / "pairs.sql"
-    script2.write_text("SELECT 'k1' AS dim_key, 'v1' AS value")
+    script2.write_text("SELECT 'k1' AS dim_key, 'v1' AS value, TIMESTAMP'2024-01-02 03:04:05' AS ts")
     execute_dag(spark, prune_completed(Shelf().resolve_latest()))
 
     # single-token sugar + short alias
@@ -587,6 +586,16 @@ def test_db_query_and_export(workspace, spark, capsys):
     assert con.execute(
         "SELECT dim_key, value FROM ns_pairs_20240102"
     ).fetchall() == [("k1", "v1")]
+    # a timestamp stays a naive TIMESTAMP, as DuckDB reads Spark's files
+    import datetime as dt
+
+    assert con.execute(
+        "SELECT data_type FROM information_schema.columns "
+        "WHERE table_name = 'ns_pairs_20240102' AND column_name = 'ts'"
+    ).fetchall() == [("TIMESTAMP",)]
+    assert con.execute("SELECT ts FROM ns_pairs_20240102").fetchall() == [
+        (dt.datetime(2024, 1, 2, 3, 4, 5),)
+    ]
     con.close()
 
     # --short aliases
@@ -671,7 +680,10 @@ def test_incremental_partition_rebuild(workspace, spark):
     shelf.save()
     script = paths.TABLE_SCRIPTS_DIR / "ns" / "daily.sql"
     script.parent.mkdir(parents=True, exist_ok=True)
-    script.write_text("SELECT day, CAST(sum(v) AS BIGINT) AS total FROM {days} GROUP BY day")
+    # count(*) is a non-nullable column, which a read makes nullable
+    script.write_text(
+        "SELECT day, CAST(sum(v) AS BIGINT) AS total, count(*) AS n FROM {days} GROUP BY day"
+    )
     script.with_suffix(".meta.yaml").write_text(
         "version: 1\nincremental:\n  partition_by: day\n"
     )
@@ -1062,3 +1074,109 @@ def test_sidecar_without_schema_record_rebuilds_once(workspace, spark):
     execute_dag(spark, prune_completed(Shelf().resolve_latest()))
     assert prune_completed(Shelf().resolve_latest()) == {}
     assert [tuple(r) for r in read_table(spark, uri).collect()] == [(1,)]
+
+
+def test_incremental_step_edit_rebuilds_every_partition(workspace, spark):
+    """Editing an incremental step's SELECT while its deps stay the same
+    rebuilds the whole table: the recorded partition state describes the
+    old SELECT's rows. A changed value, then a renamed and an added
+    column, read back with real values, not stale rows or NULLs."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.query import execute_query
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.tables import read_table
+
+    step = _daily_totals_step(workspace, 3)
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    script = paths.TABLE_SCRIPTS_DIR / "ns" / "daily.sql"
+    uri = StepURI.parse(f"table://{step}")
+
+    script.write_text("SELECT day, CAST(2 * sum(v) AS BIGINT) AS total FROM {src} GROUP BY day")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert sorted(tuple(r) for r in read_table(spark, uri).collect()) == [
+        (0, 0), (22, 1), (44, 2)
+    ]
+
+    script.write_text(
+        "SELECT day, CAST(sum(v) AS BIGINT) AS sum_v, count(*) AS n FROM {src} GROUP BY day"
+    )
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert prune_completed(Shelf().resolve_latest()) == {}
+    got = read_table(spark, uri)
+    assert got.columns == ["sum_v", "n", "day"]
+    assert sorted(tuple(r) for r in got.collect()) == [(0, 2, 0), (11, 2, 1), (22, 2, 2)]
+    buf = io.StringIO()
+    execute_query(spark, Shelf(), "SELECT day, sum_v, n FROM daily ORDER BY day", out=buf)
+    assert json.loads(buf.getvalue()) == [
+        {"day": d, "sum_v": 11 * d, "n": 2} for d in range(3)
+    ]
+    out = paths.table_data_path(step)
+    assert len(list(out.glob("day=*"))) == 3
+
+
+def test_table_without_sidecar_fails_no_other_query(workspace, spark, capsys):
+    """A table whose output exists without its sidecar (a build stopped
+    between the two) is left out of ``db`` and ``export`` with a note
+    naming it; the other tables still answer."""
+    import duckdb
+
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.query import execute_query, export_tables
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+
+    Shelf.init()
+    shelf = Shelf()
+    shelf.new_table("ns/lit/2024-01-01", [])
+    shelf.new_table("ns/cut/2024-01-01", [])
+    shelf.save()
+    scripts = paths.TABLE_SCRIPTS_DIR / "ns"
+    scripts.mkdir(parents=True, exist_ok=True)
+    (scripts / "lit.sql").write_text("SELECT 41 AS a UNION ALL SELECT 1")
+    (scripts / "cut.sql").write_text("SELECT 1 AS b")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    paths.table_metadata_path("ns/cut/2024-01-01").unlink()
+    capsys.readouterr()
+
+    buf = io.StringIO()
+    execute_query(spark, Shelf(), "SELECT sum(a) AS total FROM lit", out=buf)
+    assert json.loads(buf.getvalue()) == [{"total": 42}]
+    assert "skipping ns/cut/2024-01-01" in capsys.readouterr().err
+    db = workspace / "out.duckdb"
+    assert export_tables(spark, Shelf(), db, short_names=True) == ["lit"]
+    con = duckdb.connect(str(db))
+    try:
+        assert con.execute("SELECT sum(a) FROM lit").fetchall() == [(42,)]
+    finally:
+        con.close()
+
+
+def test_dep_column_rename_rebuilds_incremental_step(workspace, spark):
+    """A dep that renames a column keeps its values, and so its partition
+    fingerprints: the incremental ``SELECT *`` over it still rebuilds in
+    full, since its schema changed, and the new name reads back its
+    values rather than NULL."""
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.snapshots import Snapshot
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.tables import read_table
+
+    Shelf.init()
+    raw = workspace / "src.csv"
+    raw.write_text("day,v\n1,10\n2,20\n")
+    Snapshot.create(raw, "ns/src/2024-01-01")
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse("snapshot://ns/src/2024-01-01"))
+    shelf.new_table("ns/base/2024-01-02", ["snapshot://ns/src/latest"])
+    shelf.new_table("ns/top/2024-01-03", ["table://ns/base/2024-01-02"])
+    shelf.save()
+    scripts = paths.TABLE_SCRIPTS_DIR / "ns"
+    scripts.mkdir(parents=True, exist_ok=True)
+    (scripts / "top.sql").write_text("SELECT * FROM {base}")
+    (scripts / "top.meta.yaml").write_text("version: 1\nincremental:\n  partition_by: day\n")
+    top = StepURI.parse("table://ns/top/2024-01-03")
+    for name in ("x", "y"):
+        (scripts / "base.sql").write_text(f"SELECT day, v AS {name} FROM {{src}}")
+        execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+        got = read_table(spark, top)
+        assert got.columns == [name, "day"]
+        assert sorted(tuple(r) for r in got.collect()) == [(10, 1), (20, 2)]

@@ -55,7 +55,8 @@ def test_binary_dir_ingest(spark, tmp_path):
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     """ORC sink/source: values round-trip and predicates reach the ORC
     scan (same pushdown contract as parquet)."""
-    from shelf_spark.sources import read_any, write_orc
+    from shelf_spark.framework.tables import _read_any as read_any
+    from shelf_spark.sources import write_orc
 
     out = str(tmp_path / "orders.orc")
     orders = load_table(spark, SF_DIR, "orders").select(
