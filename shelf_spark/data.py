@@ -5,18 +5,30 @@ table in the lake is exposed as a temp view under a snake-case name
 (reference ``src/shelf/__init__.py:373-379``). Here the "lake" is the
 driver-generated star schema at ``/root/testdata/sf*``.
 
-View registration is lazy metadata only (no scan), so re-registering per
-query call is free; Catalyst prunes columns & pushes filters into the
-Parquet scan from these views exactly as from ``spark.read.parquet``.
+Each table's schema comes from one driver-side read of its Parquet
+footer (:func:`footer_schema`), pinned on the read, so registering the
+views submits no Spark job. Catalyst prunes columns & pushes filters into
+the Parquet scan from these views exactly as from ``spark.read.parquet``.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from .session import tune
 
@@ -34,98 +46,83 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-_NS_COLS_CACHE: dict[str, tuple[str, ...]] = {}
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every nested field nullable, as Spark reads a file."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
 
 
-def _utc_adjusted_timestamp_cols(path: str) -> tuple[str, ...]:
-    """µs/ms timestamp columns flagged isAdjustedToUTC in the footer.
+def footer_schema(path: str) -> tuple[StructType | None, tuple[str, ...]]:
+    """The schema Spark infers for a Parquet file, from one footer read;
+    returns ``(schema, nanos_cols)``.
 
-    Arrow surfaces the flag as a ``tz=`` annotation on the timestamp type.
-    These must be pinned as TimestampType (session-tz'd) in a file-stream
-    schema — pinning NTZ over a UTC-adjusted column trips Spark's
-    vectorized-reader conversion check. Uncached (cheap footer read;
-    streaming ingest dirs change over time).
+    A µs/ms timestamp is ``timestamp`` if the footer sets isAdjustedToUTC,
+    else ``timestamp_ntz``. Arrow shows Spark's INT96 and TIMESTAMP(NANOS)
+    alike as ``timestamp[ns]``: INT96 reads as ``timestamp``, INT64 nanos
+    as ``bigint`` under the legacy nanosAsLong conf, listed in
+    ``nanos_cols``. A directory is probed through its first ``*.parquet``
+    in name order; an empty one gives ``(None, ())``. Not cached: a footer
+    parse takes under a millisecond, and ingest dirs change.
     """
     probe = path
     if os.path.isdir(path):
-        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
         if not parts:
-            return ()
-        probe = os.path.join(path, min(parts))  # deterministic pick
-    arrow = pq.read_schema(probe)
-    return tuple(
-        f.name
+            return None, ()
+        probe = os.path.join(path, parts[0])
+    with pq.ParquetFile(probe) as footer:
+        physical = {c.path: c.physical_type for c in footer.schema}
+        arrow = footer.schema_arrow
+    ns_type = {
+        f.name: LongType() if physical[f.name] == "INT64" else TimestampType()
         for f in arrow
-        if str(f.type).startswith("timestamp[")
-        and not str(f.type).startswith("timestamp[ns")
-        and getattr(f.type, "tz", None) is not None
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    }
+    schema = StructType(
+        [
+            StructField(f.name, ns_type.get(f.name, _nullable(f.dataType)))
+            for f in from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+        ]
     )
-
-
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet timestamp[ns] (Spark can't read natively).
-
-    The cache is keyed by the PROBED FILE, not the directory: a streaming
-    ingest dir keeps growing, and pinning a dir to its first-ever probe
-    would mis-read later files with a different timestamp encoding. The
-    probe file is picked deterministically (min of the part names); when
-    new parts change that pick, the new file is probed fresh.
-    """
-    probe = path
-    if os.path.isdir(path):  # Spark-written table dir: probe a part file
-        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        if not parts:
-            # Empty ingest dir: files that land later (possibly
-            # int64-nanos) must be re-probed on next call.
-            return ()
-        probe = os.path.join(path, min(parts))
-    if probe not in _NS_COLS_CACHE:
-        # Arrow reports both TIMESTAMP(NANOS) (INT64) and Spark's INT96 as
-        # timestamp[ns]; only the INT64 form needs the nanosAsLong workaround
-        # (Spark reads its own INT96 natively).
-        arrow = pq.read_schema(probe)
-        physical = {
-            c.name: c.physical_type
-            for rg_c in [pq.ParquetFile(probe).schema]
-            for c in (rg_c.column(i) for i in range(len(rg_c)))
-        }
-        _NS_COLS_CACHE[probe] = tuple(
-            f.name
-            for f in arrow
-            if str(f.type).startswith("timestamp[ns")
-            and physical.get(f.name) == "INT64"
-        )
-    return _NS_COLS_CACHE[probe]
+    return schema, tuple(c for c, t in ns_type.items() if t == LongType())
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
-    ns_cols = _nanos_timestamp_cols(path)
+    schema, ns_cols = footer_schema(path)
+    if schema is None:
+        raise ValueError(f"no Parquet file to read a schema from in {path}")
+    if ns_cols:
+        # Parquet TIMESTAMP(NANOS) is unreadable by Spark's converter; read
+        # the raw int64 nanos (legacy conf) and floor-convert to
+        # microseconds — lossless here and matching DuckDB's ns→us
+        # presentation.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(schema).parquet(path)
     if not ns_cols:
-        return spark.read.parquet(path)
-    # Parquet TIMESTAMP(NANOS) is unreadable by Spark's converter; read the
-    # raw int64 nanos (legacy conf) and floor-convert to microseconds —
-    # lossless here and matching DuckDB's ns→us presentation.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    cols = list(df.columns)  # preserve stored column order
-    for c in ns_cols:
-        # integer `div` — a double division would round at 1e18 magnitude
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df.select(*cols)
+        return df
+    # integer `div` — a double division would round at 1e18 magnitude
+    return df.withColumns(
+        {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
+    )
 
 
-# Per-session registration cache: schema discovery (spark.read.parquet +
-# pyarrow schema probe) costs ~0.1s/table on the driver; re-running it for
-# all 10 tables on every query call dominated small-SF latency. Keyed by
-# the session object's id — the driver passes the same session per run.
+# Per-session registration cache: loading the 10 tables again (footer
+# reads plus Spark's analysis of each read) costs 0.23-0.29 s in a warm
+# session at sf0.01 on 4 cores, against 1.0 s when each read ran a
+# schema-inference job; on every query call that would still dominate
+# small-SF latency. Keyed by the session object's id — the driver passes
+# the same session per run.
 # Testdata is immutable, so cached DataFrames never go stale; switching
 # sf_dir in one session re-registers (views are session-global names).
 _REGISTERED: dict[int, str] = {}

@@ -5,7 +5,7 @@
 facts into assertable values so tests can pin them: filters reaching the
 parquet scan, partition pruning, exchange counts, broadcast vs
 shuffled joins, whole-stage-codegen coverage. Used by tests/test_plans.py
-and by `optimize`/`sources`.
+and by `optimize`.
 """
 
 from __future__ import annotations

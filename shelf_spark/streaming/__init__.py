@@ -16,10 +16,9 @@ keyed-state/timeout machinery.)
 Design:
 
 - **Source**: the parquet file-stream source over an events directory.
-  New files arriving in the directory are the micro-batches; schema is
-  pinned (file-stream sources require it). The testdata's TIMESTAMP(NANOS)
-  column is read as raw int64 nanos (legacy conf) and floor-converted to
-  microseconds, identically to the batch path.
+  New files arriving in the directory are the micro-batches; the schema
+  is pinned (file-stream sources require it) from the footer, by the
+  batch path's ``data.footer_schema``, so both read the same types.
 - **Transform parity**: every streaming query here reuses the *same
   expression shapes* as its batch twin, so `run_available_now` (process
   all existing files, then stop) must produce the batch answer — that is
@@ -50,123 +49,60 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from ..data import footer_schema
 from ..queries.num import dsum_i
 
-#: Events schema as stored (ts as raw int64 nanos under the legacy conf).
-_EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),  # TIMESTAMP(NANOS) → int64 nanos
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
 
-#: Public event schema after ns→us conversion.
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-
-def events_stream(
+def _parquet_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-stream source over an events parquet file/directory.
-
-    ``path`` may be a single parquet file (testdata) or a directory into
-    which new files land (production ingest). File-stream sources require
-    a pinned schema, so probe the parquet footer for how ``ts`` is stored:
-    int64 TIMESTAMP(NANOS) (unreadable natively → legacy long + div 1000)
-    or a regular µs timestamp (possibly NTZ → cast to session-tz'd
-    TIMESTAMP; the session tz is pinned UTC so the cast is value-identity).
-    """
-    import os
-
-    from ..data import _nanos_timestamp_cols, _utc_adjusted_timestamp_cols
-
-    ns_ts = "ts" in _nanos_timestamp_cols(path)
-    if ns_ts:
+    """File-stream source over a parquet file or ingest directory, pinned
+    to its footer schema; int64 TIMESTAMP(NANOS) columns become µs
+    timestamps, as in ``load_table``."""
+    schema, ns_cols = footer_schema(path)
+    if schema is None:
+        raise ValueError(f"no Parquet file in {path} to take a stream schema from")
+    if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = _EVENTS_RAW_SCHEMA
-    else:
-        # µs timestamp: the footer's isAdjustedToUTC flag decides which
-        # Spark type the pinned schema needs — NTZ over a UTC-adjusted
-        # column (or vice versa) trips the vectorized reader's conversion
-        # check rather than reading value-identically.
-        ltz_ts = "ts" in _utc_adjusted_timestamp_cols(path)
-        ts_type = TimestampType() if ltz_ts else TimestampNTZType()
-        schema = StructType(
-            [
-                StructField("event_id", LongType()),
-                StructField("ts", ts_type),
-                StructField("user_id", LongType()),
-                StructField("event_type", StringType()),
-                StructField("value", DoubleType()),
-                StructField("props", StringType()),
-            ]
-        )
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-
     if os.path.isfile(path):
         # the file-stream source requires a directory or glob; a literal
         # file path fails its basePath check — rewrite as a 1-file glob
         d, name = os.path.split(path)
         path = os.path.join(d, "{%s}" % name)
     raw = reader.load(path)
-    if ns_ts:
-        # integer `div`: double division would round at 1e18 magnitudes
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    if not ns_cols:
+        return raw
+    # integer `div`: double division would round at 1e18 magnitudes
+    return raw.withColumns(
+        {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
+    )
 
 
-# ---------------------------------------------------------------------------
-# Streaming transforms — same expression shapes as the batch twins
-# ---------------------------------------------------------------------------
-
-
-#: Documents schema (file-stream sources require one pinned up front).
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
+def events_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-stream source over an events parquet file (testdata) or a
+    directory into which new files land (production ingest). ``ts`` is a
+    session-tz'd TIMESTAMP whatever its encoding: an NTZ column is cast
+    (the session tz is pinned UTC, so the cast is value-identity)."""
+    stream = _parquet_stream(spark, path, max_files_per_trigger)
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def documents_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-stream source over a documents parquet file/directory —
     streaming ingest of new crawl shards."""
-    import os
+    return _parquet_stream(spark, path)
 
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA).format("parquet")
-    if os.path.isfile(path):
-        d, name = os.path.split(path)
-        path = os.path.join(d, "{%s}" % name)
-    return reader.load(path)
+
+# ---------------------------------------------------------------------------
+# Streaming transforms — same expression shapes as the batch twins
+# ---------------------------------------------------------------------------
 
 
 def dedup_against_corpus(stream: DataFrame, corpus: DataFrame) -> DataFrame:
@@ -540,8 +476,6 @@ def _cdc_latest_version(
     and read-latest must never pick that up (otherwise a fresh run
     reusing the state_dir, or the final state read, would merge on top
     of a torn state)."""
-    import os
-
     if not os.path.isdir(state_dir):
         return None
     vs = [
@@ -574,7 +508,6 @@ def run_cdc_upsert(
     one key-sized full-outer join — changelog volume is touched once;
     state I/O is key-cardinality-sized. On a cluster the same loop runs
     against Delta/Iceberg MERGE INTO with the identical collapse."""
-    import os
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         # IDEMPOTENT under foreachBatch's at-least-once replay: the merge

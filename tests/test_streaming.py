@@ -8,10 +8,12 @@ batch, so parity is exact.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from shelf_spark import streaming as S
-from shelf_spark.data import register_views
+from shelf_spark.data import footer_schema, register_views
 from shelf_spark.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -206,9 +208,12 @@ def test_ts_encoding_matrix(spark, tmp_path, encoding):
         )
     d = tmp_path / encoding
     d.mkdir()
-    pq.write_table(out, d / "events.parquet")
+    path = str(d / "events.parquet")
+    pq.write_table(out, path)
 
-    stream = S.events_stream(spark, str(d / "events.parquet"))
+    stream = S.events_stream(spark, path)
+    # the pinned schema is the one Spark infers (nanos under nanosAsLong)
+    assert footer_schema(path)[0] == spark.read.parquet(path).schema
     got = S.run_available_now(S.tumbling_counts(stream), f"t_enc_{encoding}")
     rows = _rows(got, ["w_start", "n_events", "total_value"])
     # identical to the canonical testdata-backed stream
@@ -221,11 +226,9 @@ def test_ts_encoding_matrix(spark, tmp_path, encoding):
 def test_empty_dir_probe_not_cached(spark, tmp_path):
     """An empty ingest dir must not pin its (absent) schema forever: files
     that land later — here int64-nanos — must be re-probed and read."""
-    from shelf_spark.data import _nanos_timestamp_cols
-
     d = tmp_path / "ingest"
     d.mkdir()
-    assert _nanos_timestamp_cols(str(d)) == ()
+    assert footer_schema(str(d)) == (None, ())
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -234,7 +237,18 @@ def test_empty_dir_probe_not_cached(spark, tmp_path):
     idx = src.schema.get_field_index("ts")
     ns = src.set_column(idx, "ts", src.column("ts").cast(pa.timestamp("ns")))
     pq.write_table(ns, d / "part-0001.parquet")
-    assert "ts" in _nanos_timestamp_cols(str(d))
+    assert "ts" in footer_schema(str(d))[1]
+
+
+def test_stream_over_empty_ingest_dir_raises(spark, tmp_path):
+    """A directory with no Parquet file yet has no footer to take the
+    stream schema from: the source refuses it, naming the path, rather
+    than pinning a guess that later files may not match."""
+    d = tmp_path / "ingest"
+    d.mkdir()
+    for make in (S.events_stream, S.documents_stream):
+        with pytest.raises(ValueError, match=re.escape(str(d))):
+            make(spark, str(d))
 
 
 def test_cdc_upsert_multibatch_converges(spark, tmp_path):
