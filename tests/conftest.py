@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,3 +28,16 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("shelf-spark-tests")
     yield s
+
+
+def jobs_submitted(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` submits, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"  # the tracker keeps old groups
+    sc.setJobGroup(group, "jobs submitted by one call")
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

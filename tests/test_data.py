@@ -6,28 +6,16 @@ from __future__ import annotations
 import ast
 import pathlib
 import shutil
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import SF_SMALL, jobs_submitted
 
 from shelf_spark.data import TABLES, footer_schema, load_table, register_views, table_path
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "shelf_spark"
-SF_SMALL = "/root/testdata/sf0.001"
 EVENTS = table_path(SF_SMALL, "events")
-
-
-def _jobs_during(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"data-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _assert_spark_infers(spark, path: str) -> None:
@@ -77,7 +65,7 @@ def test_register_views_submits_no_job(spark, tmp_path):
     its schemas come from the footers, not an inference scan."""
     sf = tmp_path / "sf"
     shutil.copytree(SF_SMALL, sf)
-    assert _jobs_during(spark, lambda: register_views(spark, str(sf))) == 0
+    assert jobs_submitted(spark, lambda: register_views(spark, str(sf))) == []
     assert spark.table("orders").count() == load_table(spark, SF_SMALL, "orders").count()
 
 

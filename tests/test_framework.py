@@ -11,6 +11,7 @@ import os
 from pathlib import Path
 
 import pytest
+from conftest import SF_SMALL, jobs_submitted
 
 from shelf_spark.framework.core import Shelf
 from shelf_spark.framework.exceptions import StepDefinitionError
@@ -118,7 +119,7 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     from shelf_spark.framework.tables import _read_any
 
     out = str(tmp_path / "orders.orc")
-    orders = load_table(spark, "/root/testdata/sf0.001", "orders").select(
+    orders = load_table(spark, SF_SMALL, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     orders.write.orc(out)
@@ -795,21 +796,6 @@ def test_sql_step_consumes_round2_dialect(workspace, spark):
 # -- content hashes and listing ----------------------------------------------
 
 
-def _jobs_submitted(spark, fn) -> list[int]:
-    """Ids of the Spark jobs ``fn()`` submits, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"framework-jobs-{uuid.uuid4().hex}"  # the tracker keeps old groups
-    sc.setJobGroup(group, "jobs submitted by one call")
-    try:
-        fn()
-        return list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def _daily_totals_step(workspace, days: int) -> str:
     """A snapshot ``ns/src`` of ``days`` days (two rows each) and an
     incremental SQL step ``ns/daily`` of per-day totals, partitioned by
@@ -851,7 +837,7 @@ def test_many_partition_table_reads_without_listing_job(workspace, spark, monkey
         if uri.path != step:  # the step's deps
             return read_table(spark_, uri, schema)
         got = []
-        reread_jobs.append(_jobs_submitted(spark, lambda: got.append(read_table(spark_, uri, schema))))
+        reread_jobs.append(jobs_submitted(spark, lambda: got.append(read_table(spark_, uri, schema))))
         return got[0]
 
     monkeypatch.setattr(tables, "read_table", counted)
@@ -860,13 +846,13 @@ def test_many_partition_table_reads_without_listing_job(workspace, spark, monkey
     out = str(paths.table_data_path(step).resolve())
     assert len(list(Path(out).glob("day=*"))) == 40
 
-    assert len(_jobs_submitted(spark, lambda: spark.read.parquet(out))) <= 1
+    assert len(jobs_submitted(spark, lambda: spark.read.parquet(out))) <= 1
     # the same query over an already-read view, then through `db`, which
     # reads the table again with its recorded schema
     spark.read.parquet(out).createOrReplaceTempView("daily_direct")
     sql = "SELECT count(*) AS n, sum(total) AS t FROM {}"
-    direct = _jobs_submitted(spark, lambda: spark.sql(sql.format("daily_direct")).toPandas())
-    via_db = _jobs_submitted(
+    direct = jobs_submitted(spark, lambda: spark.sql(sql.format("daily_direct")).toPandas())
+    via_db = jobs_submitted(
         spark, lambda: execute_query(spark, Shelf(), sql.format("daily"), out=io.StringIO())
     )
     assert len(via_db) == len(direct)
