@@ -15,6 +15,7 @@ from conftest import SF_SMALL, jobs_submitted
 from shelf_spark.data import TABLES, footer_schema, load_table, register_views, table_path
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "shelf_spark"
+TESTDATA = pathlib.Path(SF_SMALL).parent
 EVENTS = table_path(SF_SMALL, "events")
 
 
@@ -27,7 +28,7 @@ def _assert_spark_infers(spark, path: str) -> None:
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_footer_schema_is_sparks_inference(spark, sf):
     for name in TABLES:
-        _assert_spark_infers(spark, table_path(f"/root/testdata/{sf}", name))
+        _assert_spark_infers(spark, table_path(str(TESTDATA / sf), name))
 
 
 def test_footer_schema_of_spark_written_file(spark, tmp_path):
@@ -76,7 +77,8 @@ def test_load_table_reads_nanos_like_micros(spark, tmp_path):
     zone is UTC, so the cast between them keeps the value."""
     src = pq.read_table(EVENTS)
     ts = src.column("ts").cast(pa.timestamp("ns"))
-    pq.write_table(src.set_column(src.schema.get_field_index("ts"), "ts", ts), tmp_path / "events.parquet")
+    ns = src.set_column(src.schema.get_field_index("ts"), "ts", ts)
+    pq.write_table(ns, tmp_path / "events.parquet")
     got = load_table(spark, str(tmp_path), "events")
     assert got.schema["ts"].dataType.typeName() == "timestamp"
     got = got.withColumn("ts", got["ts"].cast("timestamp_ntz"))
