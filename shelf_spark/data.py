@@ -17,7 +17,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (
@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     MapType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -62,59 +63,72 @@ def _nullable(t: DataType) -> DataType:
     return t
 
 
-def footer_schema(path: str) -> tuple[StructType | None, tuple[str, ...]]:
+def footer_schema(path: str) -> tuple[StructType | None, dict[str, DataType]]:
     """The schema Spark infers for a Parquet file, from one footer read;
-    returns ``(schema, nanos_cols)``.
+    returns ``(schema, nanos)``.
 
     A µs/ms timestamp is ``timestamp`` if the footer sets isAdjustedToUTC,
     else ``timestamp_ntz``. Arrow shows Spark's INT96 and TIMESTAMP(NANOS)
     alike as ``timestamp[ns]``: INT96 reads as ``timestamp``, INT64 nanos
-    as ``bigint`` under the legacy nanosAsLong conf, listed in
-    ``nanos_cols``. A directory is probed through its first ``*.parquet``
-    in name order; an empty one gives ``(None, ())``. Not cached: a footer
-    parse takes under a millisecond, and ingest dirs change.
+    as ``bigint`` under the legacy nanosAsLong conf. ``nanos`` maps each
+    INT64-nanos column to the type its µs twin would have, by the same
+    isAdjustedToUTC rule (see :func:`micros_from_nanos`). A directory is
+    probed through its first ``*.parquet`` in name order; an empty one
+    gives ``(None, {})``. Not cached: a footer parse takes under a
+    millisecond, and ingest dirs change.
     """
     probe = path
     if os.path.isdir(path):
         parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
         if not parts:
-            return None, ()
+            return None, {}
         probe = os.path.join(path, parts[0])
     with pq.ParquetFile(probe) as footer:
         physical = {c.path: c.physical_type for c in footer.schema}
         arrow = footer.schema_arrow
-    ns_type = {
-        f.name: LongType() if physical[f.name] == "INT64" else TimestampType()
-        for f in arrow
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ns = [f for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
+    nanos = {
+        f.name: TimestampType() if f.type.tz else TimestampNTZType()
+        for f in ns
+        if physical[f.name] == "INT64"
     }
+    ns_type = {f.name: LongType() if f.name in nanos else TimestampType() for f in ns}
     schema = StructType(
         [
             StructField(f.name, ns_type.get(f.name, _nullable(f.dataType)))
             for f in from_arrow_schema(arrow, prefer_timestamp_ntz=True)
         ]
     )
-    return schema, tuple(c for c, t in ns_type.items() if t == LongType())
+    return schema, nanos
+
+
+def micros_from_nanos(df: DataFrame, nanos: dict[str, DataType]) -> DataFrame:
+    """``df`` with each raw int64 nanos column of ``nanos`` as a µs
+    timestamp of the type ``nanos`` gives it, truncating the sub-µs part
+    (as DuckDB presents a ns timestamp). No session time zone enters."""
+    if not nanos:
+        return df
+
+    def micros(c: str, t: DataType) -> Column:
+        # integer `div`: a double division would round at 1e18 magnitudes
+        us = f"`{c}` div 1000"
+        if t == TimestampType():
+            return F.timestamp_micros(F.expr(us))
+        return F.expr(f"timestampadd(MICROSECOND, {us}, TIMESTAMP_NTZ'1970-01-01')")
+
+    return df.withColumns({c: micros(c, t) for c, t in nanos.items()})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
-    schema, ns_cols = footer_schema(path)
+    schema, nanos = footer_schema(path)
     if schema is None:
         raise ValueError(f"no Parquet file to read a schema from in {path}")
-    if ns_cols:
+    if nanos:
         # Parquet TIMESTAMP(NANOS) is unreadable by Spark's converter; read
-        # the raw int64 nanos (legacy conf) and floor-convert to
-        # microseconds — lossless here and matching DuckDB's ns→us
-        # presentation.
+        # the raw int64 nanos (legacy conf) and convert to microseconds.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.schema(schema).parquet(path)
-    if not ns_cols:
-        return df
-    # integer `div` — a double division would round at 1e18 magnitude
-    return df.withColumns(
-        {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
-    )
+    return micros_from_nanos(spark.read.schema(schema).parquet(path), nanos)
 
 
 # Per-session registration cache: loading the 10 tables again (footer

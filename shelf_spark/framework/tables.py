@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
+from ..optimize import write_bucketed
 from . import paths
 from .exceptions import StepDefinitionError
 from .snapshots import Snapshot
@@ -381,14 +382,12 @@ def _exec_sql_step(
             # Bucketed output: hash-partitioned files + catalog metadata, so
             # downstream joins/aggs on the bucket keys plan with zero
             # exchanges (see shelf_spark/optimize.py for the sizing notes).
-            # saveAsTable with an explicit path keeps the data external at
-            # the step's normal output location.
-            writer = df.write.mode("overwrite").bucketBy(
-                bucketing["num_buckets"], *bucketing["keys"]
+            # An explicit path keeps the data external at the step's normal
+            # output location.
+            write_bucketed(
+                df, cname, bucketing["keys"], bucketing["num_buckets"],
+                bucketing.get("sort"), path=str(out),
             )
-            if bucketing.get("sort"):
-                writer = writer.sortBy(*bucketing["sort"])
-            writer.format("parquet").option("path", str(out)).saveAsTable(cname)
         elif incremental:
             # per-write option — no session-wide conf mutation, so concurrent
             # non-incremental builds are unaffected; a full build replaces

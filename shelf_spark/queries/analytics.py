@@ -1241,9 +1241,11 @@ def _sql_bt_iter(k: int) -> str:
     unrolled-iteration discipline. Normalization happens ONCE after the
     last iteration (BT is scale-invariant, so skipping the per-round
     renormalization changes only the running scale, deterministically
-    on both engines)."""
+    on both engines). Each round reads the last one twice, and DuckDB
+    inlines a plain CTE, so unmaterialized rounds re-evaluate ``duel``
+    2^k times (past 9 GB on sf0.1)."""
     return f"""
-    p{k} AS (
+    p{k} AS MATERIALIZED (
       SELECT m.i AS brand,
              round(w.wins /
                    CAST(sum(CAST(round(m.n / (pi.p + pj.p), 9)
@@ -1273,14 +1275,14 @@ def _sql_bt_iter(k: int) -> str:
       WHERE a.q > b.q
     ),
     wmat AS (SELECT wb, lb, count(*) AS w FROM duel GROUP BY 1, 2),
-    m AS (
+    m AS MATERIALIZED (
       SELECT i, j, CAST(sum(n) AS DOUBLE) AS n FROM (
         SELECT wb AS i, lb AS j, w AS n FROM wmat
         UNION ALL
         SELECT lb AS i, wb AS j, w AS n FROM wmat
       ) GROUP BY 1, 2
     ),
-    wtot AS (
+    wtot AS MATERIALIZED (
       SELECT i AS brand, CAST(coalesce(sum(w), 0) AS DOUBLE) AS wins
       FROM m LEFT JOIN wmat ON wmat.wb = m.i AND wmat.lb = m.j
       GROUP BY 1
@@ -1467,9 +1469,11 @@ _MRA_START, _MRA_CONV, _MRA_NULL = "__START__", "__CONV__", "__NULL__"
 def _sql_mra_iter(h: int) -> str:
     """One value-iteration hop for ALL chain variants at once:
     v_h(s) = Σ_t p(s,t)·v_{h-1}(t), 12dp-grid terms summed in DECIMAL;
-    the absorbing CONV row (v = 1) is re-seeded per variant."""
+    the absorbing CONV row (v = 1) is re-seeded per variant. Materialized,
+    like the ``edges_all`` and ``variants`` it reads: DuckDB inlines a
+    plain CTE, so every hop would re-derive them from ``events``."""
     return f"""
-    v{h} AS (
+    v{h} AS MATERIALIZED (
       SELECT e.variant, e.src AS state,
              CAST(sum(CAST(round(e.p * v.v, 12) AS DECIMAL(28,12)))
                   AS DOUBLE) AS v
@@ -1523,11 +1527,11 @@ def _sql_mra_iter(h: int) -> str:
     channels AS (
       SELECT DISTINCT src AS ch FROM probs WHERE src <> '{_MRA_START}'
     ),
-    variants AS (
+    variants AS MATERIALIZED (
       SELECT '__FULL__' AS variant
       UNION ALL SELECT ch FROM channels
     ),
-    edges_all AS (
+    edges_all AS MATERIALIZED (
       SELECT v.variant, p.src, p.dst, p.p
       FROM probs p CROSS JOIN variants v
       WHERE v.variant = '__FULL__'

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window as W
 
 from .pin import pin
 from .registry import query
+from .text import _words
 
 def _spread(df: DataFrame) -> DataFrame:
     """Spread a doc-level relation across tasks before a hot map: local
@@ -32,10 +33,6 @@ def _spread(df: DataFrame) -> DataFrame:
     n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
     return df.repartition(n)
 
-
-def _words() -> Column:
-    """Tokenized `text` (lazy: building a Column needs an active session)."""
-    return F.split(F.col("text"), " ")
 
 #: MinHash config: 16 permutations in 4 bands of 4 rows → catches
 #: Jaccard ≳ 0.5 candidates with good probability.

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import query
+from .text import _doc_words, _sql_doc_words
 
 
 @query(
@@ -239,23 +240,19 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fn_explode_words",
-    oracle="""
+    oracle=f"""
     SELECT word,
            count(*)                              AS n_occurrences,
            CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word
-      FROM documents
-    ) t
+    FROM ({_sql_doc_words()}) t
     GROUP BY word
     """,
 )
 def fn_explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode = the UDTF-shaped operator (one row in → n rows out); at scale
     # this is a narrow map stage, the shuffle only carries (word, doc_id).
-    d = spark.table("documents")
     return (
-        d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("word"))
+        _doc_words(spark)
         .groupBy("word")
         .agg(
             F.count("*").alias("n_occurrences"),

@@ -326,7 +326,8 @@ def mba_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_SQL_GRAPH},
     deg AS ({_sql_degrees("und")}),
     oriented AS ({_SQL_ORIENTED}),
-    tri AS ({_SQL_TRI})
+    -- materialized: read three times below, and DuckDB inlines a plain CTE
+    tri AS MATERIALIZED ({_SQL_TRI})
     SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
     FROM (
       SELECT a AS node FROM tri
@@ -690,11 +691,13 @@ _KCORE_MIN_SUPPORT = 2
 
 def _sql_kcore_round(r: int) -> str:
     """One synchronous peeling round in DuckDB SQL: drop every node whose
-    CURRENT degree is below k, and every edge touching a dropped node."""
+    CURRENT degree is below k, and every edge touching a dropped node.
+    A round reads the last one three times, and DuckDB inlines a plain
+    CTE, so the edges are materialized once per round."""
     return f"""
     keep{r} AS (
       SELECT src FROM e{r - 1} GROUP BY src HAVING count(*) >= {_KCORE_K}
-    ), e{r} AS (
+    ), e{r} AS MATERIALIZED (
       SELECT e.src, e.dst FROM e{r - 1} e
         JOIN keep{r} a ON a.src = e.src
         JOIN keep{r} b ON b.src = e.dst
@@ -723,7 +726,7 @@ def _kcore_degrees(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     oracle=f"""
     WITH {_SQL_GRAPH},
     supp AS ({_sql_support_edges(_KCORE_MIN_SUPPORT)}),
-    e0 AS ({_sql_directed("supp")}),
+    e0 AS MATERIALIZED ({_sql_directed("supp")}),
     {",".join(_sql_kcore_round(r) for r in range(1, _KCORE_ROUNDS + 1))}
     SELECT src AS item, CAST(count(*) AS BIGINT) AS core_degree
     FROM e{_KCORE_ROUNDS}
@@ -897,10 +900,11 @@ def _sql_hits_step(edges_join: str, prev: str, raw: str, out: str) -> str:
     """One HITS half-step as DuckDB CTEs: push the 8dp-grid-quantized
     prev values across the edges (exact DECIMAL sum), then L1-normalize
     and re-round onto the grid — same determinism contract as the
-    PageRank oracle's unrolled iterations."""
+    PageRank oracle's unrolled iterations. ``raw`` is read twice, and
+    DuckDB inlines a plain CTE, so it is materialized once per step."""
     src, dst = ("src", "dst") if edges_join == "fwd" else ("dst", "src")
     return f"""
-    {raw} AS (
+    {raw} AS MATERIALIZED (
       SELECT e.{dst} AS node,
              sum(CAST(floor({prev}.v * 100000000.0 + 0.5)
                  AS DECIMAL(18,0))) AS raw
@@ -952,8 +956,8 @@ def _hits_top(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "graph_hits",
     oracle=f"""
     WITH {_SQL_GRAPH},
-    edges AS (SELECT p1 AS src, p2 AS dst FROM und),
-    a1r AS (
+    edges AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM und),
+    a1r AS MATERIALIZED (
       SELECT dst AS node, CAST(count(*) AS DECIMAL(18,0)) AS raw
       FROM edges GROUP BY dst
     ),
@@ -1095,25 +1099,27 @@ def _bfs_levels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "graph_bfs_distances",
     oracle=f"""
     WITH {_SQL_GRAPH},
-    edges AS ({_sql_directed("und")}),
+    -- materialized: DuckDB inlines a plain CTE, and every later level
+    -- reads each earlier one
+    edges AS MATERIALIZED ({_sql_directed("und")}),
     root AS (SELECT min(src) AS node FROM edges),
     l0 AS (SELECT node FROM root),
-    l1 AS (
+    l1 AS MATERIALIZED (
       SELECT DISTINCT e.dst AS node FROM edges e JOIN l0 ON e.src = l0.node
       WHERE e.dst NOT IN (SELECT node FROM l0)
     ),
-    l2 AS (
+    l2 AS MATERIALIZED (
       SELECT DISTINCT e.dst AS node FROM edges e JOIN l1 ON e.src = l1.node
       WHERE e.dst NOT IN (SELECT node FROM l0)
         AND e.dst NOT IN (SELECT node FROM l1)
     ),
-    l3 AS (
+    l3 AS MATERIALIZED (
       SELECT DISTINCT e.dst AS node FROM edges e JOIN l2 ON e.src = l2.node
       WHERE e.dst NOT IN (SELECT node FROM l0)
         AND e.dst NOT IN (SELECT node FROM l1)
         AND e.dst NOT IN (SELECT node FROM l2)
     ),
-    l4 AS (
+    l4 AS MATERIALIZED (
       SELECT DISTINCT e.dst AS node FROM edges e JOIN l3 ON e.src = l3.node
       WHERE e.dst NOT IN (SELECT node FROM l0)
         AND e.dst NOT IN (SELECT node FROM l1)

@@ -24,14 +24,22 @@ from pyspark.sql.window import Window as W
 from .num import DEC, _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
+from .text import (
+    _bigram_counts,
+    _doc_bigrams,
+    _doc_words,
+    _n_stop,
+    _sql_bigram_counts,
+    _sql_doc_bigrams,
+    _sql_doc_words,
+    _sql_word_counts,
+    _word_counts,
+    _words,
+)
 
 # ---------------------------------------------------------------------------
 # repetition statistics (Gopher-style quality filter)
 # ---------------------------------------------------------------------------
-
-
-def _words() -> Column:
-    return F.split(F.col("text"), " ")
 
 
 @query(
@@ -207,14 +215,12 @@ _VOCAB_TOP_K = 50
 @query(
     "text_vocab_topk",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    )
-    SELECT token,
+    WITH tok AS ({_sql_doc_words()})
+    SELECT word AS token,
            CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
            CAST(count(*) AS BIGINT)               AS tf
     FROM tok
-    GROUP BY token
+    GROUP BY word
     ORDER BY df DESC, tf DESC, token
     LIMIT {_VOCAB_TOP_K}
     """,
@@ -227,11 +233,9 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses each partition to its distinct tokens before the shuffle);
     the final top-k is a TakeOrdered over |vocab| rows, not |corpus|.
     """
-    tok = spark.table("documents").select(
-        "doc_id", F.explode(_words()).alias("token")
-    )
     return (
-        tok.groupBy("token")
+        _doc_words(spark)
+        .groupBy(F.col("word").alias("token"))
         .agg(
             F.countDistinct("doc_id").cast("long").alias("df"),
             F.count("*").cast("long").alias("tf"),
@@ -535,8 +539,6 @@ def filter_quality_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     text never moves. At corpus scale a skewed source partition would
     salt on a quality-bucket prefix; the window state is one partition's
     rank counter either way."""
-    from .text import _n_stop, _words
-
     d = spark.table("documents")
     n_tokens = F.size(_words()).cast("long")
     n_distinct = F.size(F.array_distinct(_words())).cast("long")
@@ -584,26 +586,17 @@ _SQL_PMI = (
 @query(
     "text_pmi_bigrams",
     oracle=f"""
-    WITH arrs AS (
-      SELECT doc_id, string_split(text, ' ') AS arr FROM documents
-    ), tok AS (
-      SELECT unnest(arr) AS w FROM arrs
-    ), uni AS (
-      SELECT w, count(*) AS c FROM tok GROUP BY 1
-    ), pairs AS (
-      SELECT arr[i] AS w1, arr[i + 1] AS w2
-      FROM arrs, LATERAL (SELECT unnest(range(1, len(arr))) AS i) s
-    ), big AS (
-      SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2
+    WITH uni AS ({_sql_word_counts()}
+    ), big AS ({_sql_bigram_counts()}
     ), n AS (
       SELECT (SELECT sum(c) FROM uni) AS n_uni,
-             (SELECT count(*) FROM pairs) AS n_big
+             (SELECT sum(c12) FROM big) AS n_big
     )
     , joined AS (
       SELECT w1, w2, c12, u1.c AS c1, u2.c AS c2, n_uni, n_big
       FROM big
-        JOIN uni u1 ON u1.w = big.w1
-        JOIN uni u2 ON u2.w = big.w2
+        JOIN uni u1 ON u1.word = big.w1
+        JOIN uni u2 ON u2.word = big.w2
         CROSS JOIN n
       WHERE c12 >= {_PMI_MIN_COUNT}
     )
@@ -628,40 +621,14 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     The PMI expression is evaluated with a fixed op order on exact
     integer inputs → identical IEEE doubles on both engines. Final top-k
     is TakeOrderedAndProject, never a global sort."""
-    arrs = spark.table("documents").select(
-        "doc_id", F.split("text", " ").alias("arr")
-    )
-    big = (
-        # size >= 2 guard: for a 1-token doc sequence(0, -1) would yield the
-        # DESCENDING array [0, -1] and emit two spurious null-word bigrams
-        # the oracle never produces (latent on fixtures with >=10-token docs).
-        arrs.filter(F.size("arr") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("arr") - 2),
-                    lambda i: F.struct(
-                        F.col("arr")[i].alias("w1"),
-                        F.col("arr")[i + 1].alias("w2"),
-                    ),
-                )
-            ).alias("bg")
-        )
-        .select("bg.w1", "bg.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-    )
-    uni = (
-        arrs.select(F.explode("arr").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-    )
+    big = _bigram_counts(spark)
+    uni = _word_counts(spark)
     n_uni = uni.agg(F.sum("c").alias("n_uni"))
     n_big = big.agg(F.sum("c12").alias("n_big"))
     return (
         big.filter(F.col("c12") >= _PMI_MIN_COUNT)
-        .join(uni.select(F.col("w").alias("w1"), F.col("c").alias("c1")), "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("c").alias("c2")), "w2")
+        .join(uni.select(F.col("word").alias("w1"), F.col("c").alias("c1")), "w1")
+        .join(uni.select(F.col("word").alias("w2"), F.col("c").alias("c2")), "w2")
         .crossJoin(F.broadcast(n_uni))
         .crossJoin(F.broadcast(n_big))
         .select(
@@ -1136,21 +1103,19 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_feature_hashing",
-    oracle="""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS w FROM documents
-    ),
+    oracle=f"""
+    WITH tok AS ({_sql_doc_words()}),
     hashed AS (
-      SELECT substr(sha256(w), 1, 1) AS bucket,
-             CASE WHEN substr(sha256(w), 2, 1) < '8' THEN 1 ELSE -1 END
+      SELECT substr(sha256(word), 1, 1) AS bucket,
+             CASE WHEN substr(sha256(word), 2, 1) < '8' THEN 1 ELSE -1 END
                AS sign,
-             w
+             word
       FROM tok
     )
     SELECT bucket,
            CAST(count(*) AS BIGINT) AS n_tokens,
            CAST(sum(sign) AS BIGINT) AS signed_sum,
-           CAST(count(DISTINCT w) AS BIGINT) AS n_distinct_tokens
+           CAST(count(DISTINCT word) AS BIGINT) AS n_distinct_tokens
     FROM hashed GROUP BY bucket ORDER BY bucket
     """,
 )
@@ -1168,22 +1133,18 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bucket domain (the distinct-token count shuffles (bucket, token)
     pairs — vocabulary-bounded). Unbounded-vocabulary pathologies are
     exactly what the fixed bucket space removes."""
-    sha = F.sha2(F.col("w"), 256)
-    hashed = (
-        spark.table("documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
-        .select(
-            F.substring(sha, 1, 1).alias("bucket"),
-            F.when(F.substring(sha, 2, 1) < "8", 1).otherwise(-1).alias("sign"),
-            "w",
-        )
+    sha = F.sha2(F.col("word"), 256)
+    hashed = _doc_words(spark).select(
+        F.substring(sha, 1, 1).alias("bucket"),
+        F.when(F.substring(sha, 2, 1) < "8", 1).otherwise(-1).alias("sign"),
+        "word",
     )
     return (
         hashed.groupBy("bucket")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
             F.sum("sign").cast("long").alias("signed_sum"),
-            F.countDistinct("w").cast("long").alias("n_distinct_tokens"),
+            F.countDistinct("word").cast("long").alias("n_distinct_tokens"),
         )
         .orderBy("bucket")
     )
@@ -1391,14 +1352,7 @@ _SQL_LLR = (
 @query(
     "text_collocation_llr",
     oracle=f"""
-    WITH arrs AS (
-      SELECT doc_id, string_split(text, ' ') AS arr FROM documents
-      WHERE len(string_split(text, ' ')) >= 2
-    ), pairs AS (
-      SELECT arr[i] AS w1, arr[i + 1] AS w2
-      FROM arrs, LATERAL (SELECT unnest(range(1, len(arr))) AS i) s
-    ), big AS (
-      SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2
+    WITH big AS ({_sql_bigram_counts()}
     ), rowm AS (SELECT w1, sum(c12) AS c1 FROM big GROUP BY 1),
     colm AS (SELECT w2, sum(c12) AS c2 FROM big GROUP BY 1),
     n AS (SELECT sum(c12) AS n_big FROM big),
@@ -1432,27 +1386,8 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared SQL text on exact integer counts (xlogx terms in one fixed
     per-row tree, no cross-row FP sums), so both engines produce
     identical IEEE doubles."""
-    arrs = spark.table("documents").select(
-        "doc_id", F.split("text", " ").alias("arr")
-    )
-    big = (
-        arrs.filter(F.size("arr") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("arr") - 2),
-                    lambda i: F.struct(
-                        F.col("arr")[i].alias("w1"),
-                        F.col("arr")[i + 1].alias("w2"),
-                    ),
-                )
-            ).alias("bg")
-        )
-        .select("bg.w1", "bg.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-        .transform(pin, "reuse")  # feeds margins AND the scored join
-    )
+    # feeds margins AND the scored join
+    big = _bigram_counts(spark).transform(pin, "reuse")
     rowm = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     colm = big.groupBy("w2").agg(F.sum("c12").alias("c2"))
     n = big.agg(F.sum("c12").alias("n_big"))
@@ -1922,10 +1857,7 @@ _ZIPF_ICEPT = (
 @query(
     "text_zipf_fit",
     oracle=f"""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS w FROM documents
-    ), vocab AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY w
+    WITH vocab AS ({_sql_word_counts()}
     ), cls AS (
       SELECT c, CAST(count(*) AS BIGINT) AS t FROM vocab GROUP BY c
     ), tot AS (SELECT CAST(sum(t) AS BIGINT) AS tt FROM cls),
@@ -1981,11 +1913,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the exact moments."""
     from .prefix import attach_prefix_sums
 
-    tok = spark.table("documents").select(
-        F.explode(F.split("text", " ")).alias("w")
-    )
-    vocab = tok.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-    cls = vocab.groupBy("c").agg(F.count("*").cast("long").alias("t"))
+    cls = _word_counts(spark).groupBy("c").agg(F.count("*").cast("long").alias("t"))
     cum = attach_prefix_sums(cls, ["c"], ["t"])
     tot = cls.agg(F.sum("t").cast("long").alias("tt"))
     gx = _round_ieee(
@@ -2032,18 +1960,13 @@ _BLM_TOP = 20
 @query(
     "text_bigram_lm_perplexity",
     oracle=f"""
-    WITH arrs AS (
-      SELECT doc_id, string_split(text, ' ') AS arr FROM documents
-    ), pairs AS (
-      SELECT doc_id, arr[i] AS w1, arr[i + 1] AS w2
-      FROM arrs, LATERAL (SELECT unnest(range(1, len(arr))) AS i) s
-    ), big AS (
-      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM pairs GROUP BY 1, 2
+    WITH pairs AS ({_sql_doc_bigrams()}
+    ), big AS ({_sql_bigram_counts()}
     ), firsts AS (
       SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM big GROUP BY 1
     ), vv AS (
-      SELECT CAST(count(DISTINCT unnest.w) AS BIGINT) AS v
-      FROM (SELECT unnest(arr) AS w FROM arrs) AS unnest(w)
+      SELECT CAST(count(DISTINCT word) AS BIGINT) AS v
+      FROM ({_sql_doc_words()})
     ), lp AS (
       SELECT w1, w2,
              CAST({_sql_round_ieee(
@@ -2082,31 +2005,10 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sums are exact, so cross-engine agreement survives any
     aggregation order; the final per-doc division is one IEEE op.
     TakeOrdered bounds the output."""
-    arrs = spark.table("documents").select(
-        "doc_id", F.split("text", " ").alias("arr")
-    )
-    pairs = (
-        arrs.filter(F.size("arr") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("arr") - 2),
-                    lambda i: F.struct(
-                        F.col("arr")[i].alias("w1"),
-                        F.col("arr")[i + 1].alias("w2"),
-                    ),
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "bg.w1", "bg.w2")
-    )
-    big = pairs.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c12"))
+    pairs = _doc_bigrams(spark)
+    big = _bigram_counts(spark)
     firsts = big.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
-    vv = (
-        arrs.select(F.explode("arr").alias("w"))
-        .agg(F.countDistinct("w").cast("long").alias("v"))
-    )
+    vv = _doc_words(spark).agg(F.countDistinct("word").cast("long").alias("v"))
     micro = (
         _round_ieee(
             F.log(
@@ -2157,9 +2059,7 @@ _HEAPS_SLOPE = (
     ), doctok AS (
       SELECT doc_id, CAST(len(arr) AS BIGINT) AS ntok FROM arrs
     ), firstseen AS (
-      SELECT w, min(doc_id) AS fs FROM (
-        SELECT doc_id, unnest(arr) AS w FROM arrs
-      ) GROUP BY w
+      SELECT word, min(doc_id) AS fs FROM ({_sql_doc_words()}) GROUP BY word
     ), mx AS (SELECT max(doc_id) AS mid FROM doctok),
     grid AS (
       SELECT k, CAST((SELECT mid FROM mx) * k // 10 AS BIGINT) AS cutoff
@@ -2211,11 +2111,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.split("text", " ").alias("arr")
     )
     doctok = arrs.select("doc_id", F.size("arr").cast("long").alias("ntok"))
-    firstseen = (
-        arrs.select("doc_id", F.explode("arr").alias("w"))
-        .groupBy("w")
-        .agg(F.min("doc_id").alias("fs"))
-    )
+    firstseen = _doc_words(spark).groupBy("word").agg(F.min("doc_id").alias("fs"))
     mx = doctok.agg(F.max("doc_id").alias("mid"))
     grid = (
         spark.range(1, 11)
@@ -2359,13 +2255,8 @@ _KN_LOGP = (
 @query(
     "text_kneser_ney_perplexity",
     oracle=f"""
-    WITH arrs AS (
-      SELECT doc_id, string_split(text, ' ') AS arr FROM documents
-    ), pairs AS (
-      SELECT doc_id, arr[i] AS w1, arr[i + 1] AS w2
-      FROM arrs, LATERAL (SELECT unnest(range(1, len(arr))) AS i) s
-    ), big AS (
-      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM pairs GROUP BY 1, 2
+    WITH pairs AS ({_sql_doc_bigrams()}
+    ), big AS ({_sql_bigram_counts()}
     ), firsts AS (
       SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
              CAST(count(*) AS BIGINT) AS nf
@@ -2410,28 +2301,9 @@ def text_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals+fanouts, continuation fanins, one type-count scalar) — no
     extra corpus pass vs add-½; scoring is the same single
     (w₁,w₂)-keyed hash join."""
-    arrs = spark.table("documents").select(
-        "doc_id", F.split("text", " ").alias("arr")
-    )
-    pairs = (
-        arrs.filter(F.size("arr") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("arr") - 2),
-                    lambda i: F.struct(
-                        F.col("arr")[i].alias("w1"),
-                        F.col("arr")[i + 1].alias("w2"),
-                    ),
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "bg.w1", "bg.w2")
-    )
-    big = pairs.groupBy("w1", "w2").agg(
-        F.count("*").cast("long").alias("c12")
-    ).transform(pin, "reuse")  # LM base relation: consumed by 4 rollups + join
+    pairs = _doc_bigrams(spark)
+    # LM base relation: consumed by 4 rollups + join
+    big = _bigram_counts(spark).transform(pin, "reuse")
     firsts = big.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count("*").cast("long").alias("nf"),

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
+from .text import _doc_words, _sql_doc_words, _sql_word_counts, _word_counts
 
 #: Bucket width for the interval join: one week of seconds.
 _BUCKET_S = 7 * 86400
@@ -121,12 +122,10 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_lm_score",
     oracle="""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-    ), vocab AS (
-      SELECT word, count(*) AS cnt FROM tok GROUP BY word
+    WITH tok AS ({tok}
+    ), vocab AS ({vocab}
     ), total AS (
-      SELECT sum(cnt) AS n_total FROM vocab
+      SELECT sum(c) AS n_total FROM vocab
     ), scored AS (
       SELECT doc_id,
              {lp} AS lp
@@ -139,7 +138,9 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id
     ORDER BY doc_id
     """.format(
-        lp=_sql_round_ieee("ln(CAST(cnt AS DOUBLE) / CAST(n_total AS DOUBLE))", 6),
+        tok=_sql_doc_words(),
+        vocab=_sql_word_counts(),
+        lp=_sql_round_ieee("ln(CAST(c AS DOUBLE) / CAST(n_total AS DOUBLE))", 6),
         mean=_sql_round_ieee(
             "CAST(sum(CAST(lp AS DECIMAL(18,6))) AS DOUBLE) / count(*)", 6
         ),
@@ -154,13 +155,11 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of identical values. A real neural LM would replace the
     vocab join with an Arrow-batched pandas UDF (udfs.py tier) — the
     pipeline shape is identical."""
-    tok = spark.table("documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    )
-    vocab = tok.groupBy("word").agg(F.count("*").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").alias("n_total"))
+    tok = _doc_words(spark)
+    vocab = _word_counts(spark)
+    total = vocab.agg(F.sum("c").alias("n_total"))
     lp = _round_ieee(
-        F.log(F.col("cnt").cast("double") / F.col("n_total").cast("double")), 6
+        F.log(F.col("c").cast("double") / F.col("n_total").cast("double")), 6
     )
     scored = tok.join(vocab, "word").crossJoin(F.broadcast(total)).select(
         "doc_id", lp.alias("lp")

@@ -33,6 +33,7 @@ from pyspark.sql.window import Window as W
 from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
+from .text import _doc_words, _sql_doc_words
 
 #: Fixed-point carrier for summing per-term scores exactly.
 _DEC6 = "decimal(18,6)"
@@ -45,17 +46,10 @@ _K1, _B = 1.2, 0.75
 _QUERY_TERMS = ("window", "broadcast", "slow")
 
 
-def _tokens(spark: SparkSession) -> DataFrame:
-    """(doc_id, word) pairs — narrow explode, pipelines with the scan."""
-    d = spark.table("documents")
-    return d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-
-
 @query(
     "text_tfidf_topk",
     oracle="""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+    WITH tok AS ({tok}
     ), tf AS (
       SELECT doc_id, word, count(*) AS tf FROM tok GROUP BY doc_id, word
     ), df AS (
@@ -75,6 +69,7 @@ def _tokens(spark: SparkSession) -> DataFrame:
     ) WHERE rn <= 3
     ORDER BY doc_id, tfidf DESC, word
     """.format(
+        tok=_sql_doc_words(),
         score=_sql_round_ieee(
             "CAST(tf AS DOUBLE) * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE))", 6
         )
@@ -91,8 +86,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary; then the ranking window re-partitions by doc_id.
     N is a 1-row crossJoin broadcast. idf = ln(N/df) on exact ints →
     identical IEEE doubles on both engines."""
-    tok = _tokens(spark)
-    tf = tok.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    tf = _doc_words(spark).groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     n = spark.table("documents").agg(F.count("*").alias("n_docs"))
     scored = (
         tf.withColumn("df", F.count("*").over(W.partitionBy("word")))
@@ -139,8 +133,7 @@ def _bm25_term_score() -> Column:
 @query(
     "text_bm25_rank",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+    WITH tok AS ({_sql_doc_words()}
     ), dl AS (
       SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl FROM documents
     ), corpus AS (
@@ -183,7 +176,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; per-term partials round onto a 6-decimal grid, then the
     per-doc sum runs exactly in DECIMAL — order-independent."""
     d = spark.table("documents")
-    tok = _tokens(spark).filter(F.col("word").isin(*_QUERY_TERMS))
+    tok = _doc_words(spark).filter(F.col("word").isin(*_QUERY_TERMS))
     dl = d.select("doc_id", F.size(F.split("text", " ")).cast("long").alias("dl"))
     corpus = dl.agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
     tf = tok.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
@@ -543,8 +536,7 @@ _RRF_QVEC = 0
 @query(
     "ann_hybrid_rrf",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+    WITH tok AS ({_sql_doc_words()}
     ), dl AS (
       SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
       FROM documents
@@ -630,7 +622,7 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .vectors import _as_double, _dot, _norm
 
     d = spark.table("documents")
-    tok = _tokens(spark).filter(F.col("word").isin(*_QUERY_TERMS))
+    tok = _doc_words(spark).filter(F.col("word").isin(*_QUERY_TERMS))
     dl = d.select("doc_id", F.size(F.split("text", " ")).cast("long").alias("dl"))
     corpus = dl.agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
     tf = tok.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))

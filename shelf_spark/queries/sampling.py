@@ -49,6 +49,7 @@ from .dedup import JACCARD_THRESHOLD, jaccard_pairs_exact
 from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
+from .text import _sql_word_counts, _word_counts
 
 #: 4-hex-digit prefix of sha256 compared against these bounds.
 #: P(keep) = int(bound, 16) / 16^4.
@@ -1426,22 +1427,19 @@ def dedup_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sample_negative_table",
     oracle=f"""
-    WITH tok AS (
-      SELECT unnest(string_split(text, ' ')) AS w FROM documents
-    ), vocab AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY w
+    WITH vocab AS ({_sql_word_counts()}
     ), powed AS (
-      SELECT w, c,
+      SELECT word, c,
              CAST({_sql_round_ieee("pow(CAST(c AS DOUBLE), 0.75)", 6)}
                   * 1000000.0 AS DECIMAL(38,0)) AS micro
       FROM vocab
     ), cum AS (
-      SELECT w, c, micro,
-             sum(micro) OVER (ORDER BY w
+      SELECT word, c, micro,
+             sum(micro) OVER (ORDER BY word
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi
       FROM powed
     ), tot AS (SELECT sum(micro) AS t FROM powed)
-    SELECT w AS word, c AS n_occurrences,
+    SELECT word, c AS n_occurrences,
            CAST(hi - micro AS BIGINT) AS range_lo,
            CAST(hi AS BIGINT) AS range_hi,
            {_sql_round_ieee(
@@ -1465,21 +1463,17 @@ def sample_negative_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized prefix."""
     from .prefix import attach_prefix_sums
 
-    tok = spark.table("documents").select(
-        F.explode(F.split("text", " ")).alias("w")
-    )
-    vocab = tok.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-    powed = vocab.withColumn(
+    powed = _word_counts(spark).withColumn(
         "micro",
         (_round_ieee(F.pow(F.col("c").cast("double"), 0.75), 6) * 1000000.0)
         .cast("decimal(38,0)"),
     )
-    cum = attach_prefix_sums(powed, ["w"], ["micro"])
+    cum = attach_prefix_sums(powed, ["word"], ["micro"])
     tot = powed.agg(F.sum("micro").alias("t"))
     return (
         cum.crossJoin(F.broadcast(tot))
         .select(
-            F.col("w").alias("word"),
+            "word",
             F.col("c").alias("n_occurrences"),
             (F.col("micro_upto") - F.col("micro")).cast("long").alias("range_lo"),
             F.col("micro_upto").cast("long").alias("range_hi"),

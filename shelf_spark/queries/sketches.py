@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .num import sane_ts, sql_sane_ts
 from .registry import query
+from .text import _doc_words, _sql_doc_words
 
 #: Heavy-hitter threshold: report tokens with count > N / _HH_K.
 _HH_K = 30
@@ -74,9 +75,7 @@ def _mg_candidates(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 @query(
     "agg_heavy_hitters",
     oracle=f"""
-    WITH toks AS (
-      SELECT unnest(string_split(text, ' ')) AS token FROM documents
-    ),
+    WITH toks AS (SELECT word AS token FROM ({_sql_doc_words()})),
     tot AS (SELECT count(*) AS n FROM toks)
     SELECT token, CAST(count(*) AS BIGINT) AS cnt
     FROM toks
@@ -90,9 +89,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (map-only, bounded state), broadcast-semi-join filter,
     then an exact recount of candidates only. See module docstring for
     the completeness proof."""
-    toks = spark.table("documents").select(
-        F.explode(F.split("text", " ")).alias("token")
-    )
+    toks = _doc_words(spark).select(F.col("word").alias("token"))
     candidates = (
         toks.mapInPandas(_mg_candidates, "token string").distinct()
     )

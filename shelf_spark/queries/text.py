@@ -9,6 +9,30 @@ at 100 TB these are narrow map-only stages that pipeline with the scan.
 Cross-engine determinism: token counts are integers; ratios are single
 IEEE divisions of identical integers; composite scores use one fixed
 left-associative expression shape on both sides.
+
+Document-token base relations. The word, word-count and bigram relations
+of the text, retrieval, sampling and pipeline operators come from four
+relations defined once here, each as a Spark builder ``_x(spark)`` next to
+its DuckDB twin ``_sql_x()`` (stats.py's paired style;
+tests/test_text_relations.py holds them equal row for row):
+
+- W ``_doc_words``: ``doc_id, word``, one row per whitespace token.
+- V ``_word_counts``: ``word, c`` (BIGINT), the corpus count of each word
+  of W.
+- P ``_doc_bigrams``: ``doc_id, w1, w2``, the adjacent token pairs inside
+  each document.
+- B ``_bigram_counts``: ``w1, w2, c12`` (BIGINT), the corpus count of each
+  pair of P.
+
+Rules. A token is an element of ``split(text, ' ')`` on both engines,
+with nothing trimmed, case-folded or dropped: an empty text is one empty
+token, n spaces between two words leave n − 1 empty tokens (a leading or
+trailing space one more), and a NULL text gives no row. A document of
+fewer than two tokens has no bigram. Builders return unpinned relations;
+each caller pins at its call site, and a caller that publishes a token
+under another name aliases ``word`` itself. Operators that
+need another key beside the token (a language, a source, a position) or
+read a relation other than ``documents`` keep their own explode.
 """
 
 from __future__ import annotations
@@ -31,6 +55,73 @@ def _words() -> Column:
 
 def _n_stop(words: Column) -> Column:
     return F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
+
+
+def _doc_words(spark: SparkSession) -> DataFrame:
+    """W: ``doc_id, word``."""
+    return spark.table("documents").select(
+        "doc_id", F.explode(_words()).alias("word")
+    )
+
+
+def _sql_doc_words() -> str:
+    return "SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents"
+
+
+def _word_counts(spark: SparkSession) -> DataFrame:
+    """V: ``word, c``."""
+    return _doc_words(spark).groupBy("word").agg(
+        F.count("*").cast("long").alias("c")
+    )
+
+
+def _sql_word_counts() -> str:
+    return f"""
+      SELECT word, CAST(count(*) AS BIGINT) AS c
+      FROM ({_sql_doc_words()}) GROUP BY word"""
+
+
+def _doc_bigrams(spark: SparkSession) -> DataFrame:
+    """P: ``doc_id, w1, w2``."""
+    arr = F.col("arr")
+    return (
+        spark.table("documents")
+        .select("doc_id", _words().alias("arr"))
+        # size >= 2 guard: for a 1-token doc sequence(0, -1) would yield the
+        # DESCENDING array [0, -1] and emit two spurious null-word bigrams
+        # the oracle never produces (latent on fixtures with >=10-token docs).
+        .filter(F.size(arr) >= 2)
+        .select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), F.size(arr) - 2),
+                    lambda i: F.struct(arr[i].alias("w1"), arr[i + 1].alias("w2")),
+                )
+            ).alias("bg"),
+        )
+        .select("doc_id", "bg.w1", "bg.w2")
+    )
+
+
+def _sql_doc_bigrams() -> str:
+    return """
+      SELECT doc_id, arr[i] AS w1, arr[i + 1] AS w2
+      FROM (SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
+           LATERAL (SELECT unnest(range(1, len(arr))) AS i) s"""
+
+
+def _bigram_counts(spark: SparkSession) -> DataFrame:
+    """B: ``w1, w2, c12``."""
+    return _doc_bigrams(spark).groupBy("w1", "w2").agg(
+        F.count("*").cast("long").alias("c12")
+    )
+
+
+def _sql_bigram_counts() -> str:
+    return f"""
+      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
+      FROM ({_sql_doc_bigrams()}) GROUP BY w1, w2"""
 
 
 @query(
@@ -239,17 +330,14 @@ _BPE_TOP = 20
 @query(
     "text_bpe_pair_counts",
     oracle=f"""
-    WITH vocab AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS wc
-      FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
-      GROUP BY w
+    WITH vocab AS ({_sql_word_counts()}
     ), pairs AS (
-      SELECT substr(w, i, 2) AS pair, wc
-      FROM (SELECT w, wc, unnest(generate_series(1, len(w) - 1)) AS i
-            FROM vocab WHERE len(w) >= 2) t
+      SELECT substr(word, i, 2) AS pair, c
+      FROM (SELECT word, c, unnest(generate_series(1, len(word) - 1)) AS i
+            FROM vocab WHERE len(word) >= 2) t
     )
     SELECT pair,
-           CAST(sum(wc) AS BIGINT) AS n_occurrences,
+           CAST(sum(c) AS BIGINT) AS n_occurrences,
            CAST(count(*) AS BIGINT) AS n_vocab_words
     FROM pairs
     GROUP BY pair
@@ -270,20 +358,18 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (word, count), sub-linear in corpus size), and the
     char-pair explosion is vocab-sized, not corpus-sized. Top-k is
     TakeOrderedAndProject on the pair-domain-bounded aggregate."""
-    words = spark.table("documents").select(
-        F.explode(F.split("text", " ")).alias("w")
-    )
-    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("wc"))
-    pairs = vocab.filter(F.length("w") >= 2).select(
+    pairs = _word_counts(spark).filter(F.length("word") >= 2).select(
         F.explode(
-            F.expr("transform(sequence(1, length(w) - 1), i -> substr(w, i, 2))")
+            F.expr(
+                "transform(sequence(1, length(word) - 1), i -> substr(word, i, 2))"
+            )
         ).alias("pair"),
-        "wc",
+        "c",
     )
     return (
         pairs.groupBy("pair")
         .agg(
-            F.sum("wc").cast("long").alias("n_occurrences"),
+            F.sum("c").cast("long").alias("n_occurrences"),
             F.count("*").cast("long").alias("n_vocab_words"),
         )
         .orderBy(F.desc("n_occurrences"), "pair")

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..data import footer_schema
+from ..data import footer_schema, micros_from_nanos
 from ..queries.num import dsum_i
 
 
@@ -60,11 +60,11 @@ def _parquet_stream(
 ) -> DataFrame:
     """File-stream source over a parquet file or ingest directory, pinned
     to its footer schema; int64 TIMESTAMP(NANOS) columns become µs
-    timestamps, as in ``load_table``."""
-    schema, ns_cols = footer_schema(path)
+    timestamps of the type ``load_table`` gives them."""
+    schema, nanos = footer_schema(path)
     if schema is None:
         raise ValueError(f"no Parquet file in {path} to take a stream schema from")
-    if ns_cols:
+    if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
@@ -74,13 +74,7 @@ def _parquet_stream(
         # file path fails its basePath check — rewrite as a 1-file glob
         d, name = os.path.split(path)
         path = os.path.join(d, "{%s}" % name)
-    raw = reader.load(path)
-    if not ns_cols:
-        return raw
-    # integer `div`: double division would round at 1e18 magnitudes
-    return raw.withColumns(
-        {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
-    )
+    return micros_from_nanos(reader.load(path), nanos)
 
 
 def events_stream(
@@ -353,9 +347,7 @@ def user_running_totals(stream: DataFrame, timeout_minutes: int = 0) -> DataFram
 #: "r10 streaming state sizing") with identical results. On a real
 #: cluster size this to target-state-volume / healthy-store-size
 #: (RocksDB: a few GB per store) BEFORE the first checkpoint.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SHELF_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 
 @contextlib.contextmanager

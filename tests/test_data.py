@@ -46,7 +46,7 @@ def test_footer_schema_of_spark_written_file(spark, tmp_path):
     footer = pq.ParquetFile(sorted((tmp_path / "int96").glob("*.parquet"))[0])
     assert footer.schema.column(1).physical_type == "INT96"
     schema, nanos = footer_schema(out)
-    assert nanos == () and schema["ts"].dataType.typeName() == "timestamp"
+    assert nanos == {} and schema["ts"].dataType.typeName() == "timestamp"
     _assert_spark_infers(spark, out)
 
 
@@ -70,20 +70,34 @@ def test_register_views_submits_no_job(spark, tmp_path):
     assert spark.table("orders").count() == load_table(spark, SF_SMALL, "orders").count()
 
 
+def _events_with_ts(tmp_path, unit: str, tz: str | None) -> str:
+    """A copy of the corpus events whose ``ts`` is stored as ``unit``,
+    with isAdjustedToUTC set when ``tz`` is; returns its sf dir."""
+    src = pq.read_table(EVENTS)
+    ts = src.column("ts").cast(pa.timestamp(unit, tz=tz))
+    d = tmp_path / f"{unit}-{tz}"
+    d.mkdir()
+    pq.write_table(src.set_column(src.schema.get_field_index("ts"), "ts", ts), d / "events.parquet")
+    return str(d)
+
+
 def test_load_table_reads_nanos_like_micros(spark, tmp_path):
     """An events file storing ``ts`` as int64 TIMESTAMP(NANOS) loads to the
-    same rows as the µs file it was cast from. The nanos column reads as
-    ``timestamp``, the µs NTZ one as ``timestamp_ntz``; the session time
-    zone is UTC, so the cast between them keeps the value."""
-    src = pq.read_table(EVENTS)
-    ts = src.column("ts").cast(pa.timestamp("ns"))
-    ns = src.set_column(src.schema.get_field_index("ts"), "ts", ts)
-    pq.write_table(ns, tmp_path / "events.parquet")
-    got = load_table(spark, str(tmp_path), "events")
-    assert got.schema["ts"].dataType.typeName() == "timestamp"
-    got = got.withColumn("ts", got["ts"].cast("timestamp_ntz"))
+    same rows and types as the µs NTZ corpus file it was cast from."""
+    got = load_table(spark, _events_with_ts(tmp_path, "ns", None), "events")
     want = load_table(spark, SF_SMALL, "events")
     assert got.schema == want.schema
+    assert got.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_load_table_reads_utc_nanos_like_utc_micros(spark, tmp_path):
+    """With isAdjustedToUTC set, a nanos ``ts`` loads as ``timestamp``,
+    to the same rows as the µs file with the flag."""
+    got = load_table(spark, _events_with_ts(tmp_path, "ns", "UTC"), "events")
+    want = load_table(spark, _events_with_ts(tmp_path, "us", "UTC"), "events")
+    assert got.schema == want.schema
+    assert got.schema["ts"].dataType.typeName() == "timestamp"
     assert sorted(got.collect()) == sorted(want.collect())
 
 

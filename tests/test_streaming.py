@@ -228,7 +228,7 @@ def test_empty_dir_probe_not_cached(spark, tmp_path):
     that land later — here int64-nanos — must be re-probed and read."""
     d = tmp_path / "ingest"
     d.mkdir()
-    assert footer_schema(str(d)) == (None, ())
+    assert footer_schema(str(d)) == (None, {})
 
     import pyarrow as pa
     import pyarrow.parquet as pq

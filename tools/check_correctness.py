@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import re
 import sys
 import time
@@ -121,20 +122,47 @@ def _shard(names: list[str], i: int, n: int) -> list[str]:
 
 #: Lines of a dead worker's stderr echoed into the merged report.
 _STDERR_TAIL = 15
+#: The line a worker writes to stderr after each query.
+_RSS_RE = re.compile(r"# rss after (\S+): python (\d+) MB, jvm (\d+) MB$")
 
 
-def duckdb_connect() -> duckdb.DuckDBPyConnection:
+def _rss_mb(pid: int | str = "self") -> int:
+    """The resident set size of process ``pid`` in MB (Linux ``/proc``);
+    0 once it has exited, as a JVM the kernel killed has."""
+    try:
+        with open(f"/proc/{pid}/statm") as f:
+            pages = int(f.read().split()[1])
+    except FileNotFoundError:
+        return 0
+    return pages * os.sysconf("SC_PAGE_SIZE") >> 20
+
+
+def _memory_share_mb(workers: int) -> int:
+    """A third of physical memory split over ``workers`` gate processes:
+    each one's DuckDB limit and, unless set, its JVM heap. The last third
+    is left to JVM overheads and Python. With DuckDB's default limit (80 %
+    of physical memory per process) and 8 GB heaps, three workers on a
+    16 GB machine outgrew it on sf0.1 and the kernel killed one."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return phys_mb // (3 * workers)
+
+
+def duckdb_connect(workers: int = 1) -> duckdb.DuckDBPyConnection:
     """An in-memory DuckDB connection that spills to a temp directory of
-    its own, removed at exit. DuckDB's default is ``.tmp/`` under the
-    working directory, which ``--workers`` processes share, so one worker
-    could delete another's spill file mid-query."""
+    its own, removed at exit, limited to its share of memory. DuckDB's
+    default is ``.tmp/`` under the working directory, which ``--workers``
+    processes share, so one worker could delete another's spill file
+    mid-query."""
     import atexit
     import shutil
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="check-correctness-duckdb-")
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    con = duckdb.connect(config={"temp_directory": tmp})
+    con = duckdb.connect(config={
+        "temp_directory": tmp,
+        "memory_limit": f"{_memory_share_mb(workers)}MB",
+    })
     atexit.register(con.close)  # runs first: atexit is last-in, first-out
     return con
 
@@ -151,7 +179,6 @@ def _run_workers(args) -> int:
     the denominator unnoticed.
     """
     import contextlib
-    import os
     import subprocess
     import tempfile
 
@@ -160,6 +187,7 @@ def _run_workers(args) -> int:
     expected = sum(len(_shard(names, i, n)) for i in range(n))
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(max(4, 32 // n))
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{_memory_share_mb(n)}m")
     tot = [0, 0, 0, 0, 0]
     failures: list[str] = []
     dead: list[str] = []
@@ -191,10 +219,16 @@ def _run_workers(args) -> int:
                     failures += line.split()[1:]
                 elif line and not line.startswith("#"):
                     print(f"[w{i}] {line}")
+            err.seek(0)
+            tail = err.read().decode(errors="replace").splitlines()
+            rss = [m for m in map(_RSS_RE.match, tail) if m]
+            if rss:
+                py = max(rss, key=lambda m: int(m[2]))
+                jvm = max(rss, key=lambda m: int(m[3]))
+                print(f"[w{i}] largest rss: python {py[2]} MB after {py[1]}, "
+                      f"jvm {jvm[3]} MB after {jvm[1]}")
             if not summarized:
                 dead.append(f"w{i}")
-                err.seek(0)
-                tail = err.read().decode(errors="replace").splitlines()
                 print(f"[w{i}] DEAD: exited {p.returncode} without a summary; "
                       "stderr tail:")
                 for line in tail[-_STDERR_TAIL:]:
@@ -242,8 +276,6 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.override:
-        import os
-
         existing = os.environ.get("SHELF_SPARK_CONF_OVERRIDES", "")
         parts = ([existing] if existing else []) + args.override
         os.environ["SHELF_SPARK_CONF_OVERRIDES"] = ";".join(parts)
@@ -253,11 +285,12 @@ def main() -> int:
         return _run_workers(args)
 
     names = _selected(args.pattern, args.changed_since)
-    if args.shard:
-        names = _shard(names, *(int(x) for x in args.shard.split("/")))
+    shard, workers = (int(x) for x in (args.shard or "0/1").split("/"))
+    names = _shard(names, shard, workers)
 
     spark = get_spark("check-correctness")
-    con = duckdb_connect()
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    con = duckdb_connect(workers)
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(args.sf, t)}')"
@@ -270,56 +303,62 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            sdf = QUERIES[name](spark, args.sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {exc}")
-            failures.append(name)
-            n_fail += 1
-            continue
-        if name not in ORACLES:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            n_rows_only += 1
-            continue
-        try:
-            res = con.execute(ORACLES[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            failures.append(name)
-            n_fail += 1
-            continue
+            try:
+                sdf = QUERIES[name](spark, args.sf)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
+            except Exception as exc:  # noqa: BLE001
+                print(f"FAIL  {name}: spark error: {exc}")
+                failures.append(name)
+                n_fail += 1
+                continue
+            if name not in ORACLES:
+                print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+                n_rows_only += 1
+                continue
+            try:
+                res = con.execute(ORACLES[name])
+                dcols = [d[0] for d in res.description]
+                drows = res.fetchall()
+            except Exception as exc:  # noqa: BLE001
+                print(f"FAIL  {name}: duckdb error: {exc}")
+                failures.append(name)
+                n_fail += 1
+                continue
 
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"columns spark={sorted(scols)} duckdb={sorted(dcols)}")
-        if not problems:
-            sn, dn = _normalize(srows, scols), _normalize(drows, dcols)
-            if sn != dn:
-                bad = sum(1 for a, b in zip(sn, dn) if a != b)
-                for a, b in zip(sn, dn):
-                    if a != b:
-                        problems.append(f"value diff ({bad} rows) e.g. spark={a} duckdb={b}")
-                        break
-        if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
-            failures.append(name)
-            n_fail += 1
-        else:
-            # A 0-row/0-row match proves nothing about the expression's
-            # VALUES (r12 ADVICE: embed_cosine_pairs' re-proof slot was
-            # vacuous) — still a pass, but flagged so a sweep log or a
-            # re-proof slot can never silently rest on one.
-            vac = " (VACUOUS: 0 rows both sides)" if not srows else ""
-            if not srows:
-                vacuous.append(name)
-            rowcounts[name] = len(srows)
-            print(f"ok    {name}: {len(srows)} rows{vac} [{time.time()-t0:.1f}s]")
-            n_pass += 1
+            problems = []
+            if len(srows) != len(drows):
+                problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
+            if sorted(scols) != sorted(dcols):
+                problems.append(f"columns spark={sorted(scols)} duckdb={sorted(dcols)}")
+            if not problems:
+                sn, dn = _normalize(srows, scols), _normalize(drows, dcols)
+                if sn != dn:
+                    bad = sum(1 for a, b in zip(sn, dn) if a != b)
+                    for a, b in zip(sn, dn):
+                        if a != b:
+                            problems.append(f"value diff ({bad} rows) e.g. spark={a} duckdb={b}")
+                            break
+            if problems:
+                print(f"FAIL  {name}: " + "; ".join(problems))
+                failures.append(name)
+                n_fail += 1
+            else:
+                # A 0-row/0-row match proves nothing about the expression's
+                # VALUES (r12 ADVICE: embed_cosine_pairs' re-proof slot was
+                # vacuous) — still a pass, but flagged so a sweep log or a
+                # re-proof slot can never silently rest on one.
+                vac = " (VACUOUS: 0 rows both sides)" if not srows else ""
+                if not srows:
+                    vacuous.append(name)
+                rowcounts[name] = len(srows)
+                print(f"ok    {name}: {len(srows)} rows{vac} [{time.time()-t0:.1f}s]")
+                n_pass += 1
+        finally:
+            # which query grows a worker: a gate process that the kernel
+            # kills for memory leaves only its stderr
+            print(f"# rss after {name}: python {_rss_mb()} MB, jvm {_rss_mb(jvm_pid)} MB",
+                  file=sys.stderr, flush=True)
 
     # A VACUOUS row is acceptable only when its declared value-exact twin
     # exercised the same machinery non-vacuously (r13 VERDICT ask #6);
