@@ -54,54 +54,6 @@ def is_shuffle_free_join(spark: SparkSession, left: str, right: str, on: list[st
     return "Exchange" not in plan
 
 
-def zorder_key(cols: list, bits: int = 16):
-    """Morton (Z-order) interleaved-bit key over 2+ integer columns —
-    pure JVM bit arithmetic, no UDF.
-
-    Sorting a table by this key before writing gives every parquet file a
-    tight min/max envelope on EVERY participating column (a plain sort
-    only tightens the leading column), so predicates on any of them skip
-    row groups / files via statistics — the write-side analogue of a
-    multi-column index. Each column is rank-normalized by the caller (or
-    already integer-dense); only the low ``bits`` bits participate.
-    """
-    from pyspark.sql import functions as F
-
-    parts = []
-    for b in range(bits):
-        for ci, c in enumerate(cols):
-            src = F.col(c) if isinstance(c, str) else c
-            bit = F.shiftright(src.cast("long"), b).bitwiseAND(F.lit(1))
-            parts.append(F.shiftleft(bit, b * len(cols) + ci))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.bitwiseOR(p)
-    return out
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    num_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet laid out in Z-order on ``zorder_cols``: repartition by
-    range on the interleaved key (locality across files), then sort within
-    partitions (locality across row groups)."""
-    from pyspark.sql import functions as F
-
-    keyed = df.withColumn("_zkey", zorder_key(zorder_cols, bits))
-    (
-        keyed.repartitionByRange(num_files, F.col("_zkey"))
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -126,61 +78,3 @@ def salted_join(
     salted_dim = dim.crossJoin(F.broadcast(salts))
     out = salted_fact.join(salted_dim, [on, "_salt"], how)
     return out.drop("_salt")
-
-
-def runtime_bloom_filter_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime (bloom-filter) join pruning — the 100 TB lever Spark's
-    ``InjectRuntimeFilter`` rule provides: when a join's build side is
-    selectively FILTERED, Spark aggregates a bloom filter over its join
-    keys at runtime and pushes a ``might_contain`` probe beneath the
-    probe side's scan, so a 100 TB fact table discards non-matching rows
-    BEFORE the shuffle instead of after it (the runtime analogue of
-    static partition pruning, for arbitrary keys).
-
-    The feature is threshold-gated for exactly the scale it targets —
-    ``applicationSideScanSizeThreshold`` defaults to 10 GB so small scans
-    skip the overhead — which is why local-SF plans never show it; this
-    demo lowers the thresholds to force injection at test scale and
-    returns the joined frame whose plan carries the filter
-    (plan-asserted in tests/test_optimize.py). On a real lake the only
-    requirement is leaving ``spark.sql.optimizer.runtime.bloomFilter
-    .enabled`` on (the default) — no query change.
-    """
-    from pyspark.sql import functions as F
-
-    from .data import register_views
-
-    register_views(spark, sf_dir)
-    conf = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
-        # the rule only fires on shuffle joins (a broadcast already
-        # prunes via its hashed relation)
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {}
-    for k, v in conf.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        # selective build side: one order priority slice of orders
-        o = spark.table("orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        li = spark.table("lineitem")
-        out = li.join(o, li.l_orderkey == o.o_orderkey).groupBy(
-            "o_orderpriority"
-        ).agg(F.count("*").alias("n_items"))
-        # force planning NOW, while the thresholds are lowered
-        out._jdf.queryExecution().executedPlan()
-        return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

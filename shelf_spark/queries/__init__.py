@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from .registry import ORACLES, QUERIES, query  # noqa: F401
+from .registry import ORACLES, QUERIES, query, render_oracles  # noqa: F401
 
 # Import order = inventory order in SURVEY.md §2.
 from . import relational  # noqa: F401,E402
@@ -31,3 +31,5 @@ from . import report  # noqa: F401,E402
 from . import mining  # noqa: F401,E402
 from . import sqlsurface  # noqa: F401,E402
 from . import sketches  # noqa: F401,E402
+
+render_oracles()

@@ -81,6 +81,33 @@ def _shingles(words: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", words)))
 
 
+def _sql_doc_shingles(src: str) -> str:
+    """``doc_id, shingle`` over the documents of ``src``: the SQL twin of
+    ``_shingles(_words())`` exploded."""
+    return f"""
+      SELECT doc_id,
+             unnest(list_distinct(
+               CASE WHEN len(string_split(text, ' ')) >= 3 THEN
+                 list_transform(
+                   generate_series(1, len(string_split(text, ' ')) - 2),
+                   i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))
+               ELSE [text] END)) AS shingle
+      FROM {src}
+    """
+
+
+def _sql_shingle_overlap() -> str:
+    """The CTEs ``sizes`` (``doc_id, n_sh``) and ``common`` (``doc_a, doc_b,
+    n_common`` with ``doc_a < doc_b``) over a shingle CTE ``sh``."""
+    return """
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+    common AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    )"""
+
+
 def jaccard_pairs_exact(d: DataFrame, threshold: float) -> DataFrame:
     """EXACT set-Jaccard similarity self-join with prefix filtering
     (Bayardo et al., "Scaling Up All Pairs Similarity Search", WWW'07).
@@ -177,23 +204,9 @@ def jaccard_pairs_exact(d: DataFrame, threshold: float) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-                 list_transform(
-                   generate_series(1, len(string_split(text, ' ')) - 2),
-                   i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))
-               ELSE [text] END)) AS shingle
-      FROM documents
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    oracle=f"""
+    WITH sh AS ({_sql_doc_shingles("documents")}),
+    {_sql_shingle_overlap()}
     SELECT doc_a, doc_b,
            round(CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
     FROM common
@@ -255,22 +268,8 @@ _SELFDUP_OFFSET = 100_000_000
       UNION ALL
       SELECT doc_id + {_SELFDUP_OFFSET}, text FROM documents
     ),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-                 list_transform(
-                   generate_series(1, len(string_split(text, ' ')) - 2),
-                   i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))
-               ELSE [text] END)) AS shingle
-      FROM corpus
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    sh AS ({_sql_doc_shingles("corpus")}),
+    {_sql_shingle_overlap()}
     SELECT doc_a, doc_b, CAST(1.0 AS DOUBLE) AS jaccard
     FROM common
     JOIN sizes sa ON sa.doc_id = doc_a
@@ -845,16 +844,7 @@ _SQL_QUOTE = f"""
       UNION ALL
       {_SQL_QUOTE}
     ),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-                 list_transform(
-                   generate_series(1, len(string_split(text, ' ')) - 2),
-                   i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))
-               ELSE [text] END)) AS shingle
-      FROM corpus
-    ),
+    sh AS ({_sql_doc_shingles("corpus")}),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     common AS (
       SELECT a.doc_id AS doc_in, b.doc_id AS doc_out, count(*) AS n_common

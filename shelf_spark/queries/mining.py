@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .registry import query
-from .vectors import _SQL_NORM, _SQL_VEC, N_QUERIES, _as_double, _dot, _norm
+from .vectors import N_QUERIES, _dot, _sql_dot, _sql_vecs, _vecs
 
 _K_NEG = 5
 
@@ -23,18 +23,14 @@ _K_NEG = 5
 @query(
     "ann_hard_negatives",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, label, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
-      FROM embeddings
-    ),
+    WITH v AS ({_sql_vecs()}),
     q AS (
       SELECT vec_id AS q_id, label AS q_label, vec AS q_vec, nrm AS q_nrm
       FROM v WHERE vec_id < {N_QUERIES}
     ),
     pairs AS (
       SELECT q_id, v.vec_id AS neg_id, v.label AS neg_label,
-             list_sum(list_transform(list_zip(q_vec, vec), s -> s[1] * s[2]))
-               / (q_nrm * nrm) AS cosine
+             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine
       FROM q CROSS JOIN v
       WHERE v.label <> q_label
     ),
@@ -54,11 +50,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     different-label corpus vectors). Broadcast queries × corpus scan —
     no corpus shuffle; at 100 TB the label predicate prunes inside the
     same single pass the exact ANN baseline makes."""
-    v = (
-        spark.table("embeddings")
-        .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-    )
+    v = _vecs(spark)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),

@@ -36,6 +36,7 @@ from .text import (
     _word_counts,
     _words,
 )
+from .vectors import _l2sq, _sql_l2sq, _sql_vecs, _vecs
 
 # ---------------------------------------------------------------------------
 # repetition statistics (Gopher-style quality filter)
@@ -296,23 +297,11 @@ def pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMEANS_K = 4
 
 
-def _as_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _sqdist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _assign(v: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the k centroids, one window
     per vector (ties break toward the lower centroid id)."""
     pairs = v.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "vec", "cid", _sqdist(F.col("vec"), F.col("cvec")).alias("d2")
+        "vec_id", "vec", "cid", _l2sq(F.col("vec"), F.col("cvec")).alias("d2")
     )
     rn = F.row_number().over(W.partitionBy("vec_id").orderBy("d2", "cid"))
     return pairs.withColumn("rn", rn).filter(F.col("rn") == 1).select(
@@ -344,11 +333,10 @@ def _recenter(assigned: DataFrame) -> DataFrame:
     "vectors_kmeans_assign",
     oracle=f"""
     WITH v AS (
-      -- embedding IS NOT NULL (r10 nulls corpus): a failed-embed row
+      -- vec IS NOT NULL (r10 nulls corpus): a failed-embed row
       -- has no position in vector space — and a NULL distance would
       -- rank FIRST in Spark's window but LAST in DuckDB's.
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings WHERE embedding IS NOT NULL
+      SELECT * FROM ({_sql_vecs()}) WHERE vec IS NOT NULL
     ),
     c0 AS (SELECT vec_id AS cid, vec AS cvec FROM v WHERE vec_id < {_KMEANS_K}),
     a1 AS (
@@ -356,9 +344,7 @@ def _recenter(assigned: DataFrame) -> DataFrame:
         SELECT v.vec_id, v.vec, c0.cid,
                row_number() OVER (
                  PARTITION BY v.vec_id
-                 ORDER BY list_sum(list_transform(list_zip(v.vec, c0.cvec),
-                                                  s -> (s[1] - s[2]) * (s[1] - s[2]))),
-                          c0.cid) AS rn
+                 ORDER BY {_sql_l2sq("v.vec", "c0.cvec")}, c0.cid) AS rn
         FROM v CROSS JOIN c0
       ) WHERE rn = 1
     ),
@@ -375,13 +361,10 @@ def _recenter(assigned: DataFrame) -> DataFrame:
     )
     SELECT vec_id, cid AS cluster, round(d2, 6) AS sq_dist FROM (
       SELECT v.vec_id, c1.cid,
-             list_sum(list_transform(list_zip(v.vec, c1.cvec),
-                                     s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2,
+             {_sql_l2sq("v.vec", "c1.cvec")} AS d2,
              row_number() OVER (
                PARTITION BY v.vec_id
-               ORDER BY list_sum(list_transform(list_zip(v.vec, c1.cvec),
-                                                s -> (s[1] - s[2]) * (s[1] - s[2]))),
-                        c1.cid) AS rn
+               ORDER BY {_sql_l2sq("v.vec", "c1.cvec")}, c1.cid) AS rn
       FROM v CROSS JOIN c1
     ) WHERE rn = 1
     """,
@@ -399,11 +382,7 @@ def vectors_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     k×dim-sized aggregate. A production loop would iterate to convergence
     with localCheckpoint between rounds (see dedup_near_dup_clusters).
     """
-    v = (
-        spark.table("embeddings")
-        .filter(F.col("embedding").isNotNull())  # see oracle note
-        .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-    )
+    v = _vecs(spark).filter(F.col("vec").isNotNull())  # see oracle note
     c0 = v.filter(F.col("vec_id") < _KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
     )

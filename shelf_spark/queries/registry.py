@@ -52,8 +52,14 @@ def _fill_placeholders(fn: QueryFn) -> None:
     fn.__doc__ = _PLACEHOLDER.sub(value, fn.__doc__)
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register an operator implementation and (optionally) its SQL oracle."""
+def query(
+    name: str, oracle: str | Callable[[], str] | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Register an operator implementation and (optionally) its SQL oracle.
+
+    An oracle built from the SQL of a module imported after the operator's
+    own is a callable that returns it; ``render_oracles`` calls it once
+    every operator module is imported."""
 
     def deco(fn: QueryFn) -> QueryFn:
         _fill_placeholders(fn)
@@ -67,7 +73,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = wrapped
         if oracle is not None:
-            ORACLES[name] = textwrap.dedent(oracle).strip()
+            ORACLES[name] = oracle if callable(oracle) else textwrap.dedent(oracle).strip()
         return wrapped
 
     return deco
+
+
+def render_oracles() -> None:
+    """Replace each oracle given as a callable by the SQL it returns."""
+    for name, oracle in ORACLES.items():
+        if callable(oracle):
+            ORACLES[name] = textwrap.dedent(oracle()).strip()

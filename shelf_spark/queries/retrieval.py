@@ -34,6 +34,7 @@ from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
 from .text import _doc_words, _sql_doc_words
+from .vectors import _dot, _sql_dot, _sql_vecs, _vecs
 
 #: Fixed-point carrier for summing per-term scores exactly.
 _DEC6 = "decimal(18,6)"
@@ -560,19 +561,11 @@ _RRF_QVEC = 0
       SELECT doc_id,
              row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_lex
       FROM bm
-    ), v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
-    ), vn AS (
-      SELECT vec_id, vec,
-             sqrt(list_sum(list_transform(vec, x -> x * x))) AS nrm
-      FROM v
-    ), q AS (SELECT vec, nrm FROM vn WHERE vec_id = {_RRF_QVEC}),
+    ), vn AS ({_sql_vecs()}),
+    q AS (SELECT vec, nrm FROM vn WHERE vec_id = {_RRF_QVEC}),
     cos AS (
       SELECT vn.vec_id AS doc_id,
-             list_sum(list_transform(list_zip(q.vec, vn.vec),
-                                     p -> p[1] * p[2])) / (q.nrm * vn.nrm)
-               AS cosine
+             {_sql_dot("q.vec", "vn.vec")} / (q.nrm * vn.nrm) AS cosine
       FROM vn CROSS JOIN q
       ORDER BY cosine DESC, doc_id LIMIT {_RRF_CAP}
     ), sem AS (
@@ -619,8 +612,6 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs as constant-key windows over the {_RRF_CAP}-row capped
     relations (cap-bounded, not data-bounded), and the fusion is a
     {_RRF_CAP}-row full outer join."""
-    from .vectors import _as_double, _dot, _norm
-
     d = spark.table("documents")
     tok = _doc_words(spark).filter(F.col("word").isin(*_QUERY_TERMS))
     dl = d.select("doc_id", F.size(F.split("text", " ")).cast("long").alias("dl"))
@@ -645,11 +636,7 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("r_lex"),
     )
-    vn = (
-        spark.table("embeddings")
-        .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-    )
+    vn = _vecs(spark)
     q = vn.filter(F.col("vec_id") == _RRF_QVEC).select(
         F.col("vec").alias("q_vec"), F.col("nrm").alias("q_nrm")
     )

@@ -45,7 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window as W
 
-from .dedup import JACCARD_THRESHOLD, jaccard_pairs_exact
+from .dedup import (
+    JACCARD_THRESHOLD,
+    _sql_doc_shingles,
+    _sql_shingle_overlap,
+    jaccard_pairs_exact,
+)
 from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
@@ -362,22 +367,8 @@ def interleave_weighted_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_near_dup_clusters",
     oracle=f"""
     WITH RECURSIVE
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-                 list_transform(
-                   generate_series(1, len(string_split(text, ' ')) - 2),
-                   i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))
-               ELSE [text] END)) AS shingle
-      FROM documents
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    sh AS ({_sql_doc_shingles("documents")}),
+    {_sql_shingle_overlap()},
     pairs AS (
       SELECT doc_a, doc_b
       FROM common
@@ -846,42 +837,35 @@ def sample_temporal_split_embargo(spark: SparkSession, sf_dir: str) -> DataFrame
 _KC_K = 5
 
 
-def _sql_kc_dist(vec_a: str, vec_b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({vec_a}, {vec_b}),"
-        " p -> (p[1] - p[2]) * (p[1] - p[2])))"
-    )
+def _kcenter_oracle() -> str:
+    """The DuckDB oracle of sample_kcenter_coreset. A callable, rendered
+    once every operator module is imported: V and the distance twin live
+    in vectors.py, which registers its operators after this module's."""
+    from .vectors import _sql_l2sq, _sql_vecs
 
-
-def _sql_kc_iter(k: int) -> str:
-    """One unrolled farthest-point step in DuckDB SQL: fold the new
-    center into every row's min-distance, then take the deterministic
-    argmax (ties → lower vec_id) as the next center."""
-    return f"""
+    def step(k: int) -> str:
+        """One unrolled farthest-point step: fold the new center into
+        every row's min-distance, then take the deterministic argmax
+        (ties → lower vec_id) as the next center."""
+        return f"""
     d{k - 1} AS (
       SELECT d.vec_id, d.vec,
-             least(d.md, {_sql_kc_dist("d.vec", "c.vec")}) AS md
+             least(d.md, {_sql_l2sq("d.vec", "c.vec")}) AS md
       FROM d{k - 2} d CROSS JOIN c{k} c
     ), c{k + 1} AS (
       SELECT vec_id, vec, md FROM d{k - 1}
       ORDER BY md DESC, vec_id LIMIT 1
     )"""
 
-
-@query(
-    "sample_kcenter_coreset",
-    oracle=f"""
-    WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
-    ),
+    return f"""
+    WITH v AS ({_sql_vecs()}),
     c1 AS (SELECT vec_id, vec, CAST(NULL AS DOUBLE) AS md FROM v WHERE vec_id = 0),
     d0 AS (
-      SELECT v.vec_id, v.vec, {_sql_kc_dist("v.vec", "c.vec")} AS md
+      SELECT v.vec_id, v.vec, {_sql_l2sq("v.vec", "c.vec")} AS md
       FROM v CROSS JOIN c1 c
     ),
     c2 AS (SELECT vec_id, vec, md FROM d0 ORDER BY md DESC, vec_id LIMIT 1),
-    {",".join(_sql_kc_iter(k) for k in range(2, _KC_K))}
+    {",".join(step(k) for k in range(2, _KC_K))}
     SELECT CAST(r AS BIGINT) AS center_rank, vec_id,
            round(sqrt(md), 6) AS radius
     FROM (
@@ -889,8 +873,10 @@ def _sql_kc_iter(k: int) -> str:
           f"SELECT {k} AS r, vec_id, md FROM c{k}" for k in range(1, _KC_K + 1))}
     )
     ORDER BY center_rank
-    """,
-)
+    """
+
+
+@query("sample_kcenter_coreset", oracle=_kcenter_oracle)
 def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center coreset over the embedding corpus: farthest-point
     traversal (Gonzalez 1985, the classic 2-approximation) — the
@@ -913,25 +899,16 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort). Nothing shuffles; state is k vectors. The min-distance
     column rides the corpus relation and is checkpoint-pinned per
     step, so lineage stays flat at any k."""
-    v = spark.table("embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
+    from .vectors import _l2sq, _vecs
 
-    def sqdist(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
+    v = _vecs(spark)
     c = v.filter(F.col("vec_id") == 0).select(
         "vec_id", "vec", F.lit(None).cast("double").alias("md")
     )
     picks = [c.select(F.lit(1).cast("long").alias("center_rank"), "vec_id", "md")]
     d = v.crossJoin(
         F.broadcast(c.select(F.col("vec").alias("cvec")))
-    ).select("vec_id", "vec", sqdist(F.col("vec"), F.col("cvec")).alias("md"))
+    ).select("vec_id", "vec", _l2sq(F.col("vec"), F.col("cvec")).alias("md"))
     for k in range(2, _KC_K + 1):
         c = d.orderBy(F.desc("md"), "vec_id").limit(1)
         picks.append(
@@ -944,7 +921,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vec_id",
                     "vec",
                     F.least(
-                        F.col("md"), sqdist(F.col("vec"), F.col("cvec"))
+                        F.col("md"), _l2sq(F.col("vec"), F.col("cvec"))
                     ).alias("md"),
                 )
                 .transform(pin, "reuse")
@@ -1325,22 +1302,8 @@ def sample_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_keep_best_per_cluster",
     oracle=f"""
     WITH RECURSIVE
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(
-               CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-                 list_transform(
-                   generate_series(1, len(string_split(text, ' ')) - 2),
-                   i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))
-               ELSE [text] END)) AS shingle
-      FROM documents
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    sh AS ({_sql_doc_shingles("documents")}),
+    {_sql_shingle_overlap()},
     pairs AS (
       SELECT doc_a, doc_b
       FROM common

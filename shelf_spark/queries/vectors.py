@@ -12,6 +12,31 @@ Design for 100 TB:
   distance computation — the join on cell id is the partition-pruning
   analogue for vector search.
 - all dot products use JVM-side zip_with/aggregate folds — no Python.
+
+Vector kernels and base relations. The embedding operators here and in
+mining, retrieval, pipeline and sampling read the vectors through kernels
+and relations defined once below, each a Spark builder next to its DuckDB
+twin (text.py's paired style; tests/test_vector_relations.py holds them
+equal row for row):
+
+- kernels: ``_as_double`` / ``_SQL_VEC`` (float list → double list),
+  ``_dot`` / ``_sql_dot(a, b)``, ``_norm`` / ``_SQL_NORM`` and
+  ``_l2sq`` / ``_sql_l2sq(a, b)`` (squared L2 distance);
+- V ``_vecs``: ``vec_id, label, vec, nrm``, one row per embedding;
+- C ``_centered_vecs``: ``vec_id, label, cvec``, V minus the
+  per-dimension mean (a DECIMAL(30,8) sum over a count, rounded to 6dp);
+- the power iteration ``_top_component(centered)`` / ``_sql_top_component()``:
+  ``vvec, lam`` after ``_PCA_ITERS`` rounds from a uniform start.
+
+Rules. Every fold runs in list order from 0.0, so both engines perform the
+same IEEE operations. A NULL embedding (a failed embed) keeps its row with
+NULL ``vec``, ``nrm`` and ``cvec``; an operator that drops failed embeds
+filters ``vec IS NOT NULL`` at its call site. Builders return unpinned
+relations; each caller pins at its call site. The query-vector selects
+(``vec_id < N_QUERIES``) stay with their callers, as each carries its own
+extra columns; ``fn_array`` and ``vectors_quantize_int8`` read the raw
+float list, and the per-dimension oracles of ``vectors_centroid_drift``
+and ``vectors_dim_variance`` unnest it themselves.
 """
 
 from __future__ import annotations
@@ -32,7 +57,6 @@ N_PROBE = 3  # IVF cells probed
 #: THIS cap, never in corpus size.
 CELL_OCCUPANCY = 250
 
-#: DuckDB fragments shared by the vector oracles.
 _SQL_VEC = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 _SQL_NORM = f"sqrt(list_sum(list_transform({_SQL_VEC}, x -> x * x)))"
 
@@ -47,22 +71,126 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
+def _sql_dot(a: str, b: str) -> str:
+    # dp: no enclosing lambda names it (ABTT nests this fold in one)
+    return f"list_sum(list_transform(list_zip({a}, {b}), dp -> dp[1] * dp[2]))"
+
+
 def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
+
+
+def _l2sq(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _sql_l2sq(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}),"
+        " lp -> (lp[1] - lp[2]) * (lp[1] - lp[2])))"
+    )
+
+
+def _vecs(spark: SparkSession) -> DataFrame:
+    """V: ``vec_id, label, vec, nrm``."""
+    return (
+        spark.table("embeddings")
+        .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
+        .withColumn("nrm", _norm(F.col("vec")))
+    )
+
+
+def _sql_vecs() -> str:
+    return f"""
+      SELECT vec_id, label, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
+      FROM embeddings"""
+
+
+def _centered_vecs(spark: SparkSession) -> DataFrame:
+    """C: ``vec_id, label, cvec``."""
+    v = _vecs(spark)
+    mu = (
+        v.select(F.posexplode("vec").alias("dim", "val"))
+        .groupBy("dim")
+        .agg(
+            F.round(
+                F.sum(F.col("val").cast("decimal(30,8)")).cast("double")
+                / F.count("*"),
+                6,
+            ).alias("m")
+        )
+        .groupBy()
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda r: r["m"],
+            ).alias("mvec")
+        )
+    )
+    return v.crossJoin(F.broadcast(mu)).select(
+        "vec_id", "label", F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec")
+    )
+
+
+def _sql_centered_vecs() -> str:
+    # The CASE keeps a NULL vec's cvec NULL: list_zip pads a NULL list
+    # with NULLs where Spark's zip_with returns NULL.
+    return f"""
+      SELECT vec_id, label,
+             CASE WHEN vec IS NOT NULL THEN
+               list_transform(list_zip(vec, mvec), p -> p[1] - p[2]) END AS cvec
+      FROM ({_sql_vecs()}) CROSS JOIN (
+        SELECT list_transform(list_sort(list(ROW(dim, m))), r -> r[2]) AS mvec
+        FROM (
+          SELECT d.dim,
+                 round(CAST(sum(CAST(v.vec[d.dim + 1] AS DECIMAL(30,8)))
+                            AS DOUBLE) / count(*), 6) AS m
+          FROM ({_sql_vecs()}) v,
+               LATERAL (SELECT unnest(range(0, len(v.vec))) AS dim) d
+          GROUP BY d.dim))"""
+
+
+def occupancy_blocked(v: DataFrame) -> DataFrame:
+    """Attach the occupancy-bounded blocking sub-cell key to a vector
+    relation (columns: vec_id, label, …): the sub-cell count grows with
+    the label's population so a (label, sub) cell never holds more than
+    ~CELL_OCCUPANCY vectors in expectation — pair mining stays quadratic
+    in the CAP, linear in the corpus. The assignment is the
+    engine-independent content hash (sha256 prefix), so DuckDB blocks
+    identically."""
+    nlab = F.count("*").over(W.partitionBy("label"))
+    nsub = F.ceil(nlab / F.lit(float(CELL_OCCUPANCY))).cast("int")
+    sub = (
+        F.conv(
+            F.substring(F.sha2(F.col("vec_id").cast("string"), 256), 1, 4), 16, 10
+        ).cast("int")
+        % nsub
+    )
+    return v.withColumn("sub", sub)
+
+
+def _sql_occupancy_blocked(v: str) -> str:
+    """The SQL twin of :func:`occupancy_blocked` over the relation ``v``."""
+    return f"""
+      SELECT *,
+             CAST(('0x' || substr(sha256(CAST(vec_id AS VARCHAR)), 1, 4)) AS INTEGER)
+               % CAST(ceil(count(*) OVER (PARTITION BY label) / {CELL_OCCUPANCY}.0)
+                      AS INTEGER) AS sub
+      FROM ({v})"""
 
 
 @query(
     "ann_cosine_topk",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
-      FROM embeddings
-    ),
+    WITH v AS ({_sql_vecs()}),
     q AS (SELECT vec_id AS q_id, vec AS q_vec, nrm AS q_nrm FROM v WHERE vec_id < {N_QUERIES}),
     pairs AS (
       SELECT q_id, v.vec_id AS neighbor_id,
-             list_sum(list_transform(list_zip(q_vec, vec), s -> s[1] * s[2]))
-               / (q_nrm * nrm) AS cosine
+             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine
       FROM q CROSS JOIN v
       WHERE v.vec_id <> q_id
     ),
@@ -79,9 +207,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Brute-force exact cosine top-k: broadcast the queries, scan the
     # corpus once, rank per query. The exact baseline the ANN variants are
     # measured against.
-    v = spark.table("embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", _norm(F.col("vec")))
+    v = _vecs(spark)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("vec").alias("q_vec"), F.col("nrm").alias("q_nrm")
     )
@@ -109,9 +235,7 @@ def _ivf_topk(spark: SparkSession, n_probe: int) -> DataFrame:
     ann_ivf_topk for the cost model). With ``n_probe`` ≥ the cell count
     the probe is EXHAUSTIVE and the pipeline must reproduce brute force
     exactly — the property ann_ivf_exhaustive value-checks."""
-    v = spark.table("embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", _norm(F.col("vec")))
+    v = _vecs(spark)
 
     # cell centroids: elementwise mean via posexplode → avg per dimension
     cent = (
@@ -186,15 +310,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_ivf_exhaustive",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
-      FROM embeddings
-    ),
+    WITH v AS ({_sql_vecs()}),
     q AS (SELECT vec_id AS q_id, vec AS q_vec, nrm AS q_nrm FROM v WHERE vec_id < {N_QUERIES}),
     pairs AS (
       SELECT q_id, v.vec_id AS neighbor_id,
-             list_sum(list_transform(list_zip(q_vec, vec), s -> s[1] * s[2]))
-               / (q_nrm * nrm) AS cosine
+             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine
       FROM q CROSS JOIN v
       WHERE v.vec_id <> q_id
     ),
@@ -223,20 +343,12 @@ def ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "embed_cosine_pairs",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, label, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm,
-             CAST(('0x' || substr(sha256(CAST(vec_id AS VARCHAR)), 1, 4)) AS INTEGER)
-               % CAST(ceil(count(*) OVER (PARTITION BY label) / {CELL_OCCUPANCY}.0)
-                      AS INTEGER) AS sub
-      FROM embeddings
-    )
+    WITH v AS ({_sql_occupancy_blocked(_sql_vecs())})
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-           round(list_sum(list_transform(list_zip(a.vec, b.vec), s -> s[1] * s[2]))
-                 / (a.nrm * b.nrm), 4) AS cosine
+           round({_sql_dot("a.vec", "b.vec")} / (a.nrm * b.nrm), 4) AS cosine
     FROM v a JOIN v b ON a.label = b.label AND a.sub = b.sub
                      AND a.vec_id < b.vec_id
-    WHERE list_sum(list_transform(list_zip(a.vec, b.vec), s -> s[1] * s[2]))
-          / (a.nrm * b.nrm) >= 0.30
+    WHERE {_sql_dot("a.vec", "b.vec")} / (a.nrm * b.nrm) >= 0.30
     """,
 )
 def embed_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,11 +381,7 @@ def embed_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a corpus-sized cache is the scale-worse shape vs two
     # column-pruned parquet scans. Contrast _semantic_clusters, where
     # the same pin measured a win and was kept.
-    v = occupancy_blocked(
-        spark.table("embeddings")
-        .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-    )
+    v = occupancy_blocked(_vecs(spark))
     a, b = v.alias("a"), v.alias("b")
     cos = _dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.nrm") * F.col("b.nrm"))
     return (
@@ -298,20 +406,18 @@ def embed_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT label,
            count(*) AS n_vecs,
-           {sql_davg(_SQL_NORM)} AS avg_norm,
-           round(min({_SQL_NORM}), 4) AS min_norm,
-           round(max({_SQL_NORM}), 4) AS max_norm
-    FROM embeddings
+           {sql_davg("nrm")} AS avg_norm,
+           round(min(nrm), 4) AS min_norm,
+           round(max(nrm), 4) AS max_norm
+    FROM ({_sql_vecs()})
     GROUP BY label
     ORDER BY label
     """,
 )
 def embed_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = spark.table("embeddings").select(
-        "label", _norm(_as_double(F.col("embedding"))).alias("nrm")
-    )
     return (
-        v.groupBy("label")
+        _vecs(spark)
+        .groupBy("label")
         .agg(
             F.count("*").alias("n_vecs"),
             davg(F.col("nrm")).alias("avg_norm"),
@@ -327,19 +433,12 @@ def _semantic_oracle(threshold: float) -> str:
     the cosine threshold (recursive reachability = connected components)."""
     return f"""
     WITH RECURSIVE
-    v AS (
-      SELECT vec_id, label, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm,
-             CAST(('0x' || substr(sha256(CAST(vec_id AS VARCHAR)), 1, 4)) AS INTEGER)
-               % CAST(ceil(count(*) OVER (PARTITION BY label) / {CELL_OCCUPANCY}.0)
-                      AS INTEGER) AS sub
-      FROM embeddings
-    ),
+    v AS ({_sql_occupancy_blocked(_sql_vecs())}),
     prs AS (
       SELECT a.vec_id AS va, b.vec_id AS vb
       FROM v a JOIN v b ON a.label = b.label AND a.sub = b.sub
                        AND a.vec_id < b.vec_id
-      WHERE list_sum(list_transform(list_zip(a.vec, b.vec), s -> s[1] * s[2]))
-            / (a.nrm * b.nrm) >= {threshold}
+      WHERE {_sql_dot("a.vec", "b.vec")} / (a.nrm * b.nrm) >= {threshold}
     ),
     edges AS (
       SELECT va AS src, vb AS dst FROM prs
@@ -359,25 +458,6 @@ def _semantic_oracle(threshold: float) -> str:
     FROM lab
     ORDER BY vec_id
     """
-
-
-def occupancy_blocked(v: DataFrame) -> DataFrame:
-    """Attach the occupancy-bounded blocking sub-cell key to a vector
-    relation (columns: vec_id, label, …): the sub-cell count grows with
-    the label's population so a (label, sub) cell never holds more than
-    ~CELL_OCCUPANCY vectors in expectation — pair mining stays quadratic
-    in the CAP, linear in the corpus. The assignment is the
-    engine-independent content hash (sha256 prefix), so DuckDB blocks
-    identically."""
-    nlab = F.count("*").over(W.partitionBy("label"))
-    nsub = F.ceil(nlab / F.lit(float(CELL_OCCUPANCY))).cast("int")
-    sub = (
-        F.conv(
-            F.substring(F.sha2(F.col("vec_id").cast("string"), 256), 1, 4), 16, 10
-        ).cast("int")
-        % nsub
-    )
-    return v.withColumn("sub", sub)
 
 
 def semantic_pairs(v: DataFrame, threshold: float) -> DataFrame:
@@ -403,11 +483,7 @@ def _semantic_clusters(spark: SparkSession, threshold: float) -> DataFrame:
 
     # Pinned (r14): semantic_pairs self-joins v — same double-scan
     # rationale as embed_cosine_pairs above.
-    v = occupancy_blocked(
-        spark.table("embeddings")
-        .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-    ).transform(pin, "reuse")
+    v = occupancy_blocked(_vecs(spark)).transform(pin, "reuse")
     lab = star_components(semantic_pairs(v, threshold), "va", "vb").select(
         F.col("node").alias("vec_id"), F.col("component").alias("cluster_id")
     )
@@ -503,10 +579,7 @@ _H_SQL = "[" + ", ".join("[" + ", ".join(str(x) for x in row) + "]" for row in _
 @query(
     "ann_lsh_topk",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
-      FROM embeddings
-    ),
+    WITH v AS ({_sql_vecs()}),
     hb AS (  -- one row per hyperplane: materializes H[b] ONCE, not per lambda
       SELECT b, {_H_SQL}[b + 1] AS hrow
       FROM (SELECT unnest(generate_series(0, {LSH_BITS - 1})) AS b)
@@ -535,11 +608,9 @@ _H_SQL = "[" + ", ".join("[" + ", ".join(str(x) for x in row) + "]" for row in _
     ),
     ranked AS (
       SELECT q_id, neighbor_id,
-             list_sum(list_transform(list_zip(q_vec, vec), p -> p[1] * p[2]))
-               / (q_nrm * nrm) AS cosine,
+             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine,
              row_number() OVER (PARTITION BY q_id ORDER BY
-               list_sum(list_transform(list_zip(q_vec, vec), p -> p[1] * p[2]))
-                 / (q_nrm * nrm) DESC, neighbor_id) AS rnk
+               {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) DESC, neighbor_id) AS rnk
       FROM cand
     )
     SELECT q_id, neighbor_id, round(cosine, 4) AS cosine, CAST(rnk AS BIGINT) AS rnk
@@ -566,11 +637,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank touches candidates only. At 10⁹ vectors the signature
     relation is what shuffles, never the embeddings (they ride only to
     the rerank of matched candidates)."""
-    v = (
-        spark.table("embeddings")
-        .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-    )
+    v = _vecs(spark)
     h_lit = [F.array(*[F.lit(x) for x in row]) for row in _H]
     def band_sig(band: int) -> Column:
         out = F.lit(0).cast("long")
@@ -671,11 +738,11 @@ def vectors_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors; the diff join and label counts run on that bounded centroid
     relation. Vectors never shuffle whole; at 100 TB the same plan holds
     with dims as the only state multiplier."""
-    e = spark.table("embeddings")
+    e = _vecs(spark)
     v = e.select(
         "label",
         (F.col("vec_id") % 2).alias("half"),
-        F.posexplode(_as_double(F.col("embedding"))).alias("dim", "val"),
+        F.posexplode("vec").alias("dim", "val"),
     )
     cent = v.groupBy("label", "half", "dim").agg(
         F.round(
@@ -733,9 +800,7 @@ def _sql_pca_iter(i: int) -> str:
     normalize with a 12dp-grid squared sum."""
     return f"""
     s{i} AS (
-      SELECT c.vec_id,
-             list_sum(list_transform(list_zip(c.cvec, v.vvec),
-                                     p -> p[1] * p[2])) AS s
+      SELECT c.vec_id, {_sql_dot("c.cvec", "v.vvec")} AS s
       FROM centered c CROSS JOIN v{i - 1} v
     ), w{i} AS (
       SELECT d.dim,
@@ -759,99 +824,32 @@ def _sql_pca_iter(i: int) -> str:
     )"""
 
 
-@query(
-    "vectors_pca_top_component",
-    oracle=f"""
-    WITH raw AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
-    ), mu AS (
-      SELECT d.dim,
-             round(CAST(sum(CAST(raw.vec[d.dim + 1] AS DECIMAL(30,8)))
-                        AS DOUBLE) / count(*), 6) AS m
-      FROM raw, LATERAL (SELECT unnest(range(0, len(raw.vec))) AS dim) d
-      GROUP BY d.dim
-    ), mu_arr AS (
-      SELECT list_transform(list_sort(list(ROW(dim, m))), r -> r[2]) AS mvec
-      FROM mu
-    ), centered AS (
-      SELECT vec_id,
-             list_transform(list_zip(vec, mvec), p -> p[1] - p[2]) AS cvec
-      FROM raw CROSS JOIN mu_arr
-    ), v0 AS (
+def _sql_top_component() -> str:
+    """The CTEs ``v0`` … ``v<_PCA_ITERS>`` over a ``centered`` CTE (C); the
+    last one holds ``vvec, lam``."""
+    v0 = """
+    v0 AS (
       SELECT list_transform(range(0, 64), x -> 0.125) AS vvec
-    ),
-    {",".join(_sql_pca_iter(i) for i in range(1, _PCA_ITERS + 1))}
-    SELECT CAST(d.dim AS BIGINT) AS dim,
-           round(v.vvec[d.dim + 1], 6) AS loading,
-           round(v.lam, 6) AS eigenvalue
-    FROM v{_PCA_ITERS} v,
-         LATERAL (SELECT unnest(range(0, len(v.vvec))) AS dim) d
-    ORDER BY dim
-    """,
-)
-def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal component of the embedding corpus by {_PCA_ITERS}
-    power iterations (v ← normalize(Σᵢ cᵢ (cᵢ·v)) over mean-centered
-    vectors, deterministic uniform start) — the dimensionality-reduction
-    primitive behind whitening, anisotropy diagnostics, and ABTT-style
-    post-processing of embedding spaces. The whole trajectory is
-    engine-exact: per-row dots fold in list order (same IEEE sequence),
-    cross-row sums round onto a decimal grid first (9dp products, 12dp
-    squares, the kmeans recentering discipline), and the normalization
-    is a fixed op shape — DuckDB replays the identical unrolled
-    iterations and the value-hash matches bitwise.
+    )"""
+    return ",".join([v0] + [_sql_pca_iter(i) for i in range(1, _PCA_ITERS + 1)])
 
-    Scale shape per iteration: broadcast the d-sized component, one
-    map pass computes scores, one (dim)-keyed map-side-combined
-    aggregate re-projects — shuffle volume is d rows per iteration,
-    vectors never shuffle (the centered corpus is checkpointed once).
-    Same physical pattern as Lloyd's k-means: state broadcast down,
-    d-sized gradients combined up."""
-    raw = spark.table("embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("vec")
-    )
-    mu = (
-        raw.select(F.posexplode("vec").alias("dim", "val"))
-        .groupBy("dim")
-        .agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(30,8)")).cast("double")
-                / F.count("*"),
-                6,
-            ).alias("m")
-        )
-    )
-    mu_arr = mu.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))),
-            lambda r: r["m"],
-        ).alias("mvec")
-    )
-    centered = (
-        raw.crossJoin(F.broadcast(mu_arr))
-        .select(
-            "vec_id",
-            F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec"),
-        )
-        # reused every iteration; vectors never shuffle
-        .transform(pin, "reuse")
-    )
-    v = spark.range(1).select(
+
+def _top_component(centered: DataFrame) -> DataFrame:
+    """``vvec, lam`` (one row) after ``_PCA_ITERS`` power iterations over C.
+
+    Scale shape per iteration: broadcast the d-sized component, one map
+    pass computes scores, one (dim)-keyed map-side-combined aggregate
+    re-projects — shuffle volume is d rows per iteration, vectors never
+    shuffle (the caller pins ``centered`` once). Same physical pattern as
+    Lloyd's k-means: state broadcast down, d-sized gradients combined up."""
+    v = centered.sparkSession.range(1).select(
         F.transform(F.sequence(F.lit(0), F.lit(63)), lambda _: F.lit(0.125)).alias(
             "vvec"
-        ),
-        F.lit(0.0).alias("lam"),
+        )
     )
     for _ in range(_PCA_ITERS):
         s = centered.crossJoin(F.broadcast(v.select("vvec"))).select(
-            "vec_id",
-            "cvec",
-            F.aggregate(
-                F.zip_with("cvec", "vvec", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("s"),
+            "cvec", _dot(F.col("cvec"), F.col("vvec")).alias("s")
         )
         w = (
             s.select(F.posexplode("cvec").alias("dim", "xd"), "s")
@@ -890,6 +888,38 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("vvec", "lam")
         )
+    return v
+
+
+@query(
+    "vectors_pca_top_component",
+    oracle=f"""
+    WITH centered AS ({_sql_centered_vecs()}),
+    {_sql_top_component()}
+    SELECT CAST(d.dim AS BIGINT) AS dim,
+           round(v.vvec[d.dim + 1], 6) AS loading,
+           round(v.lam, 6) AS eigenvalue
+    FROM v{_PCA_ITERS} v,
+         LATERAL (SELECT unnest(range(0, len(v.vvec))) AS dim) d
+    ORDER BY dim
+    """,
+)
+def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top principal component of the embedding corpus by {_PCA_ITERS}
+    power iterations (v ← normalize(Σᵢ cᵢ (cᵢ·v)) over mean-centered
+    vectors, deterministic uniform start) — the dimensionality-reduction
+    primitive behind whitening, anisotropy diagnostics, and ABTT-style
+    post-processing of embedding spaces. The whole trajectory is
+    engine-exact: per-row dots fold in list order (same IEEE sequence),
+    cross-row sums round onto a decimal grid first (9dp products, 12dp
+    squares, the kmeans recentering discipline), and the normalization
+    is a fixed op shape — DuckDB replays the identical unrolled
+    iterations and the value-hash matches bitwise.
+
+    Scale shape: see _top_component; the centered corpus is pinned once."""
+    # reused every iteration; vectors never shuffle
+    centered = _centered_vecs(spark).transform(pin, "reuse")
+    v = _top_component(centered)
     return (
         v.select(F.posexplode("vvec").alias("dim", "loading"), "lam")
         .select(
@@ -909,39 +939,16 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "vectors_abtt_postprocess",
     oracle=f"""
-    WITH raw AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
-    ), mu AS (
-      SELECT d.dim,
-             round(CAST(sum(CAST(raw.vec[d.dim + 1] AS DECIMAL(30,8)))
-                        AS DOUBLE) / count(*), 6) AS m
-      FROM raw, LATERAL (SELECT unnest(range(0, len(raw.vec))) AS dim) d
-      GROUP BY d.dim
-    ), mu_arr AS (
-      SELECT list_transform(list_sort(list(ROW(dim, m))), r -> r[2]) AS mvec
-      FROM mu
-    ), centered AS (
-      SELECT vec_id, label,
-             list_transform(list_zip(vec, mvec), p -> p[1] - p[2]) AS cvec
-      FROM raw CROSS JOIN mu_arr
-    ), v0 AS (
-      SELECT list_transform(range(0, 64), x -> 0.125) AS vvec
-    ),
-    {",".join(_sql_pca_iter(i) for i in range(1, _PCA_ITERS + 1))},
+    WITH centered AS ({_sql_centered_vecs()}),
+    {_sql_top_component()},
     proj AS (
       SELECT c.vec_id, c.label,
              round(sqrt(list_sum(list_transform(c.cvec, x -> x * x))), 9)
                AS norm_before,
-             round(sqrt(list_sum(list_transform(
-               list_zip(c.cvec, v.vvec),
-               p -> (p[1] - (list_sum(list_transform(list_zip(c.cvec, v.vvec),
-                                                     q -> q[1] * q[2]))
-                             * p[2]))
-                    * (p[1] - (list_sum(list_transform(
-                         list_zip(c.cvec, v.vvec), q -> q[1] * q[2]))
-                               * p[2]))))), 9) AS norm_after
+             round(sqrt({_sql_l2sq(
+               "c.cvec",
+               f"list_transform(v.vvec, y -> {_sql_dot('c.cvec', 'v.vvec')} * y)",
+             )}), 9) AS norm_after
       FROM centered c CROSS JOIN v{_PCA_ITERS} v
     )
     SELECT label,
@@ -969,110 +976,14 @@ def vectors_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffle, and the label stats are a catalog-sized aggregate.
     At 100 TB this is the same two-broadcast-passes cost as int8
     quantization."""
-    raw = spark.table("embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    )
-    mu = (
-        raw.select(F.posexplode("vec").alias("dim", "val"))
-        .groupBy("dim")
-        .agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(30,8)")).cast("double")
-                / F.count("*"),
-                6,
-            ).alias("m")
-        )
-    )
-    mu_arr = mu.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))),
-            lambda r: r["m"],
-        ).alias("mvec")
-    )
-    centered = (
-        raw.crossJoin(F.broadcast(mu_arr))
-        .select(
-            "vec_id",
-            "label",
-            F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec"),
-        )
-        .transform(pin, "reuse")
-    )
-    v = spark.range(1).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(63)), lambda _: F.lit(0.125)
-        ).alias("vvec")
-    )
-    for _ in range(_PCA_ITERS):
-        s = centered.crossJoin(F.broadcast(v.select("vvec"))).select(
-            "cvec",
-            F.aggregate(
-                F.zip_with("cvec", "vvec", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("s"),
-        )
-        w = (
-            s.select(F.posexplode("cvec").alias("dim", "xd"), "s")
-            .groupBy("dim")
-            .agg(
-                F.sum(
-                    F.round(F.col("xd") * F.col("s"), 9).cast("decimal(28,9)")
-                )
-                .cast("double")
-                .alias("wd")
-            )
-            # w is read twice (n2 norm + v update); unpinned, its pass over
-            # the VECTOR-sized centered table doubled per iteration (r14).
-            .transform(pin, "reuse")
-        )
-        n2 = w.agg(
-            F.sum(
-                F.round(F.col("wd") * F.col("wd"), 12).cast("decimal(30,12)")
-            )
-            .cast("double")
-            .alias("n2")
-        )
-        v = (
-            w.crossJoin(F.broadcast(n2))
-            .select("dim", F.round(F.col("wd") / F.sqrt("n2"), 9).alias("vd"))
-            .groupBy()
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "vd"))),
-                    lambda r: r["vd"],
-                ).alias("vvec")
-            )
-        )
-    score = F.aggregate(
-        F.zip_with("cvec", "vvec", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    centered = _centered_vecs(spark).transform(pin, "reuse")
+    v = _top_component(centered).select("vvec")
+    score = _dot(F.col("cvec"), F.col("vvec"))
     proj = centered.crossJoin(F.broadcast(v)).select(
         "label",
+        F.round(_norm(F.col("cvec")), 9).alias("norm_before"),
         F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.transform("cvec", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            9,
-        ).alias("norm_before"),
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        "cvec",
-                        "vvec",
-                        lambda x, y: (x - score * y) * (x - score * y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
+            F.sqrt(_l2sq(F.col("cvec"), F.transform("vvec", lambda y: score * y))),
             9,
         ).alias("norm_after"),
     )
@@ -1114,14 +1025,6 @@ PQ_LLOYD_ITERS = 2
 PQ_RERANK_POOL = 50
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
     """Shared PQ pipeline: codebooks of `k` centroids per subspace →
     codes → ADC scan → exact rerank. `k = PQ_K` is the real quantizer;
@@ -1146,15 +1049,13 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
     broadcast per-query lookup table and partial-aggregates map-side,
     so the only shuffle carries (q_id, vec_id, partial-sum) rows."""
     v = (
-        spark.table("embeddings")
-        # embedding IS NOT NULL: a failed-embed row has no position in
+        _vecs(spark)
+        # vec IS NOT NULL: a failed-embed row has no position in
         # vector space, and a NULL ADC distance would rank FIRST in
         # Spark's ASC pool window but LAST in DuckDB's (the engines'
         # default null orders differ only for ASC — which is why the
         # cosine-DESC ANN family is immune; r10 nulls corpus).
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
+        .filter(F.col("vec").isNotNull())
         # v feeds the subvector slicing, the query set AND the rerank
         # join; unpinned, the scan + parse + norm ran three times (r14).
         .transform(pin, "reuse")
@@ -1296,17 +1197,14 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_pq_exhaustive_adc",
     oracle=f"""
     WITH v AS (
-      -- embedding IS NOT NULL: see _pq_topk (ASC-ranked pools are the
+      -- vec IS NOT NULL: see _pq_topk (ASC-ranked pools are the
       -- one place the engines' null sort orders diverge)
-      SELECT vec_id, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
+      SELECT * FROM ({_sql_vecs()}) WHERE vec IS NOT NULL
     ),
     q AS (SELECT vec_id AS q_id, vec AS q_vec, nrm AS q_nrm
           FROM v WHERE vec_id < {N_QUERIES}),
     adist AS (
-      SELECT q_id, v.vec_id,
-             list_sum(list_transform(list_zip(q_vec, vec),
-                      s -> (s[1] - s[2]) * (s[1] - s[2]))) AS adist
+      SELECT q_id, v.vec_id, {_sql_l2sq("q_vec", "vec")} AS adist
       FROM q CROSS JOIN v WHERE v.vec_id <> q_id
     ),
     pool AS (
@@ -1319,8 +1217,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pairs AS (
       SELECT pool.q_id, pool.vec_id AS neighbor_id,
-             list_sum(list_transform(list_zip(q_vec, vec),
-                      s -> s[1] * s[2])) / (q_nrm * nrm) AS cosine
+             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine
       FROM pool
         JOIN v ON v.vec_id = pool.vec_id
         JOIN q ON q.q_id = pool.q_id
@@ -1364,16 +1261,9 @@ MRL_DIMS = 16
 @query(
     "vectors_matryoshka_eval",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec,
-             list_transform(embedding[1:{MRL_DIMS}],
-                            x -> CAST(x AS DOUBLE)) AS tvec
-      FROM embeddings
-    ),
+    WITH v AS (SELECT *, vec[1:{MRL_DIMS}] AS tvec FROM ({_sql_vecs()})),
     n AS (
-      SELECT vec_id, vec, tvec,
-             sqrt(list_sum(list_transform(vec, x -> x * x))) AS nrm,
+      SELECT vec_id, vec, tvec, nrm,
              sqrt(list_sum(list_transform(tvec, x -> x * x))) AS tnrm
       FROM v
     ),
@@ -1384,12 +1274,8 @@ MRL_DIMS = 16
     ),
     pairs AS (
       SELECT q_id, n.vec_id AS neighbor_id,
-             list_sum(list_transform(list_zip(q_vec, n.vec),
-                                     p -> p[1] * p[2])) / (q_nrm * n.nrm)
-               AS cos_full,
-             list_sum(list_transform(list_zip(q_tvec, n.tvec),
-                                     p -> p[1] * p[2])) / (q_tnrm * n.tnrm)
-               AS cos_trunc
+             {_sql_dot("q_vec", "n.vec")} / (q_nrm * n.nrm) AS cos_full,
+             {_sql_dot("q_tvec", "n.tvec")} / (q_tnrm * n.tnrm) AS cos_trunc
       FROM q CROSS JOIN n
       WHERE n.vec_id <> q_id
     ),
@@ -1432,13 +1318,8 @@ def vectors_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     window envelope run over the same single shuffle (two window
     functions, one exchange)."""
     v = (
-        spark.table("embeddings")
-        .select(
-            "vec_id",
-            _as_double(F.col("embedding")).alias("vec"),
-            _as_double(F.slice(F.col("embedding"), 1, MRL_DIMS)).alias("tvec"),
-        )
-        .withColumn("nrm", _norm(F.col("vec")))
+        _vecs(spark)
+        .withColumn("tvec", F.slice("vec", 1, MRL_DIMS))
         .withColumn("tnrm", _norm(F.col("tvec")))
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -1509,10 +1390,7 @@ def _signword(col_name: str, lo: int) -> Column:
 @query(
     "ann_binary_hamming_topk",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm
-      FROM embeddings
-    ), w AS (
+    WITH v AS ({_sql_vecs()}), w AS (
       SELECT vec_id, vec, nrm,
              {_sql_signword(0)} AS w_hi,
              {_sql_signword(32)} AS w_lo
@@ -1525,8 +1403,7 @@ def _signword(col_name: str, lo: int) -> Column:
       SELECT q_id, w.vec_id AS neighbor_id,
              CAST(bit_count(xor(q_hi, w_hi))
                   + bit_count(xor(q_lo, w_lo)) AS BIGINT) AS hamming,
-             list_sum(list_transform(list_zip(q_vec, vec), s -> s[1] * s[2]))
-               / (q_nrm * nrm) AS cosine
+             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine
       FROM q CROSS JOIN w
       WHERE w.vec_id <> q_id
     ), cand AS (
@@ -1562,9 +1439,7 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     you'd bucket by the top bits (multi-index Hamming) instead of
     scanning, same bits, same layout."""
     v = (
-        spark.table("embeddings")
-        .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
+        _vecs(spark)
         .withColumn("w_hi", _signword("vec", 0))
         .withColumn("w_lo", _signword("vec", 32))
     )
@@ -1600,12 +1475,10 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vectors_cosine_histogram",
     oracle=f"""
     WITH v AS (
-      SELECT vec_id, {_SQL_VEC} AS vec, {_SQL_NORM} AS nrm,
-             substr(sha256(CAST(vec_id AS VARCHAR)), 1, 2) AS bkt
-      FROM embeddings
+      SELECT *, substr(sha256(CAST(vec_id AS VARCHAR)), 1, 2) AS bkt
+      FROM ({_sql_vecs()})
     ), pairs AS (
-      SELECT list_sum(list_transform(list_zip(a.vec, b.vec), s -> s[1] * s[2]))
-               / (a.nrm * b.nrm) AS cosine
+      SELECT {_sql_dot("a.vec", "b.vec")} / (a.nrm * b.nrm) AS cosine
       FROM v a JOIN v b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
     ), binned AS (
       SELECT CAST(floor(least(greatest((cosine + 1.0) * 10.0, 0.0), 19.0))
@@ -1637,13 +1510,8 @@ def vectors_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy-bound discipline from semantic dedup). Cosines grid-round
     at 1e-9 into exact decimal sums for the mean; bin edges are floor()
     on identical IEEE doubles (the ECE cast lesson applied)."""
-    v = (
-        spark.table("embeddings")
-        .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-        .withColumn(
-            "bkt", F.substring(F.sha2(F.col("vec_id").cast("string"), 256), 1, 2)
-        )
+    v = _vecs(spark).withColumn(
+        "bkt", F.substring(F.sha2(F.col("vec_id").cast("string"), 256), 1, 2)
     )
     b = v.select(
         F.col("vec_id").alias("vid_b"),
@@ -1737,9 +1605,7 @@ def vectors_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     map stage, then a partial+final aggregate onto the d-sized dim
     domain — the only exchange carries d·partitions moment triples,
     vectors never shuffle whole."""
-    el = spark.table("embeddings").select(
-        F.posexplode("embedding").alias("dim", "xf")
-    ).select("dim", F.col("xf").cast("double").alias("x"))
+    el = _vecs(spark).select(F.posexplode("vec").alias("dim", "x"))
     d18 = "decimal(18,0)"
     mom = el.groupBy("dim").agg(
         F.count("*").cast("long").alias("n"),

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
+import re
 import sys
 import uuid
 
@@ -12,6 +15,10 @@ from shelf_spark.queries import sampling  # noqa: E402
 from shelf_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+QUERIES_DIR = (
+    pathlib.Path(__file__).resolve().parent.parent / "shelf_spark" / "queries"
+)
 
 #: ``(sampling._ONE_TASK_EDGES, one-task path expected)``: the
 #: distributed rounds at bound 0, the one-task kernel at the default.
@@ -41,3 +48,32 @@ def jobs_submitted(spark, fn) -> list[int]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def owners(pattern: str) -> set[tuple[str, str]]:
+    """(module, top-level name) of every match of ``pattern`` in the query
+    layer; a decorator (where an oracle lives) belongs to its function."""
+    rx = re.compile(pattern)
+    found = set()
+    for f in sorted(QUERIES_DIR.glob("*.py")):
+        src = f.read_text()
+        spans = []
+        for node in ast.parse(src).body:
+            start = min(
+                [node.lineno]
+                + [d.lineno for d in getattr(node, "decorator_list", [])]
+            )
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                name = node.name
+            elif isinstance(node, ast.Assign) and isinstance(
+                node.targets[0], ast.Name
+            ):
+                name = node.targets[0].id
+            else:
+                name = "<module>"
+            spans.append((start, node.end_lineno, name))
+        for m in rx.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            name = next((n for a, b, n in spans if a <= line <= b), "<module>")
+            found.add((f.name, name))
+    return found

@@ -55,58 +55,6 @@ def test_bucketed_join_correct(spark, bucketed):
     assert joined.count() == want.count()
 
 
-def test_zorder_layout_tightens_nonleading_column_stats(spark, tmp_path):
-    """Z-order vs single-column sort, measured on real parquet footers: a
-    point predicate on the NON-leading column must be satisfiable by
-    fewer files under Z-order (every file keeps a tight min/max envelope
-    on every interleaved column, so statistics-based skipping works on
-    all of them, not just the sort prefix)."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from shelf_spark.optimize import write_zordered
-
-    events = load_table(spark, SF_DIR, "events").select(
-        "user_id",
-        (F.unix_timestamp("ts") / 170 % 256).cast("long").alias("t_bucket"),
-        "value",
-    )
-
-    base_dir = str(tmp_path / "sorted_by_user")
-    (
-        events.repartitionByRange(8, "user_id")
-        .sortWithinPartitions("user_id", "t_bucket")
-        .write.mode("overwrite")
-        .parquet(base_dir)
-    )
-    z_dir = str(tmp_path / "zordered")
-    write_zordered(events, z_dir, ["user_id", "t_bucket"], num_files=8, bits=8)
-
-    def covering_files(path: str, col: str, val: int) -> int:
-        n = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st.min <= val <= st.max:
-                    n += 1
-                    break
-        return n
-
-    probe = 128  # mid-range t_bucket
-    base_cover = covering_files(base_dir, "t_bucket", probe)
-    z_cover = covering_files(z_dir, "t_bucket", probe)
-    # user-sorted layout: every file spans ~all t_buckets → ~8/8 cover
-    assert base_cover >= 7, base_cover
-    assert z_cover < base_cover, (z_cover, base_cover)
-
-    # and the data itself is unchanged
-    assert spark.read.parquet(z_dir).count() == events.count()
-
-
 def test_runtime_bloom_filter_prunes_probe_side(spark, tmp_path):
     """Spark's runtime row-group/row-level bloom pruning: with a selective
     dim-side filter, the optimizer injects a BloomFilterAggregate on the
@@ -154,16 +102,3 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, tmp_path):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_runtime_bloom_filter_injected(spark):
-    """With the size gates lowered, InjectRuntimeFilter must build a
-    bloom filter over the selective orders slice and probe it beneath
-    the lineitem scan (might_contain before the shuffle) — the runtime
-    row-pruning lever a 100 TB fact join relies on."""
-    from shelf_spark.optimize import runtime_bloom_filter_demo
-    from shelf_spark.plans import physical_plan
-
-    df = runtime_bloom_filter_demo(spark, SF_DIR)
-    plan = physical_plan(df)
-    assert "bloom_filter" in plan or "might_contain" in plan, plan

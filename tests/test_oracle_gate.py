@@ -205,3 +205,26 @@ def test_gate_processes_spill_to_own_duckdb_dirs():
         dirs.append(out.strip())
     assert all(dirs) and dirs[0] != dirs[1]
     assert not any(os.path.exists(d) for d in dirs)
+
+
+def test_gate_removes_spill_dirs_of_dead_processes(tmp_path, monkeypatch):
+    """A killed gate worker never runs its exit hook, so its spill
+    directory stays behind; the next connection removes the directories
+    of processes that no longer run and keeps those of live ones."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    from tools import check_correctness as gate
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()  # reaped: its pid no longer runs
+    dead = tmp_path / f"check-correctness-duckdb-{child.pid}-killed"
+    live = tmp_path / f"check-correctness-duckdb-{os.getpid()}-running"
+    dead.mkdir()
+    live.mkdir()
+    gate.duckdb_connect().close()
+    assert not dead.exists()
+    assert live.exists()

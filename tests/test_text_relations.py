@@ -4,8 +4,6 @@ corpus, and the query layer builds its token relations nowhere else."""
 
 from __future__ import annotations
 
-import ast
-import pathlib
 import re
 from collections import Counter
 
@@ -17,9 +15,7 @@ import pytest
 from shelf_spark.queries import text
 from shelf_spark.session import tune
 
-QUERIES_DIR = (
-    pathlib.Path(__file__).resolve().parent.parent / "shelf_spark" / "queries"
-)
+from conftest import owners
 
 TEXTS = {
     1: "",  # one empty token, no bigram
@@ -114,46 +110,17 @@ def test_bigram_counts_twins(engines):
     assert {(a, b): c for a, b, c in got}[("the", "cat")] == 2
 
 
-def _owners(pattern: str) -> set[tuple[str, str]]:
-    """(module, top-level name) of every match of ``pattern`` in the query
-    layer; a decorator (where an oracle lives) belongs to its function."""
-    rx = re.compile(pattern)
-    found = set()
-    for f in sorted(QUERIES_DIR.glob("*.py")):
-        src = f.read_text()
-        spans = []
-        for node in ast.parse(src).body:
-            start = min(
-                [node.lineno]
-                + [d.lineno for d in getattr(node, "decorator_list", [])]
-            )
-            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-                name = node.name
-            elif isinstance(node, ast.Assign) and isinstance(
-                node.targets[0], ast.Name
-            ):
-                name = node.targets[0].id
-            else:
-                name = "<module>"
-            spans.append((start, node.end_lineno, name))
-        for m in rx.finditer(src):
-            line = src.count("\n", 0, m.start()) + 1
-            name = next((n for a, b, n in spans if a <= line <= b), "<module>")
-            found.add((f.name, name))
-    return found
-
-
 @pytest.mark.parametrize(
     "pattern",
     [re.escape('[i + 1].alias("w2")'), re.escape("unnest(range(1, len(arr)))")],
     ids=["spark", "duckdb"],
 )
 def test_adjacent_pairs_only_in_doc_bigrams(pattern):
-    assert _owners(pattern) <= {
+    assert owners(pattern) <= {
         ("text.py", "_doc_bigrams"),
         ("text.py", "_sql_doc_bigrams"),
     }
-    assert _owners(pattern)
+    assert owners(pattern)
 
 
 #: The token explodes left outside W, each because sharing it would need a
@@ -174,7 +141,7 @@ _OWN_EXPLODES = {
 
 
 def test_token_explodes_only_in_doc_words_and_named_operators():
-    found = _owners(
+    found = owners(
         r"explode\(\s*F\.split\(|explode\(\s*_words\(\)\)"
         r"|unnest\(\s*string_split\(\s*text"
     )

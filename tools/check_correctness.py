@@ -147,17 +147,37 @@ def _memory_share_mb(workers: int) -> int:
     return phys_mb // (3 * workers)
 
 
+#: A spill directory is ``<temp dir>/<prefix><pid>-<random>``.
+_SPILL_PREFIX = "check-correctness-duckdb-"
+
+
+def _pid_runs(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # runs, as another user
+        pass
+    return True
+
+
 def duckdb_connect(workers: int = 1) -> duckdb.DuckDBPyConnection:
     """An in-memory DuckDB connection that spills to a temp directory of
     its own, removed at exit, limited to its share of memory. DuckDB's
     default is ``.tmp/`` under the working directory, which ``--workers``
     processes share, so one worker could delete another's spill file
-    mid-query."""
+    mid-query. The exit hook does not run in a killed worker, so the
+    directories of processes that no longer run are removed first."""
     import atexit
+    import glob
     import shutil
     import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="check-correctness-duckdb-")
+    for old in glob.glob(os.path.join(tempfile.gettempdir(), _SPILL_PREFIX + "*")):
+        pid = os.path.basename(old)[len(_SPILL_PREFIX):].split("-")[0]
+        if pid.isdigit() and not _pid_runs(int(pid)):
+            shutil.rmtree(old, ignore_errors=True)
+    tmp = tempfile.mkdtemp(prefix=f"{_SPILL_PREFIX}{os.getpid()}-")
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     con = duckdb.connect(config={
         "temp_directory": tmp,
