@@ -24,310 +24,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's CORRECTNESS gate checks the FIRST 50 entries of queries() in
-# dict order (r01–r03 artifacts: identical 50-name window each round). The
-# full 190-operator inventory passes the local replica of the same gate
-# (`python tools/check_correctness.py`, also pytest'd in
-# tests/test_oracle_gate.py), so rotation steers which subset gets
-# *independent driver* evidence without dropping verification anywhere:
-#   r01–r03 window: relational(31) + subqueries(10) + functions(9)  → green
-#   r04 window: q1 anchor + 49 never-driver-checked operators → 50/50 green
-#   r05 window: the 44 never-checked tail + q14/q16/q17/q19 (r04 plan
-#     changes) + q1/q3 anchors → 49 green / 1 err (the int8-quantize
-#     array-output canonicalizer incompatibility, reshaped this round).
-#     Cumulative: all 143 registered queries have a driver row.
-#   r06 window: the r5 integer-grid / similarity-join rewrites + the 15
-#     late-r6 operators → 50/50 green (dedup_semantic_clusters' row was
-#     vacuous 0-vs-0 — addressed by the t40 twin below).
-#   r07 window (below): first the queries WITHOUT current driver
-#     evidence — events_asof_nearest (landed after the r6 window froze)
-#     and the 7 whose r5 grid changes postdate their r01–r04 rows — then
-#     everything touched this round (the distributed-prefix-sum replans,
-#     the semantic-dedup refactor + its non-vacuous t40 twin, the new
-#     table-vs-table as-of join, the CDC commit-marker gating), the
-#     q1/q3 anchors, then the four late-r7 operator tiers (inverted
-#     index, Pareto skyline, OHLC bars, image aHash + signature dedup,
-#     scene cuts, PMI, MAD, target encoding, RAKE, eval metrics, Neyman,
-#     VAD, Markov stationary, RFM — all first rows), and the remaining
-#     belt-and-braces slots on the oldest (r01–r03) rows. Every new
-#     operator lands in the window at the expense of re-proving
-#     unchanged r01–r03 code whose old rows remain valid. One exception:
-#     vectors_abtt_postprocess, dedup_cross_source_matrix,
-#     graph_assortativity, mix_source_entropy, privacy_k_anonymity, and
-#     ts_theil_sen_trend, and dq_distribution_drift (the last ops of
-#     the round) found the window
-#     full — they are local-gate-proved and queue for the r8 window's
-#     first slots.
-#   r08 NOTE: sample_temporal_split_embargo, dedup_incremental_batch,
-#     dedup_containment_ngram, ts_seasonal_decompose, ann_pq_topk,
-#     pack_sequences_ffd, rollup_quantile_histogram, pref_bradley_terry,
-#     sample_kcenter_coreset, stats_benjamini_hochberg,
-#     text_collocation_llr, graph_kcore, ml_naive_bayes_langid,
-#     events_window_funnel, events_markov_attribution,
-#     dq_expectation_suite, stream_dq_expectations,
-#     clean_rare_category_collapse, events_retention_halflife,
-#     ann_hybrid_rrf, sample_dedup_aware_split, vectors_matryoshka_eval,
-#     privacy_dp_count_release, ml_linear_attribution,
-#     events_path_trigrams, dedup_simhash_sha (the value-exact
-#     cross-engine SimHash twin that retires the rows-only demerit on
-#     dedup_simhash's algorithm), sample_importance_dsir,
-#     sink_zorder_layout, text_bpe_pair_counts, and
-#     stats_poisson_bootstrap_ci, ts_holt_linear_forecast, and
-#     graph_link_prediction, rollup_cms_frequencies, and
-#     stream_cms_frequencies, ann_binary_hamming_topk, and
-#     text_winnowing_fingerprints, dedup_winnowing_pairs,
-#     stats_mann_whitney_u, stats_kruskal_wallis,
-#     ml_average_precision, stats_spearman_rho,
-#     privacy_t_closeness, graph_hits, graph_bfs_distances,
-#     text_zipf_fit, ml_mutual_information, stats_jarque_bera,
-#     ml_cohens_kappa, ts_sax_symbols, text_bigram_lm_perplexity,
-#     stats_anova_oneway, set_intersect_all, set_except_all,
-#     events_bounce_rate, stats_levene, ml_ndcg_at_k,
-#     sample_balanced_downsample, orders_open_backlog_daily,
-#     er_sorted_neighborhood, stats_friedman, rollup_bitmap_distinct,
-#     join_dynamic_partition_pruning, dq_benford_law,
-#     ts_fourier_periodogram, stream_bitmap_distinct,
-#     events_user_lifetime_gini, agg_weighted_median,
-#     graph_clustering_coefficient, stats_wilcoxon_signed_rank,
-#     stats_runs_test, text_heaps_law_fit, stats_grubbs_outlier,
-#     ml_matthews_corrcoef, ts_control_chart_xmr, ts_peak_detection,
-#     ts_snaive_backtest, and ann_ivf_exhaustive (the value-exact
-#     exhaustive-probe IVF twin that retires the rows-only demerit on
-#     ann_ivf_topk's pipeline), stats_effect_sizes,
-#     ml_expected_calibration_error, and dedup_keep_best_per_cluster
-#     (the 300th operator: the end-to-end dedup ACTION — pairs →
-#     components → keep-longest ledger, value-checked through the
-#     recursive-CTE closure), events_time_to_convert,
-#     vectors_cosine_histogram, ml_brier_score, sample_negative_table,
-#     and text_pii_redact, stats_kendall_tau, ts_mann_kendall, ts_acf,
-#     events_concurrent_sessions, set_union_by_name, text_phrase_search,
-#     multimodal_image_dhash, ml_mrr, ml_best_f1_threshold,
-#     dq_freshness_lag, graph_modularity, cdc_diff_snapshots,
-#     ml_fairness_parity, text_kneser_ney_perplexity,
-#     multimodal_audio_spectrogram, scan_merge_schema,
-#     stream_freshness_lag, ts_ljung_box, vectors_dim_variance,
-#     er_golden_record, dq_referential_integrity,
-#     stats_median_ci_exact, sample_rolling_origin_folds,
-#     pipeline_corpus_curation_e2e, sink_orc_roundtrip,
-#     scan_csv_malformed, stats_tukey_hsd, stats_power_analysis,
-#     ts_holt_winters, text_novelty_score, ts_max_drawdown,
-#     pipeline_entity_resolution_e2e, pipeline_feature_store_e2e,
-#     ts_anomaly_seasonal_mad, graph_knn_degree_curve
-#     (the late-r8 operators) landed after the 50-slot window filled —
-#     local-gate-proved (all value-exact except ann_pq_topk and
-#     pack_sequences_ffd, rows-only by design with pinned value-level
-#     pytests), queued for the r9 window's first slots per the
-#     established rotation discipline.
-#   r08 window (below): anchors first, then the 7 closing-tier r7
-#     operators that missed the r7 window (verdict r7 ask #1) plus
-#     join_cross (stale since its r5 grid touch), then the three
-#     operators whose expressions changed under r8 ADVICE fixes
-#     (bigram guard, lag grid from values, decimal(38,0) ABC cut),
-#     then every NEW r8 operator (anti-join survivors twin, LSH
-#     self-dup value twin, model-eval tier, chi-square/IQR/CUSUM,
-#     graph components/degrees, interarrival, C4 filter, l-diversity,
-#     bucketed co-located join), then belt-and-braces slots on the
-#     oldest (r01–r03) rows.
-#   r09 window (below): consolidation round — EVERY slot is a first-ever
-#     driver row drawn from the 120-deep never-checked queue (VERDICT r8
-#     ask #1), ordered by user impact: the three composed e2e pipelines,
-#     the dedup ACTION chain, eval/retrieval, ANN + vectors, graph,
-#     sampling, events/stats (incl. the three r9 ADVICE-fixed operators,
-#     which double as fix re-proofs), ER/CDC/DQ, text. No anchors, no
-#     belt-and-braces re-proofs, and — encoded by the assertion in
-#     queries() — no rows-only entry can ever occupy a window slot again
-#     (VERDICT r8 ask #6; the r8 window wasted a slot on a guaranteed
-#     `err: no_oracle` row). The two VERDICT-#5 promotions are included:
-#     ann_pq_exhaustive_adc (new value-exact PQ twin) and
-#     pack_sequences_ffd (promoted outright to value-exact via a
-#     recursive-CTE FFD-replay oracle — no twin needed).
-#   r09 NOTE (fix-driven re-proof queue for r10): a proactive sweep of
-#     the r9-ADVICE tie class found the same latent bug in
-#     events_sessionize, events_bounce_rate, and stream_session_windows'
-#     oracle (session numbering over a ts-only running sum while is_new
-#     orders by (ts, event_id) — a tie could split a spurious session).
-#     Fixed on both engines + edge-pinned
-#     (tests/test_r9_advice_edges.py); all three are local-gate green on
-#     the new expressions and queue for r10 window slots alongside the
-#     remaining 71 never-checked operators. fn_try_arith also changed
-#     (rlike pre-guard removing the try_cast exception tax — output
-#     bit-identical by construction, local-gate green) and queues with
-#     them. The r9 ADVERSARIAL gate (tools/gen_adversarial.py; SCALE.md
-#     "r9 adversarial gate") then changed 13 more: ts_snaive_backtest
-#     (DuckDB decimal-// trap), window_lag_lead, sort_topk,
-#     events_asof_join, events_asof_orders, stream_asof_enrich (shared
-#     IEEE rounding replacing native round on raw doubles),
-#     ab_test_proportions, ml_fairness_parity, ts_cross_correlation,
-#     agg_corr_regr, stats_runs_test, ml_matthews_corrcoef,
-#     graph_assortativity (nullif/try_divide guards on zeroable
-#     denominators), and ts_holt_winters (two-season gate). All are
-#     local-gate green at sf0.001/0.01/0.1 AND the adversarial fixture,
-#     with outputs unchanged on in-distribution data; they queue for
-#     r10 fix-re-proof slots.
-#   r10 NOTE (queue for r11): after this window lands, 35 registered
-#     queries remain never-driver-checked — ann_pq_topk (rows-only BY
-#     DESIGN, twinned by ann_pq_exhaustive_adc's value-exact row; can
-#     never occupy a slot under the window-hygiene rule),
-#     clean_rare_category_collapse, dq_benford_law, dq_freshness_lag,
-#     events_path_trigrams, events_time_to_convert,
-#     events_user_lifetime_gini, join_dynamic_partition_pruning,
-#     ml_brier_score, ml_cohens_kappa, ml_expected_calibration_error,
-#     ml_linear_attribution, ml_mutual_information,
-#     multimodal_audio_spectrogram, multimodal_image_dhash,
-#     orders_open_backlog_daily, privacy_dp_count_release,
-#     privacy_t_closeness, set_except_all, set_intersect_all,
-#     stats_friedman, stats_grubbs_outlier, stats_poisson_bootstrap_ci,
-#     stats_power_analysis, stream_bitmap_distinct,
-#     stream_cms_frequencies, stream_dq_expectations,
-#     stream_freshness_lag, text_bigram_lm_perplexity,
-#     text_bpe_pair_counts, text_heaps_law_fit, text_phrase_search,
-#     text_winnowing_fingerprints, ts_anomaly_seasonal_mad,
-#     ts_sax_symbols. All 34 oracled ones fit in the r11 window with 16
-#     slots to spare for belt-and-braces re-proofs of the oldest
-#     (r01-r03) rows — the queue closes next round.
-#   r10-continuation NOTE (re-proof queue for r11): the r10 EMPTY
-#     corpus (tools/gen_adversarial.py --empty; SCALE.md "r10
-#     empty-increment corpus") found 15 latent empty-input issues.
-#     Nine of the fixed queries have prior driver rows and queue for
-#     r11 fix-re-proof slots: agg_cube, agg_rollup, agg_grouping_sets
-#     (empty-input grand-total convention pinned in the oracle),
-#     privacy_k_anonymity, privacy_l_diversity, dq_expectation_suite,
-#     dq_referential_integrity (try_divide/nullif share guards),
-#     events_retention_halflife (no-cohort row convention),
-#     sink_partitioned_pruning (explicit read-back schema). The other
-#     six (stream_dq_expectations, privacy_t_closeness,
-#     ml_expected_calibration_error, stats_power_analysis,
-#     text_heaps_law_fit, join_dynamic_partition_pruning) are already
-#     in the r11 never-checked queue. The r10 NULLS corpus
-#     (gen_adversarial.py --nulls; the stock fixtures carried ZERO
-#     nulls, and the engines' default null sort orders differ for ASC)
-#     then found 13 more; five of those fixed queries have prior rows
-#     and are NOT in the r10 window, adding r11 re-proofs:
-#     cdc_apply_changes, stream_cdc_upsert (struct_pack arg_max
-#     last-row-image semantics), events_anomaly_mad, ts_ewma,
-#     vectors_kmeans_assign (complete-case / null-vector exclusion).
-#     Six others changed but sit IN the r10 window (their slots prove
-#     the new expressions): stats_mann_whitney_u, stats_kruskal_wallis,
-#     stats_levene, stats_runs_test, stats_effect_sizes,
-#     ann_pq_exhaustive_adc. The r10 TIME corpus (--time; epoch-zero /
-#     pre-1970 / 9999-sentinel instants) added 3 more re-proofs with
-#     prior rows outside the r10 window: events_conversion_paths
-#     (epoch_seconds_floor replacing truncating unix_timestamp),
-#     stream_dedup (stream event-time sanity window — Spark's initial
-#     watermark is epoch zero), udf_grouped_regression (sanity window;
-#     pandas ns bridge dies at 2262). Six time-fixed queries sit IN the
-#     r10 window (asof pair, stream_asof_enrich, stream_session_windows,
-#     holt pair); orders_open_backlog_daily is in the never-checked
-#     queue; stream_user_running_totals is rows-only by design.
-#     r11 window math: 34 first-rows + 9 empty-fix + 5 nulls-fix +
-#     3 time-fix re-proofs = 51 candidates for 50 slots — ONE over;
-#     recommend deferring vectors_kmeans_assign to r12 (its change is a
-#     pure null-vector load filter, provably inert on every corpus
-#     without null embeddings, the lowest-risk deferral). Every fix is
-#     a no-op outside its hostile regime (all TEN corpora re-run green
-#     after the three sweeps).
-#   r10 window (below): fix-re-proof round. Slot 1 is the r9 driver red
-#     row (sample_balanced_downsample: the sha256-text ordering key and
-#     DECIMAL(38,0) checksum — the only cross-engine-sensitive surfaces
-#     — were replaced with pure integer arithmetic and BIGINT; see the
-#     docstring and SCALE.md "r10 red-row root cause"). Then the 13
-#     other ALREADY-CHECKED queries whose expressions changed after
-#     their last driver row (the r9 NOTE list above, plus
-#     ann_pq_exhaustive_adc whose pool ranking gained the r10 ADVICE
-#     tie-safe grid) — these are the sanctioned re-proof exception,
-#     listed in _DRIVER_WINDOW_REPROOF for the discipline test. Then
-#     the 8 fix-changed queries that never had a row (doubling as
-#     first rows), then 28 first-ever rows from the 71-deep
-#     never-checked queue in user-impact order (weighted median,
-#     rollup sketches, the stats tier, the ts tier, scan/sink/set).
-#     After this window the never-checked queue is 35.
-#   r11 window (below): queue-closing round, exactly as prescribed by
-#     the r10 VERDICT ask #1 and the r10-continuation NOTE above. The
-#     50 slots = the 34 oracled never-checked operators (everything in
-#     the r10 NOTE list except ann_pq_topk, rows-only BY DESIGN and
-#     barred from slots) + the 9 empty-corpus fix re-proofs with prior
-#     driver rows + the 4 nulls-corpus fix re-proofs outside the r10
-#     window (vectors_kmeans_assign deferred to r12 as the NOTE
-#     recommends — its change is a provably inert null-vector load
-#     filter) + the 3 time-corpus fix re-proofs outside the r10 window.
-#     After this window lands, cumulative driver coverage is 340/341 —
-#     every registered query except ann_pq_topk has a driver row — and
-#     the never-checked queue is CLOSED.
-#   r11 NOTE (re-proof queue for r12): expressions changed THIS round
-#     after their latest driver row, each local-gate green on all
-#     corpora: embed_cosine_pairs (occupancy-bounded sub-blocking
-#     replacing the whole-label-cell self-join — the registry's last
-#     super-linear plan, VERDICT r10 ask #2; oracle mirrors the
-#     sub-cell key), agg_approx_distinct and rollup_hll_mergeable
-#     (rows-only → ε-bounded oracle rows, VERDICT r10 ask #5: the
-#     query now emits the exact count plus a Spark-side within-ε
-#     assertion column the oracle pins TRUE),
-#     stream_user_running_totals (rows-only → value-exact: state now
-#     sums on the dsum_i integer grid, so the final-state snapshot has
-#     an exact SQL oracle), events_asof_orders and stream_asof_enrich
-#     (oracle-side only: floor(epoch()) → the exact-integer sql_epoch_s
-#     path, closing the r10 ADVICE far-future double-resolution
-#     exposure; Spark-side expressions untouched), plus the deferred
-#     vectors_kmeans_assign nulls fix. udf_grouped_regression's oracle
-#     also moved to the interpolated sql_sane_ts (r10 ADVICE) but sits
-#     IN the r11 window, so its slot proves the new pair. These seven
-#     fill r12 re-proof slots; remaining r12 slots go to belt-and-braces
-#     re-proofs of the oldest rows.
-#     Rows-only registry residue after r11: ann_ivf_topk, ann_pq_topk,
-#     dedup_minhash_lsh, dedup_simhash — 4 entries, every one
-#     approximate BY DESIGN with a value-exact machinery twin
-#     (ann_ivf_exhaustive / ann_pq_exhaustive_adc /
-#     dedup_minhash_lsh_selfdup / dedup_simhash_sha).
-#   r12 window (below): the re-proof round the r11 NOTE queued, plus
-#     belt-and-braces rotation now that the never-checked queue is
-#     CLOSED (cumulative driver coverage 340/341; only rows-only-BY-
-#     DESIGN ann_pq_topk has no row, barred from slots by window
-#     hygiene). Slots 1–9 = fix re-proofs (expressions changed after
-#     their latest driver row): the seven the r11 NOTE queued —
-#     embed_cosine_pairs (occupancy-bounded sub-blocking replan),
-#     agg_approx_distinct (r12: split sketch/exact/band arms — the
-#     r11 verdict's one scale-killer — AND the discrete-rank band
-#     replacing the falsely-failing interpolated band, r11 ADVICE),
-#     rollup_hll_mergeable (r12: exact arm split off the sketch agg),
-#     stream_user_running_totals (integer-grid state; r12: explicit
-#     isfinite filter both sides, r11 ADVICE), events_asof_orders and
-#     stream_asof_enrich (r11 oracle-side sql_epoch_s change),
-#     vectors_kmeans_assign (deferred r11 nulls fix) — plus two whose
-#     expressions changed THIS round: agg_median_percentile and
-#     clean_winsorize (compressed-domain order statistics replacing
-#     the values-per-group percentile() buffers, VERDICT r11 ask #5).
-#     Slots 10–50 = the 41 oldest driver rows (every remaining r03/r04
-#     row), re-proved on current expressions, exactly as the r11 NOTE
-#     prescribed. After this window no query's latest row predates r05
-#     except via its own r12 slot.
-#   r12 NOTE (re-proof queue for r13): EMPTY — every expression that
-#     changed this round (agg_approx_distinct, agg_median_percentile,
-#     clean_winsorize, rollup_hll_mergeable,
-#     stream_user_running_totals) sits IN the r12 window, so its slot
-#     proves the current expression. r13 slots should go to the
-#     next-oldest rows (the r05 era) unless r13 changes expressions.
-#     Rows-only registry residue unchanged: ann_ivf_topk, ann_pq_topk,
-#     dedup_minhash_lsh, dedup_simhash — approximate BY DESIGN, each
-#     with a value-exact machinery twin.
-#   r13 window (below): the r12 NOTE's rotation onto the next-oldest
-#     rows, plus this round's fix re-proofs. Slots 1–6 = expressions
-#     changed in r13: agg_median_percentile and clean_winsorize (the
-#     fixed-width-histogram + exact-refine replan, VERDICT r12 ask #4,
-#     plus the NaN→NULL oracle alignment, r12 ADVICE),
-#     embed_cosine_pairs (threshold 0.92 → 0.30 so the driver slot is
-#     no longer a vacuous 0-vs-0 match, r12 ADVICE), and the three
-#     consumers of jaccard_pairs_exact's new PPJoin positional filter
-#     (VERDICT r12 ask #5): dedup_ngram_jaccard,
-#     dedup_near_dup_clusters, dedup_keep_best_per_cluster.
-#     Slots 7–39 = all 33 oracled r05-era rows (the 35 the r12 NOTE
-#     queued minus rows-only-BY-DESIGN ann_ivf_topk and dedup_simhash,
-#     barred from slots by window hygiene). Slots 40–50 = the first 11
-#     r06-era rows in name order not already re-proved above.
-#   r13 NOTE (re-proof queue for r14): EMPTY — every expression that
-#     changed this round sits IN the r13 window. 21 r06-era rows
-#     remain the oldest outside the window; r14 slots should go there,
-#     then the r07 era. Rows-only registry residue unchanged:
-#     ann_ivf_topk, ann_pq_topk, dedup_minhash_lsh, dedup_simhash —
-#     approximate BY DESIGN, each with a value-exact machinery twin.
+# dict order. Every operator also passes the local replica of the same gate
+# (`python tools/check_correctness.py`), so the window only steers which 50
+# get independent driver evidence this round: first the queries whose
+# expressions changed after their latest driver row (listed again in
+# _DRIVER_WINDOW_REPROOF), then the operators with the oldest driver rows.
+# Every windowed entry must have an oracle, and the window is the highest
+# numbered _DRIVER_WINDOW_R<n> (tests/test_queries.py,
+# tests/test_oracle_gate.py); earlier rounds' windows live in the history
+# of this file.
 _DRIVER_WINDOW_R13 = [
     # 6 fix re-proofs (prior driver rows; expressions changed in r13)
     "agg_median_percentile", "clean_winsorize", "embed_cosine_pairs",
@@ -354,60 +59,6 @@ _DRIVER_WINDOW_R13 = [
     "mix_temperature_weights",
 ]
 
-_DRIVER_WINDOW_R12 = [
-    # 9 fix re-proofs (prior driver rows; expressions changed since)
-    "embed_cosine_pairs", "agg_approx_distinct", "rollup_hll_mergeable",
-    "stream_user_running_totals", "events_asof_orders",
-    "stream_asof_enrich", "vectors_kmeans_assign",
-    "agg_median_percentile", "clean_winsorize",
-    # 14 belt-and-braces: every r03-era row not already re-proved above
-    "set_union_all", "set_intersect", "set_except", "dedup_distinct",
-    "q21_sole_late_supplier", "fn_string", "fn_datetime", "fn_math",
-    "fn_hash", "fn_conditional", "fn_json", "fn_array",
-    "fn_explode_words", "fn_map_struct",
-    # 27 belt-and-braces: every r04-era row not already re-proved above
-    "window_rank", "window_ntile", "window_first_last",
-    "window_cume_nth", "window_nth_value", "text_token_count",
-    "text_lang_id", "text_quality_score", "text_token_count_bpe",
-    "dedup_exact", "dedup_events_exact", "sample_bernoulli_hash",
-    "sample_stratified_hash", "sample_train_valid_split",
-    "interleave_weighted_sources", "ann_cosine_topk",
-    "embed_norm_stats", "multimodal_decode", "multimodal_filter_resize",
-    "multimodal_decode_wav_bmp", "stream_tumbling_window",
-    "stream_sliding_window", "udf_pandas_zscore", "udtf_ngrams",
-    "udf_arrow_scalar", "text_repetition_stats", "mba_item_pairs",
-]
-
-_DRIVER_WINDOW_R11 = [
-    # 34 first-ever rows: the entire remaining never-checked queue
-    # (r10 NOTE list, minus rows-only-by-design ann_pq_topk)
-    "clean_rare_category_collapse", "dq_benford_law", "dq_freshness_lag",
-    "events_path_trigrams", "events_time_to_convert",
-    "events_user_lifetime_gini", "join_dynamic_partition_pruning",
-    "ml_brier_score", "ml_cohens_kappa", "ml_expected_calibration_error",
-    "ml_linear_attribution", "ml_mutual_information",
-    "multimodal_audio_spectrogram", "multimodal_image_dhash",
-    "orders_open_backlog_daily", "privacy_dp_count_release",
-    "privacy_t_closeness", "set_except_all", "set_intersect_all",
-    "stats_friedman", "stats_grubbs_outlier", "stats_poisson_bootstrap_ci",
-    "stats_power_analysis", "stream_bitmap_distinct",
-    "stream_cms_frequencies", "stream_dq_expectations",
-    "stream_freshness_lag", "text_bigram_lm_perplexity",
-    "text_bpe_pair_counts", "text_heaps_law_fit", "text_phrase_search",
-    "text_winnowing_fingerprints", "ts_anomaly_seasonal_mad",
-    "ts_sax_symbols",
-    # 9 empty-corpus fix re-proofs (prior driver rows; r10 NOTE)
-    "agg_cube", "agg_rollup", "agg_grouping_sets", "privacy_k_anonymity",
-    "privacy_l_diversity", "dq_expectation_suite",
-    "dq_referential_integrity", "events_retention_halflife",
-    "sink_partitioned_pruning",
-    # 4 nulls-corpus fix re-proofs (prior rows, outside the r10 window)
-    "cdc_apply_changes", "stream_cdc_upsert", "events_anomaly_mad",
-    "ts_ewma",
-    # 3 time-corpus fix re-proofs (prior rows, outside the r10 window)
-    "events_conversion_paths", "stream_dedup", "udf_grouped_regression",
-]
-
 #: Sanctioned FIX-driven re-proof exception for the R13 window (see
 #: tests/test_queries.py test_driver_window_discipline): names with a
 #: prior driver row whose expressions changed afterwards — this
@@ -420,173 +71,6 @@ _DRIVER_WINDOW_REPROOF = [
     "agg_median_percentile", "clean_winsorize", "embed_cosine_pairs",
     "dedup_ngram_jaccard", "dedup_near_dup_clusters",
     "dedup_keep_best_per_cluster",
-]
-
-_DRIVER_WINDOW_R10 = [
-    # slot 1: the r9 driver red row, re-proved on the de-sensitized plan
-    "sample_balanced_downsample",
-    # fix re-proofs: expression changed after last driver row (r9 NOTE
-    # + this round's ADVICE changes)
-    "events_sessionize", "stream_session_windows", "fn_try_arith",
-    "window_lag_lead", "sort_topk", "events_asof_join",
-    "events_asof_orders", "stream_asof_enrich", "ab_test_proportions",
-    "ts_cross_correlation", "agg_corr_regr", "graph_assortativity",
-    "ann_pq_exhaustive_adc",
-    # fix-changed AND never checked: first rows that double as re-proofs
-    "events_bounce_rate", "ts_snaive_backtest", "ml_fairness_parity",
-    "stats_runs_test", "ml_matthews_corrcoef", "ts_holt_winters",
-    "ts_max_drawdown", "text_zipf_fit",
-    # never-checked queue, user-impact order: core agg + rollup sketches
-    "agg_weighted_median", "rollup_bitmap_distinct",
-    "rollup_cms_frequencies", "rollup_quantile_histogram",
-    # stats tier
-    "stats_benjamini_hochberg", "stats_mann_whitney_u",
-    "stats_kruskal_wallis", "stats_spearman_rho", "stats_anova_oneway",
-    "stats_levene", "stats_jarque_bera", "stats_effect_sizes",
-    "stats_tukey_hsd", "stats_wilcoxon_signed_rank",
-    # time-series tier
-    "ts_seasonal_decompose", "ts_acf", "ts_mann_kendall", "ts_ljung_box",
-    "ts_holt_linear_forecast", "ts_fourier_periodogram",
-    "ts_peak_detection", "ts_control_chart_xmr",
-    # scan / sink / set tier
-    "scan_merge_schema", "scan_csv_malformed", "sink_orc_roundtrip",
-    "sink_zorder_layout", "set_union_by_name",
-    # first row for the last output-rendering fix (conc/disc -> DOUBLE;
-    # the r9 red row's exposure class, retired everywhere this round)
-    "stats_kendall_tau",
-]
-
-#: r10's sanctioned re-proof exception (historical record): names with
-#: a prior driver row whose expressions changed before the r10 window —
-#: r9 hardening sweeps (session-tie trio, asof/rounding five,
-#: divide-by-zero guards, fn_try_arith's rlike guard) and the r10
-#: red-row + ADVICE fixes.
-_DRIVER_WINDOW_REPROOF_R10 = [
-    "sample_balanced_downsample", "events_sessionize",
-    "stream_session_windows", "fn_try_arith", "window_lag_lead",
-    "sort_topk", "events_asof_join", "events_asof_orders",
-    "stream_asof_enrich", "ab_test_proportions", "ts_cross_correlation",
-    "agg_corr_regr", "graph_assortativity", "ann_pq_exhaustive_adc",
-]
-
-_DRIVER_WINDOW_R09 = [
-    # composed end-to-end pipelines (highest user impact)
-    "pipeline_corpus_curation_e2e", "pipeline_entity_resolution_e2e",
-    "pipeline_feature_store_e2e",
-    # the dedup ACTION chain + fingerprint family
-    "dedup_keep_best_per_cluster", "dedup_simhash_sha",
-    "dedup_incremental_batch", "dedup_containment_ngram",
-    "dedup_winnowing_pairs",
-    # eval / retrieval tier
-    "ml_average_precision", "ml_best_f1_threshold", "ml_ndcg_at_k",
-    "ml_mrr", "ann_binary_hamming_topk", "ann_hybrid_rrf",
-    # ANN exhaustive twins (VERDICT #5) + vector diagnostics
-    "ann_ivf_exhaustive", "ann_pq_exhaustive_adc",
-    "vectors_matryoshka_eval", "vectors_cosine_histogram",
-    "vectors_dim_variance",
-    # packing promotion (VERDICT #5: FFD manifest now value-exact)
-    "pack_sequences_ffd",
-    # graph tier
-    "graph_bfs_distances", "graph_hits", "graph_kcore",
-    "graph_link_prediction", "graph_clustering_coefficient",
-    "graph_modularity", "graph_knn_degree_curve",
-    # sampling / split tier
-    "sample_temporal_split_embargo", "sample_kcenter_coreset",
-    "sample_dedup_aware_split", "sample_importance_dsir",
-    "sample_balanced_downsample", "sample_negative_table",
-    "sample_rolling_origin_folds",
-    # events / preference analytics (incl. ADVICE-fix re-proof)
-    "events_window_funnel", "events_markov_attribution",
-    "events_retention_halflife", "events_concurrent_sessions",
-    "pref_bradley_terry",
-    # stats / text ADVICE-fix re-proofs (first rows post-fix)
-    "stats_median_ci_exact", "text_novelty_score",
-    # entity resolution / CDC / data quality
-    "er_sorted_neighborhood", "er_golden_record", "cdc_diff_snapshots",
-    "dq_referential_integrity", "dq_expectation_suite",
-    # text analysis tier
-    "text_collocation_llr", "ml_naive_bayes_langid",
-    "text_kneser_ney_perplexity", "text_pii_redact",
-]
-
-_DRIVER_WINDOW_R08 = [
-    "q1_pricing_summary",    # flagship anchor
-    "q3_shipping_priority",  # anchor
-    # closing-tier r7 ops: first-ever driver rows (verdict ask #1)
-    "vectors_abtt_postprocess", "dedup_cross_source_matrix",
-    "graph_assortativity", "mix_source_entropy", "privacy_k_anonymity",
-    "ts_theil_sen_trend", "dq_distribution_drift",
-    "join_cross",            # stale since r5 grid touch
-    # r8 ADVICE fixes changed these expressions
-    "text_pmi_bigrams", "ts_cross_correlation", "agg_abc_classification",
-    # r8 NEW operators
-    "join_anti_survivors", "dedup_minhash_lsh_selfdup",
-    "ml_roc_auc", "ml_ks_statistic", "ml_lift_deciles",
-    "ml_calibration_bins", "stats_chi_square", "clean_outlier_iqr",
-    "ts_changepoint_cusum", "graph_connected_components",
-    "graph_degree_distribution", "events_interarrival_stats",
-    "filter_c4_style", "privacy_l_diversity", "join_bucketed_colocated",
-    "dq_psi_stability", "stats_welch_ttest", "ml_feature_hashing",
-    "sink_partitioned_pruning", "sql_recursive_cte",
-    # refactor re-proof (shared _minhash_lsh_pairs helper; rows-only)
-    "dedup_minhash_lsh",
-    # belt-and-braces: oldest (r01–r03) driver rows, re-proved current
-    "q5_local_supplier_volume", "q10_returned_items",
-    "q6_forecast_revenue", "q4_order_priority", "q12_ship_lag_buckets",
-    "q14_promo_share", "scan_project_filter", "join_left_outer",
-    "join_right_outer", "join_full_outer", "join_semi", "join_anti",
-    "agg_stats", "agg_rollup", "agg_cube", "agg_grouping_sets",
-]
-
-_DRIVER_WINDOW_R07 = [
-    "q1_pricing_summary",    # flagship anchor
-    "q3_shipping_priority",  # anchor
-    "events_asof_nearest",   # never driver-checked (post-r6-window)
-    # r5 grid changes postdate their last driver rows (join_cross's
-    # slot yielded to the PCA first-row — its grid change is constants
-    # on a 25-row cartesian, locally re-proved)
-    "join_nonequi", "dedup_keep_first",
-    "docs_stats_by_source", "text_fingerprint", "join_anti",
-    "join_salted_skew",
-    # r7: NEW operators
-    "events_asof_orders",        # table-vs-table as-of (ASOF JOIN oracle)
-    "dedup_semantic_clusters_t40",  # non-vacuous semantic-dedup twin
-    "text_chunk_cdc",            # content-defined chunking (rolling hash)
-    "dedup_chunk_cdc",           # chunk-level dedup over CDC chunks
-    "events_conversion_paths",   # multi-touch path summary (exact)
-    "multimodal_audio_features", # framed energy/ZCR over real WAV decode
-    "ann_lsh_topk",              # value-exact banded SimHash-LSH ANN
-    "sample_epoch_shuffle",      # deterministic epoch-shuffle manifest
-    "join_scd2_pointintime",     # facts vs SCD2 validity intervals
-    "stream_asof_enrich",        # per-micro-batch as-of vs static orders
-    # r7: distributed prefix-sum replans (single-task domain windows gone)
-    "join_interval_overlap", "ml_quantile_bins",
-    # r7: refactors sharing code with new tests (expressions unchanged,
-    # re-proved anyway) + the CDC version-discovery gating
-    "dedup_semantic_clusters", "dedup_substring_exact",
-    "stream_cdc_upsert",
-    # belt-and-braces: oldest (r01–r03) driver rows, re-proved current
-    "agg_abc_classification", "orders_cohort_revenue",
-    "text_keyphrase_rake", "ml_eval_binary_metrics",
-    "sample_stratified_neyman", "multimodal_audio_vad_segments",
-    "multimodal_video_scene_cuts",
-    # r7 (late): third tier — collocations, robust stats, target
-    # encoding, perceptual-signature dedup (first rows)
-    "text_pmi_bigrams", "events_anomaly_mad", "ml_target_encoding",
-    "dedup_image_ahash",
-    "stream_ohlc_daily",
-    "ts_cross_correlation", "ml_eval_multiclass", "vectors_centroid_drift",
-    "clean_impute_group_median",
-    "events_markov_stationary", "events_rfm_segments",
-    "events_survival_km", "ab_test_proportions",
-    "vectors_pca_top_component",
-    # r7 (late): the second operator tier — IR index build, skyline,
-    # bar resampling, perceptual image hashing
-    "text_inverted_index", "ml_pareto_frontier", "events_ohlc_daily",
-    "multimodal_image_ahash",
-    # r7 (late): the day-domain cumulative sum also moved to the
-    # distributed prefix pattern
-    "events_new_users_daily",
 ]
 
 

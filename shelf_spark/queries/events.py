@@ -13,6 +13,26 @@ Scale notes:
 - sessionization and the as-of join are single-shuffle designs: one
   repartition by user_id, then sort-within-partition window functions —
   no self-join, no range-join blowup.
+
+Session relation. The session operators (``events_sessionize``,
+``events_bounce_rate``, ``events_concurrent_sessions``,
+``ranges.join_interval_overlap``) and ``stream_session_windows``' oracle
+read one relation defined here, a Spark builder next to its DuckDB twin
+(tests/test_session_relation.py holds them equal row for row):
+
+- S ``_sessions``: ``user_id, session_id, s_start, s_end, n_events,
+  session_value``, one row per session of a user.
+
+Rules. A user's events are ordered by ``(ts, event_id)``; an event opens a
+new session when it is the user's first or when it follows the previous
+one by more than 30 minutes. The gap is measured in fractional seconds on
+both engines: exactly 30 minutes stays in the session, 1800.5 s opens a
+new one. ``session_id`` (BIGINT) numbers a user's sessions from 1;
+``s_start`` and ``s_end`` are the first and last event's ``ts``,
+``n_events`` the event count and ``session_value`` the exact ``value`` sum
+(num.dsum_i). The builder returns an unpinned relation; each caller pins
+at its call site and selects the columns it reads. The SQL twin takes the
+events relation as ``src``, so a caller can filter events first.
 """
 
 from __future__ import annotations
@@ -35,17 +55,65 @@ _BUCKET_10M = (
 )
 
 
-@query(
-    "events_tumbling_window",
-    oracle=f"""
+def _sessions(spark: SparkSession) -> DataFrame:
+    """S: ``user_id, session_id, s_start, s_end, n_events, session_value``."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(w)
+    # ts may arrive as TIMESTAMP_NTZ (driver-generated parquet): NTZ has no
+    # direct numeric cast, so hop through TIMESTAMP first — the session tz
+    # is pinned to UTC (session.py), making the hop value-identical.
+    gap = (
+        F.col("ts").cast("timestamp").cast("double")
+        - prev_ts.cast("timestamp").cast("double")
+    )
+    is_new = F.when(prev_ts.isNull() | (gap > 30 * 60), 1).otherwise(0)
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    return (
+        spark.table("events")
+        .withColumn("is_new", is_new)
+        .withColumn("session_id", F.sum("is_new").over(run).cast("long"))
+        .groupBy("user_id", "session_id")
+        .agg(
+            F.min("ts").alias("s_start"),
+            F.max("ts").alias("s_end"),
+            F.count("*").alias("n_events"),
+            dsum_i(F.col("value"), 2).alias("session_value"),
+        )
+    )
+
+
+def _sql_sessions(src: str = "events") -> str:
+    return f"""
+      WITH flagged AS (
+        SELECT user_id, ts, value, event_id,
+               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                         > INTERVAL 30 MINUTE
+                    OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                    THEN 1 ELSE 0 END AS is_new
+        FROM {src}
+      ),
+      numbered AS (
+        SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        FROM flagged
+      )
+      SELECT user_id, session_id, min(ts) AS s_start, max(ts) AS s_end,
+             count(*) AS n_events, {SQL_DSUM_VALUE} AS session_value
+      FROM numbered GROUP BY user_id, session_id
+    """
+
+
+SQL_TUMBLING_WINDOW = f"""
     SELECT {_BUCKET_10M} AS w_start,
            event_type,
            count(*) AS n_events,
            {SQL_DSUM_VALUE} AS total_value
     FROM events
     GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@query("events_tumbling_window", oracle=SQL_TUMBLING_WINDOW)
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10-minute tumbling windows (F.window aligns to the 1970 epoch, same as
     # the truncation arithmetic in the oracle).
@@ -93,56 +161,23 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "events_sessionize",
     oracle=f"""
-    WITH flagged AS (
-      SELECT user_id, ts, value, event_id,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE
-                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    numbered AS (
-      SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM flagged
-    )
-    SELECT user_id, session_id,
-           min(ts) AS session_start,
-           max(ts) AS session_end,
-           count(*) AS n_events,
-           {SQL_DSUM_VALUE} AS session_value
-    FROM numbered
-    GROUP BY user_id, session_id
+    SELECT user_id, session_id, s_start AS session_start, s_end AS session_end,
+           n_events, session_value
+    FROM ({_sql_sessions()})
     """,
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Gaps-and-islands sessionization (30-min inactivity gap): lag → flag →
-    # running sum → aggregate. One shuffle on user_id; everything after is
-    # sort-within-partition. (Streaming twin: F.session_window /
-    # applyInPandasWithState in shelf_spark.streaming.)
-    e = spark.table("events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    prev_ts = F.lag("ts").over(w_order)
-    # ts may arrive as TIMESTAMP_NTZ (driver-generated parquet): NTZ has no
-    # direct numeric cast, so hop through TIMESTAMP first — the session tz
-    # is pinned to UTC (session.py), making the hop value-identical.
-    gap = (
-        F.col("ts").cast("timestamp").cast("double")
-        - prev_ts.cast("timestamp").cast("double")
-    )
-    flagged = e.withColumn(
-        "is_new",
-        F.when(prev_ts.isNull() | (gap > 30 * 60), 1).otherwise(0),
-    )
-    numbered = flagged.withColumn("session_id", F.sum("is_new").over(w_run).cast("long"))
-    return numbered.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
-        dsum_i(F.col("value"), 2).alias("session_value"),
+    # Gaps-and-islands sessionization (30-min inactivity gap) — relation S:
+    # lag → flag → running sum → aggregate. One shuffle on user_id;
+    # everything after is sort-within-partition. (Streaming twin:
+    # F.session_window in shelf_spark.streaming.)
+    return _sessions(spark).select(
+        "user_id",
+        "session_id",
+        F.col("s_start").alias("session_start"),
+        F.col("s_end").alias("session_end"),
+        "n_events",
+        "session_value",
     )
 
 
@@ -331,9 +366,7 @@ def events_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_asof_orders",
-    oracle=f"""
+SQL_ASOF_ORDERS = f"""
     WITH o AS (
       SELECT o_custkey AS user_id, o_orderdate AS o_ts,
              max(o_orderkey) AS o_key,
@@ -352,8 +385,10 @@ def events_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS staleness_days
     FROM p ASOF LEFT JOIN o ON p.user_id = o.user_id AND p.ts >= o.o_ts
     ORDER BY purchase_id
-    """,
-)
+    """
+
+
+@query("events_asof_orders", oracle=SQL_ASOF_ORDERS)
 def events_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLE-vs-TABLE as-of join (the feature-store point-in-time
     lookup): each purchase event is enriched with its user's most recent
@@ -934,25 +969,10 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_bounce_rate",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE
-                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    numbered AS (
-      SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM flagged
-    ),
-    sessions AS (
-      SELECT user_id, session_id,
-             CAST(date_trunc('day', min(ts)) AS DATE) AS day,
-             count(*) AS n_events
-      FROM numbered GROUP BY user_id, session_id
+    oracle=f"""
+    WITH sessions AS (
+      SELECT CAST(date_trunc('day', s_start) AS DATE) AS day, n_events
+      FROM ({_sql_sessions()})
     )
     SELECT day,
            CAST(count(*) AS BIGINT) AS n_sessions,
@@ -973,25 +993,8 @@ def events_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lag → flag → running sum are all sort-within-partition), then the
     session rollup and a calendar-bounded day rollup. Counts are exact
     integers; the rate is one IEEE division per day row."""
-    e = spark.table("events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    prev_ts = F.lag("ts").over(w_order)
-    gap = (
-        F.col("ts").cast("timestamp").cast("double")
-        - prev_ts.cast("timestamp").cast("double")
-    )
-    is_new = F.when(
-        prev_ts.isNull() | (gap > 30 * 60), F.lit(1)
-    ).otherwise(F.lit(0))
-    numbered = e.withColumn("is_new", is_new).withColumn(
-        "session_id", F.sum("is_new").over(w_run).cast("long")
-    )
-    sessions = numbered.groupBy("user_id", "session_id").agg(
-        F.to_date(F.date_trunc("day", F.min("ts"))).alias("day"),
-        F.count("*").alias("n_events"),
+    sessions = _sessions(spark).select(
+        F.to_date(F.date_trunc("day", "s_start")).alias("day"), "n_events"
     )
     bounce = F.count(F.when(F.col("n_events") == 1, 1))
     return (
@@ -1099,23 +1102,9 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_concurrent_sessions",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE
-                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ), numbered AS (
-      SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                AS session_id
-      FROM flagged
-    ), sessions AS (
-      SELECT user_id, session_id, min(ts) AS s_start, max(ts) AS s_end
-      FROM numbered GROUP BY user_id, session_id
-    ), bounds AS (
+    oracle=f"""
+    WITH sessions AS ({_sql_sessions()}),
+    bounds AS (
       SELECT ts, k, CAST(sum(d) AS BIGINT) AS delta
       FROM (
         SELECT s_start AS ts, 0 AS k, 1 AS d FROM sessions
@@ -1155,25 +1144,7 @@ def events_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     more bounded-domain aggregate."""
     from .prefix import attach_prefix_sums
 
-    e = spark.table("events")
-    w_order = W.partitionBy("user_id").orderBy("ts", "event_id")
-    # Running-sum window totally ordered by (ts, event_id) so session
-    # numbering is deterministic when a user's events share a timestamp
-    # (r8 ADVICE) — mirrored in the oracle's numbered CTE.
-    w_run = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    prev_ts = F.lag("ts").over(w_order)
-    gap = (
-        F.col("ts").cast("timestamp").cast("double")
-        - prev_ts.cast("timestamp").cast("double")
-    )
-    numbered = e.withColumn(
-        "is_new", F.when(prev_ts.isNull() | (gap > 30 * 60), 1).otherwise(0)
-    ).withColumn("session_id", F.sum("is_new").over(w_run).cast("long"))
-    sessions = numbered.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("s_start"), F.max("ts").alias("s_end")
-    )
+    sessions = _sessions(spark)
     bounds = (
         sessions.select(
             F.col("s_start").alias("ts"), F.lit(0).alias("k"), F.lit(1).alias("d")

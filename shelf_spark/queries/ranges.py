@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .events import _sessions, _sql_sessions
 from .num import _round_ieee, _sql_round_ieee
 from .pin import pin
 from .registry import query
@@ -178,32 +179,10 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SESSIONS = """
-    flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE
-                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    numbered AS (
-      SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged
-    ),
-    sessions AS (
-      SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-             min(ts) AS s_start, max(ts) AS s_end
-      FROM numbered GROUP BY user_id, session_id
-    )
-"""
-
-
 @query(
     "join_interval_overlap",
     oracle=f"""
-    WITH {_SQL_SESSIONS},
+    WITH sessions AS ({_sql_sessions()}),
     ov AS (
       SELECT a.user_id, a.session_id, count(*) AS n
       FROM sessions a JOIN sessions b
@@ -255,34 +234,9 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping PAIRS rather than counts, the bucket-explode equi-join
     (join_range_bucketed) remains the shape — pair enumeration cannot
     beat its own output size."""
-    from pyspark.sql import Window
-
-    e = spark.table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                # NTZ-safe: unix_timestamp accepts both TIMESTAMP and
-                # TIMESTAMP_NTZ (session tz pinned UTC → identical values)
-                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-                > 30 * 60
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    numbered = flagged.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
     sessions = (
-        numbered.groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
+        _sessions(spark)
+        .select("user_id", "session_id", "s_start", "s_end")
         # feeds the domain agg and both rank lookups (r15, sf0.1: lazy 142
         # tasks / 6.2-6.9 s CPU vs 76 tasks / 3.3-4.2 s, same 95,465 rows)
         .transform(pin, "fanout")

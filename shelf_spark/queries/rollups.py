@@ -369,9 +369,7 @@ def rollup_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mq.unionByName(aq).orderBy("grain", "month")
 
 
-@query(
-    "rollup_bitmap_distinct",
-    oracle="""
+SQL_BITMAP_DISTINCT = """
     WITH perday AS (
       SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
              CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
@@ -381,8 +379,40 @@ def rollup_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT day, n_distinct,
            (SELECT n FROM tot) AS merged_distinct_all
     FROM perday ORDER BY day
-    """,
-)
+    """
+
+
+def _bitmap_cells(events: DataFrame) -> DataFrame:
+    """``day, bucket, bm``: the user-position bitmap of each (day,
+    bitmap bucket) cell of an events relation."""
+    ev = events.select(F.to_date(F.date_trunc("day", "ts")).alias("day"), "user_id")
+    return ev.groupBy(
+        "day", F.bitmap_bucket_number(F.col("user_id")).alias("bucket")
+    ).agg(
+        F.bitmap_construct_agg(F.bitmap_bit_position(F.col("user_id"))).alias("bm")
+    )
+
+
+def _bitmap_distinct(cells: DataFrame) -> DataFrame:
+    """``day, n_distinct, merged_distinct_all`` from (day, bucket, bm)
+    cells: per-day distinct = Σ bitmap_count; OR-merging the SAME bucket
+    across days gives the exact all-days distinct from the cells alone."""
+    perday = cells.groupBy("day").agg(
+        F.sum(F.bitmap_count("bm")).cast("long").alias("n_distinct")
+    )
+    merged = (
+        cells.groupBy("bucket")
+        .agg(F.bitmap_or_agg("bm").alias("bm"))
+        .agg(F.sum(F.bitmap_count("bm")).cast("long").alias("merged_distinct_all"))
+    )
+    return (
+        perday.crossJoin(F.broadcast(merged))
+        .select("day", "n_distinct", "merged_distinct_all")
+        .orderBy("day")
+    )
+
+
+@query("rollup_bitmap_distinct", oracle=SQL_BITMAP_DISTINCT)
 def rollup_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT mergeable distinct users per day via Roaring-style BITMAP
     aggregation (Spark's bitmap_construct_agg family): each (day,
@@ -398,26 +428,4 @@ def rollup_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack 32,768 users per 4 KB bucket); the cross-day merge touches
     only the day×bucket grid. The oracle recomputes both levels with
     plain COUNT(DISTINCT) — same integers, different algorithm."""
-    ev = spark.table("events").select(
-        F.to_date(F.date_trunc("day", "ts")).alias("day"), "user_id"
-    )
-    cells = ev.groupBy(
-        "day", F.bitmap_bucket_number(F.col("user_id")).alias("bucket")
-    ).agg(
-        F.bitmap_construct_agg(F.bitmap_bit_position(F.col("user_id"))).alias("bm")
-    )
-    perday = cells.groupBy("day").agg(
-        F.sum(F.bitmap_count("bm")).cast("long").alias("n_distinct")
-    )
-    # mergeability: OR the same bucket ACROSS days, then count — the
-    # exact global distinct from the per-day state alone.
-    merged = (
-        cells.groupBy("bucket")
-        .agg(F.bitmap_or_agg("bm").alias("bm"))
-        .agg(F.sum(F.bitmap_count("bm")).cast("long").alias("merged_distinct_all"))
-    )
-    return (
-        perday.crossJoin(F.broadcast(merged))
-        .select("day", "n_distinct", "merged_distinct_all")
-        .orderBy("day")
-    )
+    return _bitmap_distinct(_bitmap_cells(spark.table("events")))

@@ -284,39 +284,58 @@ def rollup_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = spark.table("lineitem").select(
         F.col("l_partkey").alias("key"), F.year("l_shipdate").alias("part_year")
     )
-    jrange = F.broadcast(
-        spark.range(_CMS_D).select(F.col("id").cast("int").alias("j"))
+    cells = _cms_cells(li, "part_year")
+    merged = cells.groupBy("j", "bucket").agg(F.sum("c").cast("long").alias("c"))
+    return (
+        _cms_estimates(_cms_tops(li), merged)
+        .withColumnRenamed("key", "l_partkey")
+        .orderBy(F.desc("true_cnt"), "l_partkey")
     )
-    bucket = F.conv(
-        F.expr("substr(h, 2 * j + 1, 2)"), 16, 10
-    ).cast("int")
-    digest = F.sha2(F.col("key").cast("string"), 256)
-    cells = (
-        li.withColumn("h", digest)
-        .crossJoin(jrange)
+
+
+def _cms_probes(keyed: DataFrame) -> DataFrame:
+    """``keyed`` with one row per (row, sketch row ``j``) and its ``bucket``."""
+    jrange = keyed.sparkSession.range(_CMS_D).select(F.col("id").cast("int").alias("j"))
+    bucket = F.conv(F.expr("substr(h, 2 * j + 1, 2)"), 16, 10).cast("int")
+    return (
+        keyed.withColumn("h", F.sha2(F.col("key").cast("string"), 256))
+        .crossJoin(F.broadcast(jrange))
         .withColumn("bucket", bucket)
-        .groupBy("part_year", "j", "bucket")
+    )
+
+
+def _cms_cells(keyed: DataFrame, *grain: str) -> DataFrame:
+    """``*grain, j, bucket, c``: the Count-Min cells of ``keyed``'s
+    ``key`` column, one d×w grid per grain value."""
+    return (
+        _cms_probes(keyed)
+        .groupBy(*grain, "j", "bucket")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    merged = cells.groupBy("j", "bucket").agg(F.sum("c").cast("long").alias("c"))
-    tops = (
-        li.groupBy("key")
+
+
+def _cms_tops(keyed: DataFrame) -> DataFrame:
+    """``key, true_cnt`` of the _CMS_TOP most frequent keys (ties by key)."""
+    return (
+        keyed.groupBy("key")
         .agg(F.count("*").cast("long").alias("true_cnt"))
         .orderBy(F.desc("true_cnt"), "key")
         .limit(_CMS_TOP)
     )
-    probes = (
-        tops.withColumn("h", digest).crossJoin(jrange).withColumn("bucket", bucket)
-    )
+
+
+def _cms_estimates(tops: DataFrame, merged: DataFrame) -> DataFrame:
+    """``key, true_cnt, est_cnt, never_undercounts``: each top key's
+    point query (min over its d cells of the ``j, bucket, c`` sketch)."""
     return (
-        probes.join(F.broadcast(merged), ["j", "bucket"])
+        _cms_probes(tops)
+        .join(F.broadcast(merged), ["j", "bucket"])
         .groupBy("key", "true_cnt")
         .agg(F.min("c").alias("est_cnt"))
         .select(
-            F.col("key").alias("l_partkey"),
+            "key",
             "true_cnt",
             "est_cnt",
             (F.col("est_cnt") >= F.col("true_cnt")).alias("never_undercounts"),
         )
-        .orderBy(F.desc("true_cnt"), "l_partkey")
     )

@@ -5967,9 +5967,7 @@ def ml_best_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FRESHNESS_STALE_S = 86400  # stale when a slice trails the corpus by >1 day
 
 
-@query(
-    "dq_freshness_lag",
-    oracle=f"""
+SQL_FRESHNESS_LAG = f"""
     WITH per AS (
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n_rows,
@@ -5982,23 +5980,20 @@ _FRESHNESS_STALE_S = 86400  # stale when a slice trails the corpus by >1 day
            (floor(epoch(global_ts)) - floor(epoch(latest_ts)))
              > {_FRESHNESS_STALE_S} AS is_stale
     FROM per CROSS JOIN g
-    """,
-)
-def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-slice freshness audit: each event_type's newest timestamp,
-    its lag behind the corpus-wide newest, and a >1-day staleness flag —
-    the "did a producer stop publishing?" check every ingest DQ suite
-    runs (dq_profile sees value distributions; this sees TIME, the
-    dimension that silently breaks downstream training-data cutoffs).
+    """
 
-    Scale shape: one partial+final max/count aggregate onto the bounded
-    event_type domain; the global max is a 1-row broadcast. Lag uses
-    integer-second arithmetic (floor(epoch)) so the flag can never flip
-    on a sub-second float ulp."""
-    per = spark.table("events").groupBy("event_type").agg(
+
+def _freshness_per(events: DataFrame) -> DataFrame:
+    """``event_type, n_rows, latest_ts`` of an events relation."""
+    return events.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_rows"),
         F.max("ts").alias("latest_ts"),
     )
+
+
+def _freshness_lag(per: DataFrame) -> DataFrame:
+    """Each slice's lag behind the newest slice and its staleness flag,
+    from ``event_type, n_rows, latest_ts``."""
     g = per.agg(F.max("latest_ts").alias("global_ts"))
     lag = F.floor(F.col("global_ts").cast("timestamp").cast("double")) - F.floor(
         F.col("latest_ts").cast("timestamp").cast("double")
@@ -6010,6 +6005,21 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         lag.cast("long").alias("lag_seconds"),
         (lag > _FRESHNESS_STALE_S).alias("is_stale"),
     )
+
+
+@query("dq_freshness_lag", oracle=SQL_FRESHNESS_LAG)
+def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-slice freshness audit: each event_type's newest timestamp,
+    its lag behind the corpus-wide newest, and a >1-day staleness flag —
+    the "did a producer stop publishing?" check every ingest DQ suite
+    runs (dq_profile sees value distributions; this sees TIME, the
+    dimension that silently breaks downstream training-data cutoffs).
+
+    Scale shape: one partial+final max/count aggregate onto the bounded
+    event_type domain; the global max is a 1-row broadcast. Lag uses
+    integer-second arithmetic (floor(epoch)) so the flag can never flip
+    on a sub-second float ulp."""
+    return _freshness_lag(_freshness_per(spark.table("events")))
 
 
 # ---------------------------------------------------------------------------

@@ -17,8 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events import SQL_DSUM_VALUE, SQL_OHLC_DAILY, _BUCKET_10M
-from .num import sql_epoch_s, sql_stream_sane_ts, stream_sane_ts
+from .events import (SQL_ASOF_ORDERS, SQL_DSUM_VALUE, SQL_OHLC_DAILY,
+                     SQL_TUMBLING_WINDOW, _sql_sessions)
+from .num import sql_stream_sane_ts, stream_sane_ts
 from .registry import query
 
 #: Shared oracle-side event-time sanity predicate for WATERMARKED
@@ -33,17 +34,7 @@ def _events_path(sf_dir: str) -> str:
     return os.path.join(sf_dir, "events.parquet")
 
 
-@query(
-    "stream_tumbling_window",
-    oracle=f"""
-    SELECT {_BUCKET_10M} AS w_start,
-           event_type,
-           count(*) AS n_events,
-           {SQL_DSUM_VALUE} AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
+@query("stream_tumbling_window", oracle=SQL_TUMBLING_WINDOW)
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import streaming as S
 
@@ -134,26 +125,10 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stream_session_windows",
     oracle=f"""
-    WITH flagged AS (
-      SELECT user_id, ts, value, event_id,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE
-                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events WHERE {SQL_SANE_TS}
-    ),
-    numbered AS (
-      SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged
-    )
-    SELECT min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           user_id,
-           count(*) AS n_events,
-           {SQL_DSUM_VALUE} AS session_value
-    FROM numbered
-    GROUP BY user_id, session_id
+    SELECT s_start AS session_start,
+           s_end + INTERVAL 30 MINUTE AS session_end,
+           user_id, n_events, session_value
+    FROM ({_sql_sessions(f"(SELECT * FROM events WHERE {SQL_SANE_TS})")})
     """,
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,29 +332,7 @@ def stream_stream_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "first_event_id", "then_event_id")
 
 
-@query(
-    "stream_asof_enrich",
-    oracle=f"""
-    WITH o AS (
-      SELECT o_custkey AS user_id, o_orderdate AS o_ts,
-             max(o_orderkey) AS o_key,
-             max_by(o_totalprice, o_orderkey) AS o_price
-      FROM orders GROUP BY 1, 2
-    ),
-    p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    )
-    SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
-           o.o_key AS asof_orderkey,
-           floor(o.o_price * 100 + 0.5) / 100 AS asof_totalprice,
-           o.o_ts AS asof_orderdate,
-           CAST(({sql_epoch_s('p.ts')} - {sql_epoch_s('o.o_ts')}) // 86400
-                AS BIGINT)
-             AS staleness_days
-    FROM p ASOF LEFT JOIN o ON p.user_id = o.user_id AND p.ts >= o.o_ts
-    ORDER BY purchase_id
-    """,
-)
+@query("stream_asof_enrich", oracle=SQL_ASOF_ORDERS)
 def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING point-in-time enrichment: purchase events arriving on a
     file stream are as-of joined (backward) against the static orders
@@ -389,16 +342,10 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent), so any micro-batch split yields exactly the batch
     result and the entry shares ``events_asof_orders``' DuckDB
     ASOF-JOIN oracle — a full value-hash check on a streaming loop.
-    Each batch's output commits to its own ``b{batch_id}`` directory
-    (overwrite → idempotent under foreachBatch's at-least-once replay,
-    the same discipline as the CDC upsert's versioned state). Per batch
-    the plan is the union-tag single-key-shuffle as-of; the collapsed
-    orders side would be checkpointed once in a long-running job."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    Each batch's enrichment is its ledger (streaming.run_ledger). Per
+    batch the plan is the union-tag single-key-shuffle as-of; the
+    collapsed orders side would be checkpointed once in a long-running
+    job."""
     from .. import streaming as S
     from .events import asof_enrich_orders
 
@@ -406,27 +353,9 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = S.events_stream(spark, _events_path(sf_dir)).filter(
         F.col("event_type") == "purchase"
     )
-    sink = tempfile.mkdtemp(prefix="shelf-stream-asof-")
-    checkpoint = tempfile.mkdtemp(prefix="shelf-stream-asof-ckpt-")
-
-    def enrich_batch(batch_df, batch_id: int) -> None:
-        asof_enrich_orders(batch_df, orders).write.mode("overwrite").parquet(
-            os.path.join(sink, f"b{batch_id}")
-        )
-
-    q = S.foreach_batch_upsert(stream, checkpoint, enrich_batch)
-    q.awaitTermination()
-    parts = [
-        os.path.join(sink, d) for d in os.listdir(sink) if d.startswith("b")
-    ]
-    if not parts:  # empty ingest: empty result with the output schema
-        return spark.createDataFrame(
-            [],
-            "purchase_id bigint, user_id bigint, purchase_ts timestamp, "
-            "asof_orderkey bigint, asof_totalprice double, "
-            "asof_orderdate timestamp, staleness_days bigint",
-        )
-    return spark.read.parquet(*parts).orderBy("purchase_id")
+    return S.run_ledger(
+        stream, lambda batch: asof_enrich_orders(batch, orders)
+    ).orderBy("purchase_id")
 
 
 @query(
@@ -463,15 +392,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash check on a foreachBatch maintenance loop. Multi-batch
     convergence (splits + out-of-order arrival) is pytest-covered in
     tests/test_streaming.py."""
-    import tempfile
-
     from .. import streaming as S
 
     stream = S.events_stream(spark, _events_path(sf_dir))
-    state_dir = tempfile.mkdtemp(prefix="shelf-cdc-state-")
-    from pyspark.sql import functions as F
-
-    final = S.run_cdc_upsert(spark, stream, state_dir)
+    final = S.run_cdc_upsert(spark, stream, S.scratch_dir("cdc-state"))
     # Null-safe tombstone test (see cdc_apply_changes).
     return (
         final.filter(~F.col("last_type").eqNullSafe(F.lit("error")))
@@ -548,22 +472,16 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per batch, one conditional-count aggregate (a rule =
     one counter, never a second scan); the cross-batch merge sums
     R-row ledgers. Long-running jobs keep the same loop with a real
-    trigger; the per-batch overwrite commit makes at-least-once replay
-    safe (the CDC-upsert discipline)."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    trigger; streaming.run_ledger's per-batch overwrite makes
+    at-least-once replay safe. One zero row per rule joins the ledgers
+    before the sum, so a stream in which no micro-batch ran still
+    reports every rule at zero checked and zero violations, like the
+    batch twin: a circuit breaker that vanishes when the stream is
+    silent would read as "all checks missing" downstream."""
     from .. import streaming as S
-
-    stream = S.events_stream(spark, _events_path(sf_dir))
-    sink = tempfile.mkdtemp(prefix="shelf-stream-dq-")
-    checkpoint = tempfile.mkdtemp(prefix="shelf-stream-dq-ckpt-")
-
     from .stats import dq_ledger_rows
 
-    def score_batch(batch_df, batch_id: int) -> None:
+    def score_batch(batch_df: DataFrame) -> DataFrame:
         agg = batch_df.agg(
             F.count("*").alias("n_checked"),
             *[
@@ -571,34 +489,22 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i, (_, pred) in enumerate(_SDQ_RULES)
             ],
         )
-        dq_ledger_rows(agg, _SDQ_RULES).write.mode("overwrite").parquet(
-            os.path.join(sink, f"b{batch_id}")
-        )
+        return dq_ledger_rows(agg, _SDQ_RULES)
 
-    q = S.foreach_batch_upsert(stream, checkpoint, score_batch)
-    q.awaitTermination()
-    parts = [
-        os.path.join(sink, d) for d in os.listdir(sink) if d.startswith("b")
-    ]
-    if parts:
-        merged = (
-            spark.read.parquet(*parts)
-            .groupBy("rule")
-            .agg(
-                F.sum("n_checked").cast("long").alias("n_checked"),
-                F.sum("n_violations").cast("long").alias("n_violations"),
-            )
+    stream = S.events_stream(spark, _events_path(sf_dir))
+    zeros = spark.createDataFrame(
+        [(name, 0, 0) for name, _ in _SDQ_RULES],
+        "rule string, n_checked bigint, n_violations bigint",
+    )
+    merged = (
+        S.run_ledger(stream, score_batch)
+        .unionByName(zeros)
+        .groupBy("rule")
+        .agg(
+            F.sum("n_checked").cast("long").alias("n_checked"),
+            F.sum("n_violations").cast("long").alias("n_violations"),
         )
-    else:
-        # Zero micro-batches (an EMPTY source — the r10 empty corpus, or
-        # a real stream's quiet first window): the gate still reports
-        # every rule at zero checked/zero violations, matching the batch
-        # twin's convention — a circuit breaker that vanishes when the
-        # stream is silent would read as "all checks missing" downstream.
-        merged = spark.createDataFrame(
-            [(name, 0, 0) for name, _ in _SDQ_RULES],
-            "rule string, n_checked bigint, n_violations bigint",
-        )
+    )
     return (
         merged.select(
             "rule",
@@ -622,290 +528,146 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r8e: streaming Count-Min sketch (mergeable frequency state, live)
 # ---------------------------------------------------------------------------
 
-_SCMS_D = 4
-_SCMS_TOP = 10
 
-#: Row j's bucket is hex characters 2j, 2j+1 of the key's SHA-256, which
-#: fixes the sketch width at 256.
-_SCMS_DUCK_BUCKET = (
-    "((strpos('0123456789abcdef', substr(h, 2 * j + 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(h, 2 * j + 2, 1)) - 1)"
-)
+def _cms_oracle() -> str:
+    """stream_cms_frequencies' oracle: rollup_cms_frequencies' sketch
+    over the events' user ids. A callable, rendered once every operator
+    module is imported, because sketches.py registers after this one."""
+    from .sketches import _CMS_D, _CMS_DUCK_BUCKET, _CMS_TOP
 
-
-@query(
-    "stream_cms_frequencies",
-    oracle=f"""
+    return f"""
     WITH keyed AS (
       SELECT user_id AS key FROM events
     ), cells AS (
-      SELECT j, {_SCMS_DUCK_BUCKET} AS bucket, CAST(count(*) AS BIGINT) AS c
+      SELECT j, {_CMS_DUCK_BUCKET} AS bucket, CAST(count(*) AS BIGINT) AS c
       FROM (SELECT j, sha256(CAST(key AS VARCHAR)) AS h
-            FROM keyed CROSS JOIN generate_series(0, {_SCMS_D - 1}) AS g(j)) t
+            FROM keyed CROSS JOIN generate_series(0, {_CMS_D - 1}) AS g(j)) t
       GROUP BY 1, 2
     ), tops AS (
       SELECT key, CAST(count(*) AS BIGINT) AS true_cnt
       FROM keyed GROUP BY key
-      ORDER BY true_cnt DESC, key LIMIT {_SCMS_TOP}
+      ORDER BY true_cnt DESC, key LIMIT {_CMS_TOP}
     ), est AS (
       SELECT t.key, t.true_cnt, min(m.c) AS est_cnt
-      FROM (SELECT key, true_cnt, j, {_SCMS_DUCK_BUCKET} AS bucket
+      FROM (SELECT key, true_cnt, j, {_CMS_DUCK_BUCKET} AS bucket
             FROM (SELECT key, true_cnt, j, sha256(CAST(key AS VARCHAR)) AS h
                   FROM tops
-                  CROSS JOIN generate_series(0, {_SCMS_D - 1}) AS g(j)) q) t
+                  CROSS JOIN generate_series(0, {_CMS_D - 1}) AS g(j)) q) t
       JOIN cells m ON m.j = t.j AND m.bucket = t.bucket
       GROUP BY 1, 2
     )
     SELECT key AS user_id, true_cnt, est_cnt,
            (est_cnt >= true_cnt) AS never_undercounts
     FROM est ORDER BY true_cnt DESC, user_id
-    """,
-)
+    """
+
+
+@query("stream_cms_frequencies", oracle=_cms_oracle)
 def stream_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of `rollup_cms_frequencies`: each micro-batch of
     the event stream builds its own d×w Count-Min grid of user-id
-    frequencies and commits it as an idempotent per-batch ledger; the
-    merged sketch is the cell-wise SUM of the ledgers — additive, so
-    the merged state equals the batch-built sketch for ANY batch
-    split, which is exactly what the full DuckDB value oracle checks
-    (the same property stream_dq_expectations proves for counters,
-    here proven for sketch STATE). This is the live shape: a feed
-    maintains bounded frequency state (1,024 cells) forever, no key
-    cardinality growth, heavy-key queries answered from state without
-    rescanning history.
+    frequencies as its ledger (streaming.run_ledger); the merged sketch
+    is the cell-wise SUM of the ledgers — additive, so the merged state
+    equals the batch-built sketch for ANY batch split, which is exactly
+    what the full DuckDB value oracle checks (the same property
+    stream_dq_expectations proves for counters, here proven for sketch
+    STATE). This is the live shape: a feed maintains bounded frequency
+    state (1,024 cells) forever, no key cardinality growth, heavy-key
+    queries answered from state without rescanning history.
 
-    The point-query side (true top-{_SCMS_TOP} + the one-sided-error
+    The point-query side (the true top users + the one-sided-error
     witness) reads the static table — the stream owns the sketch, the
-    batch side owns the ground truth it is checked against."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    batch side owns the ground truth it is checked against. Cells,
+    top keys and estimates are sketches.py's builders."""
     from .. import streaming as S
+    from .sketches import _cms_cells, _cms_estimates, _cms_tops
+
+    def keyed(events: DataFrame) -> DataFrame:
+        return events.select(F.col("user_id").alias("key"))
 
     stream = S.events_stream(spark, _events_path(sf_dir))
-    sink = tempfile.mkdtemp(prefix="shelf-stream-cms-")
-    checkpoint = tempfile.mkdtemp(prefix="shelf-stream-cms-ckpt-")
-
-    jrange = spark.range(_SCMS_D).select(F.col("id").cast("int").alias("j"))
-    bucket = F.conv(F.expr("substr(h, 2 * j + 1, 2)"), 16, 10).cast("int")
-
-    def sketch_batch(batch_df, batch_id: int) -> None:
-        cells = (
-            batch_df.select(F.sha2(F.col("user_id").cast("string"), 256).alias("h"))
-            .crossJoin(F.broadcast(jrange))
-            .withColumn("bucket", bucket)
-            .groupBy("j", "bucket")
-            .agg(F.count("*").cast("long").alias("c"))
-        )
-        cells.write.mode("overwrite").parquet(os.path.join(sink, f"b{batch_id}"))
-
-    q = S.foreach_batch_upsert(stream, checkpoint, sketch_batch)
-    q.awaitTermination()
-    parts = [os.path.join(sink, d) for d in os.listdir(sink) if d.startswith("b")]
-    if not parts:
-        return spark.createDataFrame(
-            [], "user_id bigint, true_cnt bigint, est_cnt bigint, "
-            "never_undercounts boolean"
-        )
     merged = (
-        spark.read.parquet(*parts)
+        S.run_ledger(stream, lambda batch: _cms_cells(keyed(batch)))
         .groupBy("j", "bucket")
         .agg(F.sum("c").cast("long").alias("c"))
     )
-    tops = (
-        spark.table("events")
-        .groupBy(F.col("user_id").alias("key"))
-        .agg(F.count("*").cast("long").alias("true_cnt"))
-        .orderBy(F.desc("true_cnt"), "key")
-        .limit(_SCMS_TOP)
-    )
-    probes = (
-        tops.withColumn("h", F.sha2(F.col("key").cast("string"), 256))
-        .crossJoin(F.broadcast(jrange))
-        .withColumn("bucket", bucket)
-    )
+    tops = _cms_tops(keyed(spark.table("events")))
     return (
-        probes.join(F.broadcast(merged), ["j", "bucket"])
-        .groupBy("key", "true_cnt")
-        .agg(F.min("c").alias("est_cnt"))
-        .select(
-            F.col("key").alias("user_id"),
-            "true_cnt",
-            "est_cnt",
-            (F.col("est_cnt") >= F.col("true_cnt")).alias("never_undercounts"),
-        )
+        _cms_estimates(tops, merged)
+        .withColumnRenamed("key", "user_id")
         .orderBy(F.desc("true_cnt"), "user_id")
     )
 
 
-@query(
-    "stream_bitmap_distinct",
-    oracle="""
-    WITH perday AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
-      FROM events GROUP BY 1
-    ),
-    tot AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n FROM events)
-    SELECT day, n_distinct,
-           (SELECT n FROM tot) AS merged_distinct_all
-    FROM perday ORDER BY day
-    """,
-)
+def _bitmap_oracle() -> str:
+    """rollup_bitmap_distinct's oracle, which registers after this module."""
+    from .rollups import SQL_BITMAP_DISTINCT
+
+    return SQL_BITMAP_DISTINCT
+
+
+@query("stream_bitmap_distinct", oracle=_bitmap_oracle)
 def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of `rollup_bitmap_distinct`: each micro-batch
-    commits its own (day, bucket) bitmap cells as an idempotent ledger;
+    """STREAMING twin of `rollup_bitmap_distinct`: each micro-batch's
+    (day, bucket) bitmap cells are its ledger (streaming.run_ledger);
     the live state is the bitmap_or_agg of the ledgers — OR is
     idempotent AND commutative, so the merged state equals the
     batch-built bitmaps for ANY batch split AND under replayed batches
     (a strictly stronger invariance than the CMS's additive merge,
     which replay would double-count). The full value oracle (plain
     COUNT DISTINCT at both grains) checks exactly that, making this
-    the EXACT live distinct-user feed the HLL tier approximates."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    the EXACT live distinct-user feed the HLL tier approximates. Cells
+    and readout are rollups.py's builders."""
     from .. import streaming as S
+    from .rollups import _bitmap_cells, _bitmap_distinct
 
     stream = S.events_stream(spark, _events_path(sf_dir))
-    sink = tempfile.mkdtemp(prefix="shelf-stream-bm-")
-    checkpoint = tempfile.mkdtemp(prefix="shelf-stream-bm-ckpt-")
-
-    def bitmap_batch(batch_df, batch_id: int) -> None:
-        cells = (
-            batch_df.select(
-                F.to_date(F.date_trunc("day", "ts")).alias("day"), "user_id"
-            )
-            .groupBy(
-                "day", F.bitmap_bucket_number(F.col("user_id")).alias("bucket")
-            )
-            .agg(
-                F.bitmap_construct_agg(
-                    F.bitmap_bit_position(F.col("user_id"))
-                ).alias("bm")
-            )
-        )
-        cells.write.mode("overwrite").parquet(os.path.join(sink, f"b{batch_id}"))
-
-    q = S.foreach_batch_upsert(stream, checkpoint, bitmap_batch)
-    q.awaitTermination()
-    parts = [os.path.join(sink, d) for d in os.listdir(sink) if d.startswith("b")]
-    if not parts:
-        return spark.createDataFrame(
-            [], "day date, n_distinct bigint, merged_distinct_all bigint"
-        )
     cells = (
-        spark.read.parquet(*parts)
+        S.run_ledger(stream, _bitmap_cells)
         .groupBy("day", "bucket")
         .agg(F.bitmap_or_agg("bm").alias("bm"))
     )
-    perday = cells.groupBy("day").agg(
-        F.sum(F.bitmap_count("bm")).cast("long").alias("n_distinct")
-    )
-    merged = (
-        cells.groupBy("bucket")
-        .agg(F.bitmap_or_agg("bm").alias("bm"))
-        .agg(F.sum(F.bitmap_count("bm")).cast("long").alias("merged_distinct_all"))
-    )
-    return (
-        perday.crossJoin(F.broadcast(merged))
-        .select("day", "n_distinct", "merged_distinct_all")
-        .orderBy("day")
-    )
+    return _bitmap_distinct(cells)
 
 
 # ---------------------------------------------------------------------------
 # streaming freshness monitor (mergeable MAX state, live)
 # ---------------------------------------------------------------------------
 
-_SFRESH_STALE_S = 86400
+
+def _freshness_oracle() -> str:
+    """dq_freshness_lag's oracle, which registers after this module."""
+    from .stats import SQL_FRESHNESS_LAG
+
+    return SQL_FRESHNESS_LAG
 
 
-@query(
-    "stream_freshness_lag",
-    oracle=f"""
-    WITH per AS (
-      SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             max(ts) AS latest_ts
-      FROM events GROUP BY event_type
-    ), g AS (SELECT max(latest_ts) AS global_ts FROM per)
-    SELECT event_type, n_rows, latest_ts,
-           CAST(floor(epoch(global_ts)) - floor(epoch(latest_ts)) AS BIGINT)
-             AS lag_seconds,
-           (floor(epoch(global_ts)) - floor(epoch(latest_ts)))
-             > {_SFRESH_STALE_S} AS is_stale
-    FROM per CROSS JOIN g
-    """,
-)
+@query("stream_freshness_lag", oracle=_freshness_oracle)
 def stream_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING freshness monitor — the continuous twin of
-    dq_freshness_lag: every micro-batch commits an idempotent per-batch
-    (event_type, count, max ts) ledger via ``foreachBatch``; the merged
-    view takes max-of-maxes and sum-of-counts, both MERGEABLE for any
-    micro-batch split, which is exactly what the shared batch oracle's
-    value hash proves. This is the live "did a producer stop
-    publishing?" alarm — the one DQ check that only makes sense
-    streaming, because staleness is a property of NOW.
+    dq_freshness_lag: every micro-batch's (event_type, count, max ts) is
+    its ledger (streaming.run_ledger); the merged view takes max-of-maxes
+    and sum-of-counts, both MERGEABLE for any micro-batch split, which
+    is exactly what the shared batch oracle's value hash proves. This is
+    the live "did a producer stop publishing?" alarm — the one DQ check
+    that only makes sense streaming, because staleness is a property of
+    NOW.
 
     Scale shape: per batch one count/max aggregate onto the bounded
     event_type domain (map-side combine; state = one timestamp + one
     counter per type per batch); the cross-batch merge reads R-row
-    ledgers. Per-batch overwrite commits make at-least-once replay
-    safe (the CDC-upsert discipline)."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    ledgers. The per-slice aggregate and the lag finish are stats.py's
+    builders."""
     from .. import streaming as S
+    from .stats import _freshness_lag, _freshness_per
 
     stream = S.events_stream(spark, _events_path(sf_dir))
-    sink = tempfile.mkdtemp(prefix="shelf-stream-fresh-")
-    checkpoint = tempfile.mkdtemp(prefix="shelf-stream-fresh-ckpt-")
-
-    def score_batch(batch_df, batch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("n_rows"),
-                F.max("ts").alias("latest_ts"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"b{batch_id}"))
-        )
-
-    q = S.foreach_batch_upsert(stream, checkpoint, score_batch)
-    q.awaitTermination()
-    parts = [
-        os.path.join(sink, d) for d in os.listdir(sink) if d.startswith("b")
-    ]
-    if not parts:
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_rows bigint, latest_ts timestamp, "
-            "lag_seconds bigint, is_stale boolean",
-        )
     per = (
-        spark.read.parquet(*parts)
+        S.run_ledger(stream, _freshness_per)
         .groupBy("event_type")
         .agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
             F.max("latest_ts").alias("latest_ts"),
         )
     )
-    g = per.agg(F.max("latest_ts").alias("global_ts"))
-    lag = F.floor(F.col("global_ts").cast("timestamp").cast("double")) - F.floor(
-        F.col("latest_ts").cast("timestamp").cast("double")
-    )
-    return per.crossJoin(F.broadcast(g)).select(
-        "event_type",
-        "n_rows",
-        "latest_ts",
-        lag.cast("long").alias("lag_seconds"),
-        (lag > _SFRESH_STALE_S).alias("is_stale"),
-    )
+    return _freshness_lag(per)

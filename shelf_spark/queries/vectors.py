@@ -183,9 +183,9 @@ def _sql_occupancy_blocked(v: str) -> str:
       FROM ({v})"""
 
 
-@query(
-    "ann_cosine_topk",
-    oracle=f"""
+#: Brute-force cosine top-k: the oracle of ann_cosine_topk and of its
+#: value-exact IVF twin ann_ivf_exhaustive.
+SQL_COSINE_TOPK = f"""
     WITH v AS ({_sql_vecs()}),
     q AS (SELECT vec_id AS q_id, vec AS q_vec, nrm AS q_nrm FROM v WHERE vec_id < {N_QUERIES}),
     pairs AS (
@@ -201,8 +201,10 @@ def _sql_occupancy_blocked(v: str) -> str:
     )
     SELECT q_id, neighbor_id, round(cosine, 4) AS cosine, CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= {TOP_K}
-    """,
-)
+    """
+
+
+@query("ann_cosine_topk", oracle=SQL_COSINE_TOPK)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Brute-force exact cosine top-k: broadcast the queries, scan the
     # corpus once, rank per query. The exact baseline the ANN variants are
@@ -307,26 +309,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk(spark, N_PROBE)
 
 
-@query(
-    "ann_ivf_exhaustive",
-    oracle=f"""
-    WITH v AS ({_sql_vecs()}),
-    q AS (SELECT vec_id AS q_id, vec AS q_vec, nrm AS q_nrm FROM v WHERE vec_id < {N_QUERIES}),
-    pairs AS (
-      SELECT q_id, v.vec_id AS neighbor_id,
-             {_sql_dot("q_vec", "vec")} / (q_nrm * nrm) AS cosine
-      FROM q CROSS JOIN v
-      WHERE v.vec_id <> q_id
-    ),
-    ranked AS (
-      SELECT q_id, neighbor_id, cosine,
-             row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-      FROM pairs
-    )
-    SELECT q_id, neighbor_id, round(cosine, 4) AS cosine, CAST(rnk AS BIGINT) AS rnk
-    FROM ranked WHERE rnk <= {TOP_K}
-    """,
-)
+@query("ann_ivf_exhaustive", oracle=SQL_COSINE_TOPK)
 def ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VALUE-EXACT twin of ann_ivf_topk (the dedup_minhash_lsh_selfdup
     pattern applied to IVF): probe EVERY cell (n_probe ≥ cell count),

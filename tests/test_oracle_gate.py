@@ -228,3 +228,51 @@ def test_gate_removes_spill_dirs_of_dead_processes(tmp_path, monkeypatch):
     gate.duckdb_connect().close()
     assert not dead.exists()
     assert live.exists()
+
+
+def _oracle_refs() -> dict[str, str]:
+    """Query name → the constant or callable its ``@query`` decorator
+    names as its oracle, read from the AST. A module function whose last
+    statement returns a name (a late-registered twin's oracle, imported in
+    its body) counts as that name; literal oracle text counts as its own
+    decorator's position."""
+    import ast
+
+    from conftest import QUERIES_DIR
+
+    refs = {}
+    for f in sorted(QUERIES_DIR.glob("*.py")):
+        tree = ast.parse(f.read_text())
+        returns = {
+            node.name: node.body[-1].value.id
+            for node in tree.body
+            if isinstance(node, ast.FunctionDef)
+            and isinstance(node.body[-1], ast.Return)
+            and isinstance(node.body[-1].value, ast.Name)
+        }
+        for node in tree.body:
+            for d in getattr(node, "decorator_list", []):
+                if not (isinstance(d, ast.Call) and getattr(d.func, "id", "") == "query"):
+                    continue
+                kw = {k.arg: k.value for k in d.keywords}
+                oracle = kw.get("oracle", d.args[1] if len(d.args) > 1 else None)
+                if isinstance(oracle, ast.Name):
+                    refs[d.args[0].value] = returns.get(oracle.id, oracle.id)
+                else:
+                    refs[d.args[0].value] = f"{f.name}:{d.lineno}"
+    return refs
+
+
+def test_equal_oracles_share_one_definition():
+    """Two operators held to the same oracle text must name one shared
+    definition of it, so the twins cannot drift apart unnoticed."""
+    from shelf_spark.queries import ORACLES
+
+    refs = _oracle_refs()
+    by_text: dict[str, list[str]] = {}
+    for name, sql in ORACLES.items():
+        by_text.setdefault(" ".join(sql.split()), []).append(name)
+    shared = [names for names in by_text.values() if len(names) > 1]
+    assert shared
+    copies = [names for names in shared if len({refs[n] for n in names}) > 1]
+    assert not copies, copies

@@ -103,17 +103,19 @@ def test_concurrent_sessions_tied_first_events_match_oracle(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
     rows = [
         # user 1: two events at the SAME ts, then one 10 min later
-        (101, t0, 1),
-        (102, t0, 1),
-        (103, t0 + dt.timedelta(minutes=10), 1),
+        (101, t0, 1, 1.0),
+        (102, t0, 1, 1.0),
+        (103, t0 + dt.timedelta(minutes=10), 1, 1.0),
         # user 2: tie at t0+5min (overlapping user 1's session), then a
         # >30min gap → second session
-        (201, t0 + dt.timedelta(minutes=5), 2),
-        (202, t0 + dt.timedelta(minutes=5), 2),
-        (203, t0 + dt.timedelta(hours=2), 2),
+        (201, t0 + dt.timedelta(minutes=5), 2, 1.0),
+        (202, t0 + dt.timedelta(minutes=5), 2, 1.0),
+        (203, t0 + dt.timedelta(hours=2), 2, 1.0),
     ]
+    # `value` as in every events table: the session relation both engines
+    # read sums it
     df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long"
+        rows, "event_id long, ts timestamp, user_id long, value double"
     )
     path = str(tmp_path / "events.parquet")
     df.toPandas().to_parquet(path)

@@ -45,30 +45,6 @@ def test_session_parity(spark, stream):
     assert _rows(got, cols) == _rows(want, cols)
 
 
-def test_sliding_parity(spark, stream):
-    got = S.run_available_now(S.sliding_avg(stream), "t_sliding")
-    register_views(spark, SF_DIR)
-    from pyspark.sql import functions as F
-
-    want = (
-        spark.table("events")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"), F.avg("value").alias("avg_value"))
-        .select(F.col("w.start").alias("w_start"), "n_events", "avg_value")
-    )
-    g = {(r["w_start"], r["n_events"], round(r["avg_value"], 9)) for r in got.collect()}
-    w = {(r["w_start"], r["n_events"], round(r["avg_value"], 9)) for r in want.collect()}
-    assert g == w
-
-
-def test_dedup_stream(spark, stream):
-    got = S.run_available_now(S.dedup_stream(stream), "t_dedup", output_mode="append")
-    register_views(spark, SF_DIR)
-    n_distinct = spark.table("events").select("event_id").distinct().count()
-    assert got.count() == n_distinct
-    assert got.select("event_id").distinct().count() == n_distinct
-
-
 def test_user_running_totals(spark, stream):
     got = S.run_available_now(
         S.user_running_totals(stream), "t_user_totals", output_mode="update"
@@ -94,17 +70,6 @@ def test_user_running_totals(spark, stream):
     g = {r["user_id"]: (r["n_events"], r["total_value"]) for r in got.collect()}
     w = {r["user_id"]: (r["n_events"], r["total_value"]) for r in want.collect()}
     assert g == w
-
-
-def test_parquet_sink_exactly_once(spark, stream, tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = S.write_parquet_stream(S.dedup_stream(stream), out, ckpt)
-    q.awaitTermination(60)
-    q.stop()
-    n = spark.read.parquet(out).count()
-    register_views(spark, SF_DIR)
-    assert n == spark.table("events").select("event_id").distinct().count()
 
 
 def test_stream_static_enrich_parity(spark, stream):
@@ -327,11 +292,11 @@ def test_cdc_latest_version_requires_commit_marker(tmp_path):
 def test_stream_asof_enrich_multibatch_equals_batch(spark, tmp_path):
     """Backward as-of against a STATIC right side is batch-decomposable:
     splitting the purchase stream into 3 interleaved micro-batches (one
-    file per trigger) must reproduce the single-pass batch enrichment
-    row-for-row — the property stream_asof_enrich's single-batch gate
-    run doesn't exercise on its own."""
+    file per trigger) must make run_ledger's union of per-batch
+    enrichments reproduce the single-pass batch enrichment row-for-row —
+    the property stream_asof_enrich's single-batch gate run doesn't
+    exercise on its own."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -351,28 +316,102 @@ def test_stream_asof_enrich_multibatch_equals_batch(spark, tmp_path):
     stream = S.events_stream(spark, str(ingest), max_files_per_trigger=1).filter(
         F.col("event_type") == "purchase"
     )
-    sink = tempfile.mkdtemp(prefix="shelf-test-asof-sink-")
-    ckpt = tempfile.mkdtemp(prefix="shelf-test-asof-ckpt-")
-
-    def enrich(batch_df, batch_id):
-        asof_enrich_orders(batch_df, orders).write.mode("overwrite").parquet(
-            os.path.join(sink, f"b{batch_id}")
-        )
-
-    q = S.foreach_batch_upsert(stream, ckpt, enrich)
-    q.awaitTermination()
-    parts = [os.path.join(sink, d) for d in os.listdir(sink) if d.startswith("b")]
-    assert len(parts) >= 2, "expected multiple micro-batches"
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(*parts).collect()
+    got = S.run_ledger(stream, lambda batch: asof_enrich_orders(batch, orders))
+    ledgers = {os.path.basename(os.path.dirname(f)) for f in got.inputFiles()}
+    assert len(ledgers) >= 2, "expected multiple micro-batches"
+    want = asof_enrich_orders(e.filter(F.col("event_type") == "purchase"), orders)
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect()
     )
-    want = sorted(
-        tuple(r)
-        for r in asof_enrich_orders(
-            e.filter(F.col("event_type") == "purchase"), orders
-        ).collect()
+
+
+@pytest.fixture
+def empty_events(tmp_path):
+    """An sf directory whose events.parquet has the events schema and no
+    row: the empty corpus's shape, in which no micro-batch runs."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(pq.read_table(EVENTS).slice(0, 0), tmp_path / "events.parquet")
+    return str(tmp_path)
+
+
+def test_run_ledger_without_batches_is_empty_with_ledger_columns(spark, empty_events):
+    from pyspark.sql import functions as F
+
+    stream = S.events_stream(spark, f"{empty_events}/events.parquet")
+
+    def ledger(batch):
+        return batch.groupBy("event_type").agg(F.max("ts").alias("latest_ts"))
+
+    got = S.run_ledger(stream, ledger)
+    assert got.columns == ["event_type", "latest_ts"]
+    assert got.collect() == []
+
+
+def test_stream_dq_expectations_without_batches_reports_every_rule(
+    spark, empty_events
+):
+    from shelf_spark.queries.streaming_ops import _SDQ_RULES
+
+    got = QUERIES["stream_dq_expectations"].__wrapped__(spark, empty_events)
+    assert [(r.rule, r.n_checked, r.n_violations, r.passed) for r in got.collect()] == [
+        (name, 0, 0, True) for name in sorted(name for name, _ in _SDQ_RULES)
+    ]
+
+
+def test_stream_operator_leaves_no_temp_dir_after_exit():
+    """A process that runs a stream operator keeps its checkpoints and
+    ledgers under one root named for its pid, and the root is gone once
+    the process exits."""
+    import glob
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from shelf_spark import streaming as S\n"
+        "from shelf_spark.queries import QUERIES\n"
+        "from shelf_spark.session import get_spark\n"
+        f"QUERIES['stream_freshness_lag'](get_spark('tmpdir-child'), {SF_DIR!r}).collect()\n"
+        "print(S._root(), len(os.listdir(S._root())))\n"
     )
-    assert got == want
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    child = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert child.returncode == 0, child.stderr[-2000:]
+    used, n_dirs = child.stdout.split()[-2:]
+    prefix = os.path.join(tempfile.gettempdir(), "shelf-stream-")
+    assert used.startswith(prefix) and int(n_dirs) >= 2
+    pid = os.path.basename(used)[len("shelf-stream-"):].split("-")[0]
+    assert not os.path.exists(used)
+    assert not glob.glob(f"{prefix}{pid}-*")
+
+
+def test_stream_root_removes_roots_of_dead_processes(tmp_path, monkeypatch):
+    """A killed process never runs its exit hook, so its root stays
+    behind; making a root removes the roots of processes that no longer
+    run and keeps those of live ones."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()  # reaped: its pid no longer runs
+    dead = tmp_path / f"shelf-stream-{child.pid}-killed"
+    live = tmp_path / f"shelf-stream-{os.getpid()}-running"
+    dead.mkdir()
+    live.mkdir()
+    made = S._root.__wrapped__()  # uncached: a fresh root under tmp_path
+    assert os.path.dirname(made) == str(tmp_path)
+    assert not dead.exists()
+    assert live.exists()
 
 
 def test_stream_state_sizing_restores_session_conf(spark):

@@ -32,6 +32,7 @@ import duckdb  # noqa: E402
 from shelf_spark.data import TABLES, table_path  # noqa: E402
 from shelf_spark.queries import ORACLES, QUERIES  # noqa: E402
 from shelf_spark.session import get_spark  # noqa: E402
+from shelf_spark.tmpdirs import process_tmpdir  # noqa: E402
 
 #: Queries that legitimately emit 0 rows on the tiniest corpus (sf0.001),
 #: each mapped to the value-exact twin that proves the same machinery on
@@ -151,34 +152,16 @@ def _memory_share_mb(workers: int) -> int:
 _SPILL_PREFIX = "check-correctness-duckdb-"
 
 
-def _pid_runs(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:  # runs, as another user
-        pass
-    return True
-
-
 def duckdb_connect(workers: int = 1) -> duckdb.DuckDBPyConnection:
     """An in-memory DuckDB connection that spills to a temp directory of
     its own, removed at exit, limited to its share of memory. DuckDB's
     default is ``.tmp/`` under the working directory, which ``--workers``
     processes share, so one worker could delete another's spill file
-    mid-query. The exit hook does not run in a killed worker, so the
-    directories of processes that no longer run are removed first."""
+    mid-query. The directory follows shelf_spark.tmpdirs' per-process
+    rule, so a killed worker's is removed by the next connection."""
     import atexit
-    import glob
-    import shutil
-    import tempfile
 
-    for old in glob.glob(os.path.join(tempfile.gettempdir(), _SPILL_PREFIX + "*")):
-        pid = os.path.basename(old)[len(_SPILL_PREFIX):].split("-")[0]
-        if pid.isdigit() and not _pid_runs(int(pid)):
-            shutil.rmtree(old, ignore_errors=True)
-    tmp = tempfile.mkdtemp(prefix=f"{_SPILL_PREFIX}{os.getpid()}-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = process_tmpdir(_SPILL_PREFIX)
     con = duckdb.connect(config={
         "temp_directory": tmp,
         "memory_limit": f"{_memory_share_mb(workers)}MB",
