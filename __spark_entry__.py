@@ -23,16 +23,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's CORRECTNESS gate checks the FIRST 50 entries of queries() in
-# dict order. Every operator also passes the local replica of the same gate
-# (`python tools/check_correctness.py`), so the window only steers which 50
-# get independent driver evidence this round: first the queries whose
-# expressions changed after their latest driver row (listed again in
-# _DRIVER_WINDOW_REPROOF), then the operators with the oldest driver rows.
-# Every windowed entry must have an oracle, and the window is the highest
-# numbered _DRIVER_WINDOW_R<n> (tests/test_queries.py,
-# tests/test_oracle_gate.py); earlier rounds' windows live in the history
-# of this file.
+# The external correctness check compares the FIRST 50 entries of queries()
+# in dict order against their oracles. Every operator also passes the local
+# replica of that check (`python tools/check_correctness.py`), so the window
+# only chooses which 50 get the independent check: first the queries whose
+# expressions changed after their latest checked row (listed again in
+# _DRIVER_WINDOW_REPROOF), then the operators whose rows are oldest. Every
+# windowed entry must have an oracle, and the window is the highest-numbered
+# _DRIVER_WINDOW_R<n> (tests/test_queries.py, tests/test_oracle_gate.py);
+# earlier windows are in this file's history.
 _DRIVER_WINDOW_R13 = [
     # 6 fix re-proofs (prior driver rows; expressions changed in r13)
     "agg_median_percentile", "clean_winsorize", "embed_cosine_pairs",

@@ -59,7 +59,7 @@ def _sessions(spark: SparkSession) -> DataFrame:
     """S: ``user_id, session_id, s_start, s_end, n_events, session_value``."""
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev_ts = F.lag("ts").over(w)
-    # ts may arrive as TIMESTAMP_NTZ (driver-generated parquet): NTZ has no
+    # ts may arrive as TIMESTAMP_NTZ (µs parquet without a time zone): NTZ has no
     # direct numeric cast, so hop through TIMESTAMP first — the session tz
     # is pinned to UTC (session.py), making the hop value-identical.
     gap = (
