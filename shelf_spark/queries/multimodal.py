@@ -1,24 +1,67 @@
 """Multimodal-column operators (BASELINE north star §2.4).
 
 Pattern: media (image/audio/video) travels as an opaque ``binary`` column
-with typed metadata alongside; decode / feature-extraction runs as
-Arrow-batched Pandas functions over ``mapInPandas``. The real codec
-libraries aren't in this container, so the *decode* is a clearly marked
-deterministic stub — but the Spark plumbing (binary schema, Arrow batch
-transfer, UDF signature, partition behavior) is real and oracle-checked:
-the stub derives metadata from the bytes deterministically, so DuckDB can
-verify the full path.
+and is decoded by Arrow-batched Pandas functions over ``mapInPandas``.
+Two tiers:
+
+- The STUB tier (``multimodal_decode``, ``multimodal_filter_resize``)
+  treats the UTF-8 bytes of ``documents.text`` as a payload and derives
+  pseudo-metadata from its length; DuckDB recomputes the same numbers.
+- The REAL-codec tier writes deterministic media bytes per document and
+  decodes them with stdlib/numpy parsers (the ``wave`` module, ``struct``
+  headers, raw pixel rows). No codec library is needed, and each oracle
+  recomputes every output from the generator arithmetic alone, so a value
+  match proves writer, parser and fold end to end.
+
+Encoded media relations of the real tier, each ``doc_id, payload``:
+
+- M ``_media(spark, kind=None)``: a mono 16-bit 8 kHz WAV for even ids
+  and a 24-bit uncompressed BMP for odd ids; ``kind="wav"`` or ``"bmp"``
+  keeps one kind, filtered before encoding.
+- R ``_videos(spark)``: a raw container (16-byte header, then
+  uncompressed 8-bit grayscale frames).
+
+One ``mapInPandas`` encoder (``_encoded``) builds both. Decode kernels,
+each written once and each beside its DuckDB twin (the paired style of
+text.py and vectors.py; tests/test_media_relations.py holds every pair
+equal row for row):
+
+- ``_pcm(payload)``: int64 samples ↔ ``_SQL_PCM`` (``doc_id, n, s``).
+- ``_frame_energy(pcm)``: Σ sample² per ``AUDIO_FRAME_W`` window, the
+  last window partial ↔ ``_SQL_FRAME_ENERGY`` (``doc_id, n, fe``).
+- ``_gray(payload)``: ``(w, h, px)`` ↔ ``_SQL_GRAY``, one row per pixel.
+- ``_block_sums(px, gw, gh)``: pixel sums and counts over a
+  min(w, gw)×min(h, gh) block grid ↔ ``_sql_blocks(gw, gh)``.
+- ``_video(payload)``: ``(w, h, nf, frames)`` ↔ ``_SQL_VIDEO``
+  (``doc_id, w, h, nf``) and the pixel formula ``_sql_video_px(f)``.
+
+``_per_doc(media, fn, schema)`` is the one decode stage: ``fn(doc_id,
+payload)`` returns that document's output rows. Both stages run inside
+the scan stage, so a payload never enters a shuffle; builders return
+unpinned relations and each operator pins at its call site.
+
+Id rule: a document's media derive from ``a = abs(doc_id)`` on both
+engines — its kind (parity of a), sizes and sample/pixel values — while
+every output keeps the signed ``doc_id``. Python's ``%`` floors and both
+engines' ``%`` truncate; on a ≥ 0 operand they agree, so writer and
+twins agree for any id.
 
 At scale: mapInPandas streams Arrow batches (spark.sql.execution.arrow.
 maxRecordsPerBatch) so one task never materializes a partition of media
-blobs; pair with small files → maxPartitionBytes tuning for real media.
+blobs; at 100 TB the encoder is replaced by ``binaryFile`` splits and the
+kernels by Pillow/PyAV, with the same plumbing.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import math
+import struct
+import wave
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,151 +168,269 @@ def multimodal_filter_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# the real-codec tier: encoded media relations, decode kernels, SQL twins
+# ---------------------------------------------------------------------------
+
+#: Sample rate and bit depth every encoded WAV and BMP carries; ``_pcm``
+#: and ``_gray`` reject a header that says otherwise.
+_RATE = 8000
+_BPP = 24
+#: Audio analysis frame length (samples).
+AUDIO_FRAME_W = 16
+#: Sample every k-th video frame.
+FRAME_STRIDE = 3
+
+
 def _make_media(doc_id: int) -> bytes:
-    """Deterministic REAL media bytes per doc: even ids get a mono 16-bit
-    WAV (stdlib ``wave`` writer), odd ids a 24-bit uncompressed BMP —
-    formats decodable with zero external codec libraries."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    if doc_id % 2 == 0:
-        n = 50 + doc_id % 100
-        samples = np.array(
-            [(doc_id * 31 + i * 17) % 2000 - 1000 for i in range(n)], dtype=np.int16
-        )
+    """M's payload: a mono 16-bit WAV (stdlib ``wave`` writer) of
+    50 + a % 100 samples (a·31 + i·17) % 2000 − 1000 for even
+    a = |doc_id|, else an a % 31 + 1 by a % 17 + 1 24-bit uncompressed
+    BMP of grey pixels (a + x + y) % 256."""
+    a = abs(doc_id)
+    if a % 2 == 0:
+        samples = (a * 31 + np.arange(50 + a % 100) * 17) % 2000 - 1000
         buf = io.BytesIO()
         with wave.open(buf, "wb") as w:
             w.setnchannels(1)
             w.setsampwidth(2)
-            w.setframerate(8000)
-            w.writeframes(samples.tobytes())
+            w.setframerate(_RATE)
+            w.writeframes(samples.astype(np.int16).tobytes())
         return buf.getvalue()
-    width, height = doc_id % 31 + 1, doc_id % 17 + 1
+    width, height = a % 31 + 1, a % 17 + 1
     row_bytes = (width * 3 + 3) // 4 * 4
-    pixels = bytearray()
-    for y in range(height):
-        row = bytearray()
-        for x in range(width):
-            v = (doc_id + x + y) % 256
-            row += bytes((v, v, v))
-        row += b"\x00" * (row_bytes - len(row))
-        pixels += row
+    v = (a + np.add.outer(np.arange(height), np.arange(width))) % 256
+    rows = np.zeros((height, row_bytes), dtype=np.uint8)
+    rows[:, : width * 3] = np.repeat(v, 3, axis=1)
+    pixels = rows.tobytes()
     header = struct.pack("<2sIHHI", b"BM", 54 + len(pixels), 0, 0, 54)
     dib = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(pixels), 2835, 2835, 0, 0
+        "<IiiHHIIiiII", 40, width, height, 1, _BPP, 0, len(pixels), 2835, 2835, 0, 0
     )
-    return header + dib + bytes(pixels)
+    return header + dib + pixels
 
 
-def _decode_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decoders: wave-module WAV parse (header + PCM frames), struct
-    BMP parse (DIB header fields). Runs per Arrow batch."""
-    import io
-    import math
-    import struct
-    import wave
+def _make_video(doc_id: int) -> bytes:
+    """R's payload: a 16-byte header (magic, width, height, n_frames)
+    followed by n_frames uncompressed 8-bit grayscale frames,
+    pixel(f, x, y) = (a·7 + f·13 + x + y) mod 256 for a = |doc_id|. A
+    stand-in for a real container with the same plumbing shape (header
+    parse → frame seek → pixel stats)."""
+    a = abs(doc_id)
+    w, h, nf = a % 16 + 4, a % 8 + 4, a % 20 + 5
+    f, y, x = np.ogrid[:nf, :h, :w]
+    frames = (a * 7 + f * 13 + y + x) % 256
+    return struct.pack("<4sIII", b"RVID", w, h, nf) + frames.astype(np.uint8).tobytes()
 
-    import numpy as np
 
-    for pdf in batches:
-        out = {
-            "doc_id": [], "media_type": [], "sample_rate": [], "n_samples": [],
-            "mean_abs_amplitude": [], "width": [], "height": [], "bpp": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(payload)
-            out["doc_id"].append(doc_id)
-            if payload[:4] == b"RIFF":
-                with wave.open(io.BytesIO(payload), "rb") as w:
-                    sr, nf = w.getframerate(), w.getnframes()
-                    data = np.frombuffer(w.readframes(nf), dtype=np.int16)
-                out["media_type"].append("wav")
-                out["sample_rate"].append(sr)
-                out["n_samples"].append(nf)
-                # IEEE half-up, not Python banker's round: sum/nf is a
-                # grid-aligned rational (nf can be 2^7 = 128), so an
-                # exact .5 at the 7th decimal is REACHABLE for odd sums
-                # and the engines must break it like DuckDB's
-                # half-away-from-zero does (equal for these >=0 values).
-                # The current fixture dodges it only by a parity
-                # accident (even nf => even sum).
-                s_abs = int(np.abs(data.astype(np.int64)).sum())
-                out["mean_abs_amplitude"].append(
-                    math.floor(s_abs / nf * 1e6 + 0.5) / 1e6
-                )
-                out["width"].append(None)
-                out["height"].append(None)
-                out["bpp"].append(None)
-            else:
-                w_, h_ = struct.unpack_from("<ii", payload, 18)
-                bpp = struct.unpack_from("<H", payload, 28)[0]
-                out["media_type"].append("bmp")
-                out["sample_rate"].append(None)
-                out["n_samples"].append(None)
-                out["mean_abs_amplitude"].append(None)
-                out["width"].append(w_)
-                out["height"].append(h_)
-                out["bpp"].append(bpp)
-        yield pd.DataFrame(out)
+def _encoded(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """``doc_id, payload``: ``make(doc_id)`` for each row of ``docs``."""
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "payload": [make(int(i)) for i in pdf["doc_id"]]}
+            )
+
+    return docs.mapInPandas(encode, schema="doc_id bigint, payload binary")
+
+
+def _media(spark: SparkSession, kind: str | None = None) -> DataFrame:
+    """M: ``doc_id, payload``, WAV for even |doc_id|, BMP for odd."""
+    d = spark.table("documents").select("doc_id")
+    if kind is not None:
+        d = d.filter(F.abs("doc_id") % 2 == ("wav", "bmp").index(kind))
+    return _encoded(d, _make_media)
+
+
+def _videos(spark: SparkSession) -> DataFrame:
+    """R: ``doc_id, payload``, one raw video per document."""
+    return _encoded(spark.table("documents").select("doc_id"), _make_video)
+
+
+def _per_doc(
+    media: DataFrame, fn: Callable[[int, bytes], list[tuple]], schema: str
+) -> DataFrame:
+    """One Arrow stage over M or R: ``fn(doc_id, payload)`` returns that
+    document's output rows, in the column order of ``schema``."""
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                r
+                for d, p in zip(pdf["doc_id"], pdf["payload"])
+                for r in fn(int(d), bytes(p))
+            ]
+            yield pd.DataFrame.from_records(rows, columns=cols)
+
+    return media.mapInPandas(run, schema=schema)
+
+
+def _pcm(payload: bytes) -> np.ndarray:
+    """The int64 samples of a mono 16-bit WAV at ``_RATE`` Hz."""
+    with wave.open(io.BytesIO(payload), "rb") as w:
+        if (w.getnchannels(), w.getsampwidth(), w.getframerate()) != (1, 2, _RATE):
+            raise ValueError(f"not a mono 16-bit {_RATE} Hz WAV")
+        return np.frombuffer(w.readframes(w.getnframes()), dtype=np.int16).astype(
+            np.int64
+        )
+
+
+#: ``doc_id, n, s``: the samples of each WAV of M.
+_SQL_PCM = """
+    SELECT doc_id, 50 + abs(doc_id) % 100 AS n,
+           list_transform(generate_series(0, 50 + abs(doc_id) % 100 - 1),
+                          i -> (abs(doc_id) * 31 + i * 17) % 2000 - 1000) AS s
+    FROM documents WHERE abs(doc_id) % 2 = 0
+"""
+
+
+def _frame_energy(pcm: np.ndarray) -> np.ndarray:
+    """Σ sample² (int64) of each ``AUDIO_FRAME_W``-sample window, the last
+    one partial."""
+    pad = np.zeros(-(-len(pcm) // AUDIO_FRAME_W) * AUDIO_FRAME_W, dtype=np.int64)
+    pad[: len(pcm)] = pcm * pcm
+    return pad.reshape(-1, AUDIO_FRAME_W).sum(axis=1)
+
+
+#: ``doc_id, n, fe``: the frame energies of each WAV of M.
+_SQL_FRAME_ENERGY = f"""
+    SELECT doc_id, n,
+           list_transform(
+             generate_series(0, CAST(ceil(n / {AUDIO_FRAME_W}.0) AS BIGINT) - 1),
+             f -> list_sum(list_transform(
+                    generate_series(f * {AUDIO_FRAME_W},
+                                    least(f * {AUDIO_FRAME_W} + {AUDIO_FRAME_W - 1},
+                                          n - 1)),
+                    i -> s[i + 1] * s[i + 1]))) AS fe
+    FROM ({_SQL_PCM})
+"""
+
+
+def _gray(payload: bytes) -> tuple[int, int, np.ndarray]:
+    """``(w, h, px)`` of a 24-bit BMP of grey pixels: px is the h×w int64
+    grid of channel 0 of each padded pixel row."""
+    off, w, h, _, bpp = struct.unpack_from("<I4xiiHH", payload, 10)
+    if bpp != _BPP:
+        raise ValueError(f"not a {_BPP}-bit BMP")
+    row_bytes = (w * 3 + 3) // 4 * 4
+    rows = np.frombuffer(payload, dtype=np.uint8, count=h * row_bytes, offset=off)
+    return w, h, rows.reshape(h, row_bytes)[:, : w * 3 : 3].astype(np.int64)
+
+
+#: ``doc_id, w, h``: the size of each BMP of M.
+_SQL_BMP = """
+    SELECT doc_id, abs(doc_id) % 31 + 1 AS w, abs(doc_id) % 17 + 1 AS h
+    FROM documents WHERE abs(doc_id) % 2 = 1
+"""
+
+#: ``doc_id, w, h, x, y, v``: one row per pixel of each BMP of M.
+_SQL_GRAY = f"""
+    SELECT d.doc_id, d.w, d.h, x.x, y.y, (abs(d.doc_id) + x.x + y.y) % 256 AS v
+    FROM ({_SQL_BMP}) d,
+         LATERAL (SELECT unnest(range(0, d.w)) AS x) x,
+         LATERAL (SELECT unnest(range(0, d.h)) AS y) y
+"""
+
+
+def _block_sums(px: np.ndarray, gw: int, gh: int) -> tuple[np.ndarray, np.ndarray]:
+    """(sums, counts), each min(h, gh)×min(w, gw): pixel x of a w-wide
+    image falls in block column x·min(w, gw) // w, rows alike."""
+    h, w = px.shape
+    gw, gh = min(w, gw), min(h, gh)
+    by, bx = np.arange(h) * gh // h, np.arange(w) * gw // w
+    s = np.zeros((gh, gw), dtype=np.int64)
+    np.add.at(s, (by[:, None], bx[None, :]), px)
+    return s, np.outer(np.bincount(by, minlength=gh), np.bincount(bx, minlength=gw))
+
+
+def _sql_blocks(gw: int, gh: int) -> str:
+    """``doc_id, w, h, by, bx, s, n``: the twin of ``_block_sums``."""
+    return f"""
+      SELECT doc_id, w, h, by, bx, sum(v) AS s, count(*) AS n
+      FROM (SELECT *, (x * least(w, {gw})) // w AS bx,
+                      (y * least(h, {gh})) // h AS by
+            FROM ({_SQL_GRAY}))
+      GROUP BY doc_id, w, h, by, bx
+    """
+
+
+def _bits(b: np.ndarray) -> str:
+    """A boolean grid as a row-major '0'/'1' string."""
+    return "".join(b.ravel().astype(np.uint8).astype(str))
+
+
+def _video(payload: bytes) -> tuple[int, int, int, np.ndarray]:
+    """``(w, h, nf, frames)``: frames is a view of the nf·w·h frame bytes,
+    so slicing one frame reads only that frame."""
+    magic, w, h, nf = struct.unpack_from("<4sIII", payload, 0)
+    if magic != b"RVID":
+        raise ValueError("not a raw video")
+    return w, h, nf, np.frombuffer(payload, dtype=np.uint8, count=nf * w * h, offset=16)
+
+
+#: ``doc_id, w, h, nf``: the size of each video of R.
+_SQL_VIDEO = """
+    SELECT doc_id, abs(doc_id) % 16 + 4 AS w, abs(doc_id) % 8 + 4 AS h,
+           abs(doc_id) % 20 + 5 AS nf
+    FROM documents
+"""
+
+
+def _sql_video_px(f: str) -> str:
+    """Pixel ``p`` (row-major) of frame ``f`` of a video of R."""
+    return f"(abs(doc_id) * 7 + {f} * 13 + p % w + p // w) % 256"
+
+
+# ---------------------------------------------------------------------------
+# WAV/BMP decode
+# ---------------------------------------------------------------------------
+
+
+def _decode_one(doc_id: int, payload: bytes) -> list[tuple]:
+    if payload[:4] == b"RIFF":
+        s = _pcm(payload)
+        # IEEE half-up, not Python banker's round: sum/n is a grid-aligned
+        # rational (n can be 2^7 = 128), so an exact .5 at the 7th decimal
+        # is REACHABLE for odd sums and must break like DuckDB's
+        # half-away-from-zero does (equal for these >=0 values).
+        mean = math.floor(int(np.abs(s).sum()) / len(s) * 1e6 + 0.5) / 1e6
+        return [(doc_id, "wav", _RATE, len(s), mean, None, None, None)]
+    w, h, _ = _gray(payload)
+    return [(doc_id, "bmp", None, None, None, w, h, _BPP)]
 
 
 @query(
     "multimodal_decode_wav_bmp",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, 'wav' AS media_type,
-           CAST(8000 AS BIGINT)               AS sample_rate,
-           CAST(50 + doc_id % 100 AS BIGINT)  AS n_samples,
-           round(CAST(list_sum(list_transform(
-                   generate_series(0, 50 + doc_id % 100 - 1),
-                   i -> abs((doc_id * 31 + i * 17) % 2000 - 1000))) AS DOUBLE)
-                 / (50 + doc_id % 100), 6)    AS mean_abs_amplitude,
+           CAST({_RATE} AS BIGINT)            AS sample_rate,
+           CAST(n AS BIGINT)                  AS n_samples,
+           round(CAST(list_sum(list_transform(s, x -> abs(x))) AS DOUBLE) / n, 6)
+                                              AS mean_abs_amplitude,
            CAST(NULL AS BIGINT) AS width,
            CAST(NULL AS BIGINT) AS height,
            CAST(NULL AS BIGINT) AS bpp
-    FROM documents WHERE doc_id % 2 = 0
+    FROM ({_SQL_PCM})
     UNION ALL
     SELECT doc_id, 'bmp',
            CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-           CAST(doc_id % 31 + 1 AS BIGINT),
-           CAST(doc_id % 17 + 1 AS BIGINT),
-           CAST(24 AS BIGINT)
-    FROM documents WHERE doc_id % 2 = 1
+           CAST(w AS BIGINT), CAST(h AS BIGINT), CAST({_BPP} AS BIGINT)
+    FROM ({_SQL_BMP})
     """,
 )
 def multimodal_decode_wav_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round-trip, no external libraries: each document gets
-    deterministic media bytes (even doc_id → mono 16-bit PCM WAV written
-    by the stdlib ``wave`` module; odd → 24-bit uncompressed BMP), and a
-    second Arrow-batched stage decodes them back with real parsers (wave
-    reader / struct DIB-header parse + PCM sample statistics). The oracle
-    recomputes the expected metadata from the generation arithmetic alone,
-    so a value match proves encoder AND decoder are faithful — this is the
-    upgrade path from the `_decode_stub` tier above: swap `_make_media`
-    for `binaryFile` ingest and these decoders for Pillow/PyAV when the
-    libs exist, with identical Spark plumbing.
-    """
-    d = spark.table("documents").select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_media(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        _decode_media_batches,
-        schema=(
-            "doc_id bigint, media_type string, sample_rate bigint, "
-            "n_samples bigint, mean_abs_amplitude double, "
-            "width bigint, height bigint, bpp bigint"
-        ),
+    """REAL codec round-trip, no external libraries: M's WAV and BMP
+    payloads decode back through ``_pcm`` and ``_gray`` (whose headers
+    must carry ``_RATE`` and ``_BPP``) into PCM sample statistics and
+    image sizes — the upgrade path from the `_decode_stub` tier above."""
+    return _per_doc(
+        _media(spark),
+        _decode_one,
+        "doc_id bigint, media_type string, sample_rate bigint, "
+        "n_samples bigint, mean_abs_amplitude double, "
+        "width bigint, height bigint, bpp bigint",
     )
 
 
@@ -277,39 +438,22 @@ def multimodal_decode_wav_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # video frame sampling (raw container, real parser)
 # ---------------------------------------------------------------------------
 
-#: Sample every k-th frame.
-FRAME_STRIDE = 3
 
-
-def _make_video(doc_id: int) -> bytes:
-    """Deterministic raw 'video': a 16-byte header (magic, width, height,
-    n_frames) followed by n_frames uncompressed 8-bit grayscale frames,
-    pixel(f, x, y) = (doc_id·7 + f·13 + x + y) mod 256. A stand-in for a
-    real container with the same plumbing shape (header parse → frame
-    seek → pixel stats); swap for PyAV when the lib exists."""
-    import struct
-
-    w = doc_id % 16 + 4
-    h = doc_id % 8 + 4
-    nf = doc_id % 20 + 5
-    frames = bytearray()
-    for f in range(nf):
-        base = doc_id * 7 + f * 13
-        for y in range(h):
-            for x in range(w):
-                frames.append((base + x + y) % 256)
-    return struct.pack("<4sIII", b"RVID", w, h, nf) + bytes(frames)
+def _sample_frames(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, nf, frames = _video(payload)
+    fsize = w * h
+    return [
+        # direct seek: a skipped frame is never read
+        (doc_id, f, nf, w, h,
+         int(frames[f * fsize:(f + 1) * fsize].sum(dtype=np.int64)) * 1000000 // fsize)
+        for f in range(0, nf, FRAME_STRIDE)
+    ]
 
 
 @query(
     "multimodal_frame_sample",
     oracle=f"""
-    WITH v AS (
-      SELECT doc_id,
-             doc_id % 16 + 4 AS w,
-             doc_id % 8 + 4 AS h,
-             doc_id % 20 + 5 AS nf
-      FROM documents
+    WITH v AS ({_SQL_VIDEO}
     ), fr AS (
       SELECT doc_id, w, h, nf, unnest(generate_series(0, nf - 1)) AS f
       FROM v
@@ -325,7 +469,7 @@ def _make_video(doc_id: int) -> bytes:
            CAST(nf AS BIGINT) AS n_frames,
            CAST(w AS BIGINT) AS width,
            CAST(h AS BIGINT) AS height,
-           CAST(sum((doc_id * 7 + f * 13 + p % w + p // w) % 256)
+           CAST(sum({_sql_video_px("f")})
                 * 1000000 // (w * h) AS BIGINT) AS mean_pixel_ppm
     FROM px
     GROUP BY doc_id, f, nf, w, h
@@ -333,66 +477,20 @@ def _make_video(doc_id: int) -> bytes:
     """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video FRAME SAMPLING with a real parser: encode a deterministic
-    raw multi-frame container per doc (header + uncompressed grayscale
-    frames), then an Arrow-batched stage seeks every FRAME_STRIDE-th
-    frame directly (header gives the frame size → byte offset, no full
-    decode of skipped frames — the cheap-seek property real samplers
-    rely on) and emits per-sampled-frame pixel statistics. The mean is
-    integer-exact (ppm fixed-point: sum·10⁶ // pixels), so the oracle —
-    which recomputes from the generation arithmetic alone — value-hashes
-    bitwise; a match proves writer AND sampler faithful.
+    """Video FRAME SAMPLING with a real parser: the decode stage seeks
+    every FRAME_STRIDE-th frame of R directly (the header gives the frame
+    size → byte offset, no decode of skipped frames — the cheap-seek
+    property real samplers rely on) and emits per-sampled-frame pixel
+    statistics. The mean is integer-exact (ppm fixed-point:
+    sum·10⁶ // pixels), so the oracle value-hashes bitwise.
 
-    Scale shape: both stages are Arrow-batched ``mapInPandas`` over rows
-    partitioned by the natural file/doc key — embarrassingly parallel,
-    no shuffle at all until a downstream agg; sampled-frame output is
-    1/stride of the frame count. The binary payload never enters a
-    shuffle."""
-    import numpy as np
-    import struct
-
-    d = spark.table("documents").select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_video(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "frame_idx": [], "n_frames": [],
-                "width": [], "height": [], "mean_pixel_ppm": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                magic, w, h, nf = struct.unpack_from("<4sIII", payload, 0)
-                assert magic == b"RVID"
-                fsize = w * h
-                for f in range(0, nf, FRAME_STRIDE):
-                    off = 16 + f * fsize  # direct seek — skipped frames unread
-                    frame = np.frombuffer(payload, dtype=np.uint8,
-                                          count=fsize, offset=off)
-                    s = int(frame.astype(np.int64).sum())
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(f)
-                    out["n_frames"].append(nf)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_pixel_ppm"].append(s * 1000000 // fsize)
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        sample_batches,
-        schema=(
-            "doc_id bigint, frame_idx bigint, n_frames bigint, "
-            "width bigint, height bigint, mean_pixel_ppm bigint"
-        ),
+    Scale shape: map-only, no shuffle until the presentation sort;
+    sampled-frame output is 1/stride of the frame count."""
+    return _per_doc(
+        _videos(spark),
+        _sample_frames,
+        "doc_id bigint, frame_idx bigint, n_frames bigint, "
+        "width bigint, height bigint, mean_pixel_ppm bigint",
     # pin-before-sort (r15): two identical decode stages ran without it
     ).transform(pin, "reuse").orderBy("doc_id", "frame_idx")
 
@@ -401,31 +499,24 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # audio feature extraction (real WAV decode, framed energy + ZCR)
 # ---------------------------------------------------------------------------
 
-#: Audio analysis frame length (samples).
-AUDIO_FRAME_W = 16
+
+def _audio_features(doc_id: int, payload: bytes) -> list[tuple]:
+    s = _pcm(payload)
+    fe = _frame_energy(s)
+    peak = int(fe.argmax())
+    return [(doc_id, len(s), len(fe), int(fe.sum()),
+             int((s[:-1] * s[1:] < 0).sum()), peak, int(fe[peak]))]
 
 
 @query(
     "multimodal_audio_features",
     oracle=f"""
-    WITH p AS (
+    WITH f AS ({_SQL_FRAME_ENERGY}
+    ), zc AS (
       SELECT doc_id,
-             50 + doc_id % 100 AS n,
-             list_transform(generate_series(0, 50 + doc_id % 100 - 1),
-                            i -> (doc_id * 31 + i * 17) % 2000 - 1000) AS s
-      FROM documents WHERE doc_id % 2 = 0
-    ), f AS (
-      SELECT doc_id, n, s,
-             list_transform(
-               generate_series(0, CAST(ceil(n / {AUDIO_FRAME_W}.0) AS BIGINT) - 1),
-               f -> list_sum(list_transform(
-                      generate_series(f * {AUDIO_FRAME_W},
-                                      least(f * {AUDIO_FRAME_W} + {AUDIO_FRAME_W - 1},
-                                            n - 1)),
-                      i -> s[i + 1] * s[i + 1]))) AS fe,
              list_sum(list_transform(generate_series(1, n - 1),
                       i -> CASE WHEN s[i] * s[i + 1] < 0 THEN 1 ELSE 0 END)) AS zc
-      FROM p
+      FROM ({_SQL_PCM})
     )
     SELECT doc_id,
            CAST(n AS BIGINT) AS n_samples,
@@ -434,78 +525,25 @@ AUDIO_FRAME_W = 16
            CAST(coalesce(zc, 0) AS BIGINT) AS n_zero_crossings,
            CAST(list_position(fe, list_max(fe)) - 1 AS BIGINT) AS peak_frame_idx,
            CAST(list_max(fe) AS BIGINT) AS peak_frame_energy
-    FROM f ORDER BY doc_id
+    FROM f JOIN zc USING (doc_id) ORDER BY doc_id
     """,
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature extraction over REAL WAV bytes (no external codec):
-    the PCM stream is framed into {AUDIO_FRAME_W}-sample windows and
-    reduced to per-frame energy (Σ sample² — int64-exact), zero-crossing
-    count, and the peak-energy frame — the energy/ZCR screen a speech
-    pipeline runs for voice-activity filtering and silence trimming
-    before any model sees the audio. The oracle recomputes every number
-    from the generator arithmetic alone, so a value match proves the
-    stdlib ``wave`` decode AND the numpy frame math are faithful
-    end-to-end (same contract as multimodal_decode_wav_bmp).
+    """Audio feature extraction over REAL WAV bytes: per-frame energy
+    (Σ sample² over {AUDIO_FRAME_W}-sample windows — int64-exact),
+    zero-crossing count and the peak-energy frame — the energy/ZCR screen
+    a speech pipeline runs for voice-activity filtering and silence
+    trimming before any model sees the audio. All outputs are integers →
+    bit-exact across engines.
 
-    Scale shape: two Arrow-batched ``mapInPandas`` stages (encode,
-    then decode+reduce) — binary never shuffles, features are a few
-    integers per file; at 100 TB of audio the same plan reads
-    ``binaryFile`` splits instead of the deterministic generator, with
-    maxRecordsPerBatch bounding how many blobs one Arrow batch holds.
-    All outputs are integers → bit-exact across engines."""
-    import io
-    import wave
-
-    import numpy as np
-
-    d = spark.table("documents").filter(F.col("doc_id") % 2 == 0).select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_media(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_samples": [], "n_frames": [],
-                "total_energy": [], "n_zero_crossings": [],
-                "peak_frame_idx": [], "peak_frame_energy": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    data = np.frombuffer(
-                        w.readframes(w.getnframes()), dtype=np.int16
-                    ).astype(np.int64)
-                n = len(data)
-                nf = -(-n // AUDIO_FRAME_W)
-                fe = [
-                    int((data[f * AUDIO_FRAME_W:(f + 1) * AUDIO_FRAME_W] ** 2).sum())
-                    for f in range(nf)
-                ]
-                peak = max(fe)
-                out["doc_id"].append(int(doc_id))
-                out["n_samples"].append(n)
-                out["n_frames"].append(nf)
-                out["total_energy"].append(sum(fe))
-                out["n_zero_crossings"].append(int(((data[:-1] * data[1:]) < 0).sum()))
-                out["peak_frame_idx"].append(fe.index(peak))
-                out["peak_frame_energy"].append(peak)
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        feature_batches,
-        schema=(
-            "doc_id bigint, n_samples bigint, n_frames bigint, "
-            "total_energy bigint, n_zero_crossings bigint, "
-            "peak_frame_idx bigint, peak_frame_energy bigint"
-        ),
+    Scale shape: map-only over M's WAVs — binary never shuffles, features
+    are a few integers per file."""
+    return _per_doc(
+        _media(spark, "wav"),
+        _audio_features,
+        "doc_id bigint, n_samples bigint, n_frames bigint, "
+        "total_energy bigint, n_zero_crossings bigint, "
+        "peak_frame_idx bigint, peak_frame_energy bigint",
     ).transform(pin, "reuse").orderBy("doc_id")
 
 
@@ -514,28 +552,14 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: Arithmetic recomputation of the aHash signature relation — the shared
-#: oracle CTE for every query built on the signatures (per-image emit,
-#: signature-cluster dedup).
-_SQL_AHASH = """
-    WITH d AS (
-      SELECT doc_id, doc_id % 31 + 1 AS w, doc_id % 17 + 1 AS h
-      FROM documents WHERE doc_id % 2 = 1
-    ), px AS (
-      SELECT d.doc_id, d.w, d.h, x.x, y.y,
-             (d.doc_id + x.x + y.y) % 256 AS v,
-             (x.x * least(d.w, 8)) // d.w AS bx,
-             (y.y * least(d.h, 8)) // d.h AS by
-      FROM d,
-           LATERAL (SELECT unnest(range(0, d.w)) AS x) x,
-           LATERAL (SELECT unnest(range(0, d.h)) AS y) y
-    ), blk AS (
-      SELECT doc_id, by, bx, sum(v) AS bsum, count(*) AS bn
-      FROM px GROUP BY doc_id, by, bx
+#: The aHash signature relation ``sig`` — the shared oracle CTE for every
+#: query built on the signatures (per-image emit, signature-cluster dedup).
+_SQL_AHASH = f"""
+    WITH blk AS ({_sql_blocks(8, 8)}
     ), tot AS (
       SELECT doc_id, max(w) AS w, max(h) AS h,
-             sum(v) AS px_total, count(*) AS n_px
-      FROM px GROUP BY doc_id
+             sum(s) AS px_total, sum(n) AS n_px
+      FROM blk GROUP BY doc_id
     ), sig AS (
       SELECT b.doc_id,
              CAST(max(t.w) AS BIGINT)        AS width,
@@ -543,7 +567,7 @@ _SQL_AHASH = """
              CAST(max(t.px_total) AS BIGINT) AS px_total,
              CAST(max(t.n_px) AS BIGINT)     AS n_px,
              string_agg(
-               CASE WHEN b.bsum * t.n_px >= t.px_total * b.bn
+               CASE WHEN b.s * t.n_px >= t.px_total * b.n
                     THEN '1' ELSE '0' END, '' ORDER BY b.by, b.bx) AS ahash
       FROM blk b JOIN tot t USING (doc_id)
       GROUP BY b.doc_id
@@ -551,73 +575,24 @@ _SQL_AHASH = """
 """
 
 
+def _ahash(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px = _gray(payload)
+    s, n = _block_sums(px, 8, 8)
+    total = int(px.sum())
+    return [(doc_id, w, h, total, w * h, _bits(s * (w * h) >= total * n))]
+
+
 def _ahash_signatures(spark: SparkSession) -> DataFrame:
     """(doc_id, width, height, px_total, n_px, ahash) signature relation,
-    unsorted: encode real BMP bytes, decode with struct/numpy, fold into
-    the min(dim,8)×min(dim,8) block-mean threshold signature. Two
-    Arrow-batched mapInPandas stages, zero shuffles — binary never leaves
-    its partition. The block/global mean comparison is cross-multiplied
-    in int64 (block_sum·n_px ≥ px_total·block_n) → integer-exact."""
-    import struct
-
-    import numpy as np
-
-    d = spark.table("documents").filter(F.col("doc_id") % 2 == 1).select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_media(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def ahash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "px_total": [], "n_px": [], "ahash": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                w, h = struct.unpack_from("<ii", payload, 18)
-                off = struct.unpack_from("<I", payload, 10)[0]
-                row_bytes = (w * 3 + 3) // 4 * 4
-                rows = np.frombuffer(
-                    payload, dtype=np.uint8, count=h * row_bytes, offset=off
-                ).reshape(h, row_bytes)
-                # Grayscale generator → channel 0 of each 3-byte pixel.
-                px = rows[:, : w * 3 : 3].astype(np.int64)
-                gw, gh = min(w, 8), min(h, 8)
-                bx = np.arange(w) * gw // w
-                by = np.arange(h) * gh // h
-                # Block sums/counts via two bincount folds (rows then cols).
-                col_sum = np.zeros((h, gw), dtype=np.int64)
-                for j in range(gw):
-                    col_sum[:, j] = px[:, bx == j].sum(axis=1)
-                bsum = np.zeros((gh, gw), dtype=np.int64)
-                for i in range(gh):
-                    bsum[i] = col_sum[by == i].sum(axis=0)
-                bn = np.outer(np.bincount(by, minlength=gh),
-                              np.bincount(bx, minlength=gw)).astype(np.int64)
-                total, n_px = int(px.sum()), w * h
-                bits = (bsum * n_px >= total * bn).astype(np.uint8)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_total"].append(total)
-                out["n_px"].append(n_px)
-                out["ahash"].append("".join("1" if b else "0" for b in bits.ravel()))
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        ahash_batches,
-        schema=(
-            "doc_id bigint, width bigint, height bigint, "
-            "px_total bigint, n_px bigint, ahash string"
-        ),
+    unsorted: M's BMPs folded into the min(dim,8)×min(dim,8) block-mean
+    threshold signature. Zero shuffles — binary never leaves its
+    partition. The block/global mean comparison is cross-multiplied in
+    int64 (block_sum·n_px ≥ px_total·block_n) → integer-exact."""
+    return _per_doc(
+        _media(spark, "bmp"),
+        _ahash,
+        "doc_id bigint, width bigint, height bigint, "
+        "px_total bigint, n_px bigint, ahash string",
     )
 
 
@@ -630,20 +605,12 @@ def _ahash_signatures(spark: SparkSession) -> DataFrame:
     """,
 )
 def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual average-hash (aHash) over REAL BMP bytes: encode stage
-    writes each odd-doc image as a 24-bit uncompressed BMP, decode stage
-    parses the DIB header + padded pixel rows back with struct/numpy and
-    emits the min(dim,8)×min(dim,8) block-mean threshold signature — the
+    """Perceptual average-hash (aHash) over REAL BMP bytes — the
     near-duplicate-image fingerprint an image-dedup pipeline computes
-    before signature-bucket clustering. Every output is integer-exact and
-    the oracle recomputes all of them from the pixel-generation
-    arithmetic alone — a value match proves the encoder, the real BMP
-    parse, and the block fold are faithful end-to-end (same contract as
-    multimodal_decode_wav_bmp).
+    before signature-bucket clustering. Every output is integer-exact.
 
-    Scale shape: see :func:`_ahash_signatures` — map-only; at 100 TB the
-    encode stage is replaced by binaryFile splits; downstream grouping
-    shuffles only the 8-byte signatures, never pixels."""
+    Scale shape: see :func:`_ahash_signatures` — map-only; downstream
+    grouping shuffles only the 8-byte signatures, never pixels."""
     return (
         _ahash_signatures(spark)
         .transform(pin, "reuse")
@@ -710,15 +677,17 @@ def dedup_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CUT_THRESHOLD = 64
 
 
+def _scene_cuts(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, nf, frames = _video(payload)
+    fr = frames.reshape(nf, w * h).astype(np.int64)
+    diff = np.abs(fr[1:] - fr[:-1]).sum(axis=1)
+    return [(doc_id, nf, int((diff > _CUT_THRESHOLD * w * h).sum()), int(diff.sum()))]
+
+
 @query(
     "multimodal_video_scene_cuts",
     oracle=f"""
-    WITH v AS (
-      SELECT doc_id,
-             doc_id % 16 + 4 AS w,
-             doc_id % 8 + 4 AS h,
-             doc_id % 20 + 5 AS nf
-      FROM documents
+    WITH v AS ({_SQL_VIDEO}
     ), fr AS (
       SELECT doc_id, w, h, nf, unnest(generate_series(0, nf - 2)) AS f
       FROM v
@@ -728,10 +697,8 @@ _CUT_THRESHOLD = 64
       FROM fr
     ), diffs AS (
       SELECT doc_id, nf, f, w * h AS n_px,
-             sum(abs(
-               ((doc_id * 7 + f * 13 + p // w + p % w) % 256)
-               - ((doc_id * 7 + (f + 1) * 13 + p // w + p % w) % 256)
-             )) AS sum_abs_diff
+             sum(abs({_sql_video_px("f")} - {_sql_video_px("(f + 1)")}))
+               AS sum_abs_diff
       FROM px GROUP BY doc_id, nf, f, w, h
     )
     SELECT doc_id,
@@ -750,56 +717,18 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick clip boundaries before sampling training frames (cuts are where
     content changes; sampling across them mixes scenes). The comparison
     is cross-multiplied in int64 (Σ|Δ| > τ·n_px), every output integer-
-    exact, and the oracle recomputes the full diff cascade from the
-    generation arithmetic alone — a value match proves writer, parser,
-    and temporal-diff fold end-to-end.
+    exact.
 
-    Scale shape: one encode + one decode/diff Arrow-batched mapInPandas
-    pair, zero shuffles before the final presentation sort — each video's
-    frames are consecutive bytes in ONE row, so the temporal diff needs
-    no self-join and no window; at 100 TB the same stage reads
-    binaryFile splits and emits three ints per video. Contrast with a
-    frames-as-rows layout, where every consecutive-pair diff would be a
-    video-keyed window over a frames-sized shuffle."""
-    import struct
-
-    import numpy as np
-
-    d = spark.table("documents").select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_video(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def cuts_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "n_cuts": [], "total_abs_diff": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                magic, w, h, nf = struct.unpack_from("<4sIII", payload, 0)
-                assert magic == b"RVID"
-                frames = np.frombuffer(
-                    payload, dtype=np.uint8, count=nf * w * h, offset=16
-                ).reshape(nf, w * h).astype(np.int64)
-                diff = np.abs(frames[1:] - frames[:-1]).sum(axis=1)
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(nf)
-                out["n_cuts"].append(int((diff > _CUT_THRESHOLD * w * h).sum()))
-                out["total_abs_diff"].append(int(diff.sum()))
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        cuts_batches,
-        schema=(
-            "doc_id bigint, n_frames bigint, n_cuts bigint, "
-            "total_abs_diff bigint"
-        ),
+    Scale shape: map-only over R, zero shuffles before the final
+    presentation sort — each video's frames are consecutive bytes in ONE
+    row, so the temporal diff needs no self-join and no window; at 100 TB
+    the same stage reads binaryFile splits and emits three ints per video.
+    Contrast with a frames-as-rows layout, where every consecutive-pair
+    diff would be a video-keyed window over a frames-sized shuffle."""
+    return _per_doc(
+        _videos(spark),
+        _scene_cuts,
+        "doc_id bigint, n_frames bigint, n_cuts bigint, total_abs_diff bigint",
     ).transform(pin, "reuse").orderBy("doc_id")
 
 
@@ -812,25 +741,18 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VAD_THRESHOLD = 5_000_000
 
 
+def _vad(doc_id: int, payload: bytes) -> list[tuple]:
+    voiced = _frame_energy(_pcm(payload)) > _VAD_THRESHOLD
+    # maximal voiced runs: +1 edges start one, -1 edges end one
+    edges = np.diff(np.concatenate(([0], voiced.astype(np.int8), [0])))
+    runs = np.flatnonzero(edges == -1) - np.flatnonzero(edges == 1)
+    return [(doc_id, len(voiced), int(voiced.sum()), len(runs), int(runs.max(initial=0)))]
+
+
 @query(
     "multimodal_audio_vad_segments",
     oracle=f"""
-    WITH p AS (
-      SELECT doc_id,
-             50 + doc_id % 100 AS n,
-             list_transform(generate_series(0, 50 + doc_id % 100 - 1),
-                            i -> (doc_id * 31 + i * 17) % 2000 - 1000) AS s
-      FROM documents WHERE doc_id % 2 = 0
-    ), f AS (
-      SELECT doc_id, n,
-             list_transform(
-               generate_series(0, CAST(ceil(n / {AUDIO_FRAME_W}.0) AS BIGINT) - 1),
-               f -> list_sum(list_transform(
-                      generate_series(f * {AUDIO_FRAME_W},
-                                      least(f * {AUDIO_FRAME_W} + {AUDIO_FRAME_W - 1},
-                                            n - 1)),
-                      i -> s[i + 1] * s[i + 1]))) AS fe
-      FROM p
+    WITH f AS ({_SQL_FRAME_ENERGY}
     ), voiced AS (
       SELECT doc_id, len(fe) AS n_frames, v.f AS fidx
       FROM f, LATERAL (SELECT unnest(generate_series(1, len(fe))) AS f) v
@@ -850,15 +772,13 @@ _VAD_THRESHOLD = 5_000_000
              max(seg_len) AS longest_segment
       FROM seg GROUP BY doc_id
     )
-    SELECT d.doc_id,
-           CAST(f.fe_len AS BIGINT)                      AS n_frames,
+    SELECT f.doc_id,
+           CAST(len(f.fe) AS BIGINT)                     AS n_frames,
            CAST(coalesce(p.n_voiced, 0) AS BIGINT)       AS n_voiced,
            CAST(coalesce(p.n_segments, 0) AS BIGINT)     AS n_segments,
            CAST(coalesce(p.longest_segment, 0) AS BIGINT) AS longest_segment
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 2 = 0) d
-      JOIN (SELECT doc_id, len(fe) AS fe_len FROM f) f USING (doc_id)
-      LEFT JOIN per_doc p USING (doc_id)
-    ORDER BY d.doc_id
+    FROM f LEFT JOIN per_doc p USING (doc_id)
+    ORDER BY f.doc_id
     """,
 )
 def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,95 +786,33 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
     {_VAD_THRESHOLD} energy threshold are voiced, and maximal voiced runs
     become segments — the silence-trim / clip-boundary pass a speech
     pipeline runs before transcription (per file: voiced frame count,
-    segment count, longest segment). Energies are int64-exact, the run
-    decomposition is integer arithmetic, and the oracle recomputes the
-    whole cascade (including the gaps-and-islands grouping) from the
-    generation arithmetic — writer, stdlib wave decode, and run-length
-    fold all proven end-to-end.
+    segment count, longest segment). Energies are int64-exact and the
+    run decomposition is integer arithmetic.
 
-    Scale shape: one encode + one decode/segment Arrow-batched
-    mapInPandas pair, zero shuffles before the presentation sort — a
-    file's frames are consecutive samples of ONE row, so the run-length
-    pass is a numpy diff inside the stage, never a frames-sized shuffle
-    + islands window (contrast: the oracle, holding frames as rows, pays
-    exactly that window — the row-per-frame layout's cost)."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    d = spark.table("documents").filter(F.col("doc_id") % 2 == 0).select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_media(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def vad_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "n_voiced": [],
-                "n_segments": [], "longest_segment": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    nf = w.getnframes()
-                    data = np.frombuffer(
-                        w.readframes(nf), dtype=np.int16
-                    ).astype(np.int64)
-                n_frames = -(-nf // AUDIO_FRAME_W)
-                pad = np.zeros(n_frames * AUDIO_FRAME_W, dtype=np.int64)
-                pad[:nf] = data * data
-                fe = pad.reshape(n_frames, AUDIO_FRAME_W).sum(axis=1)
-                voiced = fe > _VAD_THRESHOLD
-                # run-length decomposition: starts where voiced rises
-                starts = int(
-                    (voiced & ~np.concatenate(([False], voiced[:-1]))).sum()
-                )
-                longest = 0
-                run = 0
-                for v in voiced:
-                    run = run + 1 if v else 0
-                    longest = max(longest, run)
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(n_frames)
-                out["n_voiced"].append(int(voiced.sum()))
-                out["n_segments"].append(starts)
-                out["longest_segment"].append(longest)
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        vad_batches,
-        schema=(
-            "doc_id bigint, n_frames bigint, n_voiced bigint, "
-            "n_segments bigint, longest_segment bigint"
-        ),
+    Scale shape: map-only over M's WAVs, zero shuffles before the
+    presentation sort — a file's frames are consecutive samples of ONE
+    row, so the run-length pass is a numpy diff inside the stage, never a
+    frames-sized shuffle + islands window (contrast: the oracle, holding
+    frames as rows, pays exactly that window — the row-per-frame
+    layout's cost)."""
+    return _per_doc(
+        _media(spark, "wav"),
+        _vad,
+        "doc_id bigint, n_frames bigint, n_voiced bigint, "
+        "n_segments bigint, longest_segment bigint",
     ).transform(pin, "reuse").orderBy("doc_id")
+
+
+def _dhash(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, px = _gray(payload)
+    s, n = _block_sums(px, 9, 8)
+    return [(doc_id, w, h, _bits(s[:, 1:] * n[:, :-1] > s[:, :-1] * n[:, 1:]))]
 
 
 @query(
     "multimodal_image_dhash",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, doc_id % 31 + 1 AS w, doc_id % 17 + 1 AS h
-      FROM documents WHERE doc_id % 2 = 1
-    ), px AS (
-      SELECT d.doc_id, d.w, d.h,
-             (d.doc_id + x.x + y.y) % 256 AS v,
-             (y.y * least(d.h, 8)) // d.h AS by,
-             (x.x * least(d.w, 9)) // d.w AS bx
-      FROM d,
-           LATERAL (SELECT unnest(range(0, d.w)) AS x) x,
-           LATERAL (SELECT unnest(range(0, d.h)) AS y) y
-    ), blk AS (
-      SELECT doc_id, by, bx, sum(v) AS s, count(*) AS n
-      FROM px GROUP BY doc_id, by, bx
+    oracle=f"""
+    WITH blk AS ({_sql_blocks(9, 8)}
     ), bits AS (
       SELECT a.doc_id,
              string_agg(CASE WHEN b.s * a.n > a.s * b.n THEN '1' ELSE '0' END,
@@ -965,7 +823,7 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
     ), dims AS (
       SELECT doc_id, CAST(max(w) AS BIGINT) AS width,
              CAST(max(h) AS BIGINT) AS height
-      FROM px GROUP BY doc_id
+      FROM blk GROUP BY doc_id
     )
     SELECT dims.doc_id, dims.width, dims.height,
            coalesce(bits.dhash, '') AS dhash
@@ -984,68 +842,13 @@ def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (s_right·n_left > s_left·n_right) — integer-exact, no float means;
     a 1-column image legitimately emits the empty hash ('' both engines).
 
-    Scale shape: same contract as :func:`_ahash_signatures` — two
-    Arrow-batched mapInPandas stages, ZERO shuffles, pixels never leave
-    their partition; at 100 TB the encode stage is replaced by
-    binaryFile splits and downstream dedup shuffles only ≤8-byte
-    signatures. Oracle recomputes the full pipe from the pixel
-    arithmetic (value match proves encoder + real BMP parse + block
-    fold end-to-end)."""
-    import struct
-
-    import numpy as np
-
-    d = spark.table("documents").filter(F.col("doc_id") % 2 == 1).select("doc_id")
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_media(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "dhash": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                w, h = struct.unpack_from("<ii", payload, 18)
-                off = struct.unpack_from("<I", payload, 10)[0]
-                row_bytes = (w * 3 + 3) // 4 * 4
-                rows = np.frombuffer(
-                    payload, dtype=np.uint8, count=h * row_bytes, offset=off
-                ).reshape(h, row_bytes)
-                px = rows[:, : w * 3 : 3].astype(np.int64)
-                gw, gh = min(w, 9), min(h, 8)
-                bx = np.arange(w) * gw // w
-                by = np.arange(h) * gh // h
-                s = np.zeros((gh, gw), dtype=np.int64)
-                n = np.zeros((gh, gw), dtype=np.int64)
-                for i in range(gh):
-                    ri = px[by == i]
-                    for j in range(gw):
-                        blkpx = ri[:, bx == j]
-                        s[i, j] = blkpx.sum()
-                        n[i, j] = blkpx.size
-                bits = []
-                for i in range(gh):
-                    for j in range(gw - 1):
-                        bits.append(
-                            "1" if s[i, j + 1] * n[i, j] > s[i, j] * n[i, j + 1]
-                            else "0"
-                        )
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dhash"].append("".join(bits))
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        dhash_batches,
-        schema="doc_id bigint, width bigint, height bigint, dhash string",
+    Scale shape: same contract as :func:`_ahash_signatures` — map-only,
+    ZERO shuffles before the presentation sort, pixels never leave their
+    partition."""
+    return _per_doc(
+        _media(spark, "bmp"),
+        _dhash,
+        "doc_id bigint, width bigint, height bigint, dhash string",
     ).transform(pin, "reuse").orderBy("doc_id")
 
 
@@ -1064,18 +867,16 @@ _DFT_BANDS = (1, 2, 3, 4)
 
 
 def _tw_nanos() -> tuple:
-    import math as _m
-
     out = []
     for k in _DFT_BANDS:
         for j in range(_DFT_N):
-            ang = 2.0 * _m.pi * k * j / _DFT_N
+            ang = 2.0 * math.pi * k * j / _DFT_N
             out.append(
                 (
                     k,
                     j,
-                    int(_m.floor(_m.cos(ang) * 1e9 + 0.5)),
-                    int(_m.floor(_m.sin(ang) * 1e9 + 0.5)),
+                    int(math.floor(math.cos(ang) * 1e9 + 0.5)),
+                    int(math.floor(math.sin(ang) * 1e9 + 0.5)),
                 )
             )
     return tuple(out)
@@ -1083,6 +884,11 @@ def _tw_nanos() -> tuple:
 
 _TWIDDLES = _tw_nanos()
 _SQL_TWIDDLES = ", ".join(f"({k}, {j}, {c}, {s})" for k, j, c, s in _TWIDDLES)
+#: The twiddles as two band × j int64 matrices (cos, sin).
+_COS, _SIN = (
+    np.array([[t[i] for t in _TWIDDLES if t[0] == k] for k in _DFT_BANDS], dtype=np.int64)
+    for i in (2, 3)
+)
 
 #: Per-frame band power from the exact integer-nano component sums —
 #: the ONE place floats appear, identical shape on both engines.
@@ -1094,22 +900,29 @@ _DFT_POWER = (
 )
 
 
+def _dft(doc_id: int, payload: bytes) -> list[tuple]:
+    s = _pcm(payload)
+    x = s[: len(s) // _DFT_N * _DFT_N].reshape(-1, _DFT_N)  # full frames only
+    re, im = x @ _COS.T, x @ _SIN.T
+    return [
+        (doc_id, f, k, int(re[f, b]), int(im[f, b]))
+        for f in range(len(x))
+        for b, k in enumerate(_DFT_BANDS)
+    ]
+
+
 @query(
     "multimodal_audio_spectrogram",
     oracle=f"""
     WITH tw(k, j, cv, sv) AS (VALUES {_SQL_TWIDDLES}),
-    p AS (
-      SELECT doc_id, 50 + doc_id % 100 AS n
-      FROM documents WHERE doc_id % 2 = 0
+    p AS ({_SQL_PCM}
     ), fr AS (
-      SELECT doc_id, n, unnest(generate_series(0, n // {_DFT_N} - 1)) AS f
+      SELECT doc_id, s, unnest(generate_series(0, n // {_DFT_N} - 1)) AS f
       FROM p
     ), comp AS (
       SELECT fr.doc_id, fr.f, tw.k,
-             CAST(sum(((fr.doc_id * 31 + (fr.f * {_DFT_N} + tw.j) * 17) % 2000
-                       - 1000) * tw.cv) AS BIGINT) AS re_n,
-             CAST(sum(((fr.doc_id * 31 + (fr.f * {_DFT_N} + tw.j) * 17) % 2000
-                       - 1000) * tw.sv) AS BIGINT) AS im_n
+             CAST(sum(fr.s[fr.f * {_DFT_N} + tw.j + 1] * tw.cv) AS BIGINT) AS re_n,
+             CAST(sum(fr.s[fr.f * {_DFT_N} + tw.j + 1] * tw.sv) AS BIGINT) AS im_n
       FROM fr JOIN tw ON true
       GROUP BY 1, 2, 3
     ), pw AS (
@@ -1141,66 +954,19 @@ def multimodal_audio_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     The cross-engine-exactness trick: the twiddle factors are INTEGER
     NANO literals fixed at module level, so every frame's DFT component
     is an exact int64 sum (|re| ≤ 16·1000·10⁹ ≈ 1.6e13) computed
-    identically by numpy (Spark, over the stdlib-wave-decoded bytes)
-    and SQL (oracle, over the generator arithmetic); band power is the
-    ONE shared IEEE expression, rounded onto the 1e-6 grid before the
-    per-doc DECIMAL total. A value match proves the real WAV parse and
-    the transform end-to-end.
+    identically by numpy (Spark, over ``_pcm``) and SQL (oracle, over
+    ``_SQL_PCM``); band power is the ONE shared IEEE expression, rounded
+    onto the 1e-6 grid before the per-doc DECIMAL total.
 
-    Scale shape: decode + DFT are Arrow-batched map-only stages (the
-    16×4 integer matmul rides inside the partition, samples never
-    shuffle); the only exchange carries (doc, frame, band) component
-    pairs — 4 ints per frame, not audio. Peak selection is a
-    PARTITIONED window over that bounded relation."""
-    import io
-    import wave
-
-    import numpy as np
-
-    d = spark.table("documents").filter(F.col("doc_id") % 2 == 0).select("doc_id")
-    cmat = np.array(
-        [[c for k2, j, c, s in _TWIDDLES if k2 == k] for k in _DFT_BANDS],
-        dtype=np.int64,
-    )
-    smat = np.array(
-        [[s for k2, j, c, s in _TWIDDLES if k2 == k] for k in _DFT_BANDS],
-        dtype=np.int64,
-    )
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_make_media(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def dft_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "f": [], "k": [], "re_n": [], "im_n": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    data = np.frombuffer(
-                        w.readframes(w.getnframes()), dtype=np.int16
-                    ).astype(np.int64)
-                nfr = len(data) // _DFT_N
-                for f in range(nfr):
-                    x = data[f * _DFT_N : (f + 1) * _DFT_N]
-                    re = cmat @ x
-                    im = smat @ x
-                    for bi, k in enumerate(_DFT_BANDS):
-                        out["doc_id"].append(int(doc_id))
-                        out["f"].append(f)
-                        out["k"].append(k)
-                        out["re_n"].append(int(re[bi]))
-                        out["im_n"].append(int(im[bi]))
-            yield pd.DataFrame(out)
-
-    media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    comp = media.mapInPandas(
-        dft_batches,
-        schema="doc_id bigint, f bigint, k bigint, re_n bigint, im_n bigint",
+    Scale shape: decode + DFT are map-only (the 16×4 integer matmul
+    rides inside the partition, samples never shuffle); the only
+    exchange carries (doc, frame, band) component pairs — 4 ints per
+    frame, not audio. Peak selection is a PARTITIONED window over that
+    bounded relation."""
+    comp = _per_doc(
+        _media(spark, "wav"),
+        _dft,
+        "doc_id bigint, f bigint, k bigint, re_n bigint, im_n bigint",
     )
     pw = comp.select(
         "doc_id",

@@ -11,8 +11,14 @@ supplier get none — AQE size-decides (see SCALE.md broadcast policy).
 
 from __future__ import annotations
 
+import functools
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..tmpdirs import process_tmpdir
 
 from .num import DEC, dsum, dsum_i, sql_dsum_i
 from .registry import query
@@ -137,15 +143,11 @@ _N_BUCKETS = 8
 
 
 def _layout_tag(sf_dir: str, *tables: str) -> str:
-    """Cache tag for derived /tmp layouts (bucketed, partitioned):
-    source PATH plus each source table's mtime, so a fixture
-    regenerated in place yields a NEW tag and the stale copy is never
-    served (it would value-mismatch the oracle, which reads the fresh
-    parquet directly). Known limitation: two processes building the
-    same tag concurrently race on the /tmp write; the driver and the
-    gate are single-process, and a torn copy fails loudly at read."""
+    """Cache tag for the derived layout copies (see ``_layout``): source
+    PATH plus each source table's mtime, so a fixture regenerated in
+    place yields a NEW tag and the stale copy is never served (it would
+    value-mismatch the oracle, which reads the fresh parquet directly)."""
     import hashlib
-    import os
 
     from ..data import table_path
 
@@ -157,6 +159,31 @@ def _layout_tag(sf_dir: str, *tables: str) -> str:
         except OSError:
             parts.append(f"{t}:absent")
     return hashlib.sha256("|".join(parts).encode()).hexdigest()[:10]
+
+
+@functools.cache
+def _layout_root() -> str:
+    return process_tmpdir("shelf-layout-")
+
+
+#: (Spark application id, name, tag) → path of each copy written so far.
+_LAYOUTS: dict[tuple[str, str, str], str] = {}
+
+
+def _layout(spark: SparkSession, name: str, tag: str,
+            write: Callable[[str], None]) -> str:
+    """The path of this process's layout copy ``<name>_<tag>``, which
+    ``write(path)`` makes on its first use in this Spark application (a
+    new application's catalog no longer holds a bucketed copy's table).
+    Every copy lives under one ``shelf-layout-<pid>-`` root per process,
+    removed at exit, so concurrent processes (``--workers`` gate shards)
+    never check and overwrite one another's copy."""
+    key = (spark.sparkContext.applicationId, name, tag)
+    if key not in _LAYOUTS:
+        path = os.path.join(_layout_root(), f"{name}_{tag}")
+        write(path)
+        _LAYOUTS[key] = path
+    return _LAYOUTS[key]
 
 
 @query(
@@ -189,14 +216,11 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..optimize import write_bucketed
 
     tag = _layout_tag(sf_dir, "orders", "customer")
-    base = "/tmp/shelf-spark-bucketed"
     for name, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         tbl = f"bkt_{name}_{tag}"
-        if not spark.catalog.tableExists(tbl):
-            write_bucketed(
-                spark.table(name), tbl, [key], _N_BUCKETS,
-                sort_keys=[key], path=f"{base}/{tbl}",
-            )
+        _layout(spark, "bkt_" + name, tag, lambda p: write_bucketed(
+            spark.table(name), tbl, [key], _N_BUCKETS, sort_keys=[key], path=p,
+        ))
     o = spark.table(f"bkt_orders_{tag}")
     c = spark.table(f"bkt_customer_{tag}")
     return (
@@ -213,6 +237,15 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # r8b: partitioned-layout sink + pruned read (the scan-elimination path)
 # ---------------------------------------------------------------------------
+
+
+def _events_by_type(spark: SparkSession, sf_dir: str) -> str:
+    """The events copy partitioned by event_type (``/event_type=…/``)."""
+    return _layout(
+        spark, "events", _layout_tag(sf_dir, "events"),
+        lambda p: spark.table("events").write.mode("overwrite")
+        .partitionBy("event_type").parquet(p),
+    )
 
 
 @query(
@@ -240,18 +273,7 @@ def sink_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory-scattered), so the plain-SQL oracle over `events` is
     sound; the rollup uses the exact integer revenue grid.
     """
-    import os
-
-    tag = _layout_tag(sf_dir, "events")
-    path = f"/tmp/shelf-spark-partitioned/events_{tag}"
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            spark.table("events")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
+    path = _events_by_type(spark, sf_dir)
     # Explicit schema: a zero-row source (r10 empty corpus — or, on a
     # real lake, a partition-pruned-to-nothing write) produces a
     # _SUCCESS-only directory with no data files, and schema INFERENCE
@@ -403,17 +425,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     post-scan predicate reads the whole fact lake; DPP turns the same
     plan into a 2-partition read. The partitioned copy is content-equal
     to `events`, so the plain-SQL oracle is sound."""
-    import os
-
-    tag = _layout_tag(sf_dir, "events")
-    path = f"/tmp/shelf-spark-partitioned/events_{tag}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            spark.table("events")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
+    path = _events_by_type(spark, sf_dir)
     # Explicit schema — empty-source _SUCCESS-only layout; see
     # sink_partitioned_pruning.
     fact = spark.read.schema(spark.table("events").schema).parquet(path)
@@ -532,13 +544,9 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     that rows survive. Scale shape: footer reconciliation is metadata
     work at planning time; the scan itself stays one pass with column
     pruning intact (ReadSchema carries the merged schema)."""
-    import os
-
-    tag = _layout_tag(sf_dir, "orders")
-    path = f"/tmp/shelf-spark-mergeschema/orders_{tag}"
-
     o = spark.table("orders")
-    if not os.path.exists(os.path.join(path, "gen1", "_SUCCESS")):
+
+    def write(path: str) -> None:
         (
             o.where(F.col("o_orderkey") % 2 == 0)
             .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -551,6 +559,8 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(path, "gen1"))
         )
+
+    path = _layout(spark, "mergeschema", _layout_tag(sf_dir, "orders"), write)
     u = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(path, "gen0"), os.path.join(path, "gen1")
     )
@@ -583,13 +593,10 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ORC copy is content-equal to the source, so the plain-SQL
     oracle is sound — same contract as the bucketed/partitioned/
     merge-schema layout twins."""
-    import os
-
-    tag = _layout_tag(sf_dir, "lineitem")
-    path = f"/tmp/shelf-spark-orc/lineitem_{tag}"
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        spark.table("lineitem").write.mode("overwrite").orc(path)
+    path = _layout(
+        spark, "orc", _layout_tag(sf_dir, "lineitem"),
+        lambda p: spark.table("lineitem").write.mode("overwrite").orc(p),
+    )
     li = spark.read.orc(path)
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -626,24 +633,19 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: CSV scan + one conditional aggregate; quarantined rows
     cost one string column, never a job failure."""
-    import os
-
-    tag = _layout_tag(sf_dir, "orders")
-    path = f"/tmp/shelf-spark-csvmal/orders_{tag}"
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            spark.table("orders")
-            .select(
-                F.col("o_orderkey").alias("k"),
-                F.when(F.col("o_orderkey") % 97 == 0, F.lit("NOT_A_NUMBER"))
-                .otherwise(F.col("o_totalprice").cast("string"))
-                .alias("v"),
-            )
-            .write.mode("overwrite")
-            .option("header", "false")
-            .csv(path)
+    path = _layout(
+        spark, "csvmal", _layout_tag(sf_dir, "orders"),
+        lambda p: spark.table("orders")
+        .select(
+            F.col("o_orderkey").alias("k"),
+            F.when(F.col("o_orderkey") % 97 == 0, F.lit("NOT_A_NUMBER"))
+            .otherwise(F.col("o_totalprice").cast("string"))
+            .alias("v"),
         )
+        .write.mode("overwrite")
+        .option("header", "false")
+        .csv(p),
+    )
     df = (
         spark.read.schema("k LONG, v DOUBLE, _corrupt_record STRING")
         .option("mode", "PERMISSIVE")

@@ -178,6 +178,35 @@ def test_worker_merge_names_dead_shard(monkeypatch, capsys):
     assert "1 ok, 0 rows-only, 0 FAIL of 1 (2 workers)" in out
 
 
+def test_worker_ends_shard_when_spark_context_stopped(spark, monkeypatch, capsys):
+    """After a Spark error on a stopped SparkContext (a JVM heap OOM stops
+    it), the shard ends without a summary, so the merge reports the worker
+    DEAD and the total SHORT, instead of failing every later query on the
+    dead context."""
+    import sys
+    from types import SimpleNamespace as NS
+
+    from conftest import SF_SMALL
+    from tools import check_correctness as gate
+
+    assert not gate._context_stopped(spark)
+    ran = []
+
+    def stops(spark, sf):
+        raise RuntimeError("java.lang.OutOfMemoryError: Java heap space")
+
+    monkeypatch.setattr(gate, "QUERIES", {"q_oom": stops, "q_next": lambda *a: ran.append(a)})
+    jvm = NS(java=NS(lang=NS(ProcessHandle=NS(current=lambda: NS(pid=lambda: 0)))))
+    stopped = NS(sparkContext=NS(_jvm=jvm, _jsc=NS(sc=lambda: NS(isStopped=lambda: True))))
+    monkeypatch.setattr(gate, "get_spark", lambda name: stopped)
+    monkeypatch.setattr(sys, "argv", ["check_correctness", "--sf", SF_SMALL])
+    assert gate.main() == 1
+    out = capsys.readouterr().out
+    assert "FAIL  q_oom: spark error" in out
+    assert not ran
+    assert not any(gate._SUMMARY_RE.match(line) for line in out.splitlines())
+
+
 def test_gate_processes_spill_to_own_duckdb_dirs():
     """Two gate processes running at once get DuckDB connections with
     different ``temp_directory`` values, each removed when its process

@@ -794,6 +794,41 @@ def test_layout_tag_changes_when_fixture_regenerated(tmp_path):
     assert _layout_tag(sf, "events") != t1
 
 
+def test_query_layer_names_no_fixed_tmp_path():
+    """Layout copies live under a per-process root (relational_ext's
+    ``_layout``); a fixed temp path is shared by concurrent processes."""
+    import re
+
+    from conftest import owners
+
+    assert owners(re.escape('"/tmp/')) == set()
+
+
+def test_layout_copies_live_under_this_process_root(spark):
+    """Each layout copy of the six layout operators is written under this
+    process's ``shelf-layout-<pid>-`` root, once per (name, tag)."""
+    import os
+
+    from shelf_spark.queries import relational_ext as rx
+
+    names = ("join_bucketed_colocated", "sink_partitioned_pruning",
+             "join_dynamic_partition_pruning", "scan_merge_schema",
+             "sink_orc_roundtrip", "scan_csv_malformed")
+    for name in names:
+        QUERIES[name](spark, SF_SMALL).collect()
+    app = spark.sparkContext.applicationId
+    copies = {k[1:]: p for k, p in rx._LAYOUTS.items() if k[0] == app}
+    assert {n for n, _ in copies} >= {"bkt_orders", "bkt_customer", "events",
+                                     "mergeschema", "orc", "csvmal"}
+    root = rx._layout_root()
+    assert os.path.basename(root).startswith(f"shelf-layout-{os.getpid()}-")
+    assert all(os.path.dirname(p) == root and os.listdir(p) for p in copies.values())
+    written = {p: os.stat(p).st_mtime_ns for p in copies.values()}
+    for name in names:
+        QUERIES[name](spark, SF_SMALL)
+    assert {p: os.stat(p).st_mtime_ns for p in copies.values()} == written
+
+
 def test_pq_topk_bounds(spark):
     """VALUE-level evidence for the rows-only PQ operator: (a) every
     reported cosine must bit-match the brute-force value for that pair

@@ -170,6 +170,15 @@ def duckdb_connect(workers: int = 1) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def _context_stopped(spark) -> bool:
+    """Whether ``spark``'s SparkContext has stopped, as a JVM heap OOM
+    stops it; a JVM that is gone counts as stopped."""
+    try:
+        return spark.sparkContext._jsc.sc().isStopped()
+    except Exception:  # noqa: BLE001
+        return True
+
+
 def _run_workers(args) -> int:
     """Fan the gate out over N subprocesses and merge their summaries.
 
@@ -312,6 +321,12 @@ def main() -> int:
                 srows = [tuple(r) for r in sdf.collect()]
             except Exception as exc:  # noqa: BLE001
                 print(f"FAIL  {name}: spark error: {exc}")
+                if _context_stopped(spark):
+                    # every later query would fail on the stopped context;
+                    # no summary, so the merge reports this worker DEAD
+                    print(f"# SparkContext stopped in {name}; shard ends",
+                          file=sys.stderr)
+                    return 1
                 failures.append(name)
                 n_fail += 1
                 continue
