@@ -95,6 +95,11 @@ TABLE_SCHEMA: dict[str, Any] = {
             "type": "object",
             "additionalProperties": {"type": "string"},
         },
+        # an incremental step's exact row-hash sums per output partition
+        "output_sums": {
+            "type": "object",
+            "additionalProperties": {"type": "string", "pattern": r"^-?[0-9]+\|-?[0-9]+\|[0-9]+$"},
+        },
         **_PROVENANCE_FIELDS,
     },
     "additionalProperties": False,
@@ -149,9 +154,20 @@ _BY_KIND = {
 }
 
 
+def _validator(schema: dict[str, Any]) -> jsonschema.protocols.Validator:
+    cls = jsonschema.validators.validator_for(schema)
+    cls.check_schema(schema)
+    return cls(schema)
+
+
+#: one validator per kind: ``jsonschema.validate`` would check the schema
+#: against its meta-schema again on every call
+_VALIDATORS = {kind: _validator(schema) for kind, schema in _BY_KIND.items()}
+
+
 def validate(doc: Any, kind: str) -> None:
-    """Validate a YAML document against its schema; raise ValidationError."""
-    try:
-        jsonschema.validate(doc, _BY_KIND[kind])
-    except jsonschema.ValidationError as exc:
-        raise ValidationError(f"invalid {kind} document: {exc.message}") from exc
+    """Validate a YAML document against its schema; raise ValidationError
+    with the error ``jsonschema.validate`` would raise."""
+    error = jsonschema.exceptions.best_match(_VALIDATORS[kind].iter_errors(doc))
+    if error is not None:
+        raise ValidationError(f"invalid {kind} document: {error.message}") from error

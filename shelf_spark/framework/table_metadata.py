@@ -193,6 +193,7 @@ class TableMetadata:
         checksum: str,
         runtime: dict[str, Any],
         partition_state: dict[str, str] | None = None,
+        output_sums: dict[str, str] | None = None,
     ) -> None:
         doc: dict[str, Any] = {
             "uri": str(uri),
@@ -207,6 +208,8 @@ class TableMetadata:
         }
         if partition_state is not None:
             doc["partition_state"] = dict(sorted(partition_state.items()))
+        if output_sums is not None:
+            doc["output_sums"] = dict(sorted(output_sums.items()))
         for k in INHERITED_FIELDS:
             if k in self.provenance:
                 doc[k] = self.provenance[k]

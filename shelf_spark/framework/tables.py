@@ -25,6 +25,14 @@ files. The output checksum is therefore a **canonical logical checksum**
 native ``xxhash64`` values over the columns and their null flags, summed
 exactly; incremental steps fingerprint dep partitions with the same term.
 
+A SQL step sums that term during its write, through an ``Observation`` on
+the DataFrame it writes, so its build re-reads nothing for the checksum.
+An incremental step records the sums of each output partition in its
+sidecar (``output_sums``); a refresh observes the sums of the partitions
+it rewrites and adds them to the recorded ones. Its full build, and a
+refresh with no usable record, re-sums the output once, grouped by
+partition. A Python step's output is checksummed by a read.
+
 Every later read of a built table goes through :func:`read_table`, with
 the schema decided once at build and recorded exactly in the sidecar
 (``schema_json``): no read re-infers partition types or reads a footer.
@@ -33,15 +41,18 @@ the schema decided once at build and recorded exactly in the sidecar
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import json
+import shutil
 import subprocess
 import sys
 import time
 from pathlib import Path
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from ..optimize import write_bucketed
 from . import paths
@@ -130,9 +141,32 @@ def simplify_dependency_names(deps: list[StepURI]) -> dict[str, StepURI]:
 _SALT = 0x5EED
 
 
-def _row_hash(schema: StructType) -> tuple[Column, Column]:
+#: The directory name Spark writes a NULL or empty partition value to;
+#: a read values it NULL.
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _part_key(c: Column) -> Column:
+    """The key of a partition value: the value of the directory a
+    partitioned write puts it in, ``cast(c AS string)``, with NULL and
+    ``''`` (one directory) both named :data:`_DEFAULT_PARTITION`."""
+    s = c.cast("string")
+    return F.when(s != "", s).otherwise(F.lit(_DEFAULT_PARTITION))
+
+
+def _as_read(c: Column, dtype: DataType) -> Column:
+    """A partition value as a read of its directory sees it: its string
+    form parsed back to ``dtype``, and NULL for the default partition
+    (so a written ``''`` reads as NULL)."""
+    s = c.cast("string")
+    return F.when(s != "", s.cast(dtype))
+
+
+def _row_hash(schema: StructType, part_col: str | None = None) -> tuple[Column, Column]:
     """The per-row term both content hashes below sum: two ``xxhash64``
     values (128 bits) of the row's columns and their null flags.
+    ``part_col``, when given, is valued as a read of the partitioned
+    write sees it (:func:`_as_read`).
 
     ``xxhash64`` skips NULLs, so ``(NULL, 1.0)`` and ``(1.0, NULL)`` would
     hash equal without the flags. Inside arrays, structs and maps it also
@@ -142,39 +176,71 @@ def _row_hash(schema: StructType) -> tuple[Column, Column]:
 
     A Spark upgrade that changes ``xxhash64`` changes every fingerprint:
     that costs one full rebuild, never a wrong skip."""
-    cols = [
-        F.to_json(F.col(f.name))
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        else F.col(f.name)
+    vals = [
+        _as_read(F.col(f.name), f.dataType) if f.name == part_col else F.col(f.name)
         for f in schema.fields
     ]
-    nulls = F.array(*[F.col(f.name).isNull() for f in schema.fields])
+    cols = [
+        F.to_json(v) if isinstance(f.dataType, (ArrayType, MapType, StructType)) else v
+        for f, v in zip(schema.fields, vals)
+    ]
+    nulls = F.array(*[v.isNull() for v in vals])
     return F.xxhash64(nulls, *cols), F.xxhash64(F.lit(_SALT), nulls, *cols)
 
 
-def _hash_sums(schema: StructType) -> list[Column]:
+def _hash_sums(
+    schema: StructType, part_col: str | None = None, where: Column | None = None, suffix: str = ""
+) -> list[Column]:
     """``s0``, ``s1``: each row-hash value summed in an exact decimal(38)
-    (|term| < 2^63, so 10^19 rows fit); ``n``: the row count."""
+    (|term| < 2^63, so 10^19 rows fit); ``n``: the row count. With
+    ``where``, over the rows it holds for; names end in ``suffix``."""
+    terms = [h.cast("decimal(38,0)") for h in _row_hash(schema, part_col)] + [F.lit(1)]
+    if where is not None:
+        terms = [F.when(where, t) for t in terms]
+    s0, s1, one = terms
     return [
-        F.coalesce(F.sum(h.cast("decimal(38,0)")), F.lit(0)).alias(f"s{i}")
-        for i, h in enumerate(_row_hash(schema))
-    ] + [F.count("*").alias("n")]
+        F.coalesce(F.sum(s0), F.lit(0)).alias(f"s0{suffix}"),
+        F.coalesce(F.sum(s1), F.lit(0)).alias(f"s1{suffix}"),
+        F.count(one).alias(f"n{suffix}"),
+    ]
+
+
+def _checksum(schema: StructType, s0, s1, n) -> str:
+    """The table checksum: SHA-256 of the schema DDL, the row count and
+    the two exact sums of :func:`_row_hash`. Every checksum a build
+    records comes from here, whichever way its sums were taken."""
+    basis = f"{schema.simpleString()}|{int(n)}|{int(s0)}|{int(s1)}"
+    return hashlib.sha256(basis.encode()).hexdigest()
+
+
+def _entry(s0, s1, n) -> str:
+    """One partition's sums as recorded: ``"s0|s1|n"``. The sums are kept
+    as Python ints: a ``Decimal`` in the default 28-digit context would
+    round a 38-digit total."""
+    return f"{int(s0)}|{int(s1)}|{int(n)}"
+
+
+def _total(entries: dict[str, str]) -> tuple[int, int, int]:
+    """``(s0, s1, n)`` of a table from its partitions' :func:`_entry` sums."""
+    s0 = s1 = n = 0
+    for e in entries.values():
+        a, b, c = (int(x) for x in e.split("|"))
+        s0, s1, n = s0 + a, s1 + b, n + c
+    return s0, s1, n
 
 
 def logical_checksum(df: DataFrame) -> str:
-    """Order-insensitive content hash of a DataFrame + its schema.
+    """Order-insensitive content hash of a DataFrame + its schema
+    (:func:`_checksum` of its :func:`_hash_sums`).
 
-    The schema DDL, the row count and the two exact sums of
-    :func:`_row_hash` over all rows. Partition order and row order cannot
-    affect it, so Spark's nondeterministic part-file layout doesn't break
-    the Merkle dirty-check. One extra aggregate job per build —
-    distributed, no driver materialization.
+    Partition order and row order cannot affect it, so Spark's
+    nondeterministic part-file layout doesn't break the Merkle
+    dirty-check. One aggregate job over ``df``: builds call it only for a
+    Python step's output, which has no write of ours to observe; a SQL
+    step's sums come from its write (:func:`_exec_sql_step`).
     """
-    import hashlib
-
     agg = df.agg(*_hash_sums(df.schema)).collect()[0]
-    basis = f"{df.schema.simpleString()}|{agg['n']}|{agg['s0']}|{agg['s1']}"
-    return hashlib.sha256(basis.encode()).hexdigest()
+    return _checksum(df.schema, agg["s0"], agg["s1"], agg["n"])
 
 
 # ---------------------------------------------------------------------------
@@ -212,15 +278,13 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
 
     started = dt.datetime.now(dt.timezone.utc)
     t0 = time.monotonic()
-    if script.suffix == ".sql":
-        schema, partition_state, fingerprint_s = _exec_sql_step(spark, uri, script, deps, out)
-    else:
+    built = _exec_sql_step(spark, uri, script, deps, out) if script.suffix == ".sql" else None
+    if built is None:
         _exec_python_step(script, deps, out)
-        schema, partition_state, fingerprint_s = None, None, None
     if not out.exists():
         raise StepDefinitionError(f"step produced no output at {out}")
-    if schema is None:  # a script's output has no plan: its one inference
-        schema = _read_any(spark, out).schema
+    # a script's output has no plan: its one inference
+    schema = built.schema if built else _read_any(spark, out).schema
 
     df = read_table(spark, uri, schema)
     t1 = time.monotonic()
@@ -228,8 +292,6 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
     result = meta.validate_df(df)
     if not result.ok:
         # failed validation unlinks the output so the step stays dirty
-        import shutil
-
         shutil.rmtree(out, ignore_errors=True)
         out.unlink(missing_ok=True)
         spark.sql(f"DROP TABLE IF EXISTS {catalog_table_name(uri)}")
@@ -237,8 +299,17 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
             f"validation failed for {uri}:\n" + "\n".join(result.errors)
         )
     t2 = time.monotonic()
-    checksum = logical_checksum(df)
+    output_sums = built.output_sums if built else None
+    if built is None:
+        checksum = logical_checksum(df)
+    elif built.part_col is None:
+        checksum = _checksum(schema, *built.sums)
+    else:
+        if output_sums is None:  # no recorded sums to build on: one grouped read
+            output_sums = _partition_fingerprints(df, built.part_col)
+        checksum = _checksum(schema, *_total(output_sums))
     t3 = time.monotonic()
+    fingerprint_s = built.fingerprint_s if built else None
     # duration = write + fingerprint: the step itself and the re-read of
     # its output; validation and the checksum follow it
     runtime = {
@@ -251,7 +322,10 @@ def build_table(spark: SparkSession, uri: StepURI, deps: list[StepURI]) -> None:
     }
     if fingerprint_s is not None:
         runtime["fingerprint_seconds"] = round(fingerprint_s, 3)
-    meta.write_sidecar(uri, deps, df, checksum, runtime, partition_state=partition_state)
+    meta.write_sidecar(
+        uri, deps, df, checksum, runtime,
+        partition_state=built.partition_state if built else None, output_sums=output_sums,
+    )
 
 
 def catalog_table_name(uri: StepURI) -> str:
@@ -280,27 +354,43 @@ def read_table(spark: SparkSession, uri: StepURI, schema: StructType | None = No
 
 
 def _partition_fingerprints(df: DataFrame, part_col: str) -> dict[str, str]:
-    """Order-insensitive content fingerprint per partition value,
-    ``"s0|s1|n"``: the same exact row-hash sums as
-    :func:`logical_checksum`, grouped by the partition column — one
-    distributed aggregate over the dep, no driver materialization beyond
-    |partitions| rows. A sidecar recorded by the earlier SHA-256 hash holds
+    """Order-insensitive content fingerprint per partition key
+    (:func:`_part_key`), ``"s0|s1|n"``: the same exact row-hash sums as
+    :func:`logical_checksum`, grouped by partition — one distributed
+    aggregate, no driver materialization beyond |partitions| rows. Over a
+    dep it keys the partition state; over an incremental step's output, its
+    ``output_sums``. A sidecar recorded by the earlier SHA-256 hash holds
     ``"sum|n"`` entries, which never equal these: its first run rebuilds
     every partition once."""
     rows = (
-        df.groupBy(F.col(part_col).cast("string").alias("_p"))
+        df.groupBy(_part_key(F.col(part_col)).alias("_p"))
         .agg(*_hash_sums(df.schema))
         .collect()
     )
-    return {r["_p"]: f"{r['s0']}|{r['s1']}|{r['n']}" for r in rows}
+    return {r["_p"]: _entry(r["s0"], r["s1"], r["n"]) for r in rows}
+
+
+class _SqlOutput(NamedTuple):
+    """What a SQL step's write leaves for its sidecar."""
+
+    #: the schema a read of the output has (partition column last)
+    schema: StructType
+    #: ``(s0, s1, n)`` of a plain or bucketed output, observed in its write
+    sums: tuple | None
+    #: an incremental step's partition column, else None
+    part_col: str | None
+    #: an incremental step's :func:`_entry` sums per output partition;
+    #: None when its build has none to build on and must re-sum the output
+    output_sums: dict[str, str] | None
+    partition_state: dict[str, str] | None
+    #: seconds spent fingerprinting deps
+    fingerprint_s: float | None
 
 
 def _exec_sql_step(
     spark: SparkSession, uri: StepURI, script: Path, deps: list[StepURI], out: Path
-) -> tuple[StructType, dict[str, str] | None, float | None]:
-    """Run a SQL step; returns the schema a read of its output has (the
-    analysed SELECT's, partition column last), its partition state and the
-    seconds spent fingerprinting deps (both None unless incremental)."""
+) -> _SqlOutput:
+    """Run a SQL step, summing its output's row hashes during the write."""
     # Temp views are session-global, and the DAG executor builds steps
     # concurrently on one session: a view named only after the dep's
     # simplified name (dep_data) would be overwritten by a concurrent build
@@ -322,6 +412,7 @@ def _exec_sql_step(
     template_vars: dict[str, str] = {}
     partition_state: dict[str, str] | None = None
     fingerprint_s: float | None = None
+    obs = Observation()
     try:
         dep_dfs = {
             n: read_table(spark, d) if d.scheme == "table" else _read_any(spark, dependency_data_path(d))
@@ -357,23 +448,28 @@ def _exec_sql_step(
                     for k, v in _partition_fingerprints(ddf, part_col).items():
                         partition_state[k] = partition_state[k] + "+" + v if k in partition_state else v
             fingerprint_s = time.monotonic() - t0
-            prior = _prior_partition_state(uri, out, schema)
+            prior, prior_sums = _prior_partition_state(uri, out, schema)
             if prior:
                 changed = sorted(k for k, v in partition_state.items() if prior.get(k) != v)
                 removed = sorted(k for k in prior if k not in partition_state)
-                import shutil
-
                 for k in removed:  # partitions gone from every dep
-                    shutil.rmtree(out / f"{part_col}={k}", ignore_errors=True)
+                    _remove_partition(spark, out, part_col, k)
+                kept = None if prior_sums is None else {
+                    k: v for k, v in prior_sums.items() if k not in removed and k not in changed
+                }
                 if not changed:
                     # nothing to rebuild; the SELECT was only analysed, no job
-                    return schema, partition_state, fingerprint_s
+                    return _SqlOutput(schema, None, part_col, kept, partition_state, fingerprint_s)
+                key = _part_key(F.col(part_col))
                 for name, ddf in dep_dfs.items():
                     if part_col in ddf.columns:
-                        ddf.filter(
-                            F.col(part_col).cast("string").isin(changed)
-                        ).createOrReplaceTempView(template_vars[name])
-                df = spark.sql(sql)
+                        ddf.filter(key.isin(changed)).createOrReplaceTempView(template_vars[name])
+                # the row count, and the sums of each changed partition
+                df = spark.sql(sql).observe(obs, F.count(F.lit(1)).alias("n"), *[
+                    c for i, k in enumerate(changed) for c in _hash_sums(schema, part_col, key == k, f"_{i}")
+                ])
+        else:
+            df = df.observe(obs, *_hash_sums(schema))
         # a catalog entry left by an earlier bucketed build would shadow
         # this output in read_table
         cname = catalog_table_name(uri)
@@ -396,25 +492,51 @@ def _exec_sql_step(
             writer.option("partitionOverwriteMode", "dynamic" if changed else "static").parquet(str(out))
         else:
             df.write.mode("overwrite").parquet(str(out))
-        return schema, partition_state, fingerprint_s
+        if not incremental:
+            got = obs.get
+            return _SqlOutput(schema, (got["s0"], got["s1"], got["n"]), None, None, None, None)
+        if changed is None:  # a full build has no recorded sums to add to
+            return _SqlOutput(schema, None, part_col, None, partition_state, fingerprint_s)
+        got = obs.get
+        rewritten = {}
+        for i, k in enumerate(changed):
+            if got[f"n_{i}"]:
+                rewritten[k] = _entry(got[f"s0_{i}"], got[f"s1_{i}"], got[f"n_{i}"])
+            else:  # a dynamic overwrite leaves the files of a partition it writes no row of
+                _remove_partition(spark, out, part_col, k)
+        if kept is not None and _total(rewritten)[2] == got["n"]:
+            kept.update(rewritten)
+        else:  # rows outside the changed partitions, or no recorded sums
+            kept = None
+        return _SqlOutput(schema, None, part_col, kept, partition_state, fingerprint_s)
     finally:
         for view in template_vars.values():
             spark.catalog.dropTempView(view)
 
 
-def _prior_partition_state(uri: StepURI, out: Path, schema: StructType) -> dict[str, str]:
-    """The partition state the sidecar records, if it still describes the
-    output: built by this script and config, with these column names and
-    types (Parquet reads by name, and a read makes every field nullable, so
-    order and nullability do not count). Else ``{}``, a full build: an
-    edited SELECT over unchanged deps would keep its old rows, and an added
-    or renamed column would read as NULL."""
+def _remove_partition(spark: SparkSession, out: Path, part_col: str, key: str) -> None:
+    """Remove the directory a partitioned write puts partition ``key`` in,
+    named with Spark's escaping (a timestamp's ``:`` is ``%3A``)."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    shutil.rmtree(out / utils.getPartitionPathString(part_col, key), ignore_errors=True)
+
+
+def _prior_partition_state(
+    uri: StepURI, out: Path, schema: StructType
+) -> tuple[dict[str, str], dict[str, str] | None]:
+    """The partition state and output sums the sidecar records, if it
+    still describes the output: built by this script and config, with these
+    column names and types (Parquet reads by name, and a read makes every
+    field nullable, so order and nullability do not count). Else
+    ``({}, None)``, a full build: an edited SELECT over unchanged deps would
+    keep its old rows, and an added or renamed column would read as NULL.
+    A sidecar written before ``output_sums`` existed gives None sums."""
     meta = paths.table_metadata_path(uri.path)
     doc = (load_yaml(meta) or {}) if out.exists() and meta.exists() else {}
     built = doc.get("input_manifest", {})
     same = all(built.get(k) == v for k, v in generate_input_manifest(uri, []).items())
     same = same and doc.get("schema") == {f.name: f.dataType.simpleString() for f in schema.fields}
-    return doc.get("partition_state", {}) if same else {}
+    return (doc.get("partition_state", {}), doc.get("output_sums")) if same else ({}, None)
 
 
 def _exec_python_step(script: Path, deps: list[StepURI], out: Path) -> None:

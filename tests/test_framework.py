@@ -915,8 +915,9 @@ def test_partition_fingerprints_follow_one_row_change(spark):
 
 def test_old_format_partition_state_rebuilds_every_partition(workspace, spark):
     """A sidecar recorded by the earlier SHA-256 hash (``"<sum>|<n>"``
-    entries) never matches the current fingerprints: the next run rewrites
-    every partition instead of skipping any, and records the new shape."""
+    entries), and without ``output_sums``, never matches the current
+    fingerprints: the next run rewrites every partition instead of
+    skipping any, re-sums its output and records the new shape."""
     from shelf_spark.framework import paths
     from shelf_spark.framework.snapshots import Snapshot
     from shelf_spark.framework.steps import execute_dag, prune_completed
@@ -927,6 +928,7 @@ def test_old_format_partition_state_rebuilds_every_partition(workspace, spark):
     meta = paths.table_metadata_path(step)
     doc = load_yaml(meta)
     doc["partition_state"] = {k: f"{12345 + int(k)}|2" for k in doc["partition_state"]}
+    del doc["output_sums"]
     save_yaml(doc, meta)
     out = paths.table_data_path(step)
 
@@ -948,6 +950,8 @@ def test_old_format_partition_state_rebuilds_every_partition(workspace, spark):
     state = load_yaml(meta)["partition_state"]
     assert set(state) == {"0", "1", "2"}
     assert all(v.count("|") == 2 for v in state.values())
+    assert set(load_yaml(meta)["output_sums"]) == {"0", "1", "2"}
+    _sidecar_checksum_is_a_full_read(spark, StepURI.parse(f"table://{step}"))
 
 
 # -- the schema recorded at build ----------------------------------------------
@@ -1185,3 +1189,209 @@ def test_dep_column_rename_rebuilds_incremental_step(workspace, spark):
         got = read_table(spark, top)
         assert got.columns == [name, "day"]
         assert sorted(tuple(r) for r in got.collect()) == [(10, 1), (20, 2)]
+
+
+# -- the checksum a SQL step's write observes --------------------------------
+
+
+def _release(workspace, path: str, table) -> None:
+    """Snapshot a pyarrow ``table`` as Parquet version ``path`` and list it
+    in ``shelf.yaml``, so ``latest`` deps move to it."""
+    import pyarrow.parquet as pq
+
+    from shelf_spark.framework.snapshots import Snapshot
+
+    raw = workspace / f"{path.replace('/', '_')}.parquet"
+    pq.write_table(table, raw)
+    Snapshot.create(raw, path)
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse(f"snapshot://{path}"))
+    shelf.save()
+
+
+def _sidecar_checksum_is_a_full_read(spark, uri: StepURI) -> str:
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.tables import logical_checksum, read_table
+    from shelf_spark.framework.utils import load_yaml
+
+    recorded = load_yaml(paths.table_metadata_path(uri.path))["checksum"]
+    assert recorded == logical_checksum(read_table(spark, uri)), uri
+    return recorded
+
+
+def test_changed_partition_without_rows_is_removed(workspace, spark):
+    """A changed dep day whose rows the SELECT now drops has no output
+    rows: its refresh removes the day's old files, as a full build would
+    (a dynamic overwrite writes nothing there, so it left them)."""
+    import pyarrow as pa
+
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+    from shelf_spark.framework.tables import read_table
+    from shelf_spark.framework.utils import load_yaml
+
+    Shelf.init()
+    _release(workspace, "ns/src/2024-01-01", pa.table({"day": [1, 2], "v": [10, 5]}))
+    shelf = Shelf()
+    shelf.new_table("ns/pos/2024-01-02", ["snapshot://ns/src/latest"])
+    shelf.save()
+    script = paths.TABLE_SCRIPTS_DIR / "ns" / "pos.sql"
+    script.parent.mkdir(parents=True, exist_ok=True)
+    script.write_text("SELECT day, sum(v) AS total FROM {src} WHERE v > 0 GROUP BY day")
+    script.with_suffix(".meta.yaml").write_text("version: 1\nincremental:\n  partition_by: day\n")
+    uri = StepURI.parse("table://ns/pos/2024-01-02")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert {tuple(r) for r in read_table(spark, uri).collect()} == {(10, 1), (5, 2)}
+
+    _release(workspace, "ns/src/2024-02-01", pa.table({"day": [1, 2], "v": [10, -5]}))
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert {tuple(r) for r in read_table(spark, uri).collect()} == {(10, 1)}
+    assert [p.name for p in paths.table_data_path(uri.path).glob("day=*")] == ["day=1"]
+    sidecar = load_yaml(paths.table_metadata_path(uri.path))
+    assert set(sidecar["partition_state"]) == {"1", "2"}
+    assert set(sidecar["output_sums"]) == {"1"}
+    _sidecar_checksum_is_a_full_read(spark, uri)
+
+
+#: an incremental SELECT per partition column, each over every hostile
+#: column type, and a bucketed and a plain step
+_HOSTILE_STEPS = {
+    "by_code": (
+        "SELECT code, CAST(sum(v) AS DECIMAL(20,2)) AS total, map('n', count(*)) AS m, "
+        "array(array(min(v), NULL), NULL) AS nested FROM {src} WHERE v > 0 GROUP BY code",
+        "incremental:\n  partition_by: code\n",
+    ),
+    "by_day": (
+        "SELECT d, count(*) AS n, CAST(sum(v) AS DECIMAL(38,0)) AS total, "
+        "map(max(code), min(v)) AS m FROM {src} WHERE v > 0 GROUP BY d",
+        "incremental:\n  partition_by: d\n",
+    ),
+    "by_ts": (
+        "SELECT ts, sort_array(collect_list(v)) AS vs, "
+        "array(array(NULL, max(v))) AS nested FROM {src} WHERE v > 0 GROUP BY ts",
+        "incremental:\n  partition_by: ts\n",
+    ),
+    "bucketed": (
+        "SELECT code, d, ts, CAST(v AS DECIMAL(12,2)) AS v, map('v', v) AS m, "
+        "array(array(v, NULL), NULL) AS nested FROM {src}",
+        "bucketing:\n  keys: [code]\n  num_buckets: 3\n",
+    ),
+    "plain": ("SELECT code, d, ts, v FROM {src} WHERE v > 0", ""),
+}
+
+
+def test_write_time_checksum_equals_a_full_read(workspace, spark):
+    """Every SQL step's recorded checksum, taken from sums observed in its
+    write and, for an incremental step, from its partitions' recorded
+    sums, equals ``logical_checksum`` over a full read of its output:
+    after a cold build and after refreshes that change a key, add one,
+    remove one, change one to no rows and rewrite one at the same size.
+    ``''`` and NULL codes share one directory and read back as NULL; the
+    day and the timestamp keys are partition columns too. A full rebuild
+    at the end records the same checksums."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from shelf_spark.framework import paths
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+
+    Shelf.init()
+    rows = [  # code, day, v: each code has its own day and hour
+        ("a", 1, 10), ("a", 1, 20), ("", 2, 5), (None, 2, 6), ("b", 3, 7), ("b", 3, 8),
+    ]
+
+    def release(version: str, rows) -> None:
+        codes, days, vs = zip(*rows)
+        _release(workspace, f"ns/src/{version}", pa.table({
+            "code": pa.array(codes, pa.string()),
+            "d": pa.array([dt.date(2024, 1, x) for x in days], pa.date32()),
+            "ts": pa.array(
+                [dt.datetime(2024, 1, x, 10, 30, 0, 250) for x in days], pa.timestamp("us", tz="UTC")
+            ),
+            "v": pa.array(vs, pa.int64()),
+        }))
+
+    release("2024-01-01", rows)
+    shelf = Shelf()
+    for name in _HOSTILE_STEPS:
+        shelf.new_table(f"ns/{name}/2024-01-02", ["snapshot://ns/src/latest"])
+    shelf.save()
+    scripts = paths.TABLE_SCRIPTS_DIR / "ns"
+    scripts.mkdir(parents=True, exist_ok=True)
+    for name, (sql, cfg) in _HOSTILE_STEPS.items():
+        (scripts / f"{name}.sql").write_text(sql)
+        (scripts / f"{name}.meta.yaml").write_text("version: 1\n" + cfg)
+    uris = [StepURI.parse(f"table://ns/{name}/2024-01-02") for name in _HOSTILE_STEPS]
+
+    refreshes = [
+        rows[:1] + [("a", 1, 21)] + rows[2:] + [("a", 1, 1)],  # a changed key
+        rows + [("c", 4, 3)],  # a new key
+        rows[:4] + [("c", 4, 3)],  # b removed
+        rows[:4] + [("c", 4, -3)],  # c has no rows left
+        rows[:2] + [("", 2, 9), (None, 2, 6), ("c", 4, -3)],  # '' rewritten, same size
+    ]
+    for i, version_rows in enumerate([rows] + refreshes):
+        if i:
+            release(f"2024-02-0{i}", version_rows)
+        execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+        assert prune_completed(Shelf().resolve_latest()) == {}
+        checksums = [_sidecar_checksum_is_a_full_read(spark, u) for u in uris]
+    out = paths.table_data_path("ns/by_code/2024-01-02")
+    assert sorted(p.name for p in out.glob("code=*")) == ["code=__HIVE_DEFAULT_PARTITION__", "code=a"]
+    assert len(list(paths.table_data_path("ns/by_ts/2024-01-02").glob("ts=*"))) == 2
+
+    for name in _HOSTILE_STEPS:  # an edited script builds in full
+        script = scripts / f"{name}.sql"
+        script.write_text(script.read_text() + "\n")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+    assert [_sidecar_checksum_is_a_full_read(spark, u) for u in uris] == checksums
+
+
+def test_sql_step_runs_no_job_after_its_write(workspace, spark, monkeypatch):
+    """A one-partition refresh of an incremental step and the rebuild of
+    a plain SQL step take their checksums from their writes: no job runs
+    after the write, and nothing calls ``logical_checksum``. The builds
+    run on this thread, which owns the job groups."""
+    import uuid
+
+    from shelf_spark.framework import paths, tables
+    from shelf_spark.framework.snapshots import Snapshot
+    from shelf_spark.framework.steps import execute_dag, prune_completed
+
+    step = _daily_totals_step(workspace, 3)
+    shelf = Shelf()
+    shelf.new_table("ns/plain/2024-01-02", ["snapshot://ns/src/latest"])
+    shelf.save()
+    (paths.TABLE_SCRIPTS_DIR / "ns" / "plain.sql").write_text("SELECT day, v FROM {src} WHERE v > 0")
+    execute_dag(spark, prune_completed(Shelf().resolve_latest()))
+
+    raw = workspace / "src2.csv"
+    raw.write_text("day,v\n0,0\n0,0\n1,1\n1,10\n2,2\n2,21\n")  # day 2 changed
+    Snapshot.create(raw, "ns/src/2024-02-01")
+    shelf = Shelf()
+    shelf.add_step(StepURI.parse("snapshot://ns/src/2024-02-01"))
+    shelf.save()
+    dag = prune_completed(Shelf().resolve_latest())
+    assert {u.path for u in dag} == {step, "ns/plain/2024-01-02"}
+
+    def no_checksum_job(df):
+        raise AssertionError("logical_checksum called for a SQL step")
+
+    sc = spark.sparkContext
+    after_write = f"after-write-{uuid.uuid4().hex}"
+    exec_sql = tables._exec_sql_step
+
+    def then_mark(*args):
+        got = exec_sql(*args)
+        sc.setJobGroup(after_write, "jobs after the write")
+        return got
+
+    with monkeypatch.context() as m:
+        m.setattr(tables, "logical_checksum", no_checksum_job)
+        m.setattr(tables, "_exec_sql_step", then_mark)
+        for uri, deps in dag.items():
+            assert jobs_submitted(spark, lambda: tables.build_table(spark, uri, deps)), uri
+            assert list(sc.statusTracker().getJobIdsForGroup(after_write)) == [], uri
+    assert prune_completed(Shelf().resolve_latest()) == {}
+    _sidecar_checksum_is_a_full_read(spark, StepURI.parse(f"table://{step}"))
